@@ -1534,6 +1534,20 @@ RASTER_ZOOM = 1
 SRCWIN = (100, 120, 150, 130)  # gpx0, gpy0, w, h
 _GEN = "((gpx * 7 + gpy * 11 + 1) % 255)"  # synth generator at zoom 1
 
+# Every raster query states its probe window ONCE, as an (x0, y0, w, h)
+# global-pixel constant: the Spark side hands it to
+# RO.explode_pixels(…, window=…), which emits exactly that rect, and the
+# oracle side builds the same rect with _window_grid_sql.
+
+
+def _window_grid_sql(window) -> str:
+    """Oracle (gpx, gpy) grid body over an (x0, y0, w, h) window — the
+    SELECT of a one-row-per-pixel CTE."""
+    x0, y0, w, h = window
+    return f"""  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
+  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
+  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys"""
+
 
 def q_raster_translate(spark: SparkSession, sf: str) -> DataFrame:
     """gdal_translate equivalent: -srcwin + -scale + uint8 cast with the
@@ -1549,12 +1563,9 @@ def q_raster_translate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_raster_translate() -> str:
-    x0, y0, w, h = SRCWIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(SRCWIN)}
 )
 SELECT gpx, gpy,
        CAST(CAST(FLOOR({_GEN} * CAST(0.5 AS DOUBLE) + CAST(10.0 AS DOUBLE)
@@ -1578,22 +1589,16 @@ def q_raster_reclassify(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.reclassify_tiles(tiles, RECLASS_MAPPING, nodata=RECLASS_NODATA)
-    x0, y0, w, h = RECLASS_WIN
     return (
-        RO.explode_pixels(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels(out, window=RECLASS_WIN)
         .select("gpx", "gpy", "value")
     )
 
 
 def sql_raster_reclassify() -> str:
-    x0, y0, w, h = RECLASS_WIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(RECLASS_WIN)}
 ), v AS (
   SELECT gpx, gpy, CAST({_GEN} AS DOUBLE) AS v FROM px
 )
@@ -1639,12 +1644,9 @@ def q_raster_unscale(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_raster_unscale() -> str:
-    x0, y0, w, h = RECLASS_WIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(RECLASS_WIN)}
 )
 SELECT gpx, gpy,
        CAST(LEAST(GREATEST(FLOOR(({_GEN} * CAST(0.5 AS DOUBLE)
@@ -1668,22 +1670,16 @@ def q_raster_scale(spark: SparkSession, sf: str) -> DataFrame:
     s0, s1, d0, d1, e = SCALE_PARAMS
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.scale_tiles(tiles, s0, s1, d0, d1, exponent=e)
-    x0, y0, w, h = RECLASS_WIN
     return (
-        RO.explode_pixels(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels(out, window=RECLASS_WIN)
         .select("gpx", "gpy", "value")
     )
 
 
 def sql_raster_scale() -> str:
-    x0, y0, w, h = RECLASS_WIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(RECLASS_WIN)}
 )
 SELECT gpx, gpy,
        CAST({_GEN} AS DOUBLE) * {_GEN} / CAST(64 AS DOUBLE)
@@ -1711,22 +1707,16 @@ def q_raster_update(spark: SparkSession, sf: str) -> DataFrame:
                            coeffs=(13, 5), nodata=UPDATE_NODATA) \
         .filter(F.col("gx") == 0)
     out = RO.update_tiles(base, patch, UPDATE_NODATA)
-    x0, y0, w, h = UPDATE_WIN
     return (
-        RO.explode_pixels(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels(out, window=UPDATE_WIN)
         .select("gpx", "gpy", "value")
     )
 
 
 def sql_raster_update() -> str:
-    x0, y0, w, h = UPDATE_WIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(UPDATE_WIN)}
 )
 SELECT gpx, gpy,
        CAST(CASE WHEN gpx < 256 AND {_GEN_PATCH} <> {int(UPDATE_NODATA)}
@@ -2205,11 +2195,8 @@ def q_pansharpen(spark: SparkSession, sf: str) -> DataFrame:
     pan = RS.synth_tiles(spark, RASTER_ZOOM, dataset_id="pan",
                          coeffs=(2, 9))
     out = RO.pansharpen(pan, rgb, weights=PANSHARP_W)
-    x0, y0, w, h = PANSHARP_WIN
     return (
-        RO.explode_pixels_banded(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels_banded(out, window=PANSHARP_WIN)
         .select("band", "gpx", "gpy",
                 F.floor(F.col("value") * F.lit(1048576.0))
                 .cast("long").alias("q20"))
@@ -2217,7 +2204,6 @@ def q_pansharpen(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_pansharpen() -> str:
-    x0, y0, w, h = PANSHARP_WIN
     z = RASTER_ZOOM
     band_coeffs = {1: (7, 11), 2: (5, 13), 3: (3, 17)}
 
@@ -2243,9 +2229,7 @@ def sql_pansharpen() -> str:
     union = "\n  UNION ALL\n".join(rows)
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(PANSHARP_WIN)}
 )
 {union}
 """
@@ -2333,17 +2317,13 @@ def q_raster_resize(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.resize_tiles(tiles, RASTER_ZOOM, 0, method="bilinear")
-    x0, y0, w, h = RESIZE_WIN
     return (
-        RO.explode_pixels(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels(out, window=RESIZE_WIN)
         .select("gpx", "gpy", "value")
     )
 
 
 def sql_raster_resize() -> str:
-    x0, y0, w, h = RESIZE_WIN
     z = RASTER_ZOOM
 
     def v(x, y):
@@ -2351,9 +2331,7 @@ def sql_raster_resize() -> str:
 
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(RESIZE_WIN)}
 )
 SELECT gpx, gpy,
        CAST({v('gpx * 2', 'gpy * 2')}
@@ -2621,24 +2599,18 @@ def q_overview_refresh(spark: SparkSession, sf: str) -> DataFrame:
     updated = RO.update_tiles(base, patch, UPDATE_NODATA)
     refreshed = RO.overview_refresh(
         updated, patch.select("gx", "gy"))
-    x0, y0, w, h = REFRESH_WIN
     return (
-        RO.explode_pixels(refreshed, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels(refreshed, window=REFRESH_WIN)
         .select("gpx", "gpy", "value")
     )
 
 
 def sql_overview_refresh() -> str:
-    x0, y0, w, h = REFRESH_WIN
     base = "((cx * 7 + cy * 11 + 2) % 255)"
     pat = "((cx * 13 + cy * 5 + 2) % 255)"
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(REFRESH_WIN)}
 ),
 o(dx, dy) AS (VALUES (0, 0), (1, 0), (0, 1), (1, 1)),
 taps AS (
@@ -2677,13 +2649,10 @@ def q_raster_as_features(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_raster_as_features() -> str:
-    wx0, wy0, w, h = RECLASS_WIN
     gx0, gdx, gy0, gdy = AS_FEATURES_GT
     return f"""
 WITH px AS (
-  SELECT ({wx0} + xs.i) AS gpx, ({wy0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(RECLASS_WIN)}
 )
 SELECT gpy AS row, gpx AS col,
        {G.D(gx0)} + (gpx + {G.D(0.5)}) * {G.D(gdx)} AS x,
@@ -2707,22 +2676,16 @@ def q_raster_stack(spark: SparkSession, sf: str) -> DataFrame:
     a = RS.synth_tiles(spark, RASTER_ZOOM)
     b = RS.synth_tiles(spark, RASTER_ZOOM, dataset_id="b", coeffs=(13, 5))
     out = RO.stack_tiles([a, b])
-    x0, y0, w, h = STACK_WIN
     return (
-        RO.explode_pixels_banded(out, window=(x0, y0, w, h))
-        .filter((F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-                & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+        RO.explode_pixels_banded(out, window=STACK_WIN)
         .select("band", "gpx", "gpy", "value")
     )
 
 
 def sql_raster_stack() -> str:
-    x0, y0, w, h = STACK_WIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(STACK_WIN)}
 )
 SELECT 1 AS band, gpx, gpy, CAST({_GEN} AS DOUBLE) AS value FROM px
 UNION ALL
@@ -3403,22 +3366,16 @@ def q_raster_blend(spark: SparkSession, sf: str) -> DataFrame:
     # (measured 1.34->1.10 s; same rows, per-invocation materialization)
     base = RS.synth_rgba_tiles(spark, 0, "base").localCheckpoint()
     over = RS.synth_rgba_tiles(spark, 0, "over").localCheckpoint()
-    x0, y0, w, h = BLEND_WIN
     outs = []
     for mode in ("src_over", "multiply"):
         t = RO.blend_tiles(base, over, mode=mode, opacity=60)
-        outs.append(RO.explode_pixels_banded(
-            t, window=(x0, y0, w, h)).select(
+        outs.append(RO.explode_pixels_banded(t, window=BLEND_WIN).select(
             F.lit(mode).alias("mode"), "band", "gpx", "gpy",
             F.col("value").cast("long").alias("value")))
-    px = _reduce(lambda a, b: a.unionByName(b), outs)
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+    return _reduce(lambda a, b: a.unionByName(b), outs)
 
 
 def sql_raster_blend() -> str:
-    x0, y0, w, h = BLEND_WIN
     op255 = (60 * 255 + 50) // 100          # = 153 (blend.cpp:2790)
     names = {1: "r", 2: "g", 3: "b"}
     mul = "(({a}) * ({b}) + 255) // 256"
@@ -3443,9 +3400,7 @@ def sql_raster_blend() -> str:
         for nm in ("r", "g", "b"))
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(BLEND_WIN)}
 ),
 ch AS (SELECT gpx, gpy, {_rgba_sql("base")}, {_rgba_sql("over")} FROM px),
 alph AS (
@@ -3493,21 +3448,14 @@ def q_raster_nodata_alpha(spark: SparkSession, sf: str) -> DataFrame:
     tiles = RS.synth_tiles(spark, RASTER_ZOOM).withColumn(
         "nodata", F.lit(77.0))
     out = RO.nodata_to_alpha_tiles(tiles)
-    x0, y0, w, h = SRCWIN
-    return RO.explode_pixels_banded(out, window=(x0, y0, w, h)).select(
-        "band", "gpx", "gpy", F.col("value").cast("long").alias("value")
-    ).filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h))
+    return RO.explode_pixels_banded(out, window=SRCWIN).select(
+        "band", "gpx", "gpy", F.col("value").cast("long").alias("value"))
 
 
 def sql_raster_nodata_alpha() -> str:
-    x0, y0, w, h = SRCWIN
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
+{_window_grid_sql(SRCWIN)}
 )
 SELECT 1 AS band, gpx, gpy, CAST({_GEN} AS BIGINT) AS value FROM px
 UNION ALL
@@ -5568,7 +5516,7 @@ def sql_line_predicates() -> str:
 
 
 WARP = {"a": 0.5, "b": 100.25, "c": 0.5, "d": 50.25}
-WARP_WIN = (256, 384, 256, 384)  # dst probe window x0,x1,y0,y1
+WARP_WIN = (256, 256, 128, 128)  # dst probe window x0, y0, w, h
 
 
 def q_warp_affine(spark: SparkSession, sf: str) -> DataFrame:
@@ -5583,23 +5531,16 @@ def q_warp_affine(spark: SparkSession, sf: str) -> DataFrame:
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.warp_affine(tiles, RASTER_ZOOM, WARP["a"], WARP["b"],
                          WARP["c"], WARP["d"], method="bilinear")
-    x0, x1, y0, y1 = WARP_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=WARP_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_warp_affine() -> str:
     a, b, c, d = WARP["a"], WARP["b"], WARP["c"], WARP["d"]
-    x0, x1, y0, y1 = WARP_WIN
     gen = "(((%s) * 7 + (%s) * 11 + 1) %% 255)"
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(WARP_WIN)}
 ),
 m AS (
   SELECT gpx, gpy,
@@ -5654,26 +5595,19 @@ def q_warp_cutline(spark: SparkSession, sf: str) -> DataFrame:
         ("affine", WARP["a"], WARP["b"], WARP["c"], WARP["d"]),
         shapes, method="bilinear", nodata=-1.0,
     )
-    x0, x1, y0, y1 = WARP_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=WARP_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_warp_cutline() -> str:
     a, b, c, d = WARP["a"], WARP["b"], WARP["c"], WARP["d"]
-    x0, x1, y0, y1 = WARP_WIN
     gen = "(((%s) * 7 + (%s) * 11 + 1) %% 255)"
     inside = " OR ".join(
         _px_predicate(p, RASTER_ZOOM) for p in _cutline_features()
     )
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(WARP_WIN)}
 ),
 m AS (
   SELECT gpx, gpy,
@@ -5696,6 +5630,9 @@ SELECT gpx, gpy,
        ELSE CAST(-1.0 AS DOUBLE) END AS value
 FROM fr
 """
+
+
+MOSAIC_WIN = (0, 0, 256, 256)  # the zoom-1 tile (0, 0)
 
 
 def q_mosaic_overlay(spark: SparkSession, sf: str) -> DataFrame:
@@ -5730,17 +5667,17 @@ def q_mosaic_overlay(spark: SparkSession, sf: str) -> DataFrame:
 
     top = tiles.mapInPandas(mk_top, TILE_SCHEMA)
     m = RO.mosaic_overlay([tiles, top], ND)
-    px = RO.explode_pixels(m)
-    return px.filter((F.col("gpx") < 256) & (F.col("gpy") < 256)).select(
+    return RO.explode_pixels(m, window=MOSAIC_WIN).select(
         "gpx", "gpy", "value")
 
 
 def sql_mosaic_overlay() -> str:
+    _, _, w, h = MOSAIC_WIN
     return f"""
 WITH px AS (
   SELECT xs.i AS gpx, ys.i AS gpy
-  FROM (SELECT UNNEST(RANGE(0, 256)) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, 256)) AS i) ys
+  FROM (SELECT UNNEST(RANGE(0, {w})) AS i) xs
+  CROSS JOIN (SELECT UNNEST(RANGE(0, {h})) AS i) ys
 ),
 v AS (SELECT gpx, gpy, {_GEN} AS g FROM px)
 SELECT gpx, gpy,
@@ -5751,7 +5688,7 @@ FROM v
 
 
 WARP_AGG = {"a": 2.5, "b": 0.25}
-WARP_AGG_WIN = (64, 96, 64, 96)  # dst probe x0,x1,y0,y1 (interior boxes)
+WARP_AGG_WIN = (64, 64, 32, 32)  # dst probe x0, y0, w, h (interior boxes)
 
 
 def q_warp_downscale_avg(spark: SparkSession, sf: str) -> DataFrame:
@@ -5767,23 +5704,16 @@ def q_warp_downscale_avg(spark: SparkSession, sf: str) -> DataFrame:
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.warp_tiles(tiles, RASTER_ZOOM, ("affine", a, b, a, b),
                         method="average", nodata=-1.0)
-    x0, x1, y0, y1 = WARP_AGG_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=WARP_AGG_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_warp_downscale_avg() -> str:
     a, b = WARP_AGG["a"], WARP_AGG["b"]
     world = (1 << RASTER_ZOOM) * 256
-    x0, x1, y0, y1 = WARP_AGG_WIN
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(WARP_AGG_WIN)}
 ),
 boxes AS (
   SELECT gpx, gpy,
@@ -5820,23 +5750,16 @@ def q_warp_downscale_med(spark: SparkSession, sf: str) -> DataFrame:
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.warp_tiles(tiles, RASTER_ZOOM, ("affine", a, b, a, b),
                         method="amed", nodata=-1.0)
-    x0, x1, y0, y1 = WARP_AGG_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=WARP_AGG_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_warp_downscale_med() -> str:
     a, b = WARP_AGG["a"], WARP_AGG["b"]
     world = (1 << RASTER_ZOOM) * 256
-    x0, x1, y0, y1 = WARP_AGG_WIN
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(WARP_AGG_WIN)}
 ),
 boxes AS (
   SELECT gpx, gpy,
@@ -5866,7 +5789,7 @@ WHERE rn = CAST(CEILING(CAST(0.5 AS DOUBLE) * n - CAST(1.0 AS DOUBLE)) AS BIGINT
 """
 
 
-WARP_GEO_WIN = (200, 232, 128, 160)  # x0, x1, y0, y1 probe (interior, off-edge)
+WARP_GEO_WIN = (200, 128, 32, 32)  # x0, y0, w, h probe (interior, off-edge)
 
 
 def q_warp_reproject(spark: SparkSession, sf: str) -> DataFrame:
@@ -5880,23 +5803,16 @@ def q_warp_reproject(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = RO.warp_reproject_geodetic(tiles, RASTER_ZOOM, method="bilinear")
-    x0, x1, y0, y1 = WARP_GEO_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=WARP_GEO_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_warp_reproject() -> str:
     world = (1 << RASTER_ZOOM) * 256
-    x0, x1, y0, y1 = WARP_GEO_WIN
     gen = "(((%s) * 7 + (%s) * 11 + 1) %% 255)"
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(WARP_GEO_WIN)}
 ),
 m AS (
   -- sy quantized to 1/4096 px, mirroring the kernel's approx-transformer
@@ -6103,7 +6019,7 @@ FROM (
 """
 
 
-FOCAL_WIN = (200, 312, 200, 312)  # spans the z1 tile border at 256
+FOCAL_WIN = (200, 200, 112, 112)  # spans the z1 tile border at 256
 
 
 def q_color_relief(spark: SparkSession, sf: str) -> DataFrame:
@@ -6116,23 +6032,20 @@ def q_color_relief(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     rgb = RO.color_relief(tiles)
-    x0, x1, y0, y1 = CALC_WIN
+    x0, y0, w, h = CALC_WIN
     return rgb.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
+        (F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
+        & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h)
     )
 
 
 def sql_color_relief() -> str:
     from .operators.raster_ops import DEM_RAMP
 
-    x0, x1, y0, y1 = CALC_WIN
     v = f"CAST(((gpx * 7 + gpy * 11 + {RASTER_ZOOM}) % 255) AS DOUBLE)"
     return f"""
 WITH cells AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(CALC_WIN)}
 )
 SELECT gpx, gpy,
        {G.color_relief_sql(v, DEM_RAMP, 0)} AS r,
@@ -6153,16 +6066,11 @@ def q_slope_pct_zt(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = FO.focal_dem(tiles, RASTER_ZOOM, "slope_pct_zt")
-    x0, x1, y0, y1 = FOCAL_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=FOCAL_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_slope_pct_zt() -> str:
-    x0, x1, y0, y1 = FOCAL_WIN
     g = "CAST((((%s) * 7 + (%s) * 11 + 1) %% 255) AS DOUBLE)"
     f_ = g % ("(gpx + 1)", "gpy")
     d = g % ("(gpx - 1)", "gpy")
@@ -6172,9 +6080,7 @@ def sql_slope_pct_zt() -> str:
     zy = f"(({h} - {b}) / {G.D(2.0)})"
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL_WIN)}
 )
 SELECT gpx, gpy,
        SQRT({zx} * {zx} + {zy} * {zy}) * {G.D(100.0)} AS value
@@ -6194,16 +6100,11 @@ def q_hillshade_multi(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = FO.focal_dem(tiles, RASTER_ZOOM, "hillshade_multi")
-    x0, x1, y0, y1 = FOCAL_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=FOCAL_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_hillshade_multi() -> str:
-    x0, x1, y0, y1 = FOCAL_WIN
     g = "CAST((((%s) * 7 + (%s) * 11 + 1) %% 255) AS DOUBLE)"
     a = g % ("(gpx - 1)", "(gpy - 1)")
     b = g % ("gpx", "(gpy - 1)")
@@ -6220,9 +6121,7 @@ def sql_hillshade_multi() -> str:
     c225 = G.D(-0.7071067811865476)
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL_WIN)}
 ),
 grad AS (
   SELECT gpx, gpy, - {dzdx} AS x, {dzdy} AS y FROM dst
@@ -6264,16 +6163,11 @@ def q_focal_tpi(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = FO.focal_dem(tiles, RASTER_ZOOM, "tpi")
-    x0, x1, y0, y1 = FOCAL_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", F.round("value", 9).alias("value"))
+    px = RO.explode_pixels(out, window=FOCAL_WIN)
+    return px.select("gpx", "gpy", F.round("value", 9).alias("value"))
 
 
 def sql_focal_tpi() -> str:
-    x0, x1, y0, y1 = FOCAL_WIN
     g = "(((%s) * 7 + (%s) * 11 + 1) %% 255)"
     nbrs = " + ".join(
         g % (f"(gpx + {dx})", f"(gpy + {dy})")
@@ -6281,14 +6175,15 @@ def sql_focal_tpi() -> str:
     )
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL_WIN)}
 )
 SELECT gpx, gpy,
        ROUND({g % ('gpx', 'gpy')} - ({nbrs}) * CAST(0.125 AS DOUBLE), 9) AS value
 FROM dst
 """
+
+
+PROX_WIN = (200, 200, 100, 100)
 
 
 def q_proximity(spark: SparkSession, sf: str) -> DataFrame:
@@ -6300,11 +6195,8 @@ def q_proximity(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = PX.proximity(tiles, RASTER_ZOOM, 17.0, 80.0)
-    px = RO.explode_pixels(out, window=(200, 200, 100, 100))
-    return px.filter(
-        (F.col("gpx") >= 200) & (F.col("gpx") < 300)
-        & (F.col("gpy") >= 200) & (F.col("gpy") < 300)
-    ).select("gpx", "gpy", F.round("value", 9).alias("value"))
+    px = RO.explode_pixels(out, window=PROX_WIN)
+    return px.select("gpx", "gpy", F.round("value", 9).alias("value"))
 
 
 def sql_proximity() -> str:
@@ -6318,9 +6210,7 @@ WITH raw AS (
 ),
 targets AS (SELECT tpx, tpy FROM raw WHERE {g % ('tpx', 'tpy')} = 17),
 dst AS (
-  SELECT (200 + xs.i) AS gpx, (200 + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, 100)) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, 100)) AS i) ys
+{_window_grid_sql(PROX_WIN)}
 )
 SELECT gpx, gpy,
        ROUND(LEAST(CAST(80.0 AS DOUBLE),
@@ -6344,18 +6234,13 @@ def q_focal_hillshade(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = FO.focal_dem(tiles, RASTER_ZOOM, "hillshade")
-    x0, x1, y0, y1 = FOCAL_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", F.round("value", 9).alias("value"))
+    px = RO.explode_pixels(out, window=FOCAL_WIN)
+    return px.select("gpx", "gpy", F.round("value", 9).alias("value"))
 
 
 def sql_focal_hillshade() -> str:
     import math as _m
 
-    x0, x1, y0, y1 = FOCAL_WIN
     g = "CAST((((%s) * 7 + (%s) * 11 + 1) %% 255) AS DOUBLE)"
     a = g % ("(gpx - 1)", "(gpy - 1)")
     b = g % ("gpx", "(gpy - 1)")
@@ -6372,9 +6257,7 @@ def sql_focal_hillshade() -> str:
     azp = _m.radians(315.0) - _m.pi / 2.0
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL_WIN)}
 ),
 grad AS (
   SELECT gpx, gpy,
@@ -6448,10 +6331,10 @@ FROM soup GROUP BY level
 """
 
 
-FOCAL5_WIN = (120, 168, 230, 280)   # x0, x1, y0, y1 — spans the tile seam
+FOCAL5_WIN = (120, 230, 48, 50)   # x0, y0, w, h — spans the tile seam
 
 
-FOCAL_STATS_WIN = (96, 224, 160, 288)  # x0 x1 y0 y1 — spans the gy seam
+FOCAL_STATS_WIN = (96, 160, 128, 128)  # x0, y0, w, h — spans the gy seam
 
 
 def q_focal_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -6467,14 +6350,15 @@ def q_focal_stats(spark: SparkSession, sf: str) -> DataFrame:
     from .sources import raster as RS
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
-    x0, x1, y0, y1 = FOCAL_STATS_WIN
+    x0, y0, w, h = FOCAL_STATS_WIN
     # fused single-pass form (r8): one halo exchange + one stencil emits
     # all three stats pixel-exactly — the previous three focal_generic
     # chains (median, stddev, mode over floor(A/32)) each paid their own
     # halo exchange, explode_pixels bridge and (gpx, gpy) join; the
     # derived columns below are byte-identical Spark expressions over
     # the same kernel doubles
-    fused = FO.focal_stats_window(tiles, RASTER_ZOOM, (x0, x1, y0, y1),
+    fused = FO.focal_stats_window(tiles, RASTER_ZOOM,
+                                  (x0, x0 + w, y0, y0 + h),
                                   qdiv=32.0)
     return fused.select(
         "gpx", "gpy", F.col("med"),
@@ -6484,15 +6368,12 @@ def q_focal_stats(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_focal_stats() -> str:
-    x0, x1, y0, y1 = FOCAL_STATS_WIN
     offs = ", ".join(f"({dx}, {dy}, {k})"
                      for k, (dy, dx) in enumerate(
                          (dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)))
     return f"""
 WITH px AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL_STATS_WIN)}
 ),
 o(dx, dy, k) AS (VALUES {offs}),
 taps AS (
@@ -6535,22 +6416,15 @@ def q_focal_mean5(spark: SparkSession, sf: str) -> DataFrame:
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
     out = FO.focal_generic(tiles, RASTER_ZOOM, np.ones((5, 5)), "mean")
-    x0, x1, y0, y1 = FOCAL5_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=FOCAL5_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_focal_mean5() -> str:
-    x0, x1, y0, y1 = FOCAL5_WIN
     g_at = "(((%s) * 7 + (%s) * 11 + 1) %% 255)"
     return f"""
 WITH dst AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(FOCAL5_WIN)}
 ),
 contrib AS (
   SELECT d.gpx, d.gpy,
@@ -7663,7 +7537,7 @@ FROM contrib GROUP BY eas_id
 """
 
 
-CALC_WIN = (100, 164, 300, 364)  # gpx0, gpx1, gpy0, gpy1 probe
+CALC_WIN = (100, 300, 64, 64)  # gpx0, gpy0, w, h probe
 
 
 def q_raster_calc(spark: SparkSession, sf: str) -> DataFrame:
@@ -7681,23 +7555,16 @@ def q_raster_calc(spark: SparkSession, sf: str) -> DataFrame:
         .drop("_ox0", "_oy0")
     out = RO.raster_calc({"A": a, "B": b},
                          "where(A > 128, A - B / 4, A + sqrt(B))")
-    x0, x1, y0, y1 = CALC_WIN
-    px = RO.explode_pixels(out, window=(x0, y0, x1 - x0, y1 - y0))
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x1)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y1)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(out, window=CALC_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 def sql_raster_calc() -> str:
-    x0, x1, y0, y1 = CALC_WIN
     v = f"CAST(((gpx * 7 + gpy * 11 + {RASTER_ZOOM}) % 255) AS DOUBLE)"
     b = f"(CAST(2.0 AS DOUBLE) * {v} + CAST(3.0 AS DOUBLE))"
     return f"""
 WITH cells AS (
-  SELECT ({x0} + xs.i) AS gpx, ({y0} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {x1 - x0})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {y1 - y0})) AS i) ys
+{_window_grid_sql(CALC_WIN)}
 )
 SELECT gpx, gpy,
        CASE WHEN {v} > CAST(128.0 AS DOUBLE)
@@ -8068,9 +7935,7 @@ pts AS (
   FROM pages
 ),
 cells AS (
-  SELECT ({GRID_WIN[0]} + xs.i) AS gpx, ({GRID_WIN[1]} + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, {GRID_WIN[2]})) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, {GRID_WIN[3]})) AS i) ys
+{_window_grid_sql(GRID_WIN)}
 ),
 inr AS (
   SELECT gpx, gpy, px, py, z,
@@ -8091,12 +7956,8 @@ def _q_grid(spark: SparkSession, sf: str, method: str, **kw) -> DataFrame:
     pts = GR.points_to_px(pages, GRID_ZOOM, value="z", projection="equirect")
     tiles = GR.grid_interpolate(spark, pts, GRID_ZOOM, method, GRID_RADIUS,
                                 window=GRID_WIN, **kw)
-    px = RO.explode_pixels(tiles)
-    x0, y0, w, h = GRID_WIN
-    return px.filter(
-        (F.col("gpx") >= x0) & (F.col("gpx") < x0 + w)
-        & (F.col("gpy") >= y0) & (F.col("gpy") < y0 + h)
-    ).select("gpx", "gpy", "value")
+    px = RO.explode_pixels(tiles, window=GRID_WIN)
+    return px.select("gpx", "gpy", "value")
 
 
 # grid 'linear' fixture: 6x6 lattice with jittered INTERIOR points (the
@@ -8115,6 +7976,9 @@ def _grid_linear_pts():
     return pts
 
 
+GRID_LINEAR_WIN = (60, 60, 40, 40)  # pixels strictly inside the hull
+
+
 def q_grid_linear(spark: SparkSession, sf: str) -> DataFrame:
     """gdal_grid 'linear' (GDALGridLinear + alg/delaunay.c): Delaunay TIN
     barycentric interpolation (self-contained Bowyer-Watson,
@@ -8127,19 +7991,14 @@ def q_grid_linear(spark: SparkSession, sf: str) -> DataFrame:
                                 "px DOUBLE, py DOUBLE, z DOUBLE")
     tiles = GR.grid_linear(spark, pts, 1, nodata=-1.0,
                            window=(56, 56, 48, 48))
-    px = RO.explode_pixels(tiles)
-    return px.filter(
-        (F.col("gpx") >= 60) & (F.col("gpx") <= 99)
-        & (F.col("gpy") >= 60) & (F.col("gpy") <= 99)
-    ).select("gpx", "gpy", F.round("value", 6).alias("value"))
+    px = RO.explode_pixels(tiles, window=GRID_LINEAR_WIN)
+    return px.select("gpx", "gpy", F.round("value", 6).alias("value"))
 
 
 def sql_grid_linear() -> str:
-    return """
+    return f"""
 WITH cells AS (
-  SELECT (60 + xs.i) AS gpx, (60 + ys.i) AS gpy
-  FROM (SELECT UNNEST(RANGE(0, 40)) AS i) xs
-  CROSS JOIN (SELECT UNNEST(RANGE(0, 40)) AS i) ys
+{_window_grid_sql(GRID_LINEAR_WIN)}
 )
 SELECT gpx, gpy,
        ROUND(CAST(3.0 AS DOUBLE) * (gpx + CAST(0.5 AS DOUBLE))
@@ -8691,9 +8550,8 @@ ORACLES = {
     "viewshed_cumulative": sql_viewshed_cumulative(),
     "fingerprint_pairs": sql_fingerprint_pairs(),
     "hillshade_multi": sql_hillshade_multi(),
-    # no oracle (Spark-specific hashing / libm trig / brute-force-pinned):
-    # focal_hillshade, contour_stats, sieve_regions, fillnodata_checksums,
-    # minhash_lsh_pairs, simhash, embedding_ann_lsh, raster_resample (Spark-specific hashing / approximate by design) -> the
-    # driver records rows-only checks: minhash_lsh_pairs, simhash,
-    # embedding_ann_lsh, raster_resample
+    # no oracle — the driver records rows-only checks for these five:
+    # minhash_lsh_pairs and simhash (Spark-specific hashing), and
+    # embedding_ann_lsh, embedding_ann_ivf and embedding_near_dup
+    # (approximate by design; recall is pinned in pytest)
 }

@@ -15,6 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..session import micro_conf
 from ..sources.raster import TILE, parse_tile
 from .focal import _strips
 
@@ -342,16 +343,7 @@ def contour_polylines(tiles: DataFrame, zoom: int, levels,
     # CROSS buckets), so callers may scope a small shuffle width +
     # AQE/codegen off via ``shuffle_partitions``.
     spark = tiles.sparkSession
-    saved = None
-    if shuffle_partitions is not None:
-        saved = (spark.conf.get("spark.sql.shuffle.partitions"),
-                 spark.conf.get("spark.sql.adaptive.enabled"),
-                 spark.conf.get("spark.sql.codegen.wholeStage"))
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(int(shuffle_partitions)))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with micro_conf(spark, shuffle_partitions):
         prev_fp = None
         for _ in range(max_rounds):
             neigh = (
@@ -376,11 +368,6 @@ def contour_polylines(tiles: DataFrame, zoom: int, levels,
             if prev_fp == (fp[0], fp[1]):
                 break
             prev_fp = (fp[0], fp[1])
-    finally:
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved[0])
-            spark.conf.set("spark.sql.adaptive.enabled", saved[1])
-            spark.conf.set("spark.sql.codegen.wholeStage", saved[2])
 
     lab = labels.select(F.col("rid").alias("frag_id"),
                         F.col("label").alias("polyline_id"))

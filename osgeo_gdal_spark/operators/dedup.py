@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import micro_conf
+
 
 def exact_dup_groups(docs: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
     """(text_hash, n_docs, keep_id) for duplicate groups; keep = min id."""
@@ -278,10 +280,8 @@ def _min_label_groups(verified: DataFrame, max_rounds: int,
     members = edges.select(F.col("doc_a").alias("doc_id")).distinct()
     labels = members.select("doc_id", F.col("doc_id").alias("label")
                             ).localCheckpoint()
-    from .polygonize import _micro_conf
-
     prev_fp = None
-    with _micro_conf(verified.sparkSession, shuffle_partitions):
+    with micro_conf(verified.sparkSession, shuffle_partitions):
         for _ in range(max_rounds):
             neigh = (
                 edges.join(labels, edges.doc_b == labels.doc_id)

@@ -23,7 +23,7 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import DataFrame, functions as F
-from ..session import local_df
+from ..session import local_df, micro_conf
 
 
 def shortest_paths(edges: DataFrame, source, max_rounds: int = 64,
@@ -55,16 +55,7 @@ def shortest_paths(edges: DataFrame, source, max_rounds: int = 64,
     if exact_rounds is not None:
         dist = local_df(spark, 
             [(int(source), 0.0)], "node LONG, dist DOUBLE")
-        saved = None
-        if shuffle_partitions is not None:
-            saved = (spark.conf.get("spark.sql.shuffle.partitions"),
-                     spark.conf.get("spark.sql.adaptive.enabled"),
-                     spark.conf.get("spark.sql.codegen.wholeStage"))
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(int(shuffle_partitions)))
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
+        with micro_conf(spark, shuffle_partitions):
             for r in range(int(exact_rounds)):
                 stepped = (
                     dist.join(edges, dist["node"] == edges["src"], "left")
@@ -88,11 +79,6 @@ def shortest_paths(edges: DataFrame, source, max_rounds: int = 64,
             # materialize HERE (inside the scoped conf) so the caller's
             # action reads a finished table, not a deep plan
             return dist.localCheckpoint()
-        finally:
-            if saved is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", saved[0])
-                spark.conf.set("spark.sql.adaptive.enabled", saved[1])
-                spark.conf.set("spark.sql.codegen.wholeStage", saved[2])
 
     dist = local_df(spark, [(int(source), 0)], "node LONG, dist LONG") \
         .withColumn("dist", F.col("dist").cast("double"))
@@ -435,30 +421,13 @@ def k_shortest_paths(edges: DataFrame, source, target, k=3,
     correct only under that bound; general graphs leave it None.
     Returns [(cost, [nodes]), ...] sorted by cost."""
     spark = edges.sparkSession
-    saved_sp = saved_aqe = None
-    if shuffle_partitions is not None:
-        saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(int(shuffle_partitions)))
-        # micro-state mode: AQE splits every relaxation action into one
-        # job per query stage (measured ~2.5x the scheduler round-trips
-        # on the Yen gate); with an explicit skinny width there is
-        # nothing for it to re-plan, so scope it off alongside
-        saved_aqe = (spark.conf.get("spark.sql.adaptive.enabled"),
-                     spark.conf.get("spark.sql.codegen.wholeStage"))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # whole-stage codegen compiles ~9 janino stages per relaxation
-        # collect — pure overhead at micro-state row counts
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    # micro-state mode: AQE splits every relaxation action into one job
+    # per query stage (measured ~2.5x the scheduler round-trips on the
+    # Yen gate) and whole-stage codegen compiles ~9 janino stages per
+    # relaxation collect
+    with micro_conf(spark, shuffle_partitions):
         return _k_shortest_impl(spark, edges, source, target, k,
                                 max_rounds, exact_rounds)
-    finally:
-        if saved_sp is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
-        if saved_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", saved_aqe[0])
-            spark.conf.set("spark.sql.codegen.wholeStage", saved_aqe[1])
 
 
 def _k_shortest_impl(spark, edges, source, target, k, max_rounds,

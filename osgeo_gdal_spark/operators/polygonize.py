@@ -30,39 +30,11 @@ consumers run.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..session import micro_conf
 from ..sources.raster import TILE, parse_tile
-
-
-@contextmanager
-def _micro_conf(spark, shuffle_partitions):
-    """Scoped micro-state conf for the min-label loops (the r7 contour/
-    k_shortest pattern): callers whose cross-tile merge graph is known
-    micro-state opt in with a small shuffle width; AQE + whole-stage
-    codegen are scoped off alongside (AQE splits every fingerprint
-    action into one job per query stage and codegen compiles throwaway
-    janino classes — pure overhead at micro row counts). Restored on
-    exit; None = no-op (the at-scale default)."""
-    if shuffle_partitions is None:
-        yield
-        return
-    saved = (spark.conf.get("spark.sql.shuffle.partitions"),
-             spark.conf.get("spark.sql.adaptive.enabled"),
-             spark.conf.get("spark.sql.codegen.wholeStage"))
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(int(shuffle_partitions)))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved[0])
-        spark.conf.set("spark.sql.adaptive.enabled", saved[1])
-        spark.conf.set("spark.sql.codegen.wholeStage", saved[2])
 
 
 def _label_tile(grid: np.ndarray) -> np.ndarray:
@@ -390,7 +362,7 @@ def _polygonize_parts(tiles: DataFrame, zoom: int, max_rounds=32,
     # sieve stacks a second loop on top and the plan string caps at
     # 2 GB). The r7 contour/k_shortest job-count toolkit.
     prev_fp = None
-    with _micro_conf(tiles.sparkSession, shuffle_partitions):
+    with micro_conf(tiles.sparkSession, shuffle_partitions):
         for _ in range(max_rounds):
             neigh = (
                 sym.join(labels, sym.dst == labels.rid)
@@ -531,7 +503,7 @@ def sieve(tiles: DataFrame, zoom: int, threshold: int, max_rounds=32,
         "region_id", F.col("region_id").alias("comp")
     ).localCheckpoint()
     prev_fp = None
-    with _micro_conf(tiles.sparkSession, shuffle_partitions):
+    with micro_conf(tiles.sparkSession, shuffle_partitions):
         for _ in range(max_rounds):  # fused rounds — see the region loop
             neigh = (
                 ab_sym.join(comp, ab_sym.rb == comp.region_id)

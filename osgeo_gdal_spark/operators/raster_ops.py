@@ -19,16 +19,6 @@ from ..kernels import checksum as CK, resample as R
 from ..sources.raster import TILE, TILE_SCHEMA, key_range, parse_tile
 from ..session import local_df
 
-_PIXEL_SCHEMA = T.StructType(
-    [
-        T.StructField("zoom", T.IntegerType()),
-        T.StructField("gpx", T.LongType()),
-        T.StructField("gpy", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
 def translate_tiles(tiles: DataFrame, scale=1.0, offset=0.0,
                     out_dtype="uint8", srcwin=None) -> DataFrame:
     """gdal_translate equivalent: optional pixel window + linear scale +
@@ -154,52 +144,21 @@ def explode_pixels(tiles: DataFrame, window=None) -> DataFrame:
     rows are bit-identical to the unwindowed explode filtered to the rect
     (same array content, same origin arithmetic), while non-window tiles
     are pruned natively and window tiles build w*h rows instead of
-    TILE^2 (guide §4.1: pass only what crosses the boundary)."""
-    has_origin = "_ox0" in tiles.columns
-    if window is not None:
-        tiles = _window_prune(tiles, has_origin, window)
-        wx0, wy0, ww, wh = (int(v) for v in window)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row)
-                oy0 = int(row["_oy0"]) if has_origin else int(row["gy"]) * TILE
-                ox0 = int(row["_ox0"]) if has_origin else int(row["gx"]) * TILE
-                if window is not None:
-                    ly0 = max(0, wy0 - oy0)
-                    ly1 = min(grid.shape[0], wy0 + wh - oy0)
-                    lx0 = max(0, wx0 - ox0)
-                    lx1 = min(grid.shape[1], wx0 + ww - ox0)
-                    if ly0 >= ly1 or lx0 >= lx1:
-                        continue
-                    grid = grid[ly0:ly1, lx0:lx1]
-                    oy0 += ly0
-                    ox0 += lx0
-                ys, xs = np.indices(grid.shape)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "zoom": int(row["zoom"]),
-                            "gpx": (ox0 + xs.ravel()).astype(np.int64),
-                            "gpy": (oy0 + ys.ravel()).astype(np.int64),
-                            "value": grid.ravel().astype(np.float64),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    return tiles.mapInPandas(gen, _PIXEL_SCHEMA)
+    TILE^2 (guide §4.1: pass only what crosses the boundary). The window
+    is the caller's only rect filter: no post-filter on gpx/gpy needs to
+    restate it."""
+    return _explode(tiles, window, banded=False)
 
 
 def explode_pixels_banded(tiles: DataFrame, window=None) -> DataFrame:
     """explode_pixels with the band column kept — the multi-band oracle
     bridge (blend / nodata-to-alpha emit several bands per tile).
     ``window`` as in explode_pixels (slice-exact, natively pruned)."""
+    return _explode(tiles, window, banded=True)
+
+
+def _explode(tiles: DataFrame, window, banded: bool) -> DataFrame:
+    """The one generator body behind explode_pixels(_banded)."""
     has_origin = "_ox0" in tiles.columns
     if window is not None:
         tiles = _window_prune(tiles, has_origin, window)
@@ -225,18 +184,19 @@ def explode_pixels_banded(tiles: DataFrame, window=None) -> DataFrame:
                     oy0 += ly0
                     ox0 += lx0
                 ys, xs = np.indices(grid.shape)
-                outs.append(pd.DataFrame({
-                    "zoom": int(row["zoom"]),
-                    "band": int(row["band"]),
-                    "gpx": (ox0 + xs.ravel()).astype(np.int64),
-                    "gpy": (oy0 + ys.ravel()).astype(np.int64),
-                    "value": grid.ravel().astype(np.float64),
-                }))
+                cols = {"zoom": int(row["zoom"])}
+                if banded:
+                    cols["band"] = int(row["band"])
+                cols["gpx"] = (ox0 + xs.ravel()).astype(np.int64)
+                cols["gpy"] = (oy0 + ys.ravel()).astype(np.int64)
+                cols["value"] = grid.ravel().astype(np.float64)
+                outs.append(pd.DataFrame(cols))
             if outs:
                 yield pd.concat(outs)
 
+    band = "band INT, " if banded else ""
     return tiles.mapInPandas(
-        gen, "zoom INT, band INT, gpx LONG, gpy LONG, value DOUBLE")
+        gen, f"zoom INT, {band}gpx LONG, gpy LONG, value DOUBLE")
 
 
 def pyramid_average(tiles: DataFrame) -> DataFrame:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -100,3 +101,31 @@ def local_df(spark: SparkSession, rows, schema):
         return spark.createDataFrame(pdf, schema)
     except Exception:
         return spark.createDataFrame(rows, schema)
+
+
+_MICRO_KEYS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+               "spark.sql.codegen.wholeStage")
+
+
+@contextmanager
+def micro_conf(spark: SparkSession, shuffle_partitions):
+    """Scoped micro-state conf for iterative loops whose per-round state
+    is known to be tiny (min-label propagation, shortest-path
+    relaxation): shuffle width ``shuffle_partitions``, with AQE and
+    whole-stage codegen off alongside (AQE splits every round's action
+    into one job per query stage, and codegen compiles throwaway janino
+    classes — pure overhead at micro row counts). The three keys are
+    restored on exit, also when the body raises; ``None`` is a no-op
+    (the at-scale default)."""
+    if shuffle_partitions is None:
+        yield
+        return
+    saved = [spark.conf.get(k) for k in _MICRO_KEYS]
+    for k, v in zip(_MICRO_KEYS, (str(int(shuffle_partitions)), "false",
+                                  "false")):
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in zip(_MICRO_KEYS, saved):
+            spark.conf.set(k, v)

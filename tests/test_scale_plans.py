@@ -126,18 +126,12 @@ def test_adaptive_repartition_preserves_rows(spark):
 
 
 def test_spatial_join_strategy_plan_shapes(spark):
-    """strategy='single_pass' must scan the source exactly once (the
-    I/O-bound shape); strategy='branch' trades a second (column-pruned)
-    scan for a UDF-free rect path. Both verified by plan inspection and
-    identical results."""
+    """The join's rect fast path is a separate branch: it trades a second
+    (column-pruned) source scan for a UDF-free rect path, verified by
+    plan inspection."""
     pages = PG.pages_df(spark, SF)
-    single = SJ.spatial_join(spark, pages, PL.POLYGONS, strategy="single_pass")
-    assert plan_of(single).count("FileScan parquet") == 1
-    branch = SJ.spatial_join(spark, pages, PL.POLYGONS, strategy="branch")
+    branch = SJ.spatial_join(spark, pages, PL.POLYGONS)
     assert plan_of(branch).count("FileScan parquet") == 2
-    a = {(r["url"], r["eas_id"]) for r in single.select("url", "eas_id").collect()}
-    b = {(r["url"], r["eas_id"]) for r in branch.select("url", "eas_id").collect()}
-    assert a == b
 
 
 def test_proximity_shuffle_carries_no_pixels(spark):

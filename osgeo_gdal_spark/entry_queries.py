@@ -2250,7 +2250,7 @@ def q_raster_footprint(spark: SparkSession, sf: str) -> DataFrame:
     from .sources import raster as RS
 
     tiles = RS.synth_category_tiles(spark, RASTER_ZOOM, block=96)
-    # shuffle_partitions=8: the cross-tile merge graph of this fixture
+    # shuffle_partitions=1: the cross-tile merge graph of this fixture
     # is micro-state (r7 contour/k_shortest scoped-conf pattern)
     polys = PZ.footprint(tiles, RASTER_ZOOM, lambda g: g == 1,
                          shuffle_partitions=1, walk_partitions=16)

@@ -136,11 +136,6 @@ def quadkey_sql(gx: str, gy: str, zoom: int, dialect: str) -> str:
 # --- pixel-level raster generators (synthetic fixture, FIXTURES.md §3) ----
 
 
-def synth_pixel_sql(px: str, py: str, zoom: int) -> str:
-    """Deterministic fixture pixel value: (px*7 + py*11 + zoom) % 255."""
-    return f"(({px} * 7 + {py} * 11 + {zoom}) % 255)"
-
-
 def checksum_term_sql(val: str, flat_idx: str) -> str:
     """One pixel's contribution to the GDALChecksumImage sum:
     val % primes[flat_idx % 11] (gdalchecksum.cpp:54). SUM(...) % 65536 of

@@ -127,17 +127,6 @@ def st_makepoint(x, y):
     )
 
 
-def _not_implemented(name, hint):
-    @F.pandas_udf(T.BinaryType())
-    def udf(g):
-        raise NotImplementedError(
-            f"{name} needs a full GEOS-class engine (reference delegates to "
-            f"GEOS, SURVEY §2.D ○-tier). Extension point: {hint}"
-        )
-
-    return udf
-
-
 def _binary_overlay(op):
     """Two-geometry boolean set op via the GEOS-free edge-classification
     kernel (kernels/overlay_kernel.py) — the closed-form replacement for
@@ -1014,30 +1003,3 @@ def st_convexhull(geoms):
     return pd.Series(out)
 
 
-@F.pandas_udf(T.BinaryType())
-def st_cliprect_10x10(geoms):
-    """ST clip against the fixed rect [-10,-10]x[10,10] (Sutherland-
-    Hodgman, kernels/clip.py). Fixed window because pandas UDFs take
-    columns; parametrize via partial registration when needed."""
-    import pandas as pd
-
-    from ..kernels import clip as CL
-
-    out = []
-    for g in geoms:
-        if g is None:
-            out.append(None)
-            continue
-        pg = W.parse_wkb(bytes(g))
-        rings = []
-        ring_i = 0
-        for nr in pg.part_rings:
-            for _ in range(int(nr)):
-                s, e = pg.ring_offsets[ring_i], pg.ring_offsets[ring_i + 1]
-                cx, cy = CL.sh_clip_ring(pg.xs[s:e], pg.ys[s:e],
-                                         -10.0, -10.0, 10.0, 10.0)
-                ring_i += 1
-                if len(cx) >= 3:
-                    rings.append(list(zip(cx.tolist(), cy.tolist())))
-        out.append(W.polygon_wkb(rings) if rings else None)
-    return pd.Series(out)

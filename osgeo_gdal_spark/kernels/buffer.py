@@ -63,19 +63,6 @@ def disk_polygon(cx: float, cy: float, d: float, quadsegs: int = 8):
     return (xs, ys)
 
 
-def edge_rect(ax, ay, bx, by, d):
-    """Rectangle sweeping segment AB by ±d perpendicular (CCW quad),
-    or None for a degenerate edge."""
-    dx, dy = bx - ax, by - ay
-    ln = math.hypot(dx, dy)
-    if ln == 0.0:
-        return None
-    nx, ny = -dy / ln * d, dx / ln * d
-    xs = np.array([ax - nx, bx - nx, bx + nx, ax + nx])
-    ys = np.array([ay - ny, by - ny, by + ny, ay + ny])
-    return (xs, ys)
-
-
 def edge_capsule(ax, ay, bx, by, d, quadsegs: int = 8):
     """Segment ⊕ disk-polygon = the convex hull of the disk translated
     to both endpoints (the Minkowski sum of a segment and a convex

@@ -145,16 +145,6 @@ def k_ring(cell: int, r: int) -> np.ndarray:
     return np.unique(encode(xv.ravel(), yv.ravel(), z))
 
 
-def ring_only(cell: int, r: int) -> np.ndarray:
-    """Cells at exactly Chebyshev distance r (the hollow ring)."""
-    if r == 0:
-        return np.asarray([cell], dtype=np.int64)
-    inner = set(k_ring(cell, r - 1).tolist())
-    return np.asarray(
-        [c for c in k_ring(cell, r).tolist() if c not in inner], dtype=np.int64
-    )
-
-
 def cover_bbox(xmin, ymin, xmax, ymax, zoom, lat_is_y=True):
     """Cell cover of a lat/lon bbox at a zoom: all XYZ tiles intersecting it.
 

@@ -133,15 +133,3 @@ def quadkey(tx, ty, zoom):
     return out if out.size > 1 else out[0]
 
 
-def quadkey_xyz(gx, gy, zoom):
-    """XYZ/Google tile -> quadkey (same digit rule, no flip needed)."""
-    gx = np.atleast_1d(np.asarray(gx, dtype=np.int64))
-    gy = np.atleast_1d(np.asarray(gy, dtype=np.int64))
-    z = int(zoom)
-    digits = np.zeros((len(gx), z), dtype=np.int64)
-    for i in range(z, 0, -1):
-        mask = 1 << (i - 1)
-        d = ((gx & mask) != 0).astype(np.int64) + 2 * ((gy & mask) != 0).astype(np.int64)
-        digits[:, z - i] = d
-    out = np.array(["".join(str(d) for d in row) for row in digits], dtype=object)
-    return out if out.size > 1 else out[0]

@@ -145,11 +145,6 @@ def _pts_on_edges(px, py, ex0, ey0, ex1, ey1):
     return on.any(axis=1)
 
 
-def points_on_boundary(px, py, g) -> np.ndarray:
-    """Mask: points exactly on the polygon's boundary (any ring edge)."""
-    return _pts_on_edges(px, py, *_edges(g))
-
-
 def _probe_points(e):
     """Vertices + edge midpoints of an edge set — the boundary sample
     used for closed (inside-or-on) membership tests."""

@@ -181,42 +181,6 @@ def _node_edges(ea, eb):
     return cuts
 
 
-def _self_node(e, cuts):
-    """Node an edge set against ITSELF: endpoint-on-edge contacts plus
-    proper crossings between DIFFERENT edges (i < j, crossing point
-    computed once from i's parameterization and shared). Needed when a
-    soup's own rings overlap (legal even-odd input — e.g. two
-    overlapping member rects): partially-coincident edges from
-    different rings must split at each other's endpoints or the
-    sub-segment soup is not a planar subdivision."""
-    for i, lst in _node_edges(e, e).items():
-        cuts.setdefault(i, []).extend(lst)
-    x0, y0, x1, y1 = (a.astype(np.float64) for a in e)
-    rx = (x1 - x0)[:, None]
-    ry = (y1 - y0)[:, None]
-    sx = (x1 - x0)[None, :]
-    sy = (y1 - y0)[None, :]
-    qpx = x0[None, :] - x0[:, None]
-    qpy = y0[None, :] - y0[:, None]
-    rxs = rx * sy - ry * sx
-    c1 = qpx * sy - qpy * sx
-    c2 = qpx * ry - qpy * rx
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = c1 / rxs
-        u = c2 / rxs
-    cross = (rxs != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
-    ii, jj = np.nonzero(cross)
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        if i >= j:
-            continue
-        tv = float(t[i, j])
-        uv = float(u[i, j])
-        px = float(x0[i]) + tv * float(x1[i] - x0[i])
-        py = float(y0[i]) + tv * float(y1[i] - y0[i])
-        cuts.setdefault(i, []).append((tv, px, py))
-        cuts.setdefault(j, []).append((uv, px, py))
-
-
 def _proper_crossings(ea, eb, cuts_a, cuts_b):
     """Exact proper-crossing detection on the lattice; the float
     crossing point is computed once and shared."""
@@ -338,22 +302,6 @@ def _side_probes(segs, soups):
             eps_r = np.where(bad, eps_r * 0.5, eps_r)
     raise RuntimeError(
         "snapped overlay: side probes could not clear the boundaries")
-
-
-def _off_boundary(px, py, soups) -> bool:
-    """True when (px, py) is strictly off every edge of every soup —
-    exact float on-segment test (no tolerance: a probe ON an edge is
-    re-probed closer in by the caller)."""
-    for rings in soups:
-        for xs, ys in rings:
-            x1 = np.roll(xs, -1)
-            y1 = np.roll(ys, -1)
-            cross = (x1 - xs) * (py - ys) - (y1 - ys) * (px - xs)
-            dot = (x1 - xs) * (px - xs) + (y1 - ys) * (py - ys)
-            rr = (x1 - xs) ** 2 + (y1 - ys) ** 2
-            if np.any((cross == 0.0) & (dot >= 0.0) & (dot <= rr)):
-                return False
-    return True
 
 
 _OPS = {

@@ -15,9 +15,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..session import micro_conf
 from ..sources.raster import TILE, parse_tile
 from .focal import _strips
+from .graph import connected_components
 
 _SEG_SCHEMA = T.StructType(
     [
@@ -103,7 +103,7 @@ def contour_segments(tiles: DataFrame, zoom: int, levels,
 
 
 def contour_polylines(tiles: DataFrame, zoom: int, levels,
-                      bucket=512, max_rounds=24, emit_wkb=False,
+                      bucket=512, emit_wkb=False,
                       cell_window=None, shuffle_partitions=None) -> DataFrame:
     """Stitch per-cell segments into polylines — the second phase of GDAL
     contour (``alg/contour.cpp`` segment merger / ring appender),
@@ -119,8 +119,9 @@ def contour_polylines(tiles: DataFrame, zoom: int, levels,
        the bucket's segments joined only at degree-2 vertices; emits one
        FRAGMENT row per local chain with its unmatched degree-2 endpoints
        (bucket-border crossings) and a terminal flag.
-    3. **global merge**: min-label propagation over fragments sharing a
-       border endpoint — a tiny graph (only chains crossing buckets).
+    3. **global merge**: ``graph.connected_components`` over fragments
+       sharing a border endpoint — a tiny graph (only chains crossing
+       buckets).
 
     Returns (level, polyline_id, n_segs, length, closed); closed = the
     merged chain has no terminal and no unmatched endpoint. With
@@ -326,51 +327,15 @@ def contour_polylines(tiles: DataFrame, zoom: int, levels,
     open_ends = fends.filter(F.col("vk").isNotNull())
     a = open_ends.select("vk", F.col("frag_id").alias("fa"))
     b = open_ends.select("vk", F.col("frag_id").alias("fb"))
-    edges = (
-        a.join(b, "vk").filter(F.col("fa") != F.col("fb"))
-        .select(F.col("fa").alias("src"), F.col("fb").alias("dst"))
-        .distinct().localCheckpoint()
-    )
-    # labels derives narrowly from the already-checkpointed frags — no
-    # eager checkpoint of its own (it is read once, by round 1)
-    labels = frags.select(F.col("frag_id").alias("rid"),
-                          F.col("frag_id").alias("label"))
-    # min-label propagation + pointer jump fused into ONE lazy plan per
-    # round; the convergence fingerprint agg is the round's single
-    # materializing action (labels only ever DECREASE, so an unchanged
-    # (count, sum) == fixpoint — the r7 k_shortest job-count toolkit).
-    # The cross-bucket fragment graph is micro-state (only chains that
-    # CROSS buckets), so callers may scope a small shuffle width +
-    # AQE/codegen off via ``shuffle_partitions``.
-    spark = tiles.sparkSession
-    with micro_conf(spark, shuffle_partitions):
-        prev_fp = None
-        for _ in range(max_rounds):
-            neigh = (
-                edges.join(labels, edges.dst == labels.rid)
-                .groupBy("src").agg(F.min("label").alias("nmin"))
-            )
-            prop = (
-                labels.join(neigh, labels.rid == neigh.src, "left")
-                .select("rid", F.least(
-                    F.col("label"), F.coalesce("nmin", F.col("label"))
-                ).alias("label"))
-            )
-            jumped = prop.alias("x").join(
-                prop.select(F.col("rid").alias("label"),
-                            F.col("label").alias("label2")).alias("y"),
-                "label", "left",
-            ).select("rid", F.coalesce("label2", "label").alias("label"))                 .localCheckpoint(eager=False)
-            fp = jumped.agg(
-                F.count("*"),
-                F.sum(F.col("label").cast("decimal(38,0)"))).first()
-            labels = jumped
-            if prev_fp == (fp[0], fp[1]):
-                break
-            prev_fp = (fp[0], fp[1])
-
-    lab = labels.select(F.col("rid").alias("frag_id"),
-                        F.col("label").alias("polyline_id"))
+    # the cross-bucket fragment graph is micro-state (only chains that
+    # CROSS buckets), so callers may scope a small shuffle width
+    edges = a.join(b, "vk").filter(F.col("fa") != F.col("fb")).select(
+        F.col("fa").alias("src"), F.col("fb").alias("dst"))
+    lab = connected_components(
+        edges, frags.select(F.col("frag_id").alias("node")),
+        shuffle_partitions,
+    ).select(F.col("node").alias("frag_id"),
+             F.col("label").alias("polyline_id"))
     with_pl = frags.join(lab, "frag_id")
     unmatched = (
         open_ends.join(lab, "frag_id")

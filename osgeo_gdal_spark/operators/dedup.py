@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import micro_conf
+from .graph import connected_components
 
 
 def exact_dup_groups(docs: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
@@ -219,31 +219,28 @@ def jaccard_pairs(docs: DataFrame, pairs: DataFrame, text_col="text",
 def near_dup_groups(docs: DataFrame, n_shingle=3, num_hashes=16, bands=4,
                     rows_per_band=4, jaccard_threshold=0.8,
                     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                    text_col="text", id_col="doc_id",
-                    max_rounds=16) -> DataFrame:
+                    text_col="text", id_col="doc_id") -> DataFrame:
     """The END-TO-END near-duplicate pipeline every web corpus runs:
     shingles -> MinHash -> LSH candidate pairs -> exact word-Jaccard
     verify (>= threshold) -> connected components -> one keeper per group
     (min doc_id). Returns (group_id, doc_id, keep) — ``keep=false`` rows
     are the documents a dedup pass would drop.
 
-    The component closure uses the same bounded min-label propagation as
-    the polygonize merge (duplicate clusters are tiny; rounds ~
-    log2(largest cluster diameter))."""
+    The component closure is ``graph.connected_components`` over the
+    verified pairs (duplicate clusters are tiny)."""
     sh = shingles(docs, n_shingle, text_col, id_col)
     sig = minhash_signatures(sh, num_hashes)
     cand = lsh_candidate_pairs(sig, bands, rows_per_band, max_bucket)
     verified = jaccard_pairs(docs, cand, text_col, id_col).filter(
         F.col("jaccard") >= jaccard_threshold
-    ).select("doc_a", "doc_b")
-    return _min_label_groups(verified, max_rounds)
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return _keepers(connected_components(verified))
 
 
 def near_dup_groups_portable(docs: DataFrame, num_hashes=8, k=3,
                              jaccard_threshold=0.8,
                              max_bucket: int | None = DEFAULT_MAX_BUCKET,
                              text_col="text", id_col="doc_id",
-                             max_rounds=16,
                              shuffle_partitions=None) -> DataFrame:
     """``near_dup_groups`` over the engine-portable mod-2^31-1 sketch
     path (lsh_pairs_portable) instead of xxhash64 — every stage of the
@@ -256,59 +253,17 @@ def near_dup_groups_portable(docs: DataFrame, num_hashes=8, k=3,
                               text_col, id_col).select("doc_a", "doc_b")
     verified = jaccard_pairs(docs, cand, text_col, id_col).filter(
         F.col("jaccard") >= jaccard_threshold
-    ).select("doc_a", "doc_b")
-    return _min_label_groups(verified, max_rounds, shuffle_partitions)
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return _keepers(connected_components(
+        verified, shuffle_partitions=shuffle_partitions))
 
 
-def _min_label_groups(verified: DataFrame, max_rounds: int,
-                      shuffle_partitions=None) -> DataFrame:
-    """Connected components over verified duplicate pairs by bounded
-    min-label propagation (the polygonize-merge shape: duplicate
-    clusters are tiny, rounds ~ log2 of the largest cluster diameter),
-    then one keeper per group (min doc_id).
-
-    Each round fuses propagation + pointer jump into ONE lazy plan
-    whose single materializing action is the carried (count,
-    decimal-sum) convergence fingerprint — labels only ever decrease,
-    so an unchanged sum is the fixpoint (the r7 contour/k_shortest
-    job-count toolkit; previously each round paid a checkpoint + a
-    changed-check join + a conditional jump checkpoint)."""
-    edges = verified.unionByName(
-        verified.select(F.col("doc_b").alias("doc_a"),
-                        F.col("doc_a").alias("doc_b"))
-    ).distinct().localCheckpoint()
-    members = edges.select(F.col("doc_a").alias("doc_id")).distinct()
-    labels = members.select("doc_id", F.col("doc_id").alias("label")
-                            ).localCheckpoint()
-    prev_fp = None
-    with micro_conf(verified.sparkSession, shuffle_partitions):
-        for _ in range(max_rounds):
-            neigh = (
-                edges.join(labels, edges.doc_b == labels.doc_id)
-                .groupBy("doc_a").agg(F.min("label").alias("nmin"))
-            )
-            prop = (
-                labels.join(neigh, labels.doc_id == neigh.doc_a, "left")
-                .select("doc_id", F.least(
-                    F.col("label"), F.coalesce("nmin", F.col("label"))
-                ).alias("label"))
-            )
-            jumped = prop.alias("x").join(
-                prop.select(F.col("doc_id").alias("label"),
-                            F.col("label").alias("label2")).alias("y"),
-                "label", "left",
-            ).select("doc_id", F.coalesce("label2", "label").alias("label"))                 .localCheckpoint(eager=False)
-            fp = jumped.agg(
-                F.count("*"),
-                F.sum(F.col("label").cast("decimal(38,0)"))).first()
-            labels = jumped
-            if prev_fp == (fp[0], fp[1]):
-                break
-            prev_fp = (fp[0], fp[1])
-
+def _keepers(labels: DataFrame) -> DataFrame:
+    """(group_id, doc_id, keep) from component labels: the group is the
+    component's min doc_id, which is also its one keeper."""
     return labels.select(
-        F.col("label").alias("group_id"), "doc_id",
-        (F.col("doc_id") == F.col("label")).alias("keep"),
+        F.col("label").alias("group_id"), F.col("node").alias("doc_id"),
+        (F.col("node") == F.col("label")).alias("keep"),
     )
 
 

@@ -6,16 +6,16 @@ features. The reference runs in-memory Dijkstra on one machine; the
 Spark-first shape is iterative edge relaxation (distributed
 Bellman-Ford / Pregel): the frontier DataFrame joins the edge table on
 the node key each round, min-reduces, and localCheckpoints to keep the
-plan flat — the same lineage-truncation move the polygonize label
-propagation uses. Work per round is one shuffle on the skinny
+plan flat — the same lineage-truncation move ``connected_components``
+uses. Work per round is one shuffle on the skinny
 (node, dist) pairs; rounds are bounded by the graph diameter, and
 convergence is detected from the relaxation count, so a 100 TB road
 network with diameter ~1e3 runs ~1e3 bounded shuffles regardless of
 edge count.
 
-Connected components are already first-class elsewhere in the repo
-(dedup.near_dup_groups, polygonize union-find); this module adds the
-weighted-path tier.
+``connected_components`` is the engine's one component closure: the
+near-duplicate groups (dedup), the polygonize region merge, the sieve
+absorb graph and the contour fragment stitch all call it.
 """
 
 from __future__ import annotations
@@ -24,6 +24,80 @@ import warnings
 
 from pyspark.sql import DataFrame, functions as F
 from ..session import local_df, micro_conf
+
+
+# Round cap of ``connected_components``. Pointer jumping converges in
+# O(log diameter) rounds; the engine's component graphs need 2-3.
+CC_MAX_ROUNDS = 64
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
+                         shuffle_partitions=None) -> DataFrame:
+    """Connected components (GNMGraph::ConnectedComponents,
+    gnm/gnmgraph.cpp:375) -> (node, label), label = the component's
+    minimum node id.
+
+    ``edges``: (src, dst) pairs in either direction. ``nodes``: optional
+    one-column (node) frame; its isolated nodes come back labelled with
+    their own id. ``None`` means the nodes are the edge endpoints.
+
+    The symmetric closure is the distinct undirected pairs emitted in
+    both orientations (a self-loop twice, which changes no label). It
+    ends in a Union on purpose: a checkpoint of a plan that ends in a
+    hash partitioning keeps that partitioning with attribute ids Spark
+    does not normalize when it compares plans, so the pointer jump's
+    self-join could not reuse the closure's broadcast, and every round
+    would pay a second broadcast job.
+
+    Each round fuses min-label propagation and a pointer jump into ONE
+    lazy plan whose single materializing action is the (count,
+    decimal-sum) fingerprint of the new labels. Labels only ever
+    decrease, so an unchanged fingerprint is the fixpoint; rounds ~
+    log2 of the largest component diameter. ``localCheckpoint(eager=
+    False)`` still truncates the lineage every round (callers stack
+    further loops on the result, and the plan string caps at 2 GB)
+    without a job of its own. ``shuffle_partitions`` scopes the micro-
+    state conf (session.micro_conf) over everything from the closure
+    to the last round. Raises RuntimeError when ``CC_MAX_ROUNDS`` rounds
+    pass without two equal consecutive fingerprints: unconverged labels
+    would silently split components."""
+    with micro_conf(edges.sparkSession, shuffle_partitions):
+        und = edges.select(F.least("src", "dst").alias("a"),
+                           F.greatest("src", "dst").alias("b")).distinct()
+        sym = und.select(F.col("a").alias("src"), F.col("b").alias("dst")) \
+            .unionByName(und.select(F.col("b").alias("src"),
+                                    F.col("a").alias("dst"))) \
+            .localCheckpoint(eager=False)
+        if nodes is None:
+            nodes = sym.select(F.col("src").alias("node")).distinct()
+        labels = nodes.select("node", F.col("node").alias("label"))
+        prev_fp = None
+        for _ in range(CC_MAX_ROUNDS):
+            neigh = (
+                sym.join(labels, sym.dst == labels.node)
+                .groupBy("src").agg(F.min("label").alias("nmin"))
+            )
+            prop = (
+                labels.join(neigh, labels.node == neigh.src, "left")
+                .select("node", F.least(
+                    F.col("label"), F.coalesce("nmin", F.col("label"))
+                ).alias("label"))
+            )
+            labels = prop.alias("x").join(
+                prop.select(F.col("node").alias("label"),
+                            F.col("label").alias("label2")).alias("y"),
+                "label", "left",
+            ).select("node", F.coalesce("label2", "label").alias("label")) \
+                .localCheckpoint(eager=False)
+            fp = labels.agg(
+                F.count("*"),
+                F.sum(F.col("label").cast("decimal(38,0)"))).first()
+            if prev_fp == (fp[0], fp[1]):
+                return labels
+            prev_fp = (fp[0], fp[1])
+    raise RuntimeError(
+        f"connected_components: labels still changing after "
+        f"{CC_MAX_ROUNDS} rounds")
 
 
 def shortest_paths(edges: DataFrame, source, max_rounds: int = 64,

@@ -131,18 +131,3 @@ def knn_join(spark, pages: DataFrame, queries, k=5, zoom=KNN_ZOOM,
     return results
 
 
-def knn_topk_plain(pages_with_key: DataFrame, ring_df: DataFrame, k: int) -> DataFrame:
-    """Single-shot variant (no driver loop) for a pre-built ring table —
-    the shape used by oracle-checked queries where the ring is known to
-    cover the true top-k."""
-    cand = pages_with_key.join(F.broadcast(ring_df), "cell_key")
-    dist2 = (F.col("lon") - F.col("qlon")) * (F.col("lon") - F.col("qlon")) + (
-        F.col("lat") - F.col("qlat")
-    ) * (F.col("lat") - F.col("qlat"))
-    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), F.col("url").asc())
-    return (
-        cand.withColumn("dist2", dist2)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "url", "dist2", "rank")
-    )

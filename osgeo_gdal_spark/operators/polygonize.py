@@ -16,10 +16,9 @@ hard part (a), the genuinely distributed piece:
    component id) runs — the only cross-tile information needed;
 3. **edge table**: self-join of borders between adjacent tiles where
    values match -> (id_a, id_b) merge edges;
-4. **iterative min-label propagation** (DataFrame union-find): each round
-   every id adopts the smallest id in its neighborhood; rounds ~
-   log2(region diameter in tiles), each a small join over the edge table —
-   NOT over pixels;
+4. **connected components** of the merge edges
+   (``graph.connected_components``): rounds ~ log2(region diameter in
+   tiles), each a small join over the edge table — NOT over pixels;
 5. final aggregation: per-region pixel_count / value / bbox.
 
 Regions, borders AND the different-value adjacency table are all emitted
@@ -33,8 +32,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..session import micro_conf
 from ..sources.raster import TILE, parse_tile
+from .graph import connected_components
 
 
 def _label_tile(grid: np.ndarray) -> np.ndarray:
@@ -309,8 +308,8 @@ def _pieces_df(tiles: DataFrame, zoom: int, with_edges=False) -> DataFrame:
     return tiles.mapInPandas(gen, _PIECE_SCHEMA)
 
 
-def _polygonize_parts(tiles: DataFrame, zoom: int, max_rounds=32,
-                      with_edges=False, shuffle_partitions=None):
+def _polygonize_parts(tiles: DataFrame, zoom: int, with_edges=False,
+                      shuffle_partitions=None):
     """Shared machinery: returns (regions, final_labels, borders,
     adjacency, edges) where labels maps every provisional rid to its
     merged component label and edges (None unless with_edges) are the
@@ -346,62 +345,23 @@ def _polygonize_parts(tiles: DataFrame, zoom: int, max_rounds=32,
         .filter(F.col("va") == F.col("vb"))
         .select(F.col("ra").alias("src"), F.col("rb").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
-
-    # symmetric closure once; then iterative min-label propagation
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().cache()
-
-    labels = regions.select(F.col("rid"), F.col("rid").alias("label")).cache()
-    # fused round: propagation + pointer jump in ONE lazy plan; the
-    # carried (count, decimal-sum) fingerprint is the round's single
-    # materializing action (labels only decrease — unchanged sum ==
-    # fixpoint; localCheckpoint still truncates lineage each round, the
-    # sieve stacks a second loop on top and the plan string caps at
-    # 2 GB). The r7 contour/k_shortest job-count toolkit.
-    prev_fp = None
-    with micro_conf(tiles.sparkSession, shuffle_partitions):
-        for _ in range(max_rounds):
-            neigh = (
-                sym.join(labels, sym.dst == labels.rid)
-                .groupBy("src").agg(F.min("label").alias("nmin"))
-            )
-            prop = (
-                labels.join(neigh, labels.rid == neigh.src, "left")
-                .select(
-                    "rid",
-                    F.least(F.col("label"),
-                            F.coalesce("nmin", F.col("label"))).alias("label"),
-                )
-            )
-            jumped = prop.alias("x").join(
-                prop.select(F.col("rid").alias("label"),
-                            F.col("label").alias("label2")).alias("y"),
-                "label", "left",
-            ).select(F.col("rid"), F.coalesce("label2", "label").alias("label")) \
-                .localCheckpoint(eager=False)
-            fp = jumped.agg(
-                F.count("*"),
-                F.sum(F.col("label").cast("decimal(38,0)"))).first()
-            labels = jumped
-            if prev_fp == (fp[0], fp[1]):
-                break
-            prev_fp = (fp[0], fp[1])
+    labels = connected_components(
+        edges, regions.select(F.col("rid").alias("node")),
+        shuffle_partitions,
+    ).select(F.col("node").alias("rid"), "label")
 
     return regions, labels, borders, adjacency, ring_edges
 
 
-def polygonize(tiles: DataFrame, zoom: int, max_rounds=32,
-               shuffle_partitions=None):
+def polygonize(tiles: DataFrame, zoom: int, shuffle_partitions=None):
     """Region table for a tiled category raster.
 
     Returns DataFrame (region_id, value, n_pixels, xmin, ymin, xmax, ymax)
     where region_id = min global flat pixel index in the region.
     """
     regions, labels, _borders, _adj, _e = _polygonize_parts(
-        tiles, zoom, max_rounds, shuffle_partitions=shuffle_partitions)
+        tiles, zoom, shuffle_partitions=shuffle_partitions)
     merged = (
         regions.join(labels, "rid")
         .groupBy(F.col("label").alias("region_id"))
@@ -417,7 +377,7 @@ def polygonize(tiles: DataFrame, zoom: int, max_rounds=32,
     return merged
 
 
-def sieve(tiles: DataFrame, zoom: int, threshold: int, max_rounds=32,
+def sieve(tiles: DataFrame, zoom: int, threshold: int,
           shuffle_partitions=None):
     """Remove small connected regions by merging each region below
     `threshold` pixels into its largest neighbor — GDAL sieve semantics
@@ -435,7 +395,7 @@ def sieve(tiles: DataFrame, zoom: int, threshold: int, max_rounds=32,
     value/id of the absorber; absorbed regions disappear into it.
     """
     regions, labels, borders, in_tile, _e = _polygonize_parts(
-        tiles, zoom, max_rounds, shuffle_partitions=shuffle_partitions)
+        tiles, zoom, shuffle_partitions=shuffle_partitions)
 
     # cross-tile diff-value border pairs complete the adjacency graph
     a = borders.filter(F.col("side") == 0).select(
@@ -492,44 +452,12 @@ def sieve(tiles: DataFrame, zoom: int, threshold: int, max_rounds=32,
         .select(F.col("ra"), F.col("rb"))
     ).localCheckpoint()
 
-    # connected components of the absorb graph (symmetric closure +
-    # min-label propagation; components are tiny — trees of smalls rooted
-    # at one big, or all-small cycles — so few rounds suffice)
-    ab_sym = absorb.unionByName(
-        absorb.select(F.col("rb").alias("ra"), F.col("ra").alias("rb"))
-    ).distinct().localCheckpoint()
-    members = ab_sym.select(F.col("ra").alias("region_id")).distinct()
-    comp = members.select(
-        "region_id", F.col("region_id").alias("comp")
-    ).localCheckpoint()
-    prev_fp = None
-    with micro_conf(tiles.sparkSession, shuffle_partitions):
-        for _ in range(max_rounds):  # fused rounds — see the region loop
-            neigh = (
-                ab_sym.join(comp, ab_sym.rb == comp.region_id)
-                .groupBy("ra").agg(F.min("comp").alias("nmin"))
-            )
-            prop = (
-                comp.join(neigh, comp.region_id == neigh.ra, "left")
-                .select(
-                    "region_id",
-                    F.least(F.col("comp"),
-                            F.coalesce("nmin", F.col("comp"))).alias("comp"),
-                )
-            )
-            jumped = prop.alias("x").join(
-                prop.select(F.col("region_id").alias("comp"),
-                            F.col("comp").alias("comp2")).alias("y"),
-                "comp", "left",
-            ).select("region_id", F.coalesce("comp2", "comp").alias("comp")) \
-                .localCheckpoint(eager=False)
-            fp = jumped.agg(
-                F.count("*"),
-                F.sum(F.col("comp").cast("decimal(38,0)"))).first()
-            comp = jumped
-            if prev_fp == (fp[0], fp[1]):
-                break
-            prev_fp = (fp[0], fp[1])
+    # connected components of the absorb graph: trees of smalls rooted
+    # at one big, or all-small cycles
+    comp = connected_components(
+        absorb.select(F.col("ra").alias("src"), F.col("rb").alias("dst")),
+        shuffle_partitions=shuffle_partitions,
+    ).select(F.col("node").alias("region_id"), F.col("label").alias("comp"))
 
     # component root: non-small first, then largest, then smallest id
     with_comp = merged.join(comp, "region_id", "left").withColumn(
@@ -700,7 +628,7 @@ _POLY_SCHEMA = T.StructType(
 )
 
 
-def polygonize_polygons(tiles: DataFrame, zoom: int, max_rounds=32,
+def polygonize_polygons(tiles: DataFrame, zoom: int,
                         shuffle_partitions=None, walk_partitions=None):
     """Full polygonize: region table + WKB polygon boundaries in GLOBAL
     PIXEL coordinates (ring vertices on the integer pixel lattice).
@@ -710,7 +638,7 @@ def polygonize_polygons(tiles: DataFrame, zoom: int, max_rounds=32,
     from ..kernels import wkb as W
 
     regions, labels, borders, _adj, in_tile = _polygonize_parts(
-        tiles, zoom, max_rounds, with_edges=True,
+        tiles, zoom, with_edges=True,
         shuffle_partitions=shuffle_partitions,
     )
     edges = in_tile.unionByName(_seam_edges(borders))

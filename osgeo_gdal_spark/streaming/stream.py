@@ -72,27 +72,6 @@ def streaming_tile_counts(pages_stream: DataFrame, zoom: int,
     )
 
 
-def run_available_now(sdf: DataFrame, checkpoint: str, out_path: str) -> None:
-    """Drain all available input through the streaming graph once
-    (availableNow trigger) into a parquet sink — the test/backfill mode;
-    production uses the same graph with a continuous trigger.
-
-    Append-mode semantics caveat: windows newer than (max event time -
-    watermark) are NOT emitted when the drain ends — they are still "open".
-    On a bounded backfill that withholds the trailing window(s); for exact
-    bounded-input parity use a complete-mode memory sink (as the tests do)
-    or run the batch twin (entry_queries.q_event_windows) over the tail."""
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def _first_seen_fn(out_key: str, timeout_minutes: int):
     """Shared group function for the first-seen stateful operators
     (dedup by text hash, crawl-frontier by canonical URL): emit the

@@ -116,9 +116,9 @@ def test_cell_prefix_is_parent():
     c = cells.encode(np.array([11]), np.array([26]), 5)[()]
     p = cells.parent(c)
     dx, dy, dz = cells.decode(np.asarray([p]))
-    assert (int(dx[0]), int(dy[0]), int(dz[0])) == (5, 13, 4)
+    assert (int(dx[0, 0]), int(dy[0, 0]), int(dz[0, 0])) == (5, 13, 4)
     kids = cells.children(p)
-    assert int(np.asarray(c)) in set(np.asarray(kids).ravel().tolist())
+    assert int(c[0]) in set(np.asarray(kids).ravel().tolist())
 
 
 def test_cell_quadkey_matches_gdal2tiles():
@@ -240,8 +240,8 @@ def test_helmert7_known_shift_and_inverse():
     lon, lat = np.array([-0.1278]), np.array([51.5074])  # London
     lo2, la2, _ = TR.datum_shift(lon, lat, params)
     # the OSGB shift moves coordinates by ~100 m (~0.001 deg) — sanity
-    dlon = abs(float(lo2) - float(lon))
-    dlat = abs(float(la2) - float(lat))
+    dlon = abs(float(lo2[0]) - float(lon[0]))
+    dlat = abs(float(la2[0]) - float(lat[0]))
     assert 1e-4 < dlon < 5e-3 and 1e-4 < dlat < 5e-3
     # linearized inverse round-trips to second order: the dominant
     # residual is scale x translation ~ 20ppm * 500 m = 1 cm = ~1e-7 deg

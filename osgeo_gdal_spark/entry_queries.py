@@ -5643,7 +5643,6 @@ def q_mosaic_overlay(spark: SparkSession, sf: str) -> DataFrame:
     from .operators import raster_ops as RO
     from .sources import raster as RS
     from .sources.raster import TILE_SCHEMA
-    from .kernels import checksum as CKS
 
     ND = -1.0
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
@@ -5658,11 +5657,8 @@ def q_mosaic_overlay(spark: SparkSession, sf: str) -> DataFrame:
                 g = RS.parse_tile(row).astype(np.float64)
                 top = (g + 97.0) % 255.0
                 top[g % 5 == 0] = ND
-                d = row.to_dict()
-                d.update(dataset_id="top", dtype="float64", nodata=ND,
-                         pixels=top.tobytes(),
-                         checksum=CKS.checksum_image(top))
-                rows.append(d)
+                rows.append(RS.tile_row(top, like=row, dataset_id="top",
+                                        nodata=ND))
             yield pd.DataFrame(rows)
 
     top = tiles.mapInPandas(mk_top, TILE_SCHEMA)
@@ -6350,15 +6346,13 @@ def q_focal_stats(spark: SparkSession, sf: str) -> DataFrame:
     from .sources import raster as RS
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
-    x0, y0, w, h = FOCAL_STATS_WIN
     # fused single-pass form (r8): one halo exchange + one stencil emits
     # all three stats pixel-exactly — the previous three focal_generic
     # chains (median, stddev, mode over floor(A/32)) each paid their own
     # halo exchange, explode_pixels bridge and (gpx, gpy) join; the
     # derived columns below are byte-identical Spark expressions over
     # the same kernel doubles
-    fused = FO.focal_stats_window(tiles, RASTER_ZOOM,
-                                  (x0, x0 + w, y0, y0 + h),
+    fused = FO.focal_stats_window(tiles, RASTER_ZOOM, FOCAL_STATS_WIN,
                                   qdiv=32.0)
     return fused.select(
         "gpx", "gpy", F.col("med"),
@@ -7639,7 +7633,6 @@ def q_fillnodata(spark: SparkSession, sf: str) -> DataFrame:
     from .operators import fillnodata as FN
     from .sources import raster as RS
     from .sources.raster import TILE_SCHEMA
-    from .kernels import checksum as CKK
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
 
@@ -7651,10 +7644,7 @@ def q_fillnodata(spark: SparkSession, sf: str) -> DataFrame:
             for _, row in pdf.iterrows():
                 g = RS.parse_tile(row).astype(np.float64)
                 g[g == 42] = -9999.0
-                d = row.to_dict()
-                d.update(dtype="float64", nodata=-9999.0, pixels=g.tobytes(),
-                         checksum=CKK.checksum_image(g))
-                rows.append(d)
+                rows.append(RS.tile_row(g, like=row, nodata=-9999.0))
             yield pd.DataFrame(rows)
 
     holed = tiles.mapInPandas(punch, TILE_SCHEMA)

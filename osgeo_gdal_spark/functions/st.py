@@ -19,7 +19,7 @@ names its shapely extension point.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..kernels import pip as P, wkb as W
 
@@ -373,8 +373,6 @@ def _normalized(geoms):
     """ST_Normalize (OGRGeometry::Normalize, ogrgeometry.cpp:4369):
     canonical form — each ring rotated to start at its lexicographically
     smallest (x, y) vertex, exterior rings CCW, holes CW."""
-    from .. import kernels
-
     out = []
     for g in geoms:
         if g is None:

@@ -3,10 +3,10 @@
 GDAL contour (``/root/reference/alg/contour.cpp``) emits iso-line segments
 then stitches polylines; the segment phase is cell-local, so distribution
 needs only the focal-style 1-px halo: a tile owns every 2x2 cell whose
-top-left pixel lives in it, and its east/south halo strips provide the
-other corners for border cells. Segment output is exactly the full-raster
-marching squares, partitioned by owner tile (verified against a full-grid
-reference). Polyline stitching across tiles is the deferred second phase
+top-left pixel lives in it, and the east/south border of its
+``focal.halo_apply`` pad provides the other corners for border cells.
+Segment output is exactly the full-raster marching squares, partitioned by
+owner tile (verified against a full-grid reference). Polyline stitching across tiles is the deferred second phase
 (same border machinery as polygonize).
 """
 
@@ -15,8 +15,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.raster import TILE, parse_tile
-from .focal import _strips
+from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
+from .focal import halo_apply
 from .graph import connected_components
 
 _SEG_SCHEMA = T.StructType(
@@ -45,12 +45,11 @@ def contour_segments(tiles: DataFrame, zoom: int, levels,
     lv = [float(x) for x in levels]
     win = None if cell_window is None else tuple(int(v) for v in cell_window)
 
-    def stencil(pdf):
+    def stencil(tgx, tgy, _zoom, pad):
         import pandas as pd
 
         from ..kernels.contour import marching_squares
 
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
         ox, oy = tgx * TILE, tgy * TILE
         # this tile's cell slice of the window (tile-local, half-open)
         if win is not None:
@@ -65,25 +64,9 @@ def contour_segments(tiles: DataFrame, zoom: int, levels,
         else:
             lx0 = ly0 = 0
             lx1 = ly1 = TILE
-        # assemble tile + east/south(+SE) halo: cells owned by this tile
-        # are those with top-left pixel inside it -> need one extra row/col
-        pad = np.full((TILE + 1, TILE + 1), np.nan)
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            dx, dy = int(row["dx"]), int(row["dy"])
-            if (dx, dy) == (0, 0):
-                pad[:TILE, :TILE] = arr
-            elif (dx, dy) == (1, 0):      # from west neighbor: not needed
-                pass
-            elif (dx, dy) == (-1, 0):     # strip from EAST neighbor's west col
-                pad[:TILE, TILE:] = arr
-            elif (dx, dy) == (0, -1):     # from SOUTH neighbor's north row
-                pad[TILE:, :TILE] = arr
-            elif (dx, dy) == (-1, -1):    # from SE neighbor's NW corner
-                pad[TILE:, TILE:] = arr
-        sub = pad[ly0:ly1 + 1, lx0:lx1 + 1]
+        # cells owned by this tile are those with top-left pixel inside
+        # it -> the tile plus its east column / south row of halo
+        sub = pad[1:, 1:][ly0:ly1 + 1, lx0:lx1 + 1]
         rows = []
         for level in lv:
             # marching_squares skips any cell with a NaN corner, so the
@@ -98,8 +81,7 @@ def contour_segments(tiles: DataFrame, zoom: int, levels,
         return pd.DataFrame(
             rows, columns=["level", "cx", "cy", "x0", "y0", "x1", "y1"])
 
-    strips = _strips(tiles, zoom)
-    return strips.groupBy("tgx", "tgy").applyInPandas(stencil, _SEG_SCHEMA)
+    return halo_apply(tiles, zoom, 1, stencil, _SEG_SCHEMA)
 
 
 def contour_polylines(tiles: DataFrame, zoom: int, levels,
@@ -426,26 +408,14 @@ def band_classify(tiles: DataFrame, levels) -> DataFrame:
     def classify(batches):
         import pandas as pd
 
-        from ..kernels import checksum as CK
-
         for pdf in batches:
             rows = []
             for _, row in pdf.iterrows():
                 grid = parse_tile(row).astype(np.float64)
                 band = np.digitize(grid, lv).astype(np.float64)
-                rows.append({
-                    "dataset_id": row["dataset_id"], "zoom": int(row["zoom"]),
-                    "gx": int(row["gx"]), "gy": int(row["gy"]),
-                    "band": int(row["band"]),
-                    "width": grid.shape[1], "height": grid.shape[0],
-                    "dtype": "float64", "nodata": None, "crs": row["crs"],
-                    "pixels": band.tobytes(),
-                    "checksum": CK.checksum_image(band),
-                })
+                rows.append(tile_row(band, like=row, nodata=None))
             if rows:
                 yield pd.DataFrame(rows)
-
-    from ..sources.raster import TILE_SCHEMA
 
     return tiles.mapInPandas(classify, TILE_SCHEMA)
 

@@ -4,10 +4,9 @@ The distributed form of ``/root/reference/alg/rasterfill.cpp``
 (GDALFillNodata: IDW interpolation of nearby valid pixels within a max
 search distance; the reference additionally smooths — deferred). With the
 search radius R bounded (rasterfill's MAX_SEARCH_DIST), the computation is
-tile-local after an R-px halo exchange (the width-generalized focal strip
-machinery): every nodata pixel sees all valid pixels within R regardless
-of tile borders, so the distributed result equals the full-raster result
-exactly.
+tile-local after an R-px halo exchange (``focal.halo_apply`` at width R):
+every nodata pixel sees all valid pixels within R regardless of tile
+borders, so the distributed result equals the full-raster result exactly.
 
 Weights: 1/d^2 over valid pixels with Euclidean d <= R (value at distance
 0 impossible — donors are valid pixels, the target is nodata). Pixels with
@@ -19,9 +18,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..kernels import checksum as CK
-from ..sources.raster import TILE, TILE_SCHEMA
-from .focal import _strips
+from ..sources.raster import TILE, TILE_SCHEMA, tile_row
+from .focal import halo_apply
 
 
 def fill_kernel(pad: np.ndarray, r: int, nodata: float) -> np.ndarray:
@@ -54,48 +52,12 @@ def fillnodata(tiles: DataFrame, zoom: int, nodata: float, radius: int) -> DataF
     if not 1 <= r <= TILE:
         raise ValueError("radius must be in 1..TILE")
 
-    def stencil(pdf):
+    def stencil(tgx, tgy, zoom_v, pad):
         import pandas as pd
 
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
-        zoom_v = int(pdf["zoom"].iloc[0])
-        pad = np.full((TILE + 2 * r, TILE + 2 * r), np.nan)
-        place = {
-            (0, 0): (slice(r, r + TILE), slice(r, r + TILE)),
-            (1, 0): (slice(r, r + TILE), slice(0, r)),          # from west
-            (-1, 0): (slice(r, r + TILE), slice(r + TILE, None)),  # from east
-            (0, 1): (slice(0, r), slice(r, r + TILE)),          # from north
-            (0, -1): (slice(r + TILE, None), slice(r, r + TILE)),  # from south
-            (1, 1): (slice(0, r), slice(0, r)),                 # from NW
-            (-1, 1): (slice(0, r), slice(r + TILE, None)),      # from NE
-            (1, -1): (slice(r + TILE, None), slice(0, r)),      # from SW
-            (-1, -1): (slice(r + TILE, None), slice(r + TILE, None)),  # from SE
-        }
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            sy, sx = place[(int(row["dx"]), int(row["dy"]))]
-            pad[sy, sx] = arr
         out = fill_kernel(pad, r, nodata)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": "fillnodata",
-                    "zoom": zoom_v,
-                    "gx": tgx,
-                    "gy": tgy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": nodata,
-                    "crs": "EPSG:3857",
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            out, dataset_id="fillnodata", zoom=zoom_v, gx=tgx, gy=tgy,
+            band=1, nodata=nodata, crs="EPSG:3857")])
 
-    strips = _strips(tiles, zoom, width=r)
-    return strips.groupBy("tgx", "tgy").applyInPandas(stencil, TILE_SCHEMA)
+    return halo_apply(tiles, zoom, r, stencil, TILE_SCHEMA)

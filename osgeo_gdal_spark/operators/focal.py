@@ -7,12 +7,14 @@ tile-edge pixels need a 1-px **halo** from the 8 neighbor tiles — the
 distributed equivalent of GDAL reading neighbor blocks through its block
 cache.
 
-Halo exchange as a DataFrame op: every tile contributes its edge strips to
-each neighbor (an explode to <= 9 (target, strip) rows carrying only the
-needed 256x1 / 1x1 slices, NOT whole tiles), then ``groupBy(target)``
-assembles the padded (TILE+2)^2 array and one numpy stencil pass runs.
-Shuffle volume is 8 strips/tile ~ 3% of the raster, vs 9x for naive
-whole-tile replication.
+``halo_apply`` is the one halo exchange, shared by every focal operator,
+fillnodata, contour segments and the GAUSS/convolution pyramids: every
+tile sends its body and its r-px edge strips to each neighbor (an explode
+to <= 9 (target, strip) rows carrying only the needed TILE x r / r x r
+slices, NOT whole tiles), then ``groupBy(target)`` assembles one
+NaN-filled (TILE+2r)^2 padded array and hands it to the caller's stencil.
+Shuffle volume is 8 strips/tile ~ 3% of the raster at r=1, vs 9x for
+naive whole-tile replication.
 
 Slope uses Horn's formula exactly as gdaldem:
   dzdx = ((c + 2f + i) - (a + 2d + g)) / (8 * xres)
@@ -27,8 +29,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.raster import TILE, TILE_SCHEMA, parse_tile
-from ..kernels import checksum as CK
+from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
 
 _STRIP_SCHEMA = T.StructType(
     [
@@ -44,11 +45,10 @@ _STRIP_SCHEMA = T.StructType(
 )
 
 
-def _strips(tiles: DataFrame, zoom: int, width: int = 1) -> DataFrame:
-    """Each tile -> its own body (dx=dy=0) + the 8 edge strips of `width`
+def _strips(tiles: DataFrame, zoom: int, r: int) -> DataFrame:
+    """Each tile -> its own body (dx=dy=0) + the 8 edge strips of `r`
     pixels addressed to neighbors. Strip payloads are float64."""
     n = 1 << zoom
-    r = width
 
     def gen(batches):
         import pandas as pd
@@ -85,6 +85,31 @@ def _strips(tiles: DataFrame, zoom: int, width: int = 1) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return tiles.mapInPandas(gen, _STRIP_SCHEMA)
+
+
+def halo_apply(tiles: DataFrame, zoom: int, r: int, fn,
+               schema) -> DataFrame:
+    """The halo exchange: ``fn(tgx, tgy, zoom, pad)`` runs once per tile
+    with ``pad`` the (TILE+2r)^2 float64 array whose interior
+    ``pad[r:r+TILE, r:r+TILE]`` is the tile and whose r-px border holds
+    the 8 neighbors' edge pixels. Border pixels with no sender (the
+    global raster edge, tiles missing from a sparse table) stay NaN.
+    ``fn`` returns a pandas DataFrame of ``schema`` rows."""
+    # the sender sits at (tgx - dx, tgy - dy): d = 1 is the west/north
+    # neighbor, whose strip fills the first r columns/rows of the pad
+    side = {1: slice(0, r), 0: slice(r, r + TILE), -1: slice(r + TILE, None)}
+
+    def assemble(pdf):
+        pad = np.full((TILE + 2 * r, TILE + 2 * r), np.nan)
+        for dx, dy, sh, sw, strip in zip(pdf["dx"], pdf["dy"], pdf["sh"],
+                                         pdf["sw"], pdf["strip"]):
+            pad[side[int(dy)], side[int(dx)]] = np.frombuffer(
+                bytes(strip), dtype=np.float64).reshape(sh, sw)
+        return fn(int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0]),
+                  int(pdf["zoom"].iloc[0]), pad)
+
+    return (_strips(tiles, zoom, r).groupBy("tgx", "tgy")
+            .applyInPandas(assemble, schema))
 
 
 def _dem_compute(mode, pad, xres, yres, nodata, alt_deg=45.0, az_deg=315.0):
@@ -198,60 +223,16 @@ def focal_dem(tiles: DataFrame, zoom: int, mode="slope", xres=1.0, yres=1.0,
     """Any gdaldem 3x3 operator (slope/aspect/tpi/tri_wilson/tri_riley/
     roughness/hillshade — apps/gdaldem_lib.cpp formulas) per tile with
     exact cross-tile halos."""
-    n = 1 << zoom
-    world = n * TILE
 
-    def stencil(pdf):
+    def stencil(tgx, tgy, zoom_v, pad):
         import pandas as pd
 
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
-        zoom_v = int(pdf["zoom"].iloc[0])
-        pad = np.full((TILE + 2, TILE + 2), np.nan)
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            dx, dy = int(row["dx"]), int(row["dy"])
-            if (dx, dy) == (0, 0):
-                pad[1:-1, 1:-1] = arr
-            elif (dx, dy) == (1, 0):      # strip from west neighbor
-                pad[1:-1, :1] = arr
-            elif (dx, dy) == (-1, 0):
-                pad[1:-1, -1:] = arr
-            elif (dx, dy) == (0, 1):      # from north neighbor
-                pad[:1, 1:-1] = arr
-            elif (dx, dy) == (0, -1):
-                pad[-1:, 1:-1] = arr
-            elif (dx, dy) == (1, 1):
-                pad[:1, :1] = arr
-            elif (dx, dy) == (-1, 1):
-                pad[:1, -1:] = arr
-            elif (dx, dy) == (1, -1):
-                pad[-1:, :1] = arr
-            elif (dx, dy) == (-1, -1):
-                pad[-1:, -1:] = arr
-        slope = _dem_compute(mode, pad, xres, yres, nodata)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": mode,
-                    "zoom": zoom_v,
-                    "gx": tgx,
-                    "gy": tgy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": nodata,
-                    "crs": "EPSG:3857",
-                    "pixels": slope.tobytes(),
-                    "checksum": CK.checksum_image(slope),
-                }
-            ]
-        )
+        out = _dem_compute(mode, pad, xres, yres, nodata)
+        return pd.DataFrame([tile_row(
+            out, dataset_id=mode, zoom=zoom_v, gx=tgx, gy=tgy, band=1,
+            nodata=nodata, crs="EPSG:3857")])
 
-    strips = _strips(tiles, zoom)
-    return strips.groupBy("tgx", "tgy").applyInPandas(stencil, TILE_SCHEMA)
+    return halo_apply(tiles, zoom, 1, stencil, TILE_SCHEMA)
 
 
 def focal_slope(tiles: DataFrame, zoom: int, xres=1.0, yres=1.0,
@@ -265,8 +246,8 @@ def focal_generic(tiles: DataFrame, zoom: int, kernel, method="mean",
     """Generic focal neighbors with an ARBITRARY odd-size kernel — the
     `gdal raster neighbors` analog (``apps/gdalalg_raster_neighbors.cpp``
     -> VRT KernelFilteredSource): per-pixel weighted reduce over the KxK
-    window, distributed on a width-(K//2) halo exchange (the fillnodata
-    strip machinery), so results equal the full-raster convolution across
+    window, distributed on a width-(K//2) halo exchange (the shared
+    ``halo_apply``), so results equal the full-raster convolution across
     tile borders exactly.
 
     Reference-exact reduction semantics (frmts/vrt/vrtfilters.cpp
@@ -287,31 +268,9 @@ def focal_generic(tiles: DataFrame, zoom: int, kernel, method="mean",
     meth = str(method)
     nd = float(nodata)
 
-    def stencil(pdf):
+    def stencil(tgx, tgy, zoom_v, pad):
         import pandas as pd
 
-        from ..kernels import checksum as CK
-
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
-        zoom_v = int(pdf["zoom"].iloc[0])
-        pad = np.full((TILE + 2 * r, TILE + 2 * r), np.nan)
-        place = {
-            (0, 0): (slice(r, r + TILE), slice(r, r + TILE)),
-            (1, 0): (slice(r, r + TILE), slice(0, r)),
-            (-1, 0): (slice(r, r + TILE), slice(r + TILE, None)),
-            (0, 1): (slice(0, r), slice(r, r + TILE)),
-            (0, -1): (slice(r + TILE, None), slice(r, r + TILE)),
-            (1, 1): (slice(0, r), slice(0, r)),
-            (-1, 1): (slice(0, r), slice(r + TILE, None)),
-            (1, -1): (slice(r + TILE, None), slice(0, r)),
-            (-1, -1): (slice(r + TILE, None), slice(r + TILE, None)),
-        }
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            sy, sx = place[(int(row["dx"]), int(row["dy"]))]
-            pad[sy, sx] = arr
         acc = np.zeros((TILE, TILE))
         wacc = np.zeros((TILE, TILE))
         mn = np.full((TILE, TILE), np.inf)
@@ -386,27 +345,11 @@ def focal_generic(tiles: DataFrame, zoom: int, kernel, method="mean",
             else:
                 raise ValueError(meth)
         out = np.where(np.isnan(pad[r:r + TILE, r:r + TILE]), nd, out)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": f"focal_{meth}",
-                    "zoom": zoom_v,
-                    "gx": tgx,
-                    "gy": tgy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": nd,
-                    "crs": "EPSG:3857",
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            out, dataset_id=f"focal_{meth}", zoom=zoom_v, gx=tgx, gy=tgy,
+            band=1, nodata=nd, crs="EPSG:3857")])
 
-    strips = _strips(tiles, zoom, width=r)
-    return strips.groupBy("tgx", "tgy").applyInPandas(stencil, TILE_SCHEMA)
+    return halo_apply(tiles, zoom, r, stencil, TILE_SCHEMA)
 
 
 def focal_stats_window(tiles: DataFrame, zoom: int, window,
@@ -424,15 +367,15 @@ def focal_stats_window(tiles: DataFrame, zoom: int, window,
     accumulation order); the mode runs over ``np.floor(pad / qdiv)``,
     elementwise identical to classifying first and haloing second.
 
-    ``window`` = (x0, x1, y0, y1) global-pixel half-open ranges. Tiles
-    are pruned natively to the 1-px tap rect before the exchange (srcwin
-    pushdown), and only window pixels are emitted — the explode/filter/
-    join bridge disappears.
+    ``window`` = (x0, y0, w, h) global-pixel rect. Tiles are pruned
+    natively to the 1-px tap rect before the exchange (srcwin pushdown),
+    and only window pixels are emitted — the explode/filter/join bridge
+    disappears.
     """
-    x0, x1, y0, y1 = (int(v) for v in window)
+    x0, y0, ww, wh = (int(v) for v in window)
+    x1, y1 = x0 + ww, y0 + wh
     nd = float(nodata)
     qd = float(qdiv)
-    n = 1 << zoom
 
     # srcwin pushdown: keep only tiles intersecting the tap rect
     # [x0-1, x1] x [y0-1, y1] (inclusive) — all taps of every emitted
@@ -449,10 +392,9 @@ def focal_stats_window(tiles: DataFrame, zoom: int, window,
         T.StructField("mode_q", T.DoubleType()),
     ])
 
-    def stencil(pdf):
+    def stencil(tgx, tgy, _zoom, pad):
         import pandas as pd
 
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
         # window sub-rect of this tile (half-open, tile-local)
         wx0 = max(0, x0 - tgx * TILE)
         wx1 = min(TILE, x1 - tgx * TILE)
@@ -461,23 +403,6 @@ def focal_stats_window(tiles: DataFrame, zoom: int, window,
         if wx0 >= wx1 or wy0 >= wy1:
             return pd.DataFrame(columns=["gpx", "gpy", "med", "sd",
                                          "mode_q"])
-        pad = np.full((TILE + 2, TILE + 2), np.nan)
-        place = {
-            (0, 0): (slice(1, 1 + TILE), slice(1, 1 + TILE)),
-            (1, 0): (slice(1, 1 + TILE), slice(0, 1)),
-            (-1, 0): (slice(1, 1 + TILE), slice(1 + TILE, None)),
-            (0, 1): (slice(0, 1), slice(1, 1 + TILE)),
-            (0, -1): (slice(1 + TILE, None), slice(1, 1 + TILE)),
-            (1, 1): (slice(0, 1), slice(0, 1)),
-            (-1, 1): (slice(0, 1), slice(1 + TILE, None)),
-            (1, -1): (slice(1 + TILE, None), slice(0, 1)),
-            (-1, -1): (slice(1 + TILE, None), slice(1 + TILE, None)),
-        }
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64) \
-                .reshape(row["sh"], row["sw"])
-            sy, sx = place[(int(row["dx"]), int(row["dy"]))]
-            pad[sy, sx] = arr
         qpad = np.floor(pad / qd)  # == halo of floor(A / qdiv) tiles
 
         h, w = wy1 - wy0, wx1 - wx0
@@ -548,5 +473,4 @@ def focal_stats_window(tiles: DataFrame, zoom: int, window,
             "mode_q": mode_q.ravel(),
         })
 
-    strips = _strips(tiles, zoom)
-    return strips.groupBy("tgx", "tgy").applyInPandas(stencil, out_schema)
+    return halo_apply(tiles, zoom, 1, stencil, out_schema)

@@ -26,10 +26,9 @@ fixing the order is the distributed analog.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernels import checksum as CK
-from ..sources.raster import TILE, TILE_SCHEMA, key_range
+from ..sources.raster import TILE, TILE_SCHEMA, key_range, tile_row
 
 _COINCIDENT_EPS = 1e-13  # gdalgrid.cpp:165 singularity guard
 
@@ -287,24 +286,9 @@ def grid_interpolate(spark: SparkSession, points: DataFrame, zoom: int,
                     best = np.argmin(d2m, axis=2)
                     val = np.where(np.isfinite(d2m.min(axis=2)), tz[best], nd)
                 out[y0_:y0_ + yc.shape[0], wx0:wx1] = val
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": f"grid_{meth}",
-                    "zoom": zoom,
-                    "gx": gx,
-                    "gy": gy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": nd,
-                    "crs": "EPSG:3857",
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            out, dataset_id=f"grid_{meth}", zoom=zoom, gx=gx, gy=gy, band=1,
+            nodata=nd, crs="EPSG:3857")])
 
     return joined.groupBy("gx", "gy").applyInPandas(kernel, TILE_SCHEMA)
 
@@ -492,6 +476,8 @@ def grid_linear(spark: SparkSession, points: DataFrame, zoom: int,
     tx0, tx1 = x0 // TILE, (x0 + w - 1) // TILE
     ty0, ty1 = y0 // TILE, (y0 + h - 1) // TILE
     nd = float(nodata)
+    linear_key = {"dataset_id": "grid_linear", "zoom": zoom, "band": 1,
+                  "nodata": nd, "crs": "EPSG:3857"}
 
     tri, _rounds = delaunay_tin_distributed(spark, points, block=block)
 
@@ -536,14 +522,7 @@ def grid_linear(spark: SparkSession, points: DataFrame, zoom: int,
             QY = np.broadcast_to(ys[:, None], (len(ys), len(xs))).ravel()
             vals = DL.tin_interpolate(planes, QX, QY, nd)
             out[wy0:wy1, wx0:wx1] = vals.reshape(len(ys), len(xs))
-        return pd.DataFrame([{
-            "dataset_id": "grid_linear", "zoom": zoom,
-            "gx": gx, "gy": gy, "band": 1,
-            "width": TILE, "height": TILE, "dtype": "float64",
-            "nodata": nd, "crs": "EPSG:3857",
-            "pixels": out.tobytes(),
-            "checksum": CK.checksum_image(out),
-        }])
+        return pd.DataFrame([tile_row(out, like=linear_key, gx=gx, gy=gy)])
 
     filled = cov.groupBy("gx", "gy").applyInPandas(tile_kernel, TILE_SCHEMA)
 
@@ -559,17 +538,12 @@ def grid_linear(spark: SparkSession, points: DataFrame, zoom: int,
     def empty_tile(batches):
         import pandas as pd
 
-        blank = np.full((TILE, TILE), nd)
-        blank_b = blank.tobytes()
-        blank_ck = CK.checksum_image(blank)
+        # encoded once per task; each missing tile only restamps gx/gy
+        blank = tile_row(np.full((TILE, TILE), nd), like=linear_key,
+                         gx=0, gy=0)
         for pdf in batches:
-            rows = [{
-                "dataset_id": "grid_linear", "zoom": zoom,
-                "gx": int(r["gx"]), "gy": int(r["gy"]), "band": 1,
-                "width": TILE, "height": TILE, "dtype": "float64",
-                "nodata": nd, "crs": "EPSG:3857",
-                "pixels": blank_b, "checksum": blank_ck,
-            } for _, r in pdf.iterrows()]
+            rows = [{**blank, "gx": int(r["gx"]), "gy": int(r["gy"])}
+                    for _, r in pdf.iterrows()]
             if rows:
                 yield pd.DataFrame(rows)
 

@@ -698,8 +698,7 @@ def footprint(tiles: DataFrame, zoom: int, valid,
     the validity mask. ``valid`` is a python predicate over the pixel
     array (e.g. ``lambda g: g != 0``); the mask is materialized as a
     binary tile table and polygonized, keeping the valid regions."""
-    from ..kernels import checksum as CK
-    from ..sources.raster import TILE_SCHEMA as _TS
+    from ..sources.raster import TILE_SCHEMA as _TS, tile_row
 
     def maskify(batches):
         import pandas as pd
@@ -709,14 +708,8 @@ def footprint(tiles: DataFrame, zoom: int, valid,
             for _, row in pdf.iterrows():
                 g = parse_tile(row).astype(np.float64)
                 m = valid(g).astype(np.uint8)
-                rows.append({
-                    "dataset_id": "mask", "zoom": int(row["zoom"]),
-                    "gx": int(row["gx"]), "gy": int(row["gy"]), "band": 1,
-                    "width": m.shape[1], "height": m.shape[0],
-                    "dtype": "uint8", "nodata": None, "crs": row["crs"],
-                    "pixels": m.tobytes(),
-                    "checksum": CK.checksum_image(m),
-                })
+                rows.append(tile_row(m, like=row, dataset_id="mask", band=1,
+                                     nodata=None))
             if rows:
                 yield pd.DataFrame(rows)
 

@@ -24,8 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernels import checksum as CK
-from ..sources.raster import TILE, TILE_SCHEMA, parse_tile
+from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
 
 _TARGET_SCHEMA = T.StructType(
     [T.StructField("tpx", T.LongType()), T.StructField("tpy", T.LongType())]
@@ -105,23 +104,7 @@ def proximity(tiles: DataFrame, zoom: int, target_value: float,
                 out[y0 : y0 + 32] = np.minimum(
                     np.sqrt(d2.min(axis=2)), float(max_dist)
                 )
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": "proximity",
-                    "zoom": int(first["zoom"]),
-                    "gx": gx,
-                    "gy": gy,
-                    "band": int(first["band"]),
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": None,
-                    "crs": first["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(out, like=first, dataset_id="proximity",
+                                      gx=gx, gy=gy, nodata=None)])
 
     return joined.groupBy("gx", "gy").applyInPandas(kernel, TILE_SCHEMA)

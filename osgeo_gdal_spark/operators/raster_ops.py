@@ -15,9 +15,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernels import checksum as CK, resample as R
-from ..sources.raster import TILE, TILE_SCHEMA, key_range, parse_tile
+from ..kernels import resample as R
+from ..sources.raster import TILE, TILE_SCHEMA, key_range, parse_tile, tile_row
 from ..session import local_df
+from .focal import halo_apply
 
 def translate_tiles(tiles: DataFrame, scale=1.0, offset=0.0,
                     out_dtype="uint8", srcwin=None) -> DataFrame:
@@ -51,24 +52,7 @@ def translate_tiles(tiles: DataFrame, scale=1.0, offset=0.0,
                     if grid.size == 0:
                         continue
                 out = R.round_to_dtype(grid * scale + offset, np.dtype(out_dtype))
-                rows.append(
-                    {
-                        "dataset_id": row["dataset_id"],
-                        "zoom": int(row["zoom"]),
-                        "gx": int(ox0 // TILE) if srcwin is None else int(row["gx"]),
-                        "gy": int(row["gy"]),
-                        "band": int(row["band"]),
-                        "width": out.shape[1],
-                        "height": out.shape[0],
-                        "dtype": out_dtype,
-                        "nodata": row["nodata"],
-                        "crs": row["crs"],
-                        "pixels": out.tobytes(),
-                        "checksum": CK.checksum_image(out),
-                        "_ox0": ox0,
-                        "_oy0": oy0,
-                    }
-                )
+                rows.append(tile_row(out, like=row, _ox0=ox0, _oy0=oy0))
             if rows:
                 pdf_out = pd.DataFrame(rows)
                 yield pdf_out
@@ -230,25 +214,8 @@ def pyramid_reduce(tiles: DataFrame, mode: str) -> DataFrame:
             else:
                 red = R.reduce_2x2(child, mode)
             grid[qy : qy + TILE // 2, qx : qx + TILE // 2] = red
-        out = grid
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": pdf["dataset_id"].iloc[0],
-                    "zoom": zoom,
-                    "gx": pgx,
-                    "gy": pgy,
-                    "band": int(pdf["band"].iloc[0]),
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": pdf["nodata"].iloc[0],
-                    "crs": pdf["crs"].iloc[0],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(grid, like=pdf.iloc[0], zoom=zoom,
+                                      gx=pgx, gy=pgy)])
 
     parents = tiles.withColumn(
         "pgx", F.expr("CAST(FLOOR(gx / CAST(2.0 AS DOUBLE)) AS BIGINT)")
@@ -295,22 +262,7 @@ def resample_tiles(tiles: DataFrame, out_size: int, method: str) -> DataFrame:
             for _, row in pdf.iterrows():
                 grid = parse_tile(row).astype(np.float64)
                 out = R.resample_grid(grid, out_size, out_size, method)
-                rows.append(
-                    {
-                        "dataset_id": row["dataset_id"],
-                        "zoom": int(row["zoom"]),
-                        "gx": int(row["gx"]),
-                        "gy": int(row["gy"]),
-                        "band": int(row["band"]),
-                        "width": out_size,
-                        "height": out_size,
-                        "dtype": "float64",
-                        "nodata": row["nodata"],
-                        "crs": row["crs"],
-                        "pixels": out.tobytes(),
-                        "checksum": CK.checksum_image(out),
-                    }
-                )
+                rows.append(tile_row(out, like=row))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -651,24 +603,9 @@ def warp_tiles(tiles: DataFrame, zoom: int, transform, method="bilinear",
                 | ~np.isfinite(gy_f) | ~np.isfinite(gx_f)
             )
         out = np.where(oob | np.isnan(out), nodata, out)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": dataset_id,
-                    "zoom": zoom_v,
-                    "gx": dgx,
-                    "gy": dgy,
-                    "band": int(pdf["band"].iloc[0]),
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": nodata,
-                    "crs": pdf["crs"].iloc[0],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            out, like=pdf.iloc[0], dataset_id=dataset_id, zoom=zoom_v,
+            gx=dgx, gy=dgy, nodata=nodata)])
 
     return gathered.groupBy("dgx", "dgy").applyInPandas(warp_one, TILE_SCHEMA)
 
@@ -735,20 +672,7 @@ def warp_cutline(tiles: DataFrame, zoom: int, transform, cutline_shapes,
                     mk = np.frombuffer(bytes(mp), dtype=np.float64) \
                         .reshape(TILE, TILE)
                     out = np.where(mk != 0.0, arr, ndv)
-                rows.append({
-                    "dataset_id": row["dataset_id"],
-                    "zoom": int(row["zoom"]),
-                    "gx": int(row["gx"]),
-                    "gy": int(row["gy"]),
-                    "band": int(row["band"]),
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": ndv,
-                    "crs": row["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                })
+                rows.append(tile_row(out, like=row, nodata=ndv))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -882,10 +806,7 @@ def interpolate_at_points(tiles: DataFrame, points: DataFrame, zoom: int,
             vals = np.empty(len(pdf), dtype=np.float64)
             # group taps by tile within the batch; decode each tile once
             for (gx, gy), idx in pdf.groupby(["gx", "gy"]).groups.items():
-                row = pdf.loc[idx[0]]
-                grid = np.frombuffer(
-                    bytes(row["pixels"]), dtype=np.dtype(row["dtype"])
-                ).reshape(row["height"], row["width"])
+                grid = parse_tile(pdf.loc[idx[0]])
                 lx = (pdf.loc[idx, "gpx"] - gx * TILE).to_numpy(np.int64)
                 ly = (pdf.loc[idx, "gpy"] - gy * TILE).to_numpy(np.int64)
                 vals[pdf.index.get_indexer(idx)] = grid[ly, lx]
@@ -1163,24 +1084,8 @@ def mosaic_overlay(tile_tables, nodata: float) -> DataFrame:
         for _, row in pdf.iterrows():
             g = parse_tile(row).astype(np.float64)
             out = np.where(g != nd, g, out)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": "mosaic",
-                    "zoom": int(first["zoom"]),
-                    "gx": int(first["gx"]),
-                    "gy": int(first["gy"]),
-                    "band": int(first["band"]),
-                    "width": int(first["width"]),
-                    "height": int(first["height"]),
-                    "dtype": "float64",
-                    "nodata": nd,
-                    "crs": first["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(out, like=first, dataset_id="mosaic",
+                                      nodata=nd)])
 
     return u.groupBy("zoom", "gx", "gy", "band").applyInPandas(paint, TILE_SCHEMA)
 
@@ -1209,9 +1114,7 @@ def pansharpen(pan_tiles: DataFrame, rgb_tiles: DataFrame,
 
         bands = {}
         for _, row in grp.iterrows():
-            bands[int(row["band"])] = np.frombuffer(
-                bytes(row["pixels"]), dtype=np.dtype(row["dtype"])
-            ).reshape(row["height"], row["width"]).astype(np.float64)
+            bands[int(row["band"])] = parse_tile(row).astype(np.float64)
         first = grp.iloc[0]
         pan_arr = np.frombuffer(
             bytes(first["pan_pixels"]), dtype=np.dtype(first["pan_dtype"])
@@ -1220,26 +1123,9 @@ def pansharpen(pan_tiles: DataFrame, rgb_tiles: DataFrame,
                      if (i + 1) in bands)
         with np.errstate(invalid="ignore", divide="ignore"):
             ratio = np.where(pseudo > 0, pan_arr / pseudo, 0.0)
-        rows = []
-        for bid, arr in bands.items():
-            out = arr * ratio
-            rows.append(
-                {
-                    "dataset_id": "pansharp",
-                    "zoom": int(first["zoom"]),
-                    "gx": int(first["gx"]),
-                    "gy": int(first["gy"]),
-                    "band": bid,
-                    "width": int(first["width"]),
-                    "height": int(first["height"]),
-                    "dtype": "float64",
-                    "nodata": first["nodata"],
-                    "crs": first["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                }
-            )
-        return pd.DataFrame(rows)
+        return pd.DataFrame([
+            tile_row(arr * ratio, like=first, dataset_id="pansharp", band=bid)
+            for bid, arr in bands.items()])
 
     return joined.groupBy("zoom", "gx", "gy").applyInPandas(kernel, TILE_SCHEMA)
 
@@ -1447,65 +1333,42 @@ def raster_zonal_frac(tiles: DataFrame, polys, zoom: int) -> DataFrame:
     )
 
 
-def pyramid_gauss(tiles: DataFrame) -> DataFrame:
-    """One GAUSS overview level (GDALResampleChunk_Gauss,
-    gcore/overview.cpp:1996). Unlike the block-local modes in
-    pyramid_reduce, the 3x3 binomial window reaches ONE SOURCE PIXEL
-    past each 2x2 block — a cross-tile dependency, handled with the
-    focal halo exchange: each src tile gathers its east/south/SE 1-px
-    strips, reduces to its 128x128 quadrant (kernels/resample.gauss_2x),
-    and the quadrants assemble into parent tiles. Two skinny shuffles
-    (strips, then quadrants); pixels never shuffle twice."""
-    import pandas as pd
+_QUAD_SCHEMA = T.StructType(
+    [
+        T.StructField("pgx", T.LongType()),
+        T.StructField("pgy", T.LongType()),
+        T.StructField("qx", T.IntegerType()),
+        T.StructField("qy", T.IntegerType()),
+        T.StructField("quad", T.BinaryType()),
+    ]
+)
 
-    from ..kernels import resample as RK2
-    from .focal import _strips
+
+def _pyramid_halo(tiles: DataFrame, r: int, quad_kernel) -> DataFrame:
+    """One overview level whose 2x reduction reads ``r`` source pixels
+    past each tile: ``focal.halo_apply`` hands each src tile its
+    (TILE+2r)^2 pad, ``quad_kernel(pad)`` reduces it to the tile's
+    128x128 quadrant of the parent, and the quadrants assemble into
+    parent tiles. Two skinny shuffles (halo, then quadrants); full
+    pixel payloads never shuffle twice."""
+    import pandas as pd
 
     # infer zoom + metadata from ONE row (single-level tile tables carry
     # one zoom and constant metadata): first() limit-pushes to a single
     # partition, where the old min(zoom) aggregate scanned — and fully
     # computed — every tile just to learn a constant
-    meta = tiles.select("zoom", "dataset_id", "band", "nodata", "crs").first()
+    meta = tiles.select("zoom", "dataset_id", "band", "nodata", "crs") \
+        .first().asDict()
     zoom = int(meta["zoom"])
+    meta["zoom"] = zoom - 1
 
-    strips = _strips(tiles, zoom, width=1)
-
-    quad_schema = T.StructType(
-        [
-            T.StructField("pgx", T.LongType()),
-            T.StructField("pgy", T.LongType()),
-            T.StructField("qx", T.IntegerType()),
-            T.StructField("qy", T.IntegerType()),
-            T.StructField("quad", T.BinaryType()),
-        ]
-    )
-
-    def reduce_tile(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
-        pad = np.full((TILE + 1, TILE + 1), np.nan)
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            dx, dy = int(row["dx"]), int(row["dy"])
-            if (dx, dy) == (0, 0):
-                pad[:TILE, :TILE] = arr
-            elif (dx, dy) == (-1, 0):     # east neighbor's west col
-                pad[:TILE, TILE:] = arr
-            elif (dx, dy) == (0, -1):     # south neighbor's north row
-                pad[TILE:, :TILE] = arr
-            elif (dx, dy) == (-1, -1):    # SE neighbor's NW corner
-                pad[TILE:, TILE:] = arr
-        quad = RK2.gauss_2x(pad)
+    def reduce_tile(tgx, tgy, _zoom, pad):
         return pd.DataFrame(
-            [{"pgx": tgx // 2, "pgy": tgy // 2,
-              "qx": tgx % 2, "qy": tgy % 2, "quad": quad.tobytes()}]
+            [{"pgx": tgx // 2, "pgy": tgy // 2, "qx": tgx % 2,
+              "qy": tgy % 2, "quad": quad_kernel(pad).tobytes()}]
         )
 
-    quads = strips.groupBy("tgx", "tgy").applyInPandas(reduce_tile, quad_schema)
-
-    ds, band, nodata, crs = (meta["dataset_id"], int(meta["band"]),
-                             meta["nodata"], meta["crs"])
+    quads = halo_apply(tiles, zoom, r, reduce_tile, _QUAD_SCHEMA)
     half = TILE // 2
 
     def assemble(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1517,14 +1380,21 @@ def pyramid_gauss(tiles: DataFrame) -> DataFrame:
             )
             grid[int(row["qy"]) * half:(int(row["qy"]) + 1) * half,
                  int(row["qx"]) * half:(int(row["qx"]) + 1) * half] = q
-        return pd.DataFrame(
-            [{"dataset_id": ds, "zoom": zoom - 1, "gx": pgx, "gy": pgy,
-              "band": band, "width": TILE, "height": TILE,
-              "dtype": "float64", "nodata": nodata, "crs": crs,
-              "pixels": grid.tobytes(), "checksum": CK.checksum_image(grid)}]
-        )
+        return pd.DataFrame([tile_row(grid, like=meta, gx=pgx, gy=pgy)])
 
     return quads.groupBy("pgx", "pgy").applyInPandas(assemble, TILE_SCHEMA)
+
+
+def pyramid_gauss(tiles: DataFrame) -> DataFrame:
+    """One GAUSS overview level (GDALResampleChunk_Gauss,
+    gcore/overview.cpp:1996). Unlike the block-local modes in
+    pyramid_reduce, the 3x3 binomial window reaches ONE SOURCE PIXEL
+    past each 2x2 block — a cross-tile dependency: each src tile reads
+    the east/south/SE border of its 1-px halo pad and reduces to its
+    quadrant with kernels/resample.gauss_2x (see _pyramid_halo)."""
+    from ..kernels import resample as RK2
+
+    return _pyramid_halo(tiles, 1, lambda pad: RK2.gauss_2x(pad[1:, 1:]))
 
 
 def raster_calc(bands: dict, expr: str, nodata=None) -> DataFrame:
@@ -1575,16 +1445,9 @@ def raster_calc(bands: dict, expr: str, nodata=None) -> DataFrame:
                         dtype=np.dtype(row[f"_dt_{nm}"]),
                     ).reshape(h, w).astype(np.float64)
                 out = np.asarray(fn(arrs), dtype=np.float64)
-                rows.append({
-                    "dataset_id": f"calc({row['dataset_id']})",
-                    "zoom": int(row["zoom"]), "gx": int(row["gx"]),
-                    "gy": int(row["gy"]), "band": int(row["band"]),
-                    "width": out.shape[1], "height": out.shape[0],
-                    "dtype": "float64",
-                    "nodata": nd, "crs": row["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                })
+                rows.append(tile_row(
+                    out, like=row, dataset_id=f"calc({row['dataset_id']})",
+                    nodata=nd))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -1596,76 +1459,15 @@ def pyramid_conv(tiles: DataFrame, method: str = "cubic") -> DataFrame:
     (GDALResampleChunk_Convolution, gcore/overview.cpp:2593, at ratio
     2). The scaled kernel reaches past the 2x2 block on every side
     (bilinear: 1 left/top + 2 right/bottom; cubic: 3 + 4), so each src
-    tile gathers 4-px strips from all 8 neighbors, reduces to its
-    quadrant (kernels/resample.conv_2x, exact dyadic weights), and the
-    quadrants assemble into parent tiles — the same two skinny shuffles
-    as pyramid_gauss; full pixel payloads never shuffle twice."""
-    import pandas as pd
-
+    tile reads a 4-px halo pad from all 8 neighbors and reduces to its
+    quadrant with kernels/resample.conv_2x (exact dyadic weights) — the
+    same halo exchange and quadrant assembly as pyramid_gauss (see
+    _pyramid_halo)."""
     from ..kernels import resample as RK2
-    from .focal import _strips
 
     if method not in RK2.CONV_2X:
         raise ValueError(f"unknown conv overview method {method!r}")
-
-    # one-row metadata probe — see pyramid_gauss
-    meta = tiles.select("zoom", "dataset_id", "band", "nodata", "crs").first()
-    zoom = int(meta["zoom"])
-
-    strips = _strips(tiles, zoom, width=4)
-
-    quad_schema = T.StructType(
-        [
-            T.StructField("pgx", T.LongType()),
-            T.StructField("pgy", T.LongType()),
-            T.StructField("qx", T.IntegerType()),
-            T.StructField("qy", T.IntegerType()),
-            T.StructField("quad", T.BinaryType()),
-        ]
-    )
-
-    def reduce_tile(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        tgx, tgy = int(pdf["tgx"].iloc[0]), int(pdf["tgy"].iloc[0])
-        pad = np.full((TILE + 8, TILE + 8), np.nan)
-        for _, row in pdf.iterrows():
-            arr = np.frombuffer(bytes(row["strip"]), dtype=np.float64).reshape(
-                row["sh"], row["sw"]
-            )
-            dx, dy = int(row["dx"]), int(row["dy"])
-            # sender sits at (tgx - dx, tgy - dy); its strip lands on
-            # the matching side of the pad (body at [4:4+T, 4:4+T])
-            rows = {0: slice(4, 4 + TILE), 1: slice(0, 4),
-                    -1: slice(4 + TILE, 8 + TILE)}
-            pad[rows[dy], rows[dx]] = arr
-        quad = RK2.conv_2x(pad, method)
-        return pd.DataFrame(
-            [{"pgx": tgx // 2, "pgy": tgy // 2,
-              "qx": tgx % 2, "qy": tgy % 2, "quad": quad.tobytes()}]
-        )
-
-    quads = strips.groupBy("tgx", "tgy").applyInPandas(reduce_tile, quad_schema)
-
-    ds, band, nodata, crs = (meta["dataset_id"], int(meta["band"]),
-                             meta["nodata"], meta["crs"])
-    half = TILE // 2
-
-    def assemble(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pgx, pgy = int(pdf["pgx"].iloc[0]), int(pdf["pgy"].iloc[0])
-        grid = np.zeros((TILE, TILE), dtype=np.float64)
-        for _, row in pdf.iterrows():
-            q = np.frombuffer(bytes(row["quad"]), dtype=np.float64).reshape(
-                half, half
-            )
-            grid[int(row["qy"]) * half:(int(row["qy"]) + 1) * half,
-                 int(row["qx"]) * half:(int(row["qx"]) + 1) * half] = q
-        return pd.DataFrame(
-            [{"dataset_id": ds, "zoom": zoom - 1, "gx": pgx, "gy": pgy,
-              "band": band, "width": TILE, "height": TILE,
-              "dtype": "float64", "nodata": nodata, "crs": crs,
-              "pixels": grid.tobytes(), "checksum": CK.checksum_image(grid)}]
-        )
-
-    return quads.groupBy("pgx", "pgy").applyInPandas(assemble, TILE_SCHEMA)
+    return _pyramid_halo(tiles, 4, lambda pad: RK2.conv_2x(pad, method))
 
 
 def raster_zonal_frac_poly(tiles: DataFrame, zones, zoom: int) -> DataFrame:
@@ -1972,19 +1774,10 @@ def blend_tiles(base: DataFrame, overlay: DataFrame, mode="src_over",
                     t = np.maximum(_mul255(oc, A), _mul255(c, OA)) \
                         + _mul255(c, 255 - OA) + _mul255(oc, 255 - A)
                 out.append(_div255(t, DA))
-        rows = []
-        for bi, g in enumerate(out + [DA], start=1):
-            g8 = g.astype(np.uint8)
-            rows.append({
-                "dataset_id": "blend", "zoom": int(proto["zoom"]),
-                "gx": int(proto["gx"]), "gy": int(proto["gy"]),
-                "band": bi, "width": int(proto["width"]),
-                "height": int(proto["height"]), "dtype": "uint8",
-                "nodata": None, "crs": proto["crs"],
-                "pixels": g8.tobytes(),
-                "checksum": CK.checksum_image(g8),
-            })
-        return pd.DataFrame(rows)
+        return pd.DataFrame([
+            tile_row(g.astype(np.uint8), like=proto, dataset_id="blend",
+                     band=bi, nodata=None)
+            for bi, g in enumerate(out + [DA], start=1)])
 
     return u.groupBy("zoom", "gx", "gy").applyInPandas(
         kernel, TILE_SCHEMA)
@@ -2011,25 +1804,10 @@ def nodata_to_alpha_tiles(tiles: DataFrame) -> DataFrame:
             mask = m if mask is None else (mask | m)
             proto = row
             nb = max(nb, int(row["band"]))
-            rows.append({
-                "dataset_id": row["dataset_id"], "zoom": int(row["zoom"]),
-                "gx": int(row["gx"]), "gy": int(row["gy"]),
-                "band": int(row["band"]), "width": int(row["width"]),
-                "height": int(row["height"]), "dtype": row["dtype"],
-                "nodata": None, "crs": row["crs"],
-                "pixels": row["pixels"],
-                "checksum": int(row["checksum"]),
-            })
+            # data bands pass through as a column copy, never re-encoded
+            rows.append({**row[TILE_SCHEMA.names], "nodata": None})
         alpha = np.where(mask, 255, 0).astype(np.uint8)
-        rows.append({
-            "dataset_id": proto["dataset_id"], "zoom": int(proto["zoom"]),
-            "gx": int(proto["gx"]), "gy": int(proto["gy"]),
-            "band": nb + 1, "width": int(proto["width"]),
-            "height": int(proto["height"]), "dtype": "uint8",
-            "nodata": None, "crs": proto["crs"],
-            "pixels": alpha.tobytes(),
-            "checksum": CK.checksum_image(alpha),
-        })
+        rows.append(tile_row(alpha, like=proto, band=nb + 1, nodata=None))
         return pd.DataFrame(rows)
 
     import pandas as pd  # noqa: F401  (kernel-scope import for executors)
@@ -2183,16 +1961,9 @@ def rgb_to_palette_tiles(tiles: DataFrame, max_colors=256):
              + (g8[..., None] - p[:, 1]) ** 2
              + (b8[..., None] - p[:, 2]) ** 2)
         pidx = d.argmin(axis=-1).astype(np.uint8)
-        proto = by_band[1][1]
-        return pd.DataFrame([{
-            "dataset_id": "palette", "zoom": int(proto["zoom"]),
-            "gx": int(proto["gx"]), "gy": int(proto["gy"]),
-            "band": 1, "width": int(proto["width"]),
-            "height": int(proto["height"]), "dtype": "uint8",
-            "nodata": None, "crs": proto["crs"],
-            "pixels": pidx.tobytes(),
-            "checksum": CK.checksum_image(pidx),
-        }])
+        return pd.DataFrame([tile_row(pidx, like=by_band[1][1],
+                                      dataset_id="palette", band=1,
+                                      nodata=None)])
 
     indexed = tiles.filter(F.col("band").isin(1, 2, 3)) \
         .groupBy("zoom", "gx", "gy").applyInPandas(assign, TILE_SCHEMA)
@@ -2358,15 +2129,7 @@ def reclassify_tiles(tiles: DataFrame, mapping: str, nodata=None,
                     default = grid
                 out = np.select(conds, choices, default=default)
                 out = R.round_to_dtype(out, np.dtype(out_dtype))
-                rows.append({
-                    "dataset_id": row["dataset_id"], "zoom": int(row["zoom"]),
-                    "gx": int(row["gx"]), "gy": int(row["gy"]),
-                    "band": int(row["band"]), "width": out.shape[1],
-                    "height": out.shape[0], "dtype": out_dtype,
-                    "nodata": row["nodata"], "crs": row["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                })
+                rows.append(tile_row(out, like=row))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -2413,15 +2176,7 @@ def scale_tiles(tiles: DataFrame, src_min: float, src_max: float,
                         p = np.power(t, float(exponent))
                     out = (dst_max - dst_min) * p + dst_min
                 out = R.round_to_dtype(out, np.dtype(out_dtype))
-                rows.append({
-                    "dataset_id": row["dataset_id"], "zoom": int(row["zoom"]),
-                    "gx": int(row["gx"]), "gy": int(row["gy"]),
-                    "band": int(row["band"]), "width": out.shape[1],
-                    "height": out.shape[0], "dtype": out_dtype,
-                    "nodata": row["nodata"], "crs": row["crs"],
-                    "pixels": out.tobytes(),
-                    "checksum": CK.checksum_image(out),
-                })
+                rows.append(tile_row(out, like=row))
             if rows:
                 yield pd.DataFrame(rows)
 
@@ -2457,14 +2212,7 @@ def update_tiles(base: DataFrame, patch: DataFrame, patch_nodata: float) -> Data
                            bgrid, pgrid).astype(bgrid.dtype)
         else:
             out = bgrid  # untouched base tile passes through
-        return pd.DataFrame([{
-            "dataset_id": brow["dataset_id"], "zoom": int(brow["zoom"]),
-            "gx": int(brow["gx"]), "gy": int(brow["gy"]),
-            "band": int(brow["band"]), "width": out.shape[1],
-            "height": out.shape[0], "dtype": brow["dtype"],
-            "nodata": brow["nodata"], "crs": brow["crs"],
-            "pixels": out.tobytes(), "checksum": CK.checksum_image(out),
-        }])
+        return pd.DataFrame([tile_row(out, like=brow)])
 
     return u.groupBy(*keys).applyInPandas(kernel, TILE_SCHEMA)
 

@@ -27,8 +27,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernels import checksum as CK, rasterize as RK, wkb as W
-from ..sources.raster import TILE, TILE_SCHEMA
+from ..kernels import rasterize as RK, wkb as W
+from ..sources.raster import TILE, TILE_SCHEMA, tile_row
 from ..session import local_df
 
 
@@ -130,24 +130,9 @@ def rasterize(spark: SparkSession, shapes, zoom: int, all_touched=False,
                 arr[m] += burn
             else:
                 raise ValueError(mode)
-        return pd.DataFrame(
-            [
-                {
-                    "dataset_id": ds,
-                    "zoom": zoom,
-                    "gx": gx,
-                    "gy": gy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": "float64",
-                    "nodata": None,
-                    "crs": crs_v,
-                    "pixels": arr.tobytes(),
-                    "checksum": CK.checksum_image(arr),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            arr, dataset_id=ds, zoom=zoom, gx=gx, gy=gy, band=1, nodata=None,
+            crs=crs_v)])
 
     return cover.groupBy("gx", "gy").applyInPandas(burn_tile, TILE_SCHEMA)
 

@@ -26,9 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import sqlgen as G
-from ..kernels import checksum as CK
-
-TILE = 256
+from ..sources.raster import TILE, parse_tile, tile_row
 
 
 def tile_counts(pages: DataFrame, zoom: int) -> DataFrame:
@@ -131,19 +129,8 @@ def burn_point_tiles(pages: DataFrame, zoom: int) -> DataFrame:
             (pdf["ppy"].to_numpy(np.int64), pdf["ppx"].to_numpy(np.int64)),
             pdf["cnt"].to_numpy(np.float64),
         )
-        return pd.DataFrame(
-            {
-                "zoom": [zoom],
-                "gx": [gx],
-                "gy": [gy],
-                "width": [TILE],
-                "height": [TILE],
-                "dtype": ["float64"],
-                "pixels": [grid.tobytes()],
-                "checksum": [CK.checksum_image(grid)],
-                "n_points": [int(pdf["cnt"].sum())],
-            }
-        )
+        return pd.DataFrame([tile_row(grid, zoom=zoom, gx=gx, gy=gy,
+                                      n_points=int(pdf["cnt"].sum()))])
 
     return cells.groupBy("gx", "gy").applyInPandas(burn, _BURN_SCHEMA)
 
@@ -163,24 +150,13 @@ def reduce_tiles_average(tiles: DataFrame) -> DataFrame:
         grid = np.zeros((TILE, TILE), dtype=np.float64)
         total = 0
         for _, row in pdf.iterrows():
-            child = np.frombuffer(row["pixels"], dtype=np.float64).reshape(TILE, TILE)
+            child = parse_tile(row)
             qx = (int(row["gx"]) % 2) * (TILE // 2)
             qy = (int(row["gy"]) % 2) * (TILE // 2)
             grid[qy : qy + TILE // 2, qx : qx + TILE // 2] = R.average_2x2(child)
             total += int(row["n_points"])
-        return pd.DataFrame(
-            {
-                "zoom": [zoom],
-                "gx": [pgx],
-                "gy": [pgy],
-                "width": [TILE],
-                "height": [TILE],
-                "dtype": ["float64"],
-                "pixels": [grid.tobytes()],
-                "checksum": [CK.checksum_image(grid)],
-                "n_points": [total],
-            }
-        )
+        return pd.DataFrame([tile_row(grid, zoom=zoom, gx=pgx, gy=pgy,
+                                      n_points=total)])
 
     parents = tiles.withColumn(
         "pgx", F.expr("CAST(FLOOR(gx / CAST(2.0 AS DOUBLE)) AS BIGINT)")
@@ -209,9 +185,7 @@ def explode_tile_pixels(tiles: DataFrame, nonzero_only=True) -> DataFrame:
         for pdf in batches:
             outs = []
             for _, row in pdf.iterrows():
-                grid = np.frombuffer(row["pixels"], dtype=np.float64).reshape(
-                    row["height"], row["width"]
-                )
+                grid = parse_tile(row)
                 if nonzero_only:
                     ys, xs = np.nonzero(grid)
                 else:

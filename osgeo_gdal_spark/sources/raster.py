@@ -11,6 +11,11 @@ Tiles are built in an Arrow-batched ``mapInPandas`` over a tiny tile-key
 DataFrame — the per-tile numpy generation is the same shape as every other
 raster kernel stage (the GDAL block ≙ packed-binary row mapping, SURVEY
 §1.1).
+
+``tile_row`` and ``parse_tile`` are the only codec of that row format:
+every operator that emits a tile builds it with ``tile_row`` (which alone
+writes ``pixels``, ``checksum``, ``width``, ``height`` and ``dtype``), and
+every reader of a ``pixels`` column decodes it with ``parse_tile``.
 """
 
 from __future__ import annotations
@@ -52,6 +57,32 @@ TILE_SCHEMA = T.StructType(
     ]
 )
 
+_KEY_COLUMNS = ("dataset_id", "zoom", "gx", "gy", "band", "nodata", "crs")
+
+
+def tile_row(arr: np.ndarray, like=None, **fields) -> dict:
+    """Encode a 2-D array as one tile row. ``pixels`` (C-order bytes),
+    ``checksum`` (GDALChecksumImage), ``width``, ``height`` and ``dtype``
+    all derive from ``arr``. The key columns come from ``like`` (a source
+    row: pandas Series, Row or dict) and are overridden by ``fields``;
+    other fields (``_ox0``/``_oy0``, ``n_points``) pass through after the
+    TILE_SCHEMA columns, which keep their schema order."""
+    cols = {} if like is None else {
+        k: like[k] for k in _KEY_COLUMNS if k not in fields}
+    cols.update(fields)
+    cols.update(width=arr.shape[1], height=arr.shape[0], dtype=str(arr.dtype),
+                pixels=arr.tobytes(), checksum=CK.checksum_image(arr))
+    head = {k: cols.pop(k) for k in TILE_SCHEMA.names if k in cols}
+    return {**head, **cols}
+
+
+def parse_tile(row) -> np.ndarray:
+    """Unpack a tile row's pixels into a 2-D numpy array."""
+    dt = np.dtype(row["dtype"])
+    return np.frombuffer(bytes(row["pixels"]), dtype=dt).reshape(
+        row["height"], row["width"]
+    )
+
 
 def synth_pixel_grid(gx: int, gy: int, zoom: int, tile=TILE,
                      coeffs=(7, 11)) -> np.ndarray:
@@ -80,22 +111,9 @@ def synth_tiles(spark: SparkSession, zoom: int, dataset_id="synth",
             rows = []
             for gx, gy in zip(pdf["gx"], pdf["gy"]):
                 grid = synth_pixel_grid(int(gx), int(gy), zoom, coeffs=coeffs)
-                rows.append(
-                    {
-                        "dataset_id": dataset_id,
-                        "zoom": zoom,
-                        "gx": int(gx),
-                        "gy": int(gy),
-                        "band": 1,
-                        "width": TILE,
-                        "height": TILE,
-                        "dtype": "uint8",
-                        "nodata": nodata,
-                        "crs": "EPSG:3857",
-                        "pixels": grid.tobytes(),
-                        "checksum": CK.checksum_image(grid),
-                    }
-                )
+                rows.append(tile_row(
+                    grid, dataset_id=dataset_id, zoom=zoom, gx=int(gx),
+                    gy=int(gy), band=1, nodata=nodata, crs="EPSG:3857"))
             yield pd.DataFrame(rows)
 
     return keys.mapInPandas(gen, TILE_SCHEMA)
@@ -122,22 +140,9 @@ def synth_category_tiles(spark: SparkSession, zoom: int, block=96,
                 gpx = int(gx) * TILE + np.arange(TILE)[None, :]
                 gpy = int(gy) * TILE + np.arange(TILE)[:, None]
                 grid = ((gpx // block + gpy // block) % 3).astype(np.uint8)
-                rows.append(
-                    {
-                        "dataset_id": dataset_id,
-                        "zoom": zoom,
-                        "gx": int(gx),
-                        "gy": int(gy),
-                        "band": 1,
-                        "width": TILE,
-                        "height": TILE,
-                        "dtype": "uint8",
-                        "nodata": None,
-                        "crs": "EPSG:3857",
-                        "pixels": grid.tobytes(),
-                        "checksum": CK.checksum_image(grid),
-                    }
-                )
+                rows.append(tile_row(
+                    grid, dataset_id=dataset_id, zoom=zoom, gx=int(gx),
+                    gy=int(gy), band=1, nodata=None, crs="EPSG:3857"))
             yield pd.DataFrame(rows)
 
     return keys.mapInPandas(gen, TILE_SCHEMA)
@@ -153,36 +158,13 @@ def tiles_from_grid(spark: SparkSession, grid: np.ndarray, zoom: int,
     rows = []
     for gy in range(n):
         for gx in range(n):
-            sub = np.ascontiguousarray(
-                grid[gy * TILE:(gy + 1) * TILE, gx * TILE:(gx + 1) * TILE]
-            )
-            rows.append(
-                {
-                    "dataset_id": dataset_id,
-                    "zoom": zoom,
-                    "gx": gx,
-                    "gy": gy,
-                    "band": 1,
-                    "width": TILE,
-                    "height": TILE,
-                    "dtype": str(sub.dtype),
-                    "nodata": nodata,
-                    "crs": "EPSG:3857",
-                    "pixels": sub.tobytes(),
-                    "checksum": CK.checksum_image(sub),
-                }
-            )
+            sub = grid[gy * TILE:(gy + 1) * TILE, gx * TILE:(gx + 1) * TILE]
+            rows.append(tile_row(
+                sub, dataset_id=dataset_id, zoom=zoom, gx=gx, gy=gy, band=1,
+                nodata=nodata, crs="EPSG:3857"))
     import pandas as pd
 
     return spark.createDataFrame(pd.DataFrame(rows), TILE_SCHEMA)
-
-
-def parse_tile(row) -> np.ndarray:
-    """Unpack a tile row's pixels into a 2-D numpy array."""
-    dt = np.dtype(row["dtype"])
-    return np.frombuffer(bytes(row["pixels"]), dtype=dt).reshape(
-        row["height"], row["width"]
-    )
 
 
 RGBA_CHANNELS = {
@@ -222,14 +204,9 @@ def synth_rgba_tiles(spark: SparkSession, zoom: int,
                             .astype(np.uint8)
                     else:
                         grid = ((gpx * mx + gpy * my) % 256).astype(np.uint8)
-                    rows.append({
-                        "dataset_id": dataset_id, "zoom": zoom,
-                        "gx": int(gx), "gy": int(gy), "band": band,
-                        "width": TILE, "height": TILE, "dtype": "uint8",
-                        "nodata": None, "crs": "EPSG:3857",
-                        "pixels": grid.tobytes(),
-                        "checksum": CK.checksum_image(grid),
-                    })
+                    rows.append(tile_row(
+                        grid, dataset_id=dataset_id, zoom=zoom, gx=int(gx),
+                        gy=int(gy), band=band, nodata=None, crs="EPSG:3857"))
             yield pd.DataFrame(rows)
 
     return keys.mapInPandas(gen, TILE_SCHEMA)

@@ -633,7 +633,7 @@ def test_focal_stats_window_matches_unfused_chains(spark, tiles):
 
     fused = {(r["gpx"], r["gpy"]): (r["med"], r["sd"], r["mode_q"])
              for r in FO.focal_stats_window(
-                 tiles, 1, (x0, x1, y0, y1), qdiv=32.0).collect()}
+                 tiles, 1, (x0, y0, x1 - x0, y1 - y0), qdiv=32.0).collect()}
 
     assert set(fused) == set(med) == set(std) == set(mode)
     assert len(fused) == (x1 - x0) * (y1 - y0)

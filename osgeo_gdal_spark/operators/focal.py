@@ -93,13 +93,18 @@ def halo_apply(tiles: DataFrame, zoom: int, r: int, fn,
     with ``pad`` the (TILE+2r)^2 float64 array whose interior
     ``pad[r:r+TILE, r:r+TILE]`` is the tile and whose r-px border holds
     the 8 neighbors' edge pixels. Border pixels with no sender (the
-    global raster edge, tiles missing from a sparse table) stay NaN.
+    global raster edge, tiles missing from a sparse table) stay NaN, and
+    a position whose own tile is missing gets no call and no rows.
     ``fn`` returns a pandas DataFrame of ``schema`` rows."""
     # the sender sits at (tgx - dx, tgy - dy): d = 1 is the west/north
     # neighbor, whose strip fills the first r columns/rows of the pad
     side = {1: slice(0, r), 0: slice(r, r + TILE), -1: slice(r + TILE, None)}
 
     def assemble(pdf):
+        if not ((pdf["dx"] == 0) & (pdf["dy"] == 0)).any():
+            import pandas as pd
+
+            return pd.DataFrame()  # only neighbors' strips: no tile here
         pad = np.full((TILE + 2 * r, TILE + 2 * r), np.nan)
         for dx, dy, sh, sw, strip in zip(pdf["dx"], pdf["dy"], pdf["sh"],
                                          pdf["sw"], pdf["strip"]):

@@ -14,10 +14,13 @@ kernel end-to-end:
   MultiPolygon, mirroring OGR's WRAPDATELINE splitting,
   ``/root/reference/ogr/ogrgeometryfactory.cpp:4550``).
 
-All bounds sit on half-millidegree offsets (x.xxx5) so no geocoded point
-(which lives on the exact millidegree grid) can ever fall exactly on a
-polygon boundary — strict-vs-boundary PIP semantics (SURVEY §7 hard part
-(f)) therefore never bites on fixture data.
+All bounds except the antimeridian split edges sit on half-millidegree
+offsets (x.xxx5), so a geocoded point (which lives on the exact
+millidegree grid) falls on a polygon boundary only at lon = -180, on the
+split edge of the ``dateline`` polygon. Strict ``Contains`` (SURVEY §7
+hard part (f)) puts such a point outside — it is on the polygon's
+envelope boundary — and the ``dateline`` predicate says so, as the
+engine's strict-envelope-and-ray-cast join does.
 
 Each polygon carries both a WKB geometry (engine side) and a SQL predicate
 factory (oracle side).
@@ -93,7 +96,7 @@ class PolyFeature:
             y0, y1 = p["lat"]
             xw, xe = p["west_lon"], p["east_lon"]
             return (
-                f"(({lon} > {xw} OR {lon} < {xe}) "
+                f"(({lon} > {xw} OR ({lon} > -180 AND {lon} < {xe})) "
                 f"AND {lat} > {y0} AND {lat} < {y1})"
             )
         raise ValueError(self.kind)

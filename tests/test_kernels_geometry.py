@@ -97,16 +97,6 @@ def test_pip_matches_matplotlib_free_reference():
     assert (got == want).all()
 
 
-def test_prepared_polygon_set():
-    g1 = wkb.parse_wkb(wkb.polygon_wkb([SQUARE]))
-    g2 = wkb.parse_wkb(wkb.polygon_wkb([[(20.0, 20.0), (30.0, 20.0), (30.0, 30.0), (20.0, 30.0)]]))
-    ps = pip.PreparedPolygonSet([(101, g1), (102, g2)])
-    px = np.array([5.0, 25.0, 50.0])
-    py = np.array([5.0, 25.0, 50.0])
-    hits = {pid: m.tolist() for pid, m in ps.contains_masks(px, py)}
-    assert hits == {101: [True, False, False], 102: [False, True, False]}
-
-
 def test_checksum_byte_tif_golden():
     """The canonical byte.tif (20x20 uint8) checksums to 4672
     (autotest/utilities/test_gdal_translate.py:52). We reproduce the exact

@@ -78,13 +78,14 @@ def test_whole_stage_codegen_covers_geocode(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_refine_udf_only_in_refine_branch(spark):
-    """The PIP pandas UDF must appear exactly once (the non-rect refine
-    branch); the rect fast path is UDF-free."""
+def test_spatial_join_has_no_python_eval(spark):
+    """The PIP refine is native: the join's executed plan has no Python
+    evaluation node at all."""
     pages = PG.pages_df(spark, SF)
     j = SJ.spatial_join(spark, pages, PL.POLYGONS)
     plan = plan_of(j)
-    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("ArrowEvalPython") == 0
+    assert plan.count("BatchEvalPython") == 0
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -126,12 +127,14 @@ def test_adaptive_repartition_preserves_rows(spark):
 
 
 def test_spatial_join_strategy_plan_shapes(spark):
-    """The join's rect fast path is a separate branch: it trades a second
-    (column-pruned) source scan for a UDF-free rect path, verified by
-    plan inspection."""
+    """One page scan feeds one broadcast join, and the broadcast cover is a
+    JVM-side LocalTableScan: a fallback to pickled rows would scan them
+    in Python workers again."""
     pages = PG.pages_df(spark, SF)
-    branch = SJ.spatial_join(spark, pages, PL.POLYGONS)
-    assert plan_of(branch).count("FileScan parquet") == 2
+    plan = plan_of(SJ.spatial_join(spark, pages, PL.POLYGONS))
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "LocalTableScan" in plan.split("BroadcastExchange", 1)[1]
 
 
 def test_proximity_shuffle_carries_no_pixels(spark):

@@ -49,7 +49,8 @@ def _expected_pairs(pages_pdf):
             m = e1 & e2 & e3
         elif kind == "dateline":
             y0, y1 = prm["lat"]
-            m = ((lon > prm["west_lon"]) | (lon < prm["east_lon"])) & (lat > y0) & (lat < y1)
+            m = ((lon > prm["west_lon"]) | ((lon > -180) & (lon < prm["east_lon"])))
+            m &= (lat > y0) & (lat < y1)
         for url in pages_pdf["url"].to_numpy()[m]:
             pairs.add((url, p.eas_id))
     return pairs

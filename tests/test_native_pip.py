@@ -135,13 +135,22 @@ def test_layer_mixing_rect_and_ray_cast_rows(spark):
     _check(spark, polys, _grid(rng.uniform(8, 23, 3000)), _grid(rng.uniform(8, 23, 3000)))
 
 
-def test_cell_with_more_rings_than_parity_bits(spark):
-    """70 holes in one cell overflow the 62 parity bits of a cover row: the
-    cell splits into half-open boxes, each with few enough rings."""
-    holes = [_rect(10.1 + 0.1 * i, 10.1 + 0.1 * j, 10.15 + 0.1 * i, 10.15 + 0.1 * j)
-             for i in range(10) for j in range(7)]
-    polys = [Poly(0, [[_rect(10.0005, 10.0005, 11.5005, 11.5005)] + holes])]
+def test_holes_sharing_one_vertex(spark):
+    """70 wedge holes fan out from one shared vertex, as a valid polygon's
+    holes may touch: every cell near that vertex needs all of their rings,
+    and points on and around the vertex must compose them exactly."""
+    cx, cy = 10.5, 10.5
+    ang = np.linspace(0, 2 * np.pi, 71)
+    holes = [[(cx, cy)] + [tuple(_grid([cx + 0.4 * np.cos(t), cy + 0.4 * np.sin(t)]))
+                           for t in (a0, a0 + 0.6 * (a1 - a0))]
+             for a0, a1 in zip(ang[:-1], ang[1:])]
+    polys = [Poly(0, [[_rect(10.0005, 10.0005, 11.0005, 11.0005)] + holes])]
     cover = SJ.polygon_cover_df(spark, polys).toPandas()
-    assert np.isfinite(cover["box_x0"]).any()
+    assert cover["edges"].map(lambda e: e is not None and len(e) > 70).any()
     rng = np.random.default_rng(1)
-    _check(spark, polys, _grid(rng.uniform(10, 11.6, 4000)), _grid(rng.uniform(10, 11.6, 4000)))
+    near = np.arange(-10, 11) / 1000
+    px = np.concatenate([_grid(rng.uniform(9.9, 11.1, 3000)), _grid(cx + np.repeat(near, 21)),
+                         np.concatenate([np.asarray(h)[:, 0] for h in holes])])
+    py = np.concatenate([_grid(rng.uniform(9.9, 11.1, 3000)), _grid(cy + np.tile(near, 21)),
+                         np.concatenate([np.asarray(h)[:, 1] for h in holes])])
+    _check(spark, polys, px, py)

@@ -18,7 +18,6 @@ equivalent:
 Distance metric: squared planar degrees (``dist2``) — pure multiply/add,
 bit-identical across numpy / Spark / DuckDB, so the oracle can verify
 results exactly. Ties broken by url ascending (pinned in FIXTURES.md §5).
-haversine is available in kernels/distance.py for geographic scoring.
 """
 
 from __future__ import annotations

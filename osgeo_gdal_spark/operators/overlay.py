@@ -3,18 +3,24 @@
 - CLIP against an axis rect (the ogr2ogr ``-clipsrc xmin ymin xmax ymax``
   path, ``apps/ogr2ogr_lib.cpp:2460-2545``; layer-algebra Clip
   ``ogrlayer.cpp:7537``), Sutherland-Hodgman per ring;
-- general layer-algebra Intersection / Union / Erase emitting geometries
-  (``ogrlayer.cpp:5385`` Intersection, ``:5803`` Union, ``:6158`` Erase)
-  via the GEOS-free edge-classification kernel in
-  ``kernels/overlay_kernel.py``.
+- the layer algebra emitting geometries (``ogrlayer.cpp:5385``
+  Intersection, ``:5803`` Union, ``:6158`` Erase, ``:6770`` Identity,
+  ``:7188`` Update) via the GEOS-free edge-classification kernel in
+  ``kernels/overlay_kernel.py``, and its snap-rounded tier
+  (``kernels/snap.py``);
+- DISSOLVE per attribute value.
 
-Distributed shape: candidate (feature, polygon) pairs come from the
-broadcast cell-cover machinery of ``operators/spatial_join.py`` (the
-big feature side never shuffles; the polygon layer broadcasts), then an
-Arrow batch runs the per-pair boolean kernel. A native bbox prefilter
-drops features entirely outside the window before any Python runs, and
-— the GeoParquet covering-column pattern — lets Catalyst prune files on
-the flat bbox struct.
+Distributed shape of the layer algebra, one method family as in OGR:
+candidate (feature, polygon) pairs come from the broadcast cell-cover
+join of ``operators/spatial_join.py`` (``_pairs``: the big feature side
+never shuffles), and the method layer ships once through
+``spatial_join.broadcast_layer``. Every per-pair operator is a field
+list plus a kernel call run by one pair loop (``_per_pair``); Erase,
+Identity and Update share one per-feature fold and one pass-through for
+untouched features (``_split``). A native bbox prefilter drops features
+entirely outside the window before any Python runs, and — the GeoParquet
+covering-column pattern — lets Catalyst prune files on the flat bbox
+struct.
 """
 
 from __future__ import annotations
@@ -22,8 +28,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernels import clip as CL, overlay_kernel as OVK, wkb as W
+from ..kernels import clip as CL, overlay_kernel as OVK, snap as SN, wkb as W
 from ..session import local_df
+from . import spatial_join as SJ
 
 _CLIP_SCHEMA_EXTRA = [
     T.StructField("clip_wkb", T.BinaryType()),
@@ -95,7 +102,7 @@ def clip_features_rect(feats: DataFrame, rect, geom_col="geometry",
     return pre.mapInPandas(kernel, out_schema)
 
 
-# --- general layer algebra (Intersection / Union / Erase) ----------------
+# --- general layer algebra (Intersection / Union / Erase / Identity) -----
 
 _PIECE_FIELDS = [
     T.StructField("piece_wkb", T.BinaryType()),
@@ -103,29 +110,60 @@ _PIECE_FIELDS = [
     T.StructField("piece_npts", T.IntegerType()),
 ]
 
-_RINGS_CACHE: dict = {}
+
+def _piece(rings, area):
+    """The _PIECE_FIELDS values of a ring soup of even-odd area ``area``."""
+    return (OVK.rings_to_wkb(rings), float(area),
+            int(sum(len(xs) for xs, _ in rings)))
 
 
-def _prepared_rings(payload, key):
-    """Per-executor cache: polygon fid -> ring soup (parse WKB once per
-    payload, not once per Arrow batch). Keeps the last few payloads so
-    two overlay jobs interleaving Arrow batches in one Python worker
-    don't evict each other every batch."""
-    got = _RINGS_CACHE.get(key)
-    if got is None:
-        got = {
-            fid: OVK.geometry_rings(W.parse_wkb(bytes(buf)))
-            for fid, buf in payload
-        }
-        while len(_RINGS_CACHE) >= 4:
-            _RINGS_CACHE.pop(next(iter(_RINGS_CACHE)))
-        _RINGS_CACHE[key] = got
-    return got
+def _areal(rings):
+    """[_piece] of a set-op result, or [] when it has no positive area."""
+    area = OVK.rings_area(rings)
+    return [_piece(rings, area)] if rings and area > 0 else []
 
 
-def overlay_features(spark, feats: DataFrame, polys, op: str,
-                     keep_cols=("fid", "a_id"), geom_col="geometry",
-                     zoom=None) -> DataFrame:
+def _pairs(spark, feats, polys, grid=None):
+    """Candidate (feature, polygon) pairs from spatial_join_polygons: the
+    exact strict-interior intersects refine, or, for the snapped tier, the
+    closed-envelope candidates dilated by the snap ``grid`` (boundary-only
+    contacts must reach the kernel, which decides emptiness itself)."""
+    if grid is None:
+        return SJ.spatial_join_polygons(spark, feats, polys)
+    return SJ.spatial_join_polygons(spark, feats, polys,
+                                    predicate="candidates_closed",
+                                    dilate=float(grid))
+
+
+def _per_pair(spark, pairs, polys, fields, fn):
+    """The layer-algebra pair loop (ogrlayer.cpp:5385+): one Arrow pass
+    over the candidate pairs. It parses feature A's rings once per pair,
+    looks polygon B's rings up in the broadcast layer and emits
+    ``(fid, a_id, eas_id, *t)`` for every field tuple t of
+    ``fn(ra, rb)``. Features never shuffle."""
+    layer = SJ.broadcast_layer(spark, polys)
+    schema = T.StructType([pairs.schema["fid"], pairs.schema["a_id"],
+                           T.StructField("eas_id", T.LongType())] + fields)
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rings_by_fid = layer.geoms(OVK.geometry_rings)
+            rows = []
+            for fid, a_id, eas, buf, bf in zip(
+                    pdf["fid"], pdf["a_id"], pdf["eas_id"], pdf["geometry"],
+                    pdf["b_fid"]):
+                ra = OVK.geometry_rings(W.parse_wkb(bytes(buf)))
+                rows += [(fid, a_id, int(eas), *t)
+                         for t in fn(ra, rings_by_fid[int(bf)])]
+            if rows:
+                yield pd.DataFrame(rows, columns=schema.fieldNames())
+
+    return pairs.mapInPandas(kernel, schema)
+
+
+def overlay_features(spark, feats: DataFrame, polys, op: str) -> DataFrame:
     """Pairwise layer-algebra overlay: for every intersecting
     (feature, polygon) pair, emit the boolean-op geometry.
 
@@ -134,233 +172,99 @@ def overlay_features(spark, feats: DataFrame, polys, op: str,
     op='union' emits the PAIRWISE union piece (the A∪B geometry per
     matched pair — area oracle: |A| + |B| − |A∩B|).
 
-    Plan shape: spatial_join_polygons provides the matched pairs (cell
-    cover broadcast + native bbox prefilter + exact intersects refine);
-    this adds one Arrow pass running the edge-classification kernel with
-    the polygon payload broadcast — features never shuffle.
+    feats needs (fid, a_id, geometry WKB, bbox struct); every layer-algebra
+    function here returns (fid, a_id, eas_id, ...) rows.
     """
-    from . import spatial_join as SJ
-
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(spark, feats, polys, **kw)
-
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    opv = str(op)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType())]
-        + _PIECE_FIELDS
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                res = OVK.overlay_rings(ra, rb, opv)
-                area = OVK.rings_area(res)
-                if not res or area <= 0:
-                    continue
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "eas_id": int(row["eas_id"]),
-                     "piece_wkb": OVK.rings_to_wkb(res),
-                     "piece_area": float(area),
-                     "piece_npts": int(sum(len(xs) for xs, _ in res))}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    return _per_pair(spark, _pairs(spark, feats, polys), polys, _PIECE_FIELDS,
+                     lambda ra, rb: _areal(OVK.overlay_rings(ra, rb, op)))
 
 
-def erase_features(spark, feats: DataFrame, polys,
-                   keep_cols=("fid", "a_id"), geom_col="geometry",
-                   zoom=None) -> DataFrame:
-    """Layer-algebra Erase (ogrlayer.cpp:6158): each feature minus the
-    union of every polygon it intersects; features intersecting nothing
-    pass through whole. Output: keep_cols + (piece_wkb, piece_area,
-    piece_npts); features fully erased are dropped.
+def _split(spark, feats, polys, pieces: bool) -> DataFrame:
+    """Each feature minus the union of every polygon it intersects, as
+    (fid, a_id, eas_id NULL, piece fields); with ``pieces`` also one A∩B
+    piece per intersecting polygon (eas_id set). Features intersecting
+    nothing pass through whole; features fully erased are dropped.
 
-    Plan shape: matched pairs -> groupBy(feature) -> applyInPandas
-    difference fold (the method layer broadcasts; each feature's fold is
-    O(matched polys) kernel calls), then a left-anti union for the
-    untouched features — two jobs total, no feature payload shuffle
-    beyond the matched subset.
+    Plan shape: matched pairs -> groupBy(feature) -> applyInPandas fold
+    (the method layer broadcasts; each feature's fold is O(matched polys)
+    kernel calls), then a left-anti union for the untouched features —
+    two jobs total, no feature payload shuffle beyond the matched subset.
     """
-    from . import spatial_join as SJ
-
-    kw = {} if zoom is None else {"zoom": zoom}
     # pin the matched-pair table: both the piece fold and the untouched
     # left-anti read it — unmaterialized, the whole cell-cover join +
     # PIP refine chain evaluates twice (measured ~0.3s/query at sf0.1);
     # the standard materialize-reused-intermediate move (guide §3.3),
     # bounded by the join's matched subset
-    matched = SJ.spatial_join_polygons(spark, feats, polys, **kw) \
-        .localCheckpoint()
-
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols] + _PIECE_FIELDS
-    )
+    matched = _pairs(spark, feats, polys).localCheckpoint()
+    layer = SJ.broadcast_layer(spark, polys)
+    schema = T.StructType([feats.schema["fid"], feats.schema["a_id"],
+                           T.StructField("eas_id", T.LongType())]
+                          + _PIECE_FIELDS)
+    names = schema.fieldNames()
 
     def fold(pdf):
         import pandas as pd
 
-        rings_by_fid = _prepared_rings(bc.value, key)
-        row0 = pdf.iloc[0]
-        acc = OVK.geometry_rings(W.parse_wkb(bytes(row0[geom_col])))
+        rings_by_fid = layer.geoms(OVK.geometry_rings)
+        fid, a_id = pdf["fid"].iloc[0], pdf["a_id"].iloc[0]
+        ra = OVK.geometry_rings(W.parse_wkb(bytes(pdf["geometry"].iloc[0])))
+        eas_by_bfid = {int(b): int(e)
+                       for b, e in zip(pdf["b_fid"], pdf["eas_id"])}
+        acc, rows = ra, []
         # sorted fold order: difference results are order-independent in
         # exact arithmetic but not in floats — keep runs reproducible
-        for bf in sorted(int(v) for v in pdf["b_fid"]):
-            if not acc:
-                break
-            acc = OVK.overlay_rings(acc, rings_by_fid[bf], "difference")
-        area = OVK.rings_area(acc)
-        if not acc or area <= 0:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in out_schema}
-            )
-        return pd.DataFrame(
-            [{**{c: row0[c] for c in cols},
-              "piece_wkb": OVK.rings_to_wkb(acc),
-              "piece_area": float(area),
-              "piece_npts": int(sum(len(xs) for xs, _ in acc))}]
-        )
-
-    erased = matched.groupBy("fid").applyInPandas(fold, out_schema)
-
-    untouched = feats.join(
-        matched.select("fid").distinct(), "fid", "left_anti"
-    )
+        for bf in sorted(eas_by_bfid):
+            rb = rings_by_fid[bf]
+            if pieces:
+                rows += [(fid, a_id, eas_by_bfid[bf], *t) for t in
+                         _areal(OVK.overlay_rings(ra, rb, "intersection"))]
+            if acc:
+                acc = OVK.overlay_rings(acc, rb, "difference")
+        rows += [(fid, a_id, None, *t) for t in _areal(acc)]
+        return pd.DataFrame(rows, columns=names)
 
     def whole(batches):
         import pandas as pd
 
         for pdf in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                rings = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "piece_wkb": OVK.rings_to_wkb(rings),
-                     "piece_area": float(OVK.rings_area(rings)),
-                     "piece_npts": int(sum(len(xs) for xs, _ in rings))}
-                )
+            for fid, a_id, buf in zip(pdf["fid"], pdf["a_id"], pdf["geometry"]):
+                rings = OVK.geometry_rings(W.parse_wkb(bytes(buf)))
+                rows.append((fid, a_id, None,
+                             *_piece(rings, OVK.rings_area(rings))))
             if rows:
-                yield pd.DataFrame(rows)
+                yield pd.DataFrame(rows, columns=names)
 
-    return erased.unionByName(untouched.mapInPandas(whole, out_schema))
+    untouched = feats.join(
+        matched.select("fid").distinct(), "fid", "left_anti"
+    )
+    return matched.groupBy("fid").applyInPandas(fold, schema).unionByName(
+        untouched.mapInPandas(whole, schema))
 
 
-def identity_features(spark, feats: DataFrame, polys,
-                      keep_cols=("fid", "a_id"), geom_col="geometry",
-                      zoom=None) -> DataFrame:
+def erase_features(spark, feats: DataFrame, polys) -> DataFrame:
+    """Layer-algebra Erase (ogrlayer.cpp:6158): each feature minus the
+    union of every polygon it intersects; features intersecting nothing
+    pass through whole. Output: (fid, a_id, piece_wkb, piece_area,
+    piece_npts); features fully erased are dropped."""
+    return _split(spark, feats, polys, pieces=False).drop("eas_id")
+
+
+def identity_features(spark, feats: DataFrame, polys) -> DataFrame:
     """Layer-algebra Identity (``ogrlayer.cpp:6770``): every input
     feature split by the method layer — one A∩B piece per intersecting
     method polygon (method attributes set) plus the A − ∪B residual
     piece with method attributes NULL; features touching nothing pass
-    through whole (also NULL method attrs, via the erase pass-through).
+    through whole (also NULL method attrs).
 
     SINGLE-PASS shape (not Intersection ∪ Erase, which would scan and
-    join the 100 TB feature side twice): one broadcast cell-cover join
-    produces the matched pairs, one groupBy(feature) fold emits every
-    intersection piece AND the running-difference residual together,
-    then the untouched features pass through whole via a left-anti —
-    exactly the Erase plan's cost plus the per-pair intersection kernel
-    calls inside the same Arrow batch.
+    join the 100 TB feature side twice): the Erase plan, whose fold also
+    emits every intersection piece from the same Arrow batch.
     """
-    from . import spatial_join as SJ
-
-    kw = {} if zoom is None else {"zoom": zoom}
-    # pin the matched-pair table: both the piece fold and the untouched
-    # left-anti read it — unmaterialized, the whole cell-cover join +
-    # PIP refine chain evaluates twice (measured ~0.3s/query at sf0.1);
-    # the standard materialize-reused-intermediate move (guide §3.3),
-    # bounded by the join's matched subset
-    matched = SJ.spatial_join_polygons(spark, feats, polys, **kw) \
-        .localCheckpoint()
-
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType())]
-        + _PIECE_FIELDS
-    )
-
-    def _piece_row(row0, eas, rings):
-        return {**{c: row0[c] for c in cols},
-                "eas_id": eas,
-                "piece_wkb": OVK.rings_to_wkb(rings),
-                "piece_area": float(OVK.rings_area(rings)),
-                "piece_npts": int(sum(len(xs) for xs, _ in rings))}
-
-    def fold(pdf):
-        import pandas as pd
-
-        rings_by_fid = _prepared_rings(bc.value, key)
-        row0 = pdf.iloc[0]
-        ra = OVK.geometry_rings(W.parse_wkb(bytes(row0[geom_col])))
-        eas_by_bfid = {int(b): int(e)
-                       for b, e in zip(pdf["b_fid"], pdf["eas_id"])}
-        acc = ra
-        rows = []
-        # sorted fold order: reproducible float difference chain (same
-        # contract as erase_features)
-        for bf in sorted(eas_by_bfid):
-            rb = rings_by_fid[bf]
-            piece = OVK.overlay_rings(ra, rb, "intersection")
-            if piece and OVK.rings_area(piece) > 0:
-                rows.append(_piece_row(row0, eas_by_bfid[bf], piece))
-            if acc:
-                acc = OVK.overlay_rings(acc, rb, "difference")
-        if acc and OVK.rings_area(acc) > 0:
-            rows.append(_piece_row(row0, None, acc))
-        if not rows:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in out_schema}
-            )
-        return pd.DataFrame(rows)
-
-    split = matched.groupBy("fid").applyInPandas(fold, out_schema)
-
-    untouched = feats.join(
-        matched.select("fid").distinct(), "fid", "left_anti"
-    )
-
-    def whole(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                rings = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rows.append(_piece_row(row, None, rings))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return split.unionByName(untouched.mapInPandas(whole, out_schema))
+    return _split(spark, feats, polys, pieces=True)
 
 
-def update_features(spark, feats: DataFrame, polys,
-                    keep_cols=("fid", "a_id"), geom_col="geometry",
-                    zoom=None) -> DataFrame:
+def update_features(spark, feats: DataFrame, polys) -> DataFrame:
     """Layer-algebra Update (``ogrlayer.cpp:7188``): the input layer
     with the method-layer footprints replaced by the method features —
     A − ∪B pieces carrying the input attributes, plus every method
@@ -369,37 +273,23 @@ def update_features(spark, feats: DataFrame, polys,
     ``eas_id``).
 
     The method layer is the broadcast-scale dim side (it already ships
-    to every executor as the overlay payload), so its whole-feature
-    rows are built driver-side — no extra job.
+    to every executor), so its whole-feature rows are built driver-side
+    — no extra job.
     """
-    er = erase_features(spark, feats, polys, keep_cols=keep_cols,
-                        geom_col=geom_col, zoom=zoom)
-    er = er.withColumn("eas_id", F.lit(None).cast("long"))
-
-    cols = list(keep_cols)
-    brows = []
+    er = _split(spark, feats, polys, pieces=False)
+    rows = []
     for pf in polys:
         rings = OVK.geometry_rings(W.parse_wkb(pf.wkb()))
-        brows.append(
-            {**{c: None for c in cols},
-             "eas_id": int(pf.eas_id),
-             "piece_wkb": bytearray(OVK.rings_to_wkb(rings)),
-             "piece_area": float(OVK.rings_area(rings)),
-             "piece_npts": int(sum(len(xs) for xs, _ in rings))}
-        )
-    out_schema = T.StructType(
+        wkb, area, npts = _piece(rings, OVK.rings_area(rings))
+        rows.append((None, None, int(pf.eas_id), bytearray(wkb), area, npts))
+    schema = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in er.schema]
     )
-    bdf = local_df(spark, 
-        [tuple(r[f.name] for f in out_schema) for r in brows], out_schema
-    )
-    return er.select(*[f.name for f in out_schema]).unionByName(bdf)
+    return er.unionByName(local_df(spark, rows, schema))
 
 
 def overlay_features_snapped(spark, feats: DataFrame, polys, op: str,
-                             grid: float = None,
-                             keep_cols=("fid", "a_id"),
-                             geom_col="geometry", zoom=None) -> DataFrame:
+                             grid: float) -> DataFrame:
     """Layer-algebra overlay WITHOUT the general-position contract: both
     sides pass through the snap-rounding kernel (kernels/snap.py), so
     vertex-on-edge contacts, shared collinear edges and near-coincident
@@ -408,139 +298,39 @@ def overlay_features_snapped(spark, feats: DataFrame, polys, op: str,
     reaches the same semantics via the layer-algebra SNAP options
     (ogr/ogrsf_frmts/generic/ogrlayer.cpp:5402).
 
-    Plan shape matches overlay_features (broadcast cell cover + bbox
-    prefilter + one Arrow pass, features never shuffle) with one
-    difference: candidates use the CLOSED envelope comparison and skip
-    the strict-interior refine — boundary-only contacts must reach the
-    kernel, and pairs whose op result is empty simply emit nothing.
+    Plan shape matches overlay_features with one difference: candidates
+    use the CLOSED envelope comparison dilated by ``grid`` and skip the
+    strict-interior refine (``_pairs``); pairs whose op result is empty
+    simply emit nothing.
 
-    ``grid`` is the snap resolution in world units (power of two;
-    defaults per pair from coordinate magnitude). Output rows carry the
-    AREAL result only (boundary-only contacts yield no row for
-    op='intersection').
+    ``grid`` is the snap resolution in world units (power of two). Output
+    rows carry the AREAL result only (boundary-only contacts yield no row
+    for op='intersection').
     """
-    from ..kernels import snap as SN
-    from . import spatial_join as SJ
-
-    if grid is None:
-        # derive one layer-wide grid from the polygon payload magnitude
-        # so the candidate dilation below matches the kernel's default
-        grid = SN.default_grid(
-            [], [(_g.xs, _g.ys) for pf in polys
-                 for _g in [W.parse_wkb(pf.wkb())]]
-        )
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(
-        spark, feats, polys, predicate="candidates_closed",
-        dilate=float(grid), **kw
-    )
-
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    opv = str(op)
-    gridv = grid
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType())]
-        + _PIECE_FIELDS
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                res = SN.overlay_rings_snapped(ra, rb, opv, gridv)
-                area = SN.rings_area(res)
-                if not res or area <= 0:
-                    continue
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "eas_id": int(row["eas_id"]),
-                     "piece_wkb": OVK.rings_to_wkb(res),
-                     "piece_area": float(area),
-                     "piece_npts": int(sum(len(xs) for xs, _ in res))}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    return _per_pair(
+        spark, _pairs(spark, feats, polys, grid), polys, _PIECE_FIELDS,
+        lambda ra, rb: _areal(SN.overlay_rings_snapped(ra, rb, op, grid)))
 
 
 def overlay_areas_features_snapped(spark, feats: DataFrame, polys,
-                                   grid: float = None,
-                                   keep_cols=("fid", "a_id"),
-                                   geom_col="geometry",
-                                   zoom=None) -> DataFrame:
+                                   grid: float) -> DataFrame:
     """Per-pair snapped overlay AREAS — intersection, union and A−B in
     ONE noding+classification pass per pair (kernels/snap.
     overlay_areas_snapped), over the same closed-envelope candidate
     plan as overlay_features_snapped. The shape for per-pair area
     reports where the geometries themselves aren't needed."""
-    from ..kernels import snap as SN
-    from . import spatial_join as SJ
+    def areas(ra, rb):
+        ar = SN.overlay_areas_snapped(ra, rb, float(grid))
+        return [(float(ar["i"]), float(ar["u"]), float(ar["d"]))]
 
-    if grid is None:
-        grid = SN.default_grid(
-            [], [(_g.xs, _g.ys) for pf in polys
-                 for _g in [W.parse_wkb(pf.wkb())]]
-        )
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(
-        spark, feats, polys, predicate="candidates_closed",
-        dilate=float(grid), **kw
-    )
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    gridv = float(grid)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType()),
-           T.StructField("i_area", T.DoubleType()),
-           T.StructField("u_area", T.DoubleType()),
-           T.StructField("d_area", T.DoubleType())]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from ..kernels import snap as SN2
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                ar = SN2.overlay_areas_snapped(ra, rb, gridv)
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "eas_id": int(row["eas_id"]),
-                     "i_area": float(ar["i"]),
-                     "u_area": float(ar["u"]),
-                     "d_area": float(ar["d"])}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    fields = [T.StructField(c, T.DoubleType())
+              for c in ("i_area", "u_area", "d_area")]
+    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
+                     fields, areas)
 
 
 def overlay_lines_features_snapped(spark, feats: DataFrame, polys,
-                                   grid: float = None,
-                                   keep_cols=("fid", "a_id"),
-                                   geom_col="geometry",
-                                   zoom=None) -> DataFrame:
+                                   grid: float) -> DataFrame:
     """Per-pair LOWER-DIMENSIONAL overlay component — the LINESTRING
     rows GDAL's layer algebra emits for boundary-only intersections
     (KEEP_LOWER_DIMENSION_GEOMETRIES, ogrlayer.cpp:5402-5411; GEOS
@@ -550,123 +340,37 @@ def overlay_lines_features_snapped(spark, feats: DataFrame, polys,
     stitches shared polylines; rows report count and exact total
     length per pair (pairs with an empty line component emit no row,
     mirroring the areal queries' >0 filters)."""
-    from ..kernels import snap as SN
-    from . import spatial_join as SJ
+    def lines(ra, rb):
+        got = SN.overlay_lines_snapped(ra, rb, float(grid))
+        if not got:
+            return []
+        return [(len(got), float(sum(
+            float(np.hypot(np.diff(xs), np.diff(ys)).sum())
+            for xs, ys in got)))]
 
-    if grid is None:
-        grid = SN.default_grid(
-            [], [(_g.xs, _g.ys) for pf in polys
-                 for _g in [W.parse_wkb(pf.wkb())]]
-        )
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(
-        spark, feats, polys, predicate="candidates_closed",
-        dilate=float(grid), **kw
-    )
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    gridv = float(grid)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType()),
-           T.StructField("n_lines", T.IntegerType()),
-           T.StructField("total_len", T.DoubleType())]
-    )
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..kernels import snap as SN2
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                lines = SN2.overlay_lines_snapped(ra, rb, gridv)
-                if not lines:
-                    continue
-                tl = float(sum(
-                    float(np.hypot(np.diff(xs), np.diff(ys)).sum())
-                    for xs, ys in lines))
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "eas_id": int(row["eas_id"]),
-                     "n_lines": len(lines),
-                     "total_len": tl}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    fields = [T.StructField("n_lines", T.IntegerType()),
+              T.StructField("total_len", T.DoubleType())]
+    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
+                     fields, lines)
 
 
 def overlay_points_features_snapped(spark, feats: DataFrame, polys,
-                                    grid: float = None,
-                                    keep_cols=("fid", "a_id"),
-                                    geom_col="geometry",
-                                    zoom=None) -> DataFrame:
+                                    grid: float) -> DataFrame:
     """Per-pair dimension-0 overlay component — the POINT rows of
     KEEP_LOWER_DIMENSION_GEOMETRIES (corner touches, T-contact
     apexes); kernels/snap.overlay_points_snapped. Pairs with an empty
     point component emit no row."""
-    from ..kernels import snap as SN
-    from . import spatial_join as SJ
+    def points(ra, rb):
+        return [(float(px), float(py))
+                for px, py in SN.overlay_points_snapped(ra, rb, float(grid))]
 
-    if grid is None:
-        grid = SN.default_grid(
-            [], [(_g.xs, _g.ys) for pf in polys
-                 for _g in [W.parse_wkb(pf.wkb())]]
-        )
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(
-        spark, feats, polys, predicate="candidates_closed",
-        dilate=float(grid), **kw
-    )
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    gridv = float(grid)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType()),
-           T.StructField("px", T.DoubleType()),
-           T.StructField("py", T.DoubleType())]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        from ..kernels import snap as SN2
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                for (px, py) in SN2.overlay_points_snapped(ra, rb, gridv):
-                    rows.append(
-                        {**{c: row[c] for c in cols},
-                         "eas_id": int(row["eas_id"]),
-                         "px": float(px), "py": float(py)}
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    fields = [T.StructField(c, T.DoubleType()) for c in ("px", "py")]
+    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
+                     fields, points)
 
 
-def predicates_snapped(spark, feats: DataFrame, polys, grid: float = None,
-                       keep_cols=("fid", "a_id"), geom_col="geometry",
-                       zoom=None) -> DataFrame:
+def predicates_snapped(spark, feats: DataFrame, polys,
+                       grid: float) -> DataFrame:
     """Boundary-aware OGC predicates on SNAPPED inputs — the predicate
     half of the snap-rounding tier (ogrlayer.cpp SetSpatialFilter +
     OGRGeometry::Touches :6082 / Overlaps :6409 / Equals :1239, GEOS
@@ -683,66 +387,23 @@ def predicates_snapped(spark, feats: DataFrame, polys, grid: float = None,
 
     Same candidate plan as overlay_features_snapped (closed envelopes +
     grid dilation, no refine UDF)."""
-    from ..kernels import snap as SN
-    from . import spatial_join as SJ
+    g = float(grid)
 
-    if grid is None:
-        grid = SN.default_grid(
-            [], [(_g.xs, _g.ys) for pf in polys
-                 for _g in [W.parse_wkb(pf.wkb())]]
-        )
-    kw = {} if zoom is None else {"zoom": zoom}
-    matched = SJ.spatial_join_polygons(
-        spark, feats, polys, predicate="candidates_closed",
-        dilate=float(grid), **kw
-    )
+    def predicates(ra, rb):
+        a_area = SN.rings_area(SN.snap_rings(ra, g))
+        b_area = SN.rings_area(SN.snap_rings(rb, g))
+        # one arrangement pass yields every needed area
+        ar = SN.overlay_areas_snapped(ra, rb, g)
+        i_area = ar["i"]
+        touch = SN.boundaries_touch_snapped(ra, rb, g)
+        return [(bool(touch or i_area > 0), bool(touch and i_area == 0),
+                 bool(i_area == a_area == b_area), bool(ar["db"] == 0.0),
+                 bool(0 < i_area < min(a_area, b_area)))]
 
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = SJ.payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    gridv = float(grid)
-    cols = list(keep_cols)
-
-    out_schema = T.StructType(
-        [feats.schema[c] for c in cols]
-        + [T.StructField("eas_id", T.LongType()),
-           T.StructField("intersects", T.BooleanType()),
-           T.StructField("touches", T.BooleanType()),
-           T.StructField("equals", T.BooleanType()),
-           T.StructField("covers", T.BooleanType()),
-           T.StructField("overlaps", T.BooleanType())]
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rings_by_fid = _prepared_rings(bc.value, key)
-            rows = []
-            for _, row in pdf.iterrows():
-                ra = OVK.geometry_rings(W.parse_wkb(bytes(row[geom_col])))
-                rb = rings_by_fid[int(row["b_fid"])]
-                from ..kernels import snap as SN2
-
-                a_area = SN2.rings_area(SN2.snap_rings(ra, gridv))
-                b_area = SN2.rings_area(SN2.snap_rings(rb, gridv))
-                # one arrangement pass yields every needed area
-                ar = SN2.overlay_areas_snapped(ra, rb, gridv)
-                i_area, bma = ar["i"], ar["db"]
-                touch = SN2.boundaries_touch_snapped(ra, rb, gridv)
-                rows.append(
-                    {**{c: row[c] for c in cols},
-                     "eas_id": int(row["eas_id"]),
-                     "intersects": bool(touch or i_area > 0),
-                     "touches": bool(touch and i_area == 0),
-                     "equals": bool(i_area == a_area == b_area),
-                     "covers": bool(bma == 0.0),
-                     "overlaps": bool(0 < i_area < min(a_area, b_area))}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return matched.mapInPandas(kernel, out_schema)
+    fields = [T.StructField(c, T.BooleanType()) for c in
+              ("intersects", "touches", "equals", "covers", "overlaps")]
+    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
+                     fields, predicates)
 
 
 def dissolve(spark, feats: DataFrame, group_col: str = "gid",
@@ -772,9 +433,6 @@ def dissolve(spark, feats: DataFrame, group_col: str = "gid",
     partial, kernels/snap.overlay_rings_snapped_n).
     """
     import pandas as pd
-
-    from ..kernels import overlay_kernel as OVK
-    from ..kernels import snap as SN
 
     def _union(soups):
         if snap_grid is not None:

@@ -822,22 +822,20 @@ ZONE_NODATA = -1
 
 
 def _zone_setup(spark, polys, zoom: int):
-    """Shared zonal machinery: broadcast geometry payload + the per-tile
+    """Shared zonal machinery: the broadcast polygon layer + the per-tile
     covering-fid LIST table (one skinny row per covered tile — built
     from the per-PART tile-range explode, then collect_set so VALUE
     tiles are never replicated per zone; the list table broadcasts,
     the same small-layer constraint as the spatial-join machinery)."""
     from ..kernels import wkb as W
     from .rasterize import lonlat_to_px
-    from .spatial_join import payload_key
+    from .spatial_join import broadcast_layer
 
     world = (1 << zoom) * TILE
     maxt = (1 << zoom) - 1
-    payload = []
     env_rows = []
-    for pf in sorted(polys, key=lambda p: p.fid):
+    for pf in polys:
         g = W.parse_wkb(pf.wkb())
-        payload.append((int(pf.fid), int(pf.eas_id), pf.wkb()))
         ring_i = 0
         for nrings in g.part_rings:
             s, e = g.ring_offsets[ring_i], g.ring_offsets[ring_i + 1]
@@ -852,9 +850,6 @@ def _zone_setup(spark, polys, zoom: int):
                  max(0, int(px.min() // TILE)), min(maxt, int(px.max() // TILE)),
                  max(0, int(py.min() // TILE)), min(maxt, int(py.max() // TILE)))
             )
-    bc = spark.sparkContext.broadcast(payload)
-    pkey = payload_key([(fid, buf) for fid, _eas, buf in payload])
-
     env = local_df(spark, 
         env_rows, "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG"
     )
@@ -868,7 +863,7 @@ def _zone_setup(spark, polys, zoom: int):
         .groupBy("gx", "gy")
         .agg(F.sort_array(F.collect_set("fid")).alias("_zfids"))
     )
-    return bc, pkey, cover_lists, world
+    return broadcast_layer(spark, polys), cover_lists, world
 
 
 def _burn_zone_grid(gx, gy, fids, geoms, eas_of, world):
@@ -904,7 +899,7 @@ def zone_tiles(spark, polys, zoom: int) -> DataFrame:
     the reusable artifact when several value rasters share one zone
     layer. The inline zonal paths below FUSE the burn into the stat
     pass instead (no extra stage)."""
-    bc, pkey, cover_lists, world = _zone_setup(spark, polys, zoom)
+    layer, cover_lists, world = _zone_setup(spark, polys, zoom)
 
     out_schema = T.StructType(
         [
@@ -917,11 +912,9 @@ def zone_tiles(spark, polys, zoom: int) -> DataFrame:
     def burn(batches):
         import pandas as pd
 
-        from .spatial_join import _prepared
-
         for pdf in batches:
-            geoms = _prepared([(f, b) for f, _e, b in bc.value], pkey)
-            eas_of = {f: e for f, e, _b in bc.value}
+            geoms = layer.geoms()
+            eas_of = {f: e for f, e, _b in layer.bc.value}
             rows = []
             for _, row in pdf.iterrows():
                 gx, gy = int(row["gx"]), int(row["gy"])
@@ -944,17 +937,15 @@ def _zonal_partials(tiles, polys, zoom, reducer, out_schema):
     work scales with the zones covering that tile, not the layer size;
     the shuffle carries partial rows, never pixels."""
     spark = tiles.sparkSession
-    bc, pkey, cover_lists, world = _zone_setup(spark, polys, zoom)
+    layer, cover_lists, world = _zone_setup(spark, polys, zoom)
     joined = tiles.join(F.broadcast(cover_lists), ["gx", "gy"])
 
     def partials(batches):
         import pandas as pd
 
-        from .spatial_join import _prepared
-
         for pdf in batches:
-            geoms = _prepared([(f, b) for f, _e, b in bc.value], pkey)
-            eas_of = {f: e for f, e, _b in bc.value}
+            geoms = layer.geoms()
+            eas_of = {f: e for f, e, _b in layer.bc.value}
             rows = []
             for _, row in pdf.iterrows():
                 vals = parse_tile(row).astype(np.float64).ravel()

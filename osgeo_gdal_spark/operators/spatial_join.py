@@ -26,6 +26,12 @@ nested-loop joins (``ogrlayer.cpp:5385+``), restructured for 10^12 rows:
 
 There is no Python stage: the executed plan is one page scan feeding one
 broadcast hash join whose condition holds the whole predicate.
+
+The polygon x polygon join (``spatial_join_polygons``), the overlays and
+the raster zonal pass do run Python per pair or per tile. They read the
+method layer from one place: ``broadcast_layer`` ships ``[(fid, eas_id,
+wkb)]`` once with its content digest, and ``Layer.geoms`` parses it once
+per executor into a small cache keyed by that digest.
 """
 
 from __future__ import annotations
@@ -34,15 +40,19 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import sqlgen as G
-from ..kernels import cells as C, pip as PIP, wkb as W
+from ..kernels import cells as C, pip as PIP, polypoly as PP, wkb as W
 
 DEFAULT_JOIN_ZOOM = 7
 
-# per-worker cache of parsed polygon sets, keyed by a CONTENT digest of the
-# payload computed driver-side. id(payload) is unsafe here: CPython reuses
-# addresses after GC, so a later job's broadcast landing at the same address
-# would silently join against the previous job's polygons.
-_PREPARED_CACHE: dict = {}
+# Per-executor cache of prepared method layers: (content digest, prepare)
+# -> {fid: prepared geometry}. The digest is computed driver-side; id() of
+# the broadcast value is unsafe, as CPython reuses addresses after GC, so a
+# later job's layer landing at the same address would silently read the
+# previous job's polygons. It keeps the last few entries, so that two jobs
+# interleaving Arrow batches in one Python worker don't evict each other
+# every batch.
+_LAYER_CACHE: dict = {}
+_LAYER_CACHE_SIZE = 4
 
 # Cover regions grow by this many degrees before edges are chosen. A
 # superset of edges is always exact; the pad absorbs the tile formula's
@@ -89,24 +99,41 @@ _CONTAINS_SQL = (
 )
 
 
-def payload_key(payload) -> str:
-    """Stable content key for a [(fid, wkb_bytes), ...] payload."""
+class Layer:
+    """A polygon layer broadcast once as ``[(fid, eas_id, wkb)]``, with its
+    content digest. Pickles small: executors read the broadcast."""
+
+    def __init__(self, bc, digest):
+        self.bc, self.digest = bc, digest
+
+    def geoms(self, prepare=None):
+        """{fid: prepare(parse_wkb(wkb))} from the per-executor cache.
+        ``prepare`` must be a module-level function, so that every batch
+        sees the same object and hits the cache."""
+        key = (self.digest, prepare)
+        got = _LAYER_CACHE.get(key)
+        if got is None:
+            got = {fid: W.parse_wkb(buf) for fid, _eas, buf in self.bc.value}
+            if prepare is not None:
+                got = {fid: prepare(g) for fid, g in got.items()}
+            while len(_LAYER_CACHE) >= _LAYER_CACHE_SIZE:
+                _LAYER_CACHE.pop(next(iter(_LAYER_CACHE)))
+            _LAYER_CACHE[key] = got
+        return got
+
+
+def broadcast_layer(spark, polys) -> Layer:
+    """Ship the method polygon layer (PolyFeature-like: .fid/.eas_id/.wkb())
+    to the executors: the one broadcast every per-polygon Python stage
+    reads its geometries from."""
     import hashlib
 
-    h = hashlib.md5()
-    for fid, buf in payload:
-        h.update(str(fid).encode())
-        h.update(bytes(buf))
-    return h.hexdigest()
-
-
-def _prepared(payload, key):
-    got = _PREPARED_CACHE.get(key)
-    if got is None:
-        got = {fid: W.parse_wkb(bytes(buf)) for fid, buf in payload}
-        _PREPARED_CACHE.clear()  # one payload per job; don't leak old ones
-        _PREPARED_CACHE[key] = got
-    return got
+    rows = [(int(pf.fid), int(pf.eas_id), bytes(pf.wkb())) for pf in polys]
+    h = hashlib.sha256()
+    for fid, eas, buf in rows:
+        h.update(f"{fid}:{eas}:{len(buf)}:".encode())
+        h.update(buf)
+    return Layer(spark.sparkContext.broadcast(rows), h.hexdigest())
 
 
 def _ring_is_rect(xs, ys) -> bool:
@@ -301,19 +328,18 @@ def spatial_join(spark, pages: DataFrame, polys, zoom=DEFAULT_JOIN_ZOOM,
 
     The whole predicate (``_CONTAINS_SQL``) sits in the broadcast join's
     condition, so the page source is scanned once and no row enters
-    Python.
+    Python. 'semi' and 'anti' keep or drop each page by the same
+    condition in one ``left_semi`` / ``left_anti`` broadcast join.
     """
+    if how not in ("inner", "semi", "anti"):
+        raise ValueError(how)
     cover = polygon_cover_df(spark, polys, zoom)
-    matched = (with_cell_key(pages, zoom).join(F.broadcast(cover), "cell_key")
-               .filter(F.expr(_CONTAINS_SQL)).drop("cell_key", *_DECISION_COLS))
+    keyed = with_cell_key(pages, zoom)
     if how == "inner":
-        return matched
-    pairs = matched.select("url").distinct()
-    if how == "semi":
-        return pages.join(pairs, "url", "left_semi")
-    if how == "anti":
-        return pages.join(pairs, "url", "left_anti")
-    raise ValueError(how)
+        return (keyed.join(F.broadcast(cover), "cell_key")
+                .filter(F.expr(_CONTAINS_SQL)).drop("cell_key", *_DECISION_COLS))
+    cond = (keyed["cell_key"] == cover["cell_key"]) & F.expr(_CONTAINS_SQL)
+    return keyed.join(F.broadcast(cover), cond, "left_" + how).drop("cell_key")
 
 
 def zonal_stats(spark, pages: DataFrame, polys, value_col: str,
@@ -331,6 +357,18 @@ def zonal_stats(spark, pages: DataFrame, polys, value_col: str,
     )
 
 
+# predicate -> the exact test on (feature, polygon), kernels/polypoly.py
+_POLY_PREDICATES = {
+    "intersects": PP.polygons_intersect,
+    "within": lambda a, b: PP.polygon_contains_polygon(b, a),
+    "contains": PP.polygon_contains_polygon,
+    "touches": PP.polygons_touch,
+    "overlaps": PP.polygons_overlap,
+    "equals": PP.polygons_equal,
+    "covers": lambda a, b: PP.polygons_covers(b, a),  # polygon covers feat
+}
+
+
 def spatial_join_polygons(spark, feats: DataFrame, polys,
                           zoom=DEFAULT_JOIN_ZOOM,
                           predicate: str = "intersects",
@@ -345,13 +383,16 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
        (mercator tile ranges from the flat bbox struct — no Python);
     3. cell equi-join + native strict bbox-overlap prefilter;
     4. distinct (feature, polygon) candidates refine in an Arrow batch
-       with the prepared-polygon cache.
+       against the broadcast layer (``broadcast_layer``).
 
     feats needs (fid, geometry WKB, bbox struct). Returns feats columns +
     eas_id of each matching polygon.
-    """
-    from ..kernels import polypoly as PP
 
+    predicate: a key of ``_POLY_PREDICATES``, or 'candidates_closed' for
+    the closed-envelope candidates with no exact refine.
+    """
+    if predicate != "candidates_closed" and predicate not in _POLY_PREDICATES:
+        raise ValueError(predicate)
     n = 1 << zoom
     cover = polygon_cover_df(spark, polys, zoom)
 
@@ -393,40 +434,6 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
         & lt(fylo, F.col("p_ymax")) & lt(F.col("p_ymin"), fyhi)
     ).dropDuplicates(["fid", "poly_fid"])
 
-    payload = [(pf.fid, pf.wkb()) for pf in polys]
-    key = payload_key(payload)
-    bc = spark.sparkContext.broadcast(payload)
-    pred = str(predicate)
-
-    @F.pandas_udf(T.BooleanType())
-    def matches(poly_fid, geom):
-        import pandas as pd
-
-        from osgeo_gdal_spark.kernels import polypoly as _PP, wkb as _W
-
-        geoms = _prepared(bc.value, key)
-        out = []
-        for pf_, buf in zip(poly_fid, geom):
-            ga = _W.parse_wkb(bytes(buf))
-            gb = geoms[int(pf_)]
-            if pred == "intersects":
-                out.append(_PP.polygons_intersect(ga, gb))
-            elif pred == "within":
-                out.append(_PP.polygon_contains_polygon(gb, ga))
-            elif pred == "contains":
-                out.append(_PP.polygon_contains_polygon(ga, gb))
-            elif pred == "touches":
-                out.append(_PP.polygons_touch(ga, gb))
-            elif pred == "overlaps":
-                out.append(_PP.polygons_overlap(ga, gb))
-            elif pred == "equals":
-                out.append(_PP.polygons_equal(ga, gb))
-            elif pred == "covers":
-                out.append(_PP.polygons_covers(gb, ga))  # polygon covers feat
-            else:
-                raise ValueError(pred)
-        return pd.Series(out)
-
     if predicate == "candidates_closed":
         # closed-envelope candidates WITHOUT the exact refine: the
         # snapped overlay consumes these directly (its kernel decides
@@ -434,6 +441,17 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
         # strict-interior refine would drop)
         matched = cand
     else:
+        layer = broadcast_layer(spark, polys)
+        test = _POLY_PREDICATES[predicate]
+
+        @F.pandas_udf(T.BooleanType())
+        def matches(poly_fid, geom):
+            import pandas as pd
+
+            geoms = layer.geoms()
+            return pd.Series([test(W.parse_wkb(bytes(buf)), geoms[int(f)])
+                              for f, buf in zip(poly_fid, geom)])
+
         matched = cand.filter(matches("poly_fid", "geometry"))
     return matched.drop("cell_key", *_DECISION_COLS).withColumnRenamed(
         "poly_fid", "b_fid")

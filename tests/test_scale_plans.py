@@ -135,6 +135,11 @@ def test_spatial_join_strategy_plan_shapes(spark):
     assert plan.count("FileScan parquet") == 1
     assert plan.count("BroadcastHashJoin") == 1
     assert "LocalTableScan" in plan.split("BroadcastExchange", 1)[1]
+    # semi/anti keep or drop each page in the same single broadcast join
+    for how in ("semi", "anti"):
+        plan = plan_of(SJ.spatial_join(spark, pages, PL.POLYGONS, how=how))
+        assert plan.count("FileScan parquet") == 1, (how, plan)
+        assert plan.count("BroadcastHashJoin") == 1, (how, plan)
 
 
 def test_proximity_shuffle_carries_no_pixels(spark):

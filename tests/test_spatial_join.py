@@ -127,10 +127,9 @@ def test_broadcast_join_no_pages_shuffle(spark, pages):
 
 
 def test_successive_joins_different_polygon_sets(spark, pages, pages_pdf):
-    """Regression for the stale prepared-geometry cache: two successive
-    joins with DIFFERENT (non-rect) polygon sets in one session must each
-    match their own brute force. The old id()-keyed cache could silently
-    reuse the first job's parsed polygons for the second."""
+    """Two successive joins with DIFFERENT (non-rect) polygon sets in one
+    session must each match their own brute force: nothing of the first
+    layer's cover may leak into the second join."""
     tri_a = PL.PolyFeature(0, 900, "a", "tri",
                            {"vertices": ((130.0005, 10.0005), (160.0005, 15.0005),
                                          (142.3455, 44.8885))})
@@ -151,10 +150,48 @@ def test_successive_joins_different_polygon_sets(spark, pages, pages_pdf):
         got = {r["url"] for r in
                SJ.spatial_join(spark, pages, [tri]).select("url").collect()}
         assert got == brute(tri), tri.prfedea
-    # content digests differ, so the per-worker cache cannot collide
-    pa = SJ.payload_key([(tri_a.fid, tri_a.wkb())])
-    pb = SJ.payload_key([(tri_b.fid, tri_b.wkb())])
-    assert pa != pb
+
+
+def test_layer_cache_alternating_layers(spark, monkeypatch):
+    """Two layers with the same fid alternate in one process: each reads
+    its own geometries (the cache key is the content digest, never the
+    fid or id() of the broadcast), and the cache stays within its bound
+    while more (layer, prepare) pairs than it holds come and go."""
+    from osgeo_gdal_spark.kernels import overlay_kernel as OVK
+
+    monkeypatch.setattr(SJ, "_LAYER_CACHE", {})
+    tri = [PL.PolyFeature(0, 900 + i, "t", "tri",
+                          {"vertices": ((x, 10.0), (x + 5.0, 10.0),
+                                        (x + 2.0, 14.0))})
+           for i, x in enumerate((130.0, -60.0, 10.0))]
+    layers = [SJ.broadcast_layer(spark, [t]) for t in tri]
+    assert len({ly.digest for ly in layers}) == len(layers)
+    for _ in range(3):
+        for t, ly in zip(tri, layers):
+            for prepare in (None, OVK.geometry_rings):
+                got = ly.geoms(prepare)[0]
+                if prepare is None:
+                    got = OVK.geometry_rings(got)
+                (xs, _ys), = got
+                assert xs.min() == t.params["vertices"][0][0]
+                assert ly.geoms(prepare) is ly.geoms(prepare)
+                assert len(SJ._LAYER_CACHE) <= SJ._LAYER_CACHE_SIZE
+    # the same content broadcast again shares its cache entry
+    assert SJ.broadcast_layer(spark, [tri[0]]).digest == layers[0].digest
+
+
+def test_polygon_join_rejects_unknown_predicate_on_driver(spark):
+    """An unknown predicate raises while the plan is built, before any
+    Spark job starts (not later, inside a Python worker)."""
+    ti = PL.tindex_df(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-predicate", "predicate check")
+    try:
+        with pytest.raises(ValueError):
+            SJ.spatial_join_polygons(spark, ti, PL.POLYGONS, predicate="near")
+        assert sc.statusTracker().getJobIdsForGroup("unknown-predicate") == []
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_polypoly_kernels():

@@ -535,24 +535,18 @@ GROUP BY p.eas_id, poly.prfedea
 
 
 def q_spatial_semi_anti(spark: SparkSession, sf: str) -> DataFrame:
-    """Clip/Erase counts (spatial semi/anti join, ogrlayer.cpp:7537/:7846).
-
-    One pass: pages left-join the matched url set with a flag, then a
-    single conditional aggregation — semi/anti/total in ONE job instead
-    of three separate count() actions re-running the join."""
+    """Clip/Erase counts (spatial semi/anti join, ogrlayer.cpp:7537/:7846):
+    n_inside counts the semi join, n_outside the anti join, and n_total
+    is their sum. Each side is one page scan into one broadcast join;
+    no shuffle."""
     pages = PG.pages_df(spark, sf)
-    matched = (
-        SJ.spatial_join(spark, pages, PL.POLYGONS)
-        .select("url").distinct().withColumn("_in", F.lit(1))
-    )
-    flagged = pages.select("url").join(matched, "url", "left")
-    return flagged.agg(
-        F.sum(F.when(F.col("_in").isNotNull(), 1).otherwise(0))
-        .cast("long").alias("n_inside"),
-        F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0))
-        .cast("long").alias("n_outside"),
-        F.count("*").alias("n_total"),
-    )
+
+    def count(how, name):
+        return SJ.spatial_join(spark, pages, PL.POLYGONS, how=how).agg(
+            F.count("*").alias(name))
+
+    return count("semi", "n_inside").crossJoin(count("anti", "n_outside")) \
+        .withColumn("n_total", F.col("n_inside") + F.col("n_outside"))
 
 
 def sql_spatial_semi_anti() -> str:
@@ -5642,26 +5636,19 @@ def q_mosaic_overlay(spark: SparkSession, sf: str) -> DataFrame:
     layer. Exact per-pixel SQL oracle."""
     from .operators import raster_ops as RO
     from .sources import raster as RS
-    from .sources.raster import TILE_SCHEMA
 
     ND = -1.0
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
 
-    def mk_top(batches):
+    def mk_top(g, row):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                g = RS.parse_tile(row).astype(np.float64)
-                top = (g + 97.0) % 255.0
-                top[g % 5 == 0] = ND
-                rows.append(RS.tile_row(top, like=row, dataset_id="top",
-                                        nodata=ND))
-            yield pd.DataFrame(rows)
+        g = g.astype(np.float64)
+        top = (g + 97.0) % 255.0
+        top[g % 5 == 0] = ND
+        return RS.tile_row(top, like=row, dataset_id="top", nodata=ND)
 
-    top = tiles.mapInPandas(mk_top, TILE_SCHEMA)
+    top = RS.tile_map(tiles, mk_top)
     m = RO.mosaic_overlay([tiles, top], ND)
     return RO.explode_pixels(m, window=MOSAIC_WIN).select(
         "gpx", "gpy", "value")
@@ -7632,22 +7619,15 @@ def q_fillnodata(spark: SparkSession, sf: str) -> DataFrame:
 
     from .operators import fillnodata as FN
     from .sources import raster as RS
-    from .sources.raster import TILE_SCHEMA
 
     tiles = RS.synth_tiles(spark, RASTER_ZOOM)
 
-    def punch(batches):
-        import pandas as pd
+    def punch(g, row):
+        g = g.astype(np.float64)
+        g[g == 42] = -9999.0
+        return RS.tile_row(g, like=row, nodata=-9999.0)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                g = RS.parse_tile(row).astype(np.float64)
-                g[g == 42] = -9999.0
-                rows.append(RS.tile_row(g, like=row, nodata=-9999.0))
-            yield pd.DataFrame(rows)
-
-    holed = tiles.mapInPandas(punch, TILE_SCHEMA)
+    holed = RS.tile_map(tiles, punch)
     return FN.fillnodata(holed, RASTER_ZOOM, -9999.0, 8).select(
         "gx", "gy", "checksum"
     )

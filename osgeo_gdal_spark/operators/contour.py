@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
+from ..sources.raster import TILE, tile_map, tile_row
 from .focal import halo_apply
 from .graph import connected_components
 
@@ -405,19 +405,11 @@ def band_classify(tiles: DataFrame, levels) -> DataFrame:
     intervals). Emits a category tile table polygonize can consume."""
     lv = [float(x) for x in levels]
 
-    def classify(batches):
-        import pandas as pd
+    def classify(grid, row):
+        band = np.digitize(grid.astype(np.float64), lv).astype(np.float64)
+        return tile_row(band, like=row, nodata=None)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                band = np.digitize(grid, lv).astype(np.float64)
-                rows.append(tile_row(band, like=row, nodata=None))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(classify, TILE_SCHEMA)
+    return tile_map(tiles, classify)
 
 
 _CPOLY_SCHEMA = T.StructType(

@@ -29,7 +29,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
+from ..sources.raster import TILE, TILE_SCHEMA, tile_map, tile_row
 
 _STRIP_SCHEMA = T.StructType(
     [
@@ -50,41 +50,36 @@ def _strips(tiles: DataFrame, zoom: int, r: int) -> DataFrame:
     pixels addressed to neighbors. Strip payloads are float64."""
     n = 1 << zoom
 
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                g = parse_tile(row).astype(np.float64)
-                gx, gy = int(row["gx"]), int(row["gy"])
-                pieces = {
-                    (0, 0): g,
-                    (1, 0): g[:, -r:],     # our east cols -> east neighbor's west halo
-                    (-1, 0): g[:, :r],     # our west cols -> west neighbor's east halo
-                    (0, 1): g[-r:, :],     # our south rows -> south neighbor's north halo
-                    (0, -1): g[:r, :],     # our north rows -> north neighbor's south halo
-                    (1, 1): g[-r:, -r:],   # SE corner -> SE neighbor's NW halo
-                    (1, -1): g[:r, -r:],   # NE corner -> NE neighbor's SW halo
-                    (-1, 1): g[-r:, :r],   # SW corner -> SW neighbor's NE halo
-                    (-1, -1): g[:r, :r],   # NW corner -> NW neighbor's SE halo
+    def gen(g, row):
+        g = g.astype(np.float64)
+        gx, gy = int(row["gx"]), int(row["gy"])
+        pieces = {
+            (0, 0): g,
+            (1, 0): g[:, -r:],     # our east cols -> east neighbor's west halo
+            (-1, 0): g[:, :r],     # our west cols -> west neighbor's east halo
+            (0, 1): g[-r:, :],     # our south rows -> south neighbor's north halo
+            (0, -1): g[:r, :],     # our north rows -> north neighbor's south halo
+            (1, 1): g[-r:, -r:],   # SE corner -> SE neighbor's NW halo
+            (1, -1): g[:r, -r:],   # NE corner -> NE neighbor's SW halo
+            (-1, 1): g[-r:, :r],   # SW corner -> SW neighbor's NE halo
+            (-1, -1): g[:r, :r],   # NW corner -> NW neighbor's SE halo
+        }
+        rows = []
+        for (dx, dy), arr in pieces.items():
+            tgx, tgy = gx + dx, gy + dy
+            if not (0 <= tgx < n and 0 <= tgy < n):
+                continue
+            rows.append(
+                {
+                    "tgx": tgx, "tgy": tgy, "dx": dx, "dy": dy,
+                    "zoom": int(row["zoom"]),
+                    "strip": arr.tobytes(),
+                    "sh": arr.shape[0], "sw": arr.shape[1],
                 }
-                for (dx, dy), arr in pieces.items():
-                    tgx, tgy = gx + dx, gy + dy
-                    if not (0 <= tgx < n and 0 <= tgy < n):
-                        continue
-                    rows.append(
-                        {
-                            "tgx": tgx, "tgy": tgy, "dx": dx, "dy": dy,
-                            "zoom": int(row["zoom"]),
-                            "strip": arr.tobytes(),
-                            "sh": arr.shape[0], "sw": arr.shape[1],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+            )
+        return rows
 
-    return tiles.mapInPandas(gen, _STRIP_SCHEMA)
+    return tile_map(tiles, gen, _STRIP_SCHEMA)
 
 
 def halo_apply(tiles: DataFrame, zoom: int, r: int, fn,

@@ -698,22 +698,13 @@ def footprint(tiles: DataFrame, zoom: int, valid,
     the validity mask. ``valid`` is a python predicate over the pixel
     array (e.g. ``lambda g: g != 0``); the mask is materialized as a
     binary tile table and polygonized, keeping the valid regions."""
-    from ..sources.raster import TILE_SCHEMA as _TS, tile_row
+    from ..sources.raster import tile_map, tile_row
 
-    def maskify(batches):
-        import pandas as pd
+    def maskify(g, row):
+        m = valid(g.astype(np.float64)).astype(np.uint8)
+        return tile_row(m, like=row, dataset_id="mask", band=1, nodata=None)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                g = parse_tile(row).astype(np.float64)
-                m = valid(g).astype(np.uint8)
-                rows.append(tile_row(m, like=row, dataset_id="mask", band=1,
-                                     nodata=None))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    mask_tiles = tiles.mapInPandas(maskify, _TS)
+    mask_tiles = tile_map(tiles, maskify)
     polys = polygonize_polygons(mask_tiles, zoom,
                                 shuffle_partitions=shuffle_partitions,
                                 walk_partitions=walk_partitions)

@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..sources.raster import TILE, TILE_SCHEMA, parse_tile, tile_row
+from ..sources.raster import TILE, TILE_SCHEMA, tile_map, tile_row
 
 _TARGET_SCHEMA = T.StructType(
     [T.StructField("tpx", T.LongType()), T.StructField("tpy", T.LongType())]
@@ -32,27 +32,16 @@ _TARGET_SCHEMA = T.StructType(
 
 
 def extract_targets(tiles: DataFrame, target_value: float) -> DataFrame:
-    def gen(batches):
+    def gen(grid, row):
         import pandas as pd
 
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                ys, xs = np.nonzero(grid == target_value)
-                if len(xs):
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "tpx": int(row["gx"]) * TILE + xs,
-                                "tpy": int(row["gy"]) * TILE + ys,
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs)
+        ys, xs = np.nonzero(grid.astype(np.float64) == target_value)
+        if not len(xs):
+            return None
+        return pd.DataFrame({"tpx": int(row["gx"]) * TILE + xs,
+                             "tpy": int(row["gy"]) * TILE + ys})
 
-    return tiles.mapInPandas(gen, _TARGET_SCHEMA)
+    return tile_map(tiles, gen, _TARGET_SCHEMA)
 
 
 def proximity(tiles: DataFrame, zoom: int, target_value: float,

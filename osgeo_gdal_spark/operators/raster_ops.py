@@ -16,7 +16,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import resample as R
-from ..sources.raster import TILE, TILE_SCHEMA, key_range, parse_tile, tile_row
+from ..sources.raster import (TILE, TILE_SCHEMA, key_range, parse_tile,
+                              tile_cogroup, tile_map, tile_row)
 from ..session import local_df
 from .focal import halo_apply
 
@@ -33,35 +34,27 @@ def translate_tiles(tiles: DataFrame, scale=1.0, offset=0.0,
             & (F.col("gy") * TILE < y0 + h) & ((F.col("gy") + 1) * TILE > y0)
         )
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                ox0, oy0 = int(row["gx"]) * TILE, int(row["gy"]) * TILE
-                if srcwin is not None:
-                    x0, y0, w, h = srcwin
-                    sx0 = max(0, x0 - ox0)
-                    sy0 = max(0, y0 - oy0)
-                    sx1 = min(TILE, x0 + w - ox0)
-                    sy1 = min(TILE, y0 + h - oy0)
-                    grid = grid[sy0:sy1, sx0:sx1]
-                    ox0, oy0 = ox0 + sx0, oy0 + sy0
-                    if grid.size == 0:
-                        continue
-                out = R.round_to_dtype(grid * scale + offset, np.dtype(out_dtype))
-                rows.append(tile_row(out, like=row, _ox0=ox0, _oy0=oy0))
-            if rows:
-                pdf_out = pd.DataFrame(rows)
-                yield pdf_out
+    def kernel(grid, row):
+        grid = grid.astype(np.float64)
+        ox0, oy0 = int(row["gx"]) * TILE, int(row["gy"]) * TILE
+        if srcwin is not None:
+            x0, y0, w, h = srcwin
+            sx0 = max(0, x0 - ox0)
+            sy0 = max(0, y0 - oy0)
+            sx1 = min(TILE, x0 + w - ox0)
+            sy1 = min(TILE, y0 + h - oy0)
+            grid = grid[sy0:sy1, sx0:sx1]
+            ox0, oy0 = ox0 + sx0, oy0 + sy0
+            if grid.size == 0:
+                return None
+        out = R.round_to_dtype(grid * scale + offset, np.dtype(out_dtype))
+        return tile_row(out, like=row, _ox0=ox0, _oy0=oy0)
 
     schema = T.StructType(
         TILE_SCHEMA.fields
         + [T.StructField("_ox0", T.LongType()), T.StructField("_oy0", T.LongType())]
     )
-    return tiles.mapInPandas(kernel, schema)
+    return tile_map(tiles, kernel, schema)
 
 
 def unscale_tiles(tiles: DataFrame, scale: float, offset: float) -> DataFrame:
@@ -148,39 +141,33 @@ def _explode(tiles: DataFrame, window, banded: bool) -> DataFrame:
         tiles = _window_prune(tiles, has_origin, window)
         wx0, wy0, ww, wh = (int(v) for v in window)
 
-    def gen(batches):
+    def gen(grid, row):
         import pandas as pd
 
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row)
-                oy0 = int(row["_oy0"]) if has_origin else int(row["gy"]) * TILE
-                ox0 = int(row["_ox0"]) if has_origin else int(row["gx"]) * TILE
-                if window is not None:
-                    ly0 = max(0, wy0 - oy0)
-                    ly1 = min(grid.shape[0], wy0 + wh - oy0)
-                    lx0 = max(0, wx0 - ox0)
-                    lx1 = min(grid.shape[1], wx0 + ww - ox0)
-                    if ly0 >= ly1 or lx0 >= lx1:
-                        continue
-                    grid = grid[ly0:ly1, lx0:lx1]
-                    oy0 += ly0
-                    ox0 += lx0
-                ys, xs = np.indices(grid.shape)
-                cols = {"zoom": int(row["zoom"])}
-                if banded:
-                    cols["band"] = int(row["band"])
-                cols["gpx"] = (ox0 + xs.ravel()).astype(np.int64)
-                cols["gpy"] = (oy0 + ys.ravel()).astype(np.int64)
-                cols["value"] = grid.ravel().astype(np.float64)
-                outs.append(pd.DataFrame(cols))
-            if outs:
-                yield pd.concat(outs)
+        oy0 = int(row["_oy0"]) if has_origin else int(row["gy"]) * TILE
+        ox0 = int(row["_ox0"]) if has_origin else int(row["gx"]) * TILE
+        if window is not None:
+            ly0 = max(0, wy0 - oy0)
+            ly1 = min(grid.shape[0], wy0 + wh - oy0)
+            lx0 = max(0, wx0 - ox0)
+            lx1 = min(grid.shape[1], wx0 + ww - ox0)
+            if ly0 >= ly1 or lx0 >= lx1:
+                return None
+            grid = grid[ly0:ly1, lx0:lx1]
+            oy0 += ly0
+            ox0 += lx0
+        ys, xs = np.indices(grid.shape)
+        cols = {"zoom": int(row["zoom"])}
+        if banded:
+            cols["band"] = int(row["band"])
+        cols["gpx"] = (ox0 + xs.ravel()).astype(np.int64)
+        cols["gpy"] = (oy0 + ys.ravel()).astype(np.int64)
+        cols["value"] = grid.ravel().astype(np.float64)
+        return pd.DataFrame(cols)
 
     band = "band INT, " if banded else ""
-    return tiles.mapInPandas(
-        gen, f"zoom INT, {band}gpx LONG, gpy LONG, value DOUBLE")
+    return tile_map(
+        tiles, gen, f"zoom INT, {band}gpx LONG, gpy LONG, value DOUBLE")
 
 
 def pyramid_average(tiles: DataFrame) -> DataFrame:
@@ -194,7 +181,8 @@ def pyramid_reduce(tiles: DataFrame, mode: str) -> DataFrame:
     overview.cpp resampler dispatch (:4758-4800): average (nodata-aware),
     nearest, mode, rms, min, max, sum (kernels/resample.py reduce_2x2).
     Missing children = implicit zero, matching a sparse tile table.
-    Output values are float64."""
+    Output values are float64. Keeps its own loop over the group: the
+    group is keyed by the parent tile, not by the tile itself."""
 
     def reduce(pdf):
         import pandas as pd
@@ -254,19 +242,12 @@ def resample_tiles(tiles: DataFrame, out_size: int, method: str) -> DataFrame:
     gdalresamplingkernels.h / gdalwarpkernel.cpp weights). Tile-local
     (no halo): the v1 warp step for integer zoom rescales."""
 
-    def kernel(batches):
-        import pandas as pd
+    def kernel(grid, row):
+        out = R.resample_grid(grid.astype(np.float64), out_size, out_size,
+                              method)
+        return tile_row(out, like=row)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                out = R.resample_grid(grid, out_size, out_size, method)
-                rows.append(tile_row(out, like=row))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, TILE_SCHEMA)
+    return tile_map(tiles, kernel)
 
 
 def _dst_to_src(transform, dx, dy, world):
@@ -481,7 +462,8 @@ def warp_tiles(tiles: DataFrame, zoom: int, transform, method="bilinear",
     ``groupBy(dst_tile).applyInPandas`` mosaics the gathered src tiles and
     runs the vectorized inverse-mapping kernel (per-dst-scanline batched
     transform ≙ whole-tile numpy here, gdalwarpkernel.cpp:1058).
-    Out-of-source pixels get ``nodata``.
+    Out-of-source pixels get ``nodata``. ``warp_one`` keeps its own loop
+    over the group: the group is keyed by the destination tile.
     """
     from ..kernels.resample import _KERNELS
 
@@ -658,25 +640,18 @@ def warp_cutline(tiles: DataFrame, zoom: int, transform, cutline_shapes,
     joined = warped.join(m, ["gx", "gy"], "left")
     ndv = float(nodata)
 
-    def blend(batches):
-        import pandas as pd
+    def blend(grid, row):
+        arr = grid.astype(np.float64)
+        mp = row["mask_pixels"]
+        if mp is None:
+            out = np.full_like(arr, ndv)
+        else:
+            mk = np.frombuffer(bytes(mp), dtype=np.float64) \
+                .reshape(TILE, TILE)
+            out = np.where(mk != 0.0, arr, ndv)
+        return tile_row(out, like=row, nodata=ndv)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                arr = parse_tile(row).astype(np.float64)
-                mp = row["mask_pixels"]
-                if mp is None:
-                    out = np.full_like(arr, ndv)
-                else:
-                    mk = np.frombuffer(bytes(mp), dtype=np.float64) \
-                        .reshape(TILE, TILE)
-                    out = np.where(mk != 0.0, arr, ndv)
-                rows.append(tile_row(out, like=row, nodata=ndv))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return joined.mapInPandas(blend, TILE_SCHEMA)
+    return tile_map(joined, blend)
 
 
 def warp_reproject_geodetic(tiles: DataFrame, zoom: int, method="bilinear",
@@ -940,28 +915,20 @@ def _zonal_partials(tiles, polys, zoom, reducer, out_schema):
     layer, cover_lists, world = _zone_setup(spark, polys, zoom)
     joined = tiles.join(F.broadcast(cover_lists), ["gx", "gy"])
 
-    def partials(batches):
-        import pandas as pd
+    names = [f.name for f in out_schema.fields]
 
-        for pdf in batches:
-            geoms = layer.geoms()
-            eas_of = {f: e for f, e, _b in layer.bc.value}
-            rows = []
-            for _, row in pdf.iterrows():
-                vals = parse_tile(row).astype(np.float64).ravel()
-                zones = _burn_zone_grid(
-                    int(row["gx"]), int(row["gy"]),
-                    row["_zfids"], geoms, eas_of, world).ravel()
-                m = zones != ZONE_NODATA
-                if not m.any():
-                    continue
-                rows += reducer(zones[m], vals[m])
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in out_schema.fields]
-                )
+    def partials(grid, row):
+        vals = grid.astype(np.float64).ravel()
+        eas_of = {f: e for f, e, _b in layer.bc.value}
+        zones = _burn_zone_grid(
+            int(row["gx"]), int(row["gy"]),
+            row["_zfids"], layer.geoms(), eas_of, world).ravel()
+        m = zones != ZONE_NODATA
+        if not m.any():
+            return None
+        return [dict(zip(names, r)) for r in reducer(zones[m], vals[m])]
 
-    return joined.mapInPandas(partials, out_schema)
+    return tile_map(joined, partials, out_schema)
 
 
 def raster_zonal_stats(tiles: DataFrame, polys, zoom: int) -> DataFrame:
@@ -1015,23 +982,14 @@ def histogram(tiles: DataFrame, bin_width: float) -> DataFrame:
         [T.StructField("bin", T.LongType()), T.StructField("cnt", T.LongType())]
     )
 
-    def partials(batches):
+    def partials(grid, row):
         import pandas as pd
 
-        for pdf in batches:
-            acc = {}
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                bins = np.floor(grid.ravel() / bin_width).astype(np.int64)
-                u, c = np.unique(bins, return_counts=True)
-                for b, n in zip(u.tolist(), c.tolist()):
-                    acc[b] = acc.get(b, 0) + n
-            if acc:
-                yield pd.DataFrame(
-                    {"bin": list(acc.keys()), "cnt": list(acc.values())}
-                )
+        bins = np.floor(grid.astype(np.float64).ravel() / bin_width)
+        u, c = np.unique(bins.astype(np.int64), return_counts=True)
+        return pd.DataFrame({"bin": u, "cnt": c})
 
-    return tiles.mapInPandas(partials, out_schema).groupBy("bin").agg(
+    return tile_map(tiles, partials, out_schema).groupBy("bin").agg(
         F.sum("cnt").alias("n_pixels")
     )
 
@@ -1059,26 +1017,18 @@ def mosaic_overlay(tile_tables, nodata: float) -> DataFrame:
     sources on top; nodata pixels are transparent). Aligned tile grids;
     one groupBy(tile) + per-tile numpy paint-over — the shuffle carries
     only the overlapping tiles' payloads."""
-    u = None
-    for i, t in enumerate(tile_tables):
-        w = t.withColumn("_src", F.lit(i))
-        u = w if u is None else u.unionByName(w)
-
     nd = float(nodata)
 
-    def paint(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("_src")
-        first = pdf.iloc[0]
+    def paint(parts):
+        layers = [p for part in parts for p in part]
+        first = layers[0][1]
         out = np.full((int(first["height"]), int(first["width"])), nd)
-        for _, row in pdf.iterrows():
-            g = parse_tile(row).astype(np.float64)
+        for g, _ in layers:
+            g = g.astype(np.float64)
             out = np.where(g != nd, g, out)
-        return pd.DataFrame([tile_row(out, like=first, dataset_id="mosaic",
-                                      nodata=nd)])
+        return tile_row(out, like=first, dataset_id="mosaic", nodata=nd)
 
-    return u.groupBy("zoom", "gx", "gy", "band").applyInPandas(paint, TILE_SCHEMA)
+    return tile_cogroup(tile_tables, ["zoom", "gx", "gy", "band"], paint)
 
 
 def pansharpen(pan_tiles: DataFrame, rgb_tiles: DataFrame,
@@ -1087,38 +1037,25 @@ def pansharpen(pan_tiles: DataFrame, rgb_tiles: DataFrame,
     aligned tile, out_band = band * pan / pseudo_pan where pseudo_pan =
     sum(w_i * band_i). Trivially partition-local: one equi-join on the
     tile key + one numpy kernel; bands arrive as rows (band column) and
-    leave the same way."""
-    pan = pan_tiles.select(
-        "zoom", "gx", "gy", F.col("pixels").alias("pan_pixels"),
-        F.col("dtype").alias("pan_dtype"),
-    )
-    joined = rgb_tiles.join(pan, ["zoom", "gx", "gy"])
-
+    leave the same way. One co-group of the RGB and pan tables on the
+    tile key, so every band of a tile meets its pan tile in one call."""
     wlist = list(weights)
 
-    def kernel(grp):
-        # applyInPandas guarantees grp holds ALL band rows of exactly one
-        # tile — a repartition+mapInPandas shape instead would let Arrow
-        # split one tile's bands across record batches, silently computing
-        # pseudo_pan from a subset of bands
-        import pandas as pd
-
-        bands = {}
-        for _, row in grp.iterrows():
-            bands[int(row["band"])] = parse_tile(row).astype(np.float64)
-        first = grp.iloc[0]
-        pan_arr = np.frombuffer(
-            bytes(first["pan_pixels"]), dtype=np.dtype(first["pan_dtype"])
-        ).reshape(first["height"], first["width"]).astype(np.float64)
+    def kernel(parts):
+        rgb, pan = parts
+        if not rgb or not pan:
+            return None
+        bands = {int(row["band"]): g.astype(np.float64) for g, row in rgb}
+        pan_arr = pan[0][0].astype(np.float64)
         pseudo = sum(w * bands[i + 1] for i, w in enumerate(wlist)
                      if (i + 1) in bands)
         with np.errstate(invalid="ignore", divide="ignore"):
             ratio = np.where(pseudo > 0, pan_arr / pseudo, 0.0)
-        return pd.DataFrame([
-            tile_row(arr * ratio, like=first, dataset_id="pansharp", band=bid)
-            for bid, arr in bands.items()])
+        first = rgb[0][1]
+        return [tile_row(arr * ratio, like=first, dataset_id="pansharp",
+                         band=bid) for bid, arr in bands.items()]
 
-    return joined.groupBy("zoom", "gx", "gy").applyInPandas(kernel, TILE_SCHEMA)
+    return tile_cogroup([rgb_tiles, pan_tiles], ["zoom", "gx", "gy"], kernel)
 
 
 def raster_zonal_hist(tiles: DataFrame, polys, zoom: int) -> DataFrame:
@@ -1570,7 +1507,8 @@ def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
     ACROSS observers (the many-tower / many-sensor workload), with
     radius bounding the gather exactly like proximity's MAXDIST.
 
-    Returns (obs_id, gpx, gpy, visible).
+    Returns (obs_id, gpx, gpy, visible). The window assembly keeps its
+    own loop over the group: the group is keyed by the observer.
     """
     spark = tiles.sparkSession
     r1 = radius + 1
@@ -1720,23 +1658,17 @@ def blend_tiles(base: DataFrame, overlay: DataFrame, mode="src_over",
     if mode not in ("src_over", "multiply", "screen", "darken", "lighten"):
         raise ValueError(f"unsupported blend mode {mode!r}")
     op255 = (int(opacity) * 255 + 50) // 100
-    u = base.withColumn("_src", F.lit(0)).unionByName(
-        overlay.withColumn("_src", F.lit(1)))
 
-    def kernel(key, pdf):
-        import pandas as pd
-
-        bands = {}
-        for _, row in pdf.iterrows():
-            g = parse_tile(row).astype(np.int64)
-            bands[(int(row["_src"]), int(row["band"]))] = (g, row)
-        if len(bands) < 8:
-            return pd.DataFrame()       # incomplete RGBA pair
-        C = [bands[(0, b)][0] for b in (1, 2, 3)]
-        A = bands[(0, 4)][0]
-        OC = [bands[(1, b)][0] for b in (1, 2, 3)]
-        OA0 = bands[(1, 4)][0]
-        proto = bands[(0, 1)][1]
+    def kernel(parts):
+        src, ovr = ({int(row["band"]): (g.astype(np.int64), row)
+                     for g, row in part} for part in parts)
+        if not {1, 2, 3, 4} <= set(src) & set(ovr):
+            return None                 # incomplete RGBA pair
+        C = [src[b][0] for b in (1, 2, 3)]
+        A = src[4][0]
+        OC = [ovr[b][0] for b in (1, 2, 3)]
+        OA0 = ovr[4][0]
+        proto = src[1][1]
 
         OA = _mul255(OA0, op255)
         if mode == "src_over":
@@ -1765,13 +1697,11 @@ def blend_tiles(base: DataFrame, overlay: DataFrame, mode="src_over",
                     t = np.maximum(_mul255(oc, A), _mul255(c, OA)) \
                         + _mul255(c, 255 - OA) + _mul255(oc, 255 - A)
                 out.append(_div255(t, DA))
-        return pd.DataFrame([
-            tile_row(g.astype(np.uint8), like=proto, dataset_id="blend",
-                     band=bi, nodata=None)
-            for bi, g in enumerate(out + [DA], start=1)])
+        return [tile_row(g.astype(np.uint8), like=proto, dataset_id="blend",
+                         band=bi, nodata=None)
+                for bi, g in enumerate(out + [DA], start=1)]
 
-    return u.groupBy("zoom", "gx", "gy").applyInPandas(
-        kernel, TILE_SCHEMA)
+    return tile_cogroup([base, overlay], ["zoom", "gx", "gy"], kernel)
 
 
 def nodata_to_alpha_tiles(tiles: DataFrame) -> DataFrame:
@@ -1780,31 +1710,23 @@ def nodata_to_alpha_tiles(tiles: DataFrame) -> DataFrame:
     as an alpha band — 0 where every band equals its nodata value,
     255 elsewhere — and clear the nodata flag on the data bands. One
     groupBy on the tile key."""
-    def kernel(key, pdf):
-        import pandas as pd
-
+    def kernel(parts):
         rows = []
         mask = None
-        proto = None
-        nb = 0
-        for _, row in pdf.iterrows():
-            g = parse_tile(row)
+        for g, row in parts[0]:
             nd = row["nodata"]
             m = np.ones(g.shape, dtype=bool) if nd is None or \
                 (isinstance(nd, float) and np.isnan(nd)) else (g != nd)
             mask = m if mask is None else (mask | m)
-            proto = row
-            nb = max(nb, int(row["band"]))
             # data bands pass through as a column copy, never re-encoded
             rows.append({**row[TILE_SCHEMA.names], "nodata": None})
+        proto = parts[0][-1][1]
         alpha = np.where(mask, 255, 0).astype(np.uint8)
-        rows.append(tile_row(alpha, like=proto, band=nb + 1, nodata=None))
-        return pd.DataFrame(rows)
+        rows.append(tile_row(alpha, like=proto, band=int(proto["band"]) + 1,
+                             nodata=None))
+        return rows
 
-    import pandas as pd  # noqa: F401  (kernel-scope import for executors)
-
-    return tiles.groupBy("zoom", "gx", "gy").applyInPandas(
-        kernel, TILE_SCHEMA)
+    return tile_cogroup([tiles], ["zoom", "gx", "gy"], kernel)
 
 
 def clean_collar_pixels(px: DataFrame, near_dist=15, color=0,
@@ -1895,36 +1817,30 @@ def rgb_to_palette_tiles(tiles: DataFrame, max_colors=256):
     groupBy(color) result is at most min(pixels, 2^24) rows and is
     capped by taking the top-weight colors), then one broadcast
     nearest-palette-entry assignment per tile. Returns (palette,
-    indexed tile DataFrame); the palette is a list of (r, g, b)."""
-    hist = (
-        tiles.filter(F.col("band").isin(1, 2, 3))
-        .groupBy("zoom", "gx", "gy", "band")
-        .agg(F.first("pixels").alias("pixels"),
-             F.first("width").alias("width"),
-             F.first("height").alias("height"),
-             F.first("dtype").alias("dtype"))
-    )
+    indexed tile DataFrame); the palette is a list of (r, g, b).
 
-    def colors(batches):
+    Both passes co-group a tile's bands 1-3 on the tile key, so each
+    call sees all three bands of its tile."""
+    rgb = tiles.filter(F.col("band").isin(1, 2, 3))
+    keys = ["zoom", "gx", "gy"]
+
+    def by_band(parts):
+        got = {int(row["band"]): (g.astype(np.int64), row)
+               for g, row in parts[0]}
+        return got if {1, 2, 3} <= set(got) else None
+
+    def colors(parts):
         import pandas as pd
 
-        for pdf in batches:
-            out = {}
-            for key, sub in pdf.groupby(["zoom", "gx", "gy"]):
-                if len(sub) < 3:
-                    continue
-                by_band = {int(r["band"]): parse_tile(r)
-                           for _, r in sub.iterrows()}
-                packed = (by_band[1].astype(np.int64) << 16) \
-                    | (by_band[2].astype(np.int64) << 8) \
-                    | by_band[3].astype(np.int64)
-                vals, cnts = np.unique(packed, return_counts=True)
-                for vv, cc in zip(vals.tolist(), cnts.tolist()):
-                    out[vv] = out.get(vv, 0) + cc
-            yield pd.DataFrame({"color": list(out), "cnt": list(out.values())})
+        bands = by_band(parts)
+        if bands is None:
+            return None
+        packed = (bands[1][0] << 16) | (bands[2][0] << 8) | bands[3][0]
+        vals, cnts = np.unique(packed, return_counts=True)
+        return pd.DataFrame({"color": vals, "cnt": cnts})
 
     agg = (
-        hist.mapInPandas(colors, "color LONG, cnt LONG")
+        tile_cogroup([rgb], keys, colors, "color LONG, cnt LONG")
         .groupBy("color").agg(F.sum("cnt").alias("cnt"))
         .orderBy(F.desc("cnt"), "color").limit(1 << 16)
         .collect()
@@ -1938,27 +1854,21 @@ def rgb_to_palette_tiles(tiles: DataFrame, max_colors=256):
     spark = tiles.sparkSession
     bc_pal = spark.sparkContext.broadcast(pal)
 
-    def assign(key, pdf):
-        import pandas as pd
-
-        by_band = {int(r["band"]): (parse_tile(r), r)
-                   for _, r in pdf.iterrows()}
-        if not {1, 2, 3} <= set(by_band):
-            return pd.DataFrame()
+    def assign(parts):
+        bands = by_band(parts)
+        if bands is None:
+            return None
         p = bc_pal.value
-        r8, g8, b8 = (by_band[b][0].astype(np.int64) for b in (1, 2, 3))
+        r8, g8, b8 = (bands[b][0] for b in (1, 2, 3))
         # exact nearest palette entry (squared RGB distance, first wins)
         d = ((r8[..., None] - p[:, 0]) ** 2
              + (g8[..., None] - p[:, 1]) ** 2
              + (b8[..., None] - p[:, 2]) ** 2)
         pidx = d.argmin(axis=-1).astype(np.uint8)
-        return pd.DataFrame([tile_row(pidx, like=by_band[1][1],
-                                      dataset_id="palette", band=1,
-                                      nodata=None)])
+        return tile_row(pidx, like=bands[1][1], dataset_id="palette",
+                        band=1, nodata=None)
 
-    indexed = tiles.filter(F.col("band").isin(1, 2, 3)) \
-        .groupBy("zoom", "gx", "gy").applyInPandas(assign, TILE_SCHEMA)
-    return palette, indexed
+    return palette, tile_cogroup([rgb], keys, assign)
 
 
 def compare_tiles(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1966,28 +1876,21 @@ def compare_tiles(a: DataFrame, b: DataFrame) -> DataFrame:
     per-band pixel difference report between two aligned tile tables —
     differing-pixel count, max and sum of absolute differences. One
     groupBy on (tile, band); per-tile numpy integer math."""
-    u = a.withColumn("_src", F.lit(0)).unionByName(
-        b.withColumn("_src", F.lit(1)))
-
-    def kernel(key, pdf):
-        import pandas as pd
-
-        by_src = {int(r["_src"]): parse_tile(r).astype(np.int64)
-                  for _, r in pdf.iterrows()}
-        if len(by_src) < 2:
-            return pd.DataFrame()
-        d = np.abs(by_src[0] - by_src[1])
-        proto = pdf.iloc[0]
-        return pd.DataFrame([{
+    def kernel(parts):
+        if not all(parts):
+            return None
+        (ga, proto), (gb, _) = parts[0][0], parts[1][0]
+        d = np.abs(ga.astype(np.int64) - gb.astype(np.int64))
+        return {
             "zoom": int(proto["zoom"]), "gx": int(proto["gx"]),
             "gy": int(proto["gy"]), "band": int(proto["band"]),
             "n_diff": int((d > 0).sum()),
             "max_abs_diff": int(d.max()),
             "sum_abs_diff": int(d.sum()),
-        }])
+        }
 
-    return u.groupBy("zoom", "gx", "gy", "band").applyInPandas(
-        kernel,
+    return tile_cogroup(
+        [a, b], ["zoom", "gx", "gy", "band"], kernel,
         "zoom INT, gx LONG, gy LONG, band INT, n_diff LONG, "
         "max_abs_diff LONG, sum_abs_diff LONG")
 
@@ -2094,37 +1997,28 @@ def reclassify_tiles(tiles: DataFrame, mapping: str, nodata=None,
     intervals, default_value, default_pass = parse_reclass_mapping(
         mapping, nodata)
 
-    def kernel(batches):
-        import pandas as pd
+    def kernel(grid, row):
+        grid = grid.astype(np.float64)
+        conds = [(grid >= lo) & (grid <= hi) for lo, hi, _ in intervals]
+        choices = [np.full_like(grid, dst) if dst is not None else grid
+                   for _, _, dst in intervals]
+        matched = np.logical_or.reduce(conds) if conds else \
+            np.zeros_like(grid, dtype=bool)
+        if default_value is not None:
+            default = np.full_like(grid, default_value)
+        elif default_pass:
+            default = grid
+        else:
+            if not matched.all():
+                bad = grid[~matched].ravel()[0]
+                raise ValueError(
+                    f"reclassify: value {bad} not matched by any "
+                    "interval and no DEFAULT mapping set")
+            default = grid
+        out = np.select(conds, choices, default=default)
+        return tile_row(R.round_to_dtype(out, np.dtype(out_dtype)), like=row)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row).astype(np.float64)
-                conds = [(grid >= lo) & (grid <= hi)
-                         for lo, hi, _ in intervals]
-                choices = [np.full_like(grid, dst) if dst is not None else grid
-                           for _, _, dst in intervals]
-                matched = np.logical_or.reduce(conds) if conds else \
-                    np.zeros_like(grid, dtype=bool)
-                if default_value is not None:
-                    default = np.full_like(grid, default_value)
-                elif default_pass:
-                    default = grid
-                else:
-                    if not matched.all():
-                        bad = grid[~matched].ravel()[0]
-                        raise ValueError(
-                            f"reclassify: value {bad} not matched by any "
-                            "interval and no DEFAULT mapping set")
-                    default = grid
-                out = np.select(conds, choices, default=default)
-                out = R.round_to_dtype(out, np.dtype(out_dtype))
-                rows.append(tile_row(out, like=row))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, TILE_SCHEMA)
+    return tile_map(tiles, kernel)
 
 
 def scale_tiles(tiles: DataFrame, src_min: float, src_max: float,
@@ -2144,34 +2038,26 @@ def scale_tiles(tiles: DataFrame, src_min: float, src_max: float,
     if exponent is not None:
         exp_int = int(exponent) if float(exponent).is_integer() else None
 
-    def kernel(batches):
-        import pandas as pd
+    def kernel(grid, row):
+        v = grid.astype(np.float64)
+        if exponent is None:
+            ratio = (dst_max - dst_min) / (src_max - src_min)
+            out = v * ratio + (dst_min - src_min * ratio)
+        else:
+            t = (np.zeros_like(v) if src_min == src_max
+                 else (v - src_min) / (src_max - src_min))
+            if clip:
+                t = np.clip(t, 0.0, 1.0)
+            if exp_int is not None and exp_int >= 0:
+                p = np.ones_like(t)
+                for _ in range(exp_int):
+                    p = p * t
+            else:
+                p = np.power(t, float(exponent))
+            out = (dst_max - dst_min) * p + dst_min
+        return tile_row(R.round_to_dtype(out, np.dtype(out_dtype)), like=row)
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                v = parse_tile(row).astype(np.float64)
-                if exponent is None:
-                    ratio = (dst_max - dst_min) / (src_max - src_min)
-                    out = v * ratio + (dst_min - src_min * ratio)
-                else:
-                    t = (np.zeros_like(v) if src_min == src_max
-                         else (v - src_min) / (src_max - src_min))
-                    if clip:
-                        t = np.clip(t, 0.0, 1.0)
-                    if exp_int is not None and exp_int >= 0:
-                        p = np.ones_like(t)
-                        for _ in range(exp_int):
-                            p = p * t
-                    else:
-                        p = np.power(t, float(exponent))
-                    out = (dst_max - dst_min) * p + dst_min
-                out = R.round_to_dtype(out, np.dtype(out_dtype))
-                rows.append(tile_row(out, like=row))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, TILE_SCHEMA)
+    return tile_map(tiles, kernel)
 
 
 def update_tiles(base: DataFrame, patch: DataFrame, patch_nodata: float) -> DataFrame:
@@ -2186,26 +2072,20 @@ def update_tiles(base: DataFrame, patch: DataFrame, patch_nodata: float) -> Data
     untouched, drops patch-only tiles, and composites overlaps — no
     distinct/semi/anti pre-joins (each of those is its own shuffle of
     the same key set)."""
-    keys = ["zoom", "gx", "gy", "band"]
-    u = base.withColumn("_src", F.lit(0)).unionByName(
-        patch.withColumn("_src", F.lit(1)))
-
-    def kernel(key, pdf):
-        import pandas as pd
-
-        by_src = {int(r["_src"]): (r, parse_tile(r)) for _, r in pdf.iterrows()}
-        if 0 not in by_src:
-            return pd.DataFrame()  # patch outside base extent: cropped
-        brow, bgrid = by_src[0]
-        if 1 in by_src:
-            _, pgrid = by_src[1]
+    def kernel(parts):
+        base_part, patch_part = parts
+        if not base_part:
+            return None  # patch outside base extent: cropped
+        bgrid, brow = base_part[0]
+        if patch_part:
+            pgrid = patch_part[0][0]
             out = np.where(pgrid.astype(np.float64) == patch_nodata,
                            bgrid, pgrid).astype(bgrid.dtype)
         else:
             out = bgrid  # untouched base tile passes through
-        return pd.DataFrame([tile_row(out, like=brow)])
+        return tile_row(out, like=brow)
 
-    return u.groupBy(*keys).applyInPandas(kernel, TILE_SCHEMA)
+    return tile_cogroup([base, patch], ["zoom", "gx", "gy", "band"], kernel)
 
 
 def stack_tiles(tile_tables: list, dataset_id="stack") -> DataFrame:

@@ -26,7 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import sqlgen as G
-from ..sources.raster import TILE, parse_tile, tile_row
+from ..sources.raster import (TILE, parse_tile, tile_cogroup, tile_map,
+                              tile_row)
 
 
 def tile_counts(pages: DataFrame, zoom: int) -> DataFrame:
@@ -138,7 +139,9 @@ def burn_point_tiles(pages: DataFrame, zoom: int) -> DataFrame:
 def reduce_tiles_average(tiles: DataFrame) -> DataFrame:
     """One pyramid step on pixel tiles: each parent tile = 2x2 children,
     each child average_2x2-reduced into its 128x128 quadrant
-    (overview.cpp AVERAGE semantics). Missing children = zero fill."""
+    (overview.cpp AVERAGE semantics). Missing children = zero fill.
+    Keeps its own loop over the group: the group is keyed by the parent
+    tile, not by the tile ``tile_cogroup`` would key it on."""
     from ..kernels import resample as R
 
     def reduce(pdf):
@@ -179,33 +182,25 @@ def explode_tile_pixels(tiles: DataFrame, nonzero_only=True) -> DataFrame:
         ]
     )
 
-    def gen(batches):
+    def gen(grid, row):
         import pandas as pd
 
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                grid = parse_tile(row)
-                if nonzero_only:
-                    ys, xs = np.nonzero(grid)
-                else:
-                    ys, xs = np.indices(grid.shape).reshape(2, -1)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "zoom": row["zoom"],
-                            "gx": row["gx"],
-                            "gy": row["gy"],
-                            "ppx": xs.astype(np.int32),
-                            "ppy": ys.astype(np.int32),
-                            "value": grid[ys, xs],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
+        if nonzero_only:
+            ys, xs = np.nonzero(grid)
+        else:
+            ys, xs = np.indices(grid.shape).reshape(2, -1)
+        return pd.DataFrame(
+            {
+                "zoom": row["zoom"],
+                "gx": row["gx"],
+                "gy": row["gy"],
+                "ppx": xs.astype(np.int32),
+                "ppy": ys.astype(np.int32),
+                "value": grid[ys, xs],
+            }
+        )
 
-    return tiles.mapInPandas(gen, out_schema)
+    return tile_map(tiles, gen, out_schema)
 
 
 def hex_counts(pages: DataFrame, size: float = 3.0) -> DataFrame:
@@ -266,6 +261,19 @@ def hex_raster_rollup(tiles: DataFrame, zoom: int,
 
 # --- PNG tile serving (gdal raster tile output stage) --------------------
 
+def _one_band(tiles: DataFrame, band, message: str) -> DataFrame:
+    """The single-band input of a per-tile encoder, which writes one file
+    per row: ``band`` selects it, and without ``band`` a multi-band input
+    raises ``message`` (proved up front by one skinny column scan)."""
+    if "band" not in tiles.columns:
+        return tiles
+    if band is not None:
+        return tiles.filter(F.col("band") == band)
+    if tiles.select("band").distinct().limit(2).count() > 1:
+        raise ValueError(message)
+    return tiles
+
+
 PNG_SCHEMA = T.StructType([
     T.StructField("zoom", T.IntegerType()),
     T.StructField("gx", T.LongType()),
@@ -287,57 +295,31 @@ def encode_png_tiles(tiles: DataFrame, rgb: bool = False,
     single-band index tiles encode as type-3 paletted PNGs with a PLTE
     chunk — the reference's color-table tile output."""
     from ..kernels import png as PNG
-    from ..sources.raster import parse_tile
 
     if not rgb:
         # Greyscale encodes one PNG per ROW: a multi-band input would
         # silently emit several PNGs at the same {z}/{x}/{y} path
-        # (last-writer-wins). Parameterize with ``band`` or prove the
-        # input single-band up front (one skinny column scan).
-        if "band" in tiles.columns:
-            if band is not None:
-                tiles = tiles.filter(F.col("band") == band)
-            else:
-                nb = tiles.select("band").distinct().limit(2).count()
-                if nb > 1:
-                    raise ValueError(
-                        "encode_png_tiles(rgb=False) on a multi-band "
-                        "input: pass band=<n> (one PNG per tile path) "
-                        "or rgb=True"
-                    )
+        # (last-writer-wins).
+        tiles = _one_band(
+            tiles, band, "encode_png_tiles(rgb=False) on a multi-band "
+            "input: pass band=<n> (one PNG per tile path) or rgb=True")
 
-        def enc(batches):
-            import pandas as pd
+        def enc(grid, row):
+            arr = grid.astype(np.uint8)
+            data = (PNG.encode_png_palette(arr, palette)
+                    if palette is not None else PNG.encode_png(arr))
+            return {"zoom": int(row["zoom"]), "gx": int(row["gx"]),
+                    "gy": int(row["gy"]), "png": data}
 
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    arr = parse_tile(row).astype(np.uint8)
-                    data = (PNG.encode_png_palette(arr, palette)
-                            if palette is not None else
-                            PNG.encode_png(arr))
-                    out.append({"zoom": int(row["zoom"]),
-                                "gx": int(row["gx"]), "gy": int(row["gy"]),
-                                "png": data})
-                yield pd.DataFrame(out)
+        return tile_map(tiles, enc, PNG_SCHEMA)
 
-        return tiles.mapInPandas(enc, PNG_SCHEMA)
+    def enc_rgb(parts):
+        stack = np.dstack([g.astype(np.uint8) for g, _ in parts[0]])
+        row0 = parts[0][0][1]
+        return {"zoom": int(row0["zoom"]), "gx": int(row0["gx"]),
+                "gy": int(row0["gy"]), "png": PNG.encode_png(stack)}
 
-    def enc_rgb(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("band")
-        arrs = [parse_tile(row).astype(np.uint8)
-                for _, row in pdf.iterrows()]
-        stack = np.dstack(arrs)
-        row0 = pdf.iloc[0]
-        return pd.DataFrame([{
-            "zoom": int(row0["zoom"]),
-            "gx": int(row0["gx"]), "gy": int(row0["gy"]),
-            "png": PNG.encode_png(stack)}])
-
-    return tiles.groupBy("zoom", "gx", "gy").applyInPandas(
-        enc_rgb, PNG_SCHEMA)
+    return tile_cogroup([tiles], ["zoom", "gx", "gy"], enc_rgb, PNG_SCHEMA)
 
 
 GTIFF_SCHEMA = T.StructType([
@@ -360,58 +342,26 @@ def encode_gtiff_tiles(tiles: DataFrame, compression: str = "lzw",
     (kernels/gtiff.py). Layout and LZW output are deterministic, so
     bytes are golden-checksummable. uint8/int16/float32 bands."""
     from ..kernels import gtiff as GT
-    from ..sources.raster import parse_tile
+
+    def enc(arr, row):
+        zoom, gx, gy = int(row["zoom"]), int(row["gx"]), int(row["gy"])
+        data = GT.encode_gtiff(arr, compression, rows_per_strip,
+                               zoom=zoom, gx=gx, gy=gy)
+        return {"zoom": zoom, "gx": gx, "gy": gy, "tif": data}
 
     if rgb:
         # co-group a tile's band rows (one skinny tile-key Exchange,
         # same shape as the PNG RGB path) and write ONE interleaved
         # RGB(A) GeoTIFF per tile (PhotometricInterpretation=2)
-        def enc_rgb(pdf):
-            import pandas as pd
+        def enc_rgb(parts):
+            return enc(np.dstack([g for g, _ in parts[0]]), parts[0][0][1])
 
-            pdf = pdf.sort_values("band")
-            arrs = [parse_tile(row) for _, row in pdf.iterrows()]
-            stack = np.dstack(arrs)
-            row0 = pdf.iloc[0]
-            data = GT.encode_gtiff(
-                stack, compression, rows_per_strip,
-                zoom=int(row0["zoom"]), gx=int(row0["gx"]),
-                gy=int(row0["gy"]))
-            return pd.DataFrame([{
-                "zoom": int(row0["zoom"]),
-                "gx": int(row0["gx"]), "gy": int(row0["gy"]),
-                "tif": data}])
+        return tile_cogroup([tiles], ["zoom", "gx", "gy"], enc_rgb,
+                            GTIFF_SCHEMA)
 
-        return tiles.groupBy("zoom", "gx", "gy").applyInPandas(
-            enc_rgb, GTIFF_SCHEMA)
-
-    if "band" in tiles.columns:
-        if band is not None:
-            tiles = tiles.filter(F.col("band") == band)
-        else:
-            nb = tiles.select("band").distinct().limit(2).count()
-            if nb > 1:
-                raise ValueError(
-                    "encode_gtiff_tiles on a multi-band input: pass "
-                    "band=<n> (one file per tile path)")
-
-    def enc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = parse_tile(row)
-                data = GT.encode_gtiff(
-                    arr, compression, rows_per_strip,
-                    zoom=int(row["zoom"]), gx=int(row["gx"]),
-                    gy=int(row["gy"]))
-                out.append({"zoom": int(row["zoom"]),
-                            "gx": int(row["gx"]), "gy": int(row["gy"]),
-                            "tif": data})
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(enc, GTIFF_SCHEMA)
+    tiles = _one_band(tiles, band, "encode_gtiff_tiles on a multi-band "
+                      "input: pass band=<n> (one file per tile path)")
+    return tile_map(tiles, enc, GTIFF_SCHEMA)
 
 
 def write_gtiff_pyramid(tif_df: DataFrame, out_dir: str,
@@ -452,44 +402,25 @@ def encode_cog_tiles(tiles: DataFrame, overviews: int = 2,
     tile — zero shuffle at any scale."""
     from ..kernels import gtiff as GT
     from ..kernels import resample as RSMP
-    from ..sources.raster import parse_tile
 
-    if "band" in tiles.columns:
-        if band is not None:
-            tiles = tiles.filter(F.col("band") == band)
-        else:
-            nb = tiles.select("band").distinct().limit(2).count()
-            if nb > 1:
-                raise ValueError(
-                    "encode_cog_tiles on a multi-band input: pass "
-                    "band=<n>")
+    tiles = _one_band(tiles, band, "encode_cog_tiles on a multi-band "
+                      "input: pass band=<n>")
 
-    def enc(batches):
-        import pandas as pd
+    def enc(arr, row):
+        levels = [arr]
+        cur = arr
+        for _ in range(int(overviews)):
+            if min(cur.shape) < 2 or cur.shape[0] % 2 or cur.shape[1] % 2:
+                break
+            cur = RSMP.average_2x2(cur.astype(np.float64)).astype(arr.dtype)
+            levels.append(cur)
+        data = GT.encode_cog(
+            levels, compression,
+            zoom=int(row["zoom"]), gx=int(row["gx"]), gy=int(row["gy"]))
+        return {"zoom": int(row["zoom"]),
+                "gx": int(row["gx"]), "gy": int(row["gy"]), "cog": data}
 
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = parse_tile(row)
-                levels = [arr]
-                cur = arr
-                for _ in range(int(overviews)):
-                    if min(cur.shape) < 2 or cur.shape[0] % 2 or \
-                            cur.shape[1] % 2:
-                        break
-                    cur = RSMP.average_2x2(
-                        cur.astype(np.float64)).astype(arr.dtype)
-                    levels.append(cur)
-                data = GT.encode_cog(
-                    levels, compression,
-                    zoom=int(row["zoom"]), gx=int(row["gx"]),
-                    gy=int(row["gy"]))
-                out.append({"zoom": int(row["zoom"]),
-                            "gx": int(row["gx"]), "gy": int(row["gy"]),
-                            "cog": data})
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(enc, COG_SCHEMA)
+    return tile_map(tiles, enc, COG_SCHEMA)
 
 
 def write_png_pyramid(png_df: DataFrame, out_dir: str,

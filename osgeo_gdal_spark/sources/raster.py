@@ -16,6 +16,16 @@ raster kernel stage (the GDAL block ≙ packed-binary row mapping, SURVEY
 every operator that emits a tile builds it with ``tile_row`` (which alone
 writes ``pixels``, ``checksum``, ``width``, ``height`` and ``dtype``), and
 every reader of a ``pixels`` column decodes it with ``parse_tile``.
+
+``tile_map`` and ``tile_cogroup`` are the one way to run a per-tile
+kernel: ``tile_map`` for a kernel over one tile row at a time (one
+``mapInPandas``), ``tile_cogroup`` for a kernel over all rows that share
+a tile key across one or more tile tables (one ``applyInPandas``). Both
+decode each row once and hand the kernel ``(grid, row)`` pairs; the
+kernel returns a row dict, a list of them, a DataFrame of rows or None.
+Only the mosaic assemblers, whose groups are keyed by something other
+than the tile (a parent tile, a destination tile, an observer), keep
+their own loop.
 """
 
 from __future__ import annotations
@@ -82,6 +92,65 @@ def parse_tile(row) -> np.ndarray:
     return np.frombuffer(bytes(row["pixels"]), dtype=dt).reshape(
         row["height"], row["width"]
     )
+
+
+def _frame(results):
+    """One pandas DataFrame of the rows in ``results`` (each a row dict,
+    a list of them, a DataFrame of rows or None), or None if none."""
+    import pandas as pd
+
+    rows, frames = [], []
+    for r in results:
+        if r is None:
+            continue
+        if isinstance(r, pd.DataFrame):
+            frames.append(r)
+        elif isinstance(r, dict):
+            rows.append(r)
+        else:
+            rows.extend(r)
+    if frames:
+        return pd.concat(frames + ([pd.DataFrame(rows)] if rows else []))
+    return pd.DataFrame(rows) if rows else None
+
+
+def tile_map(tiles: DataFrame, fn, schema=TILE_SCHEMA) -> DataFrame:
+    """Run ``fn(grid, row)`` on every tile row in one ``mapInPandas``:
+    ``grid`` is ``parse_tile(row)``; ``fn`` returns a row dict, a list of
+    them, a DataFrame of rows or None. Yields one DataFrame of ``schema``
+    rows per batch that produced any."""
+
+    def run(batches):
+        for pdf in batches:
+            out = _frame(fn(parse_tile(row), row) for _, row in pdf.iterrows())
+            if out is not None:
+                yield out
+
+    return tiles.mapInPandas(run, schema)
+
+
+def tile_cogroup(frames, keys, fn, schema=TILE_SCHEMA) -> DataFrame:
+    """Co-group tile tables on ``keys`` and run ``fn(parts)`` once per
+    key: ``parts[i]`` is frame i's list of ``(grid, row)`` pairs in band
+    order (each row decoded once). The frames are tagged with their
+    index in a ``_src`` column and unioned by name, so one shuffle
+    carries them all. ``fn`` returns what ``tile_map``'s does."""
+    u = None
+    for i, t in enumerate(frames):
+        t = t.withColumn("_src", F.lit(i))
+        u = t if u is None else u.unionByName(t)
+    n = len(frames)
+
+    def run(pdf):
+        import pandas as pd
+
+        parts = [[] for _ in range(n)]
+        for _, row in pdf.sort_values(["_src", "band"]).iterrows():
+            parts[int(row["_src"])].append((parse_tile(row), row))
+        out = _frame([fn(parts)])
+        return pd.DataFrame() if out is None else out
+
+    return u.groupBy(*keys).applyInPandas(run, schema)
 
 
 def synth_pixel_grid(gx: int, gy: int, zoom: int, tile=TILE,

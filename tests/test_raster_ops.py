@@ -835,6 +835,48 @@ def test_rgb_to_palette_median_cut(spark):
     assert (RS.parse_tile(idx2.collect()[0]) == 0).all()
 
 
+def test_rgb_to_palette_counts_every_tile_without_aqe(spark):
+    """The colour histogram keeps all three bands of a tile together.
+    With AQE off, the z2 bands land in 8 shuffle partitions; a histogram
+    that splits a tile's bands across partitions counts only the tiles
+    whose three bands happen to share one. The fixture stacks three
+    ``synth_tiles`` generators as bands 1-3: unlike ``synth_rgba_tiles``
+    (period 256, so every tile holds the same colours) its tiles differ,
+    so a lost tile changes the palette. The palette must equal the
+    median cut over the driver-side histogram of every pixel, ordered
+    and capped as the operator orders and caps it (count descending,
+    then colour; the top 2^16 colours)."""
+    from osgeo_gdal_spark.operators.raster_ops import median_cut_palette
+
+    conf = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        rgb = None
+        for b, cf in {1: (7, 11), 2: (5, 13), 3: (3, 17)}.items():
+            t = RS.synth_tiles(spark, 2, coeffs=cf).withColumn(
+                "band", F.lit(b))
+            rgb = t if rgb is None else rgb.unionByName(t)
+        palette, _ = RO.rgb_to_palette_tiles(rgb, max_colors=16)
+        rows = rgb.collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", conf)
+    by_tile = {}
+    for r in rows:
+        by_tile.setdefault((r["gx"], r["gy"]), {})[r["band"]] = \
+            RS.parse_tile(r).astype(np.int64)
+    assert len(by_tile) == 16
+    packed = np.concatenate([
+        ((b[1] << 16) | (b[2] << 8) | b[3]).ravel()
+        for b in by_tile.values()])
+    colors, counts = np.unique(packed, return_counts=True)
+    assert counts.sum() == 16 * 256 * 256
+    order = np.lexsort((colors, -counts))[:1 << 16]
+    colors, counts = colors[order], counts[order]
+    cols = np.stack([colors >> 16, (colors >> 8) & 255, colors & 255],
+                    axis=1)
+    assert palette == median_cut_palette(cols, counts, 16)
+
+
 def test_rgb_to_palette_fixture_constants():
     """Pins the offline constants used by the gated rgb_to_palette
     oracle (entry_queries.sql_rgb_to_palette) — pure numpy, no Spark."""

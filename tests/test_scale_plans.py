@@ -10,6 +10,7 @@ technique it replaces.)
 import pytest
 from pyspark.sql import functions as F
 
+from osgeo_gdal_spark import entry_queries as EQ
 from osgeo_gdal_spark.operators import skew as SK, spatial_join as SJ, tiling as TL
 from osgeo_gdal_spark.sources import pages as PG, polygons as PL
 from tests.conftest import SF_DIR_ORACLE as SF
@@ -140,6 +141,11 @@ def test_spatial_join_strategy_plan_shapes(spark):
         plan = plan_of(SJ.spatial_join(spark, pages, PL.POLYGONS, how=how))
         assert plan.count("FileScan parquet") == 1, (how, plan)
         assert plan.count("BroadcastHashJoin") == 1, (how, plan)
+    # the clip/erase counts query is one semi and one anti such join:
+    # no hash shuffle (no url distinct, no join back to the pages)
+    plan = plan_of(EQ.q_spatial_semi_anti(spark, SF))
+    assert "hashpartitioning" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
 
 
 def test_proximity_shuffle_carries_no_pixels(spark):

@@ -82,6 +82,7 @@ def lzw_encode(data: bytes) -> bytes:
         while nbits >= 8:
             nbits -= 8
             out.append((bitbuf >> nbits) & 0xFF)
+            bitbuf &= (1 << nbits) - 1  # drop the bits just written
 
     table = {bytes([i]): i for i in range(256)}
     next_code = 258
@@ -136,7 +137,9 @@ def lzw_decode(data: bytes) -> bytes:
             pos += 1
             nbits += 8
         nbits -= width
-        return (bitbuf >> nbits) & ((1 << width) - 1)
+        code = (bitbuf >> nbits) & ((1 << width) - 1)
+        bitbuf &= (1 << nbits) - 1  # drop the bits just read
+        return code
 
     while True:
         code = get()

@@ -18,11 +18,15 @@ nested-loop joins (``ogrlayer.cpp:5385+``), restructured for 10^12 rows:
    outside get no row); a cell that meets a single rect part, as every
    boundary cell of an axis-rect polygon does, tests that part's half-open
    box; every other cell carries only the edges a rightward ray from inside
-   the cell can cross;
+   the cell can cross, in flat slot columns padded to the cover's widest
+   row (or, past 4 edges, in one ``edges`` array);
 4. the join condition decides each pair natively: strict envelope AND box
-   AND one ``aggregate`` ray cast over the row's edges, step for step
+   AND a ray cast over the row's edges, step for step
    ``kernels/pip.points_in_ring``, folding each finished ring in as
-   ``points_in_polygon`` composes holes and parts.
+   ``points_in_polygon`` composes holes and parts. The cast is a small
+   state machine, one table lookup per edge, unrolled over the slots so
+   that Spark compiles the join into its stage's generated code; over an
+   ``edges`` array it is one ``aggregate``, which Spark only interprets.
 
 There is no Python stage: the executed plan is one page scan feeding one
 broadcast hash join whose condition holds the whole predicate.
@@ -35,6 +39,8 @@ per executor into a small cache keyed by that digest.
 """
 
 from __future__ import annotations
+
+from itertools import chain
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -62,41 +68,110 @@ _PAD = 1e-4
 _INF = float("inf")
 _NO_BOX = (-_INF, -_INF, _INF, _INF)
 
+_KEYS = ("cell_key", "poly_fid", "eas_id")
 _ENV = ("p_xmin", "p_ymin", "p_xmax", "p_ymax")
 _BOX = ("box_x0", "box_y0", "box_x1", "box_y1")
-_EDGE = T.StructType([T.StructField(c, T.DoubleType()) for c in ("x1", "y1", "x2", "y2")]
-                     + [T.StructField("k", T.IntegerType())])
-_COVER_SCHEMA = T.StructType(
-    [T.StructField(c, T.LongType()) for c in ("cell_key", "poly_fid", "eas_id")]
-    + [T.StructField(c, T.DoubleType()) for c in _ENV + _BOX]
-    + [T.StructField("edges", T.ArrayType(_EDGE))]
-)
-# the cover columns that only serve the containment decision
-_DECISION_COLS = list(_ENV + _BOX) + ["edges"]
+_SLOT = ("x1", "y1", "x2", "y2", "k")
+_SLOT_TYPES = [(c, T.IntegerType() if c == "k" else T.DoubleType()) for c in _SLOT]
+_EDGE = T.StructType([T.StructField(c, t) for c, t in _SLOT_TYPES])
+# A cover row's edges sit in flat, non-nullable slot columns e{i}_x1 ..
+# e{i}_k, as many as the cover's widest row needs, so that the join
+# condition unrolls the ray cast into code Spark compiles. HotSpot's JIT
+# leaves a method over 8,000 bytes of bytecode interpreted, and the join's
+# generated consume method holds the whole condition: 4 slots is the most
+# whose zonal_stats-shaped stage stays under that. A cover needing more
+# keeps one ``edges`` array folded by an ``aggregate``, which Spark does
+# not compile.
+_MAX_SLOTS = 4
+# a slot past a row's last edge: horizontal, so it never straddles, and
+# k = 0, so it folds no ring in
+_PAD_EDGE = (0.0, 0.0, 0.0, 0.0, 0)
 
-# One step of kernels/pip.points_in_ring per edge e = (vertex i, vertex
-# i-1) = (x1, y1, x2, y2), translated to the point first: straddle, then
-# x-intersection > 0 flips the ring parity r. The edges run ring by ring,
-# each part's holes before its shell, and e.k marks an edge that starts a
-# ring after a hole (1) or after a shell (2). There the finished ring folds
-# in, as points_in_polygon composes rings: a hole into h (some hole of the
-# current part holds the point), a shell into p (some part holds it). The
-# point rides in the accumulator: a lambda reading lon/lat from outside
-# fails to bind once the cover mixes null and non-null edge arrays.
-_X1, _Y1, _X2, _Y2 = "(e.x1 - a.x)", "(e.y1 - a.y)", "(e.x2 - a.x)", "(e.y2 - a.y)"
-_CROSS = (f"(({_Y1} > 0 AND {_Y2} <= 0) OR ({_Y2} > 0 AND {_Y1} <= 0)) "
-          f"AND ({_X1} * {_Y2} - {_X2} * {_Y1}) / ({_Y2} - {_Y1}) > 0")
-_STEP = ("named_struct('x', a.x, 'y', a.y, "
-         f"'r', (e.k = 0 AND a.r) != ({_CROSS}), "
-         "'h', IF(e.k = 2, false, a.h OR (e.k = 1 AND a.r)), "
-         "'p', a.p OR (e.k = 2 AND a.r AND NOT a.h))")
-_CONTAINS_SQL = (
-    "lon > p_xmin AND lon < p_xmax AND lat > p_ymin AND lat < p_ymax "
-    "AND lon >= box_x0 AND lon < box_x1 AND lat >= box_y0 AND lat < box_y1 "
-    "AND (edges IS NULL OR aggregate(edges, "
-    "named_struct('x', lon, 'y', lat, 'r', false, 'h', false, 'p', false), "
-    f"(a, e) -> {_STEP}, a -> a.p OR (a.r AND NOT a.h)))"
-)
+
+def _cover_schema(slots):
+    """_KEYS, the strict envelope, the half-open box, ``ray`` (whether the
+    row needs the ray cast) and the edges: ``slots`` flat slots, or one
+    ``edges`` array when that is over _MAX_SLOTS."""
+    fields = ([T.StructField(c, T.LongType()) for c in _KEYS]
+              + [T.StructField(c, T.DoubleType()) for c in _ENV + _BOX]
+              + [T.StructField("ray", T.BooleanType(), False)])
+    if slots > _MAX_SLOTS:
+        return T.StructType(fields + [T.StructField("edges", T.ArrayType(_EDGE))])
+    return T.StructType(fields + [T.StructField(f"e{i}_{c}", t, False)
+                                  for i in range(slots) for c, t in _SLOT_TYPES])
+
+
+def _fold(r, h, p, k, c):
+    """One step of kernels/pip.points_in_ring for an edge e = (vertex i,
+    vertex i-1) that the point's rightward ray crosses (c) or not: c flips
+    the ring parity r. The edges run ring by ring, each part's holes before
+    its shell, and e.k marks an edge that starts a ring after a hole (1) or
+    after a shell (2). There the finished ring folds in, as
+    points_in_polygon composes rings: a hole into h (some hole of the
+    current part holds the point), a shell into p (some part holds it)."""
+    return ((k == 0 and r) != c,
+            False if k == 2 else h or (k == 1 and r),
+            p or (k == 2 and r and not h))
+
+
+# _fold over the state s = r | h<<1 | p<<2, as a table indexed by
+# 6s + 2k + c; after the last edge, whose ring is a shell, the point is
+# inside when some part holds it or the last part's shell does and none
+# of its holes
+_TABLE = [r | h << 1 | p << 2
+          for s in range(8) for k in range(3) for c in (False, True)
+          for r, h, p in [_fold(*(bool(s & b) for b in (1, 2, 4)), k, c)]]
+_INSIDE = [s for s in range(8) if s & 4 or s & 3 == 1]
+_TABLE_SQL = f"array({', '.join(map(str, _TABLE))})"
+
+
+def _cross(x1, y1, x2, y2, x, y):
+    """The ray from (x, y) crosses the edge: it straddles the edge's
+    y-range and their x-intersection, with the edge translated to the
+    point, lies right of it. The straddle test short-circuits the
+    division, which ANSI mode would fail on a horizontal edge."""
+    X1, Y1, X2, Y2 = (f"({v} - {o})" for v, o in ((x1, x), (y1, y), (x2, x), (y2, y)))
+    return (f"((({Y1} > 0 AND {Y2} <= 0) OR ({Y2} > 0 AND {Y1} <= 0)) "
+            f"AND ({X1} * {Y2} - {X2} * {Y1}) / ({Y2} - {Y1}) > 0)")
+
+
+def _step(s, k, cross):
+    """The state after one edge: one table lookup that reads ``s`` once,
+    so that the unrolled fold grows linearly in the number of edges."""
+    return f"element_at({_TABLE_SQL}, {s} * 6 + {k} * 2 + IF({cross}, 1, 0) + 1)"
+
+
+def _inside(s):
+    return f"{s} IN ({', '.join(map(str, _INSIDE))})"
+
+
+def _contains_sql(cover: DataFrame) -> str:
+    """The containment decision for a page (lon, lat) joined to a row of
+    ``cover``: strict envelope AND half-open box AND, for a row with
+    ``ray``, the ray cast over its edges — unrolled over the slot columns,
+    or one ``aggregate`` over ``edges``. The aggregate's point rides in its
+    accumulator: a lambda reading lon/lat from outside fails to bind once
+    the cover mixes null and non-null edge arrays."""
+    if "edges" in cover.columns:
+        cross = _cross("e.x1", "e.y1", "e.x2", "e.y2", "a.x", "a.y")
+        ray = ("aggregate(edges, named_struct('s', 0, 'x', lon, 'y', lat), "
+               f"(a, e) -> named_struct('s', {_step('a.s', 'e.k', cross)}, "
+               f"'x', a.x, 'y', a.y), a -> {_inside('a.s')})")
+    else:
+        s, i = "0", 0
+        while f"e{i}_k" in cover.columns:
+            x1, y1, x2, y2, k = (f"e{i}_{c}" for c in _SLOT)
+            s = _step(s, k, _cross(x1, y1, x2, y2, "lon", "lat"))
+            i += 1
+        ray = _inside(s)
+    return ("lon > p_xmin AND lon < p_xmax AND lat > p_ymin AND lat < p_ymax "
+            "AND lon >= box_x0 AND lon < box_x1 AND lat >= box_y0 AND lat < box_y1 "
+            f"AND (NOT ray OR {ray})")
+
+
+def _decision_cols(cover: DataFrame) -> list:
+    """The cover columns that only serve the containment decision."""
+    return [c for c in cover.columns if c not in _KEYS]
 
 
 class Layer:
@@ -276,11 +351,13 @@ def _decisions(g, keys, regions):
 def polygon_cover_df(spark, polys, zoom=DEFAULT_JOIN_ZOOM):
     """Small driver-side table: one row per (cell_key, polygon) with the
     polygon attributes, its strict envelope and the cell's decision
-    (_COVER_SCHEMA): a half-open ``box_*`` (infinite for an envelope-only
-    accept) and, for cells a ray cast must decide, the ``edges`` it needs.
-    ``_CONTAINS_SQL`` evaluates the decision for a joined page. Any number
-    of rings may meet one cell: the ray cast keeps one ring's parity at a
-    time.
+    (_cover_schema): a half-open ``box_*`` (infinite for an envelope-only
+    accept) and, for cells a ray cast must decide (``ray``), the edges it
+    needs — in as many flat slots as the widest row needs, each row padded
+    with _PAD_EDGE, or in one ``edges`` array when that is over
+    _MAX_SLOTS. ``_contains_sql`` evaluates the decision for a joined
+    page. Any number of rings may meet one cell: the ray cast keeps one
+    ring's parity at a time.
 
     polys: list of PolyFeature (sources/polygons.py) or any object with
     .fid/.eas_id/.wkb().
@@ -303,11 +380,18 @@ def polygon_cover_df(spark, polys, zoom=DEFAULT_JOIN_ZOOM):
         regions = _cell_regions(keys, zoom)
         regions[:, :2] = np.maximum(regions[:, :2], env[:2])
         regions[:, 2:] = np.minimum(regions[:, 2:], env[2:])
-        rows += [(k, pf.fid, pf.eas_id, *env, *box, edges)
+        rows += [((k, pf.fid, pf.eas_id, *env, *box), edges)
                  for k, box, edges in _decisions(g, keys, regions)]
     from ..session import local_df
 
-    return local_df(spark, rows, _COVER_SCHEMA)
+    slots = max((len(e) for _, e in rows if e is not None), default=0)
+    if slots > _MAX_SLOTS:
+        rows = [(*head, e is not None, e) for head, e in rows]
+    else:
+        pad = [_PAD_EDGE] * slots
+        rows = [(*head, e is not None, *chain(*((e or []) + pad)[:slots]))
+                for head, e in rows]
+    return local_df(spark, rows, _cover_schema(slots))
 
 
 def with_cell_key(df: DataFrame, zoom=DEFAULT_JOIN_ZOOM,
@@ -326,7 +410,7 @@ def spatial_join(spark, pages: DataFrame, polys, zoom=DEFAULT_JOIN_ZOOM,
     'anti' (erase — pages inside none). Mirrors OGR layer algebra
     Clip/Erase (ogrlayer.cpp:7537/:7846) for point inputs.
 
-    The whole predicate (``_CONTAINS_SQL``) sits in the broadcast join's
+    The whole predicate (``_contains_sql``) sits in the broadcast join's
     condition, so the page source is scanned once and no row enters
     Python. 'semi' and 'anti' keep or drop each page by the same
     condition in one ``left_semi`` / ``left_anti`` broadcast join.
@@ -335,10 +419,11 @@ def spatial_join(spark, pages: DataFrame, polys, zoom=DEFAULT_JOIN_ZOOM,
         raise ValueError(how)
     cover = polygon_cover_df(spark, polys, zoom)
     keyed = with_cell_key(pages, zoom)
+    contains = F.expr(_contains_sql(cover))
     if how == "inner":
         return (keyed.join(F.broadcast(cover), "cell_key")
-                .filter(F.expr(_CONTAINS_SQL)).drop("cell_key", *_DECISION_COLS))
-    cond = (keyed["cell_key"] == cover["cell_key"]) & F.expr(_CONTAINS_SQL)
+                .filter(contains).drop("cell_key", *_decision_cols(cover)))
+    cond = (keyed["cell_key"] == cover["cell_key"]) & contains
     return keyed.join(F.broadcast(cover), cond, "left_" + how).drop("cell_key")
 
 
@@ -453,5 +538,5 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
                               for f, buf in zip(poly_fid, geom)])
 
         matched = cand.filter(matches("poly_fid", "geometry"))
-    return matched.drop("cell_key", *_DECISION_COLS).withColumnRenamed(
+    return matched.drop("cell_key", *_decision_cols(cover)).withColumnRenamed(
         "poly_fid", "b_fid")

@@ -112,9 +112,9 @@ def _check(spark, polys, px, py):
         want |= {(int(i), p.eas_id) for i in np.nonzero(m)[0]}
     pages = spark.createDataFrame(pd.DataFrame(
         {"pid": np.arange(len(px)), "lon": px, "lat": py}))
-    got = {(r["pid"], r["eas_id"]) for r in
-           SJ.spatial_join(spark, pages, polys).select("pid", "eas_id").collect()}
-    assert got == want
+    joined = SJ.spatial_join(spark, pages, polys).select("pid", "eas_id")
+    assert {(r["pid"], r["eas_id"]) for r in joined.collect()} == want
+    return joined
 
 
 @settings(max_examples=30, deadline=None, derandomize=True)
@@ -125,12 +125,12 @@ def test_native_join_equals_points_in_polygon(spark, layer):
 
 
 def test_layer_mixing_rect_and_ray_cast_rows(spark):
-    """A rect and a triangle over the same cells: the cover mixes null and
-    non-null edge arrays in one broadcast table."""
+    """A rect and a triangle over the same cells: the cover mixes rows that
+    need the ray cast and rows that do not in one broadcast table."""
     polys = [Poly(0, [[_rect(10.0005, 10.0005, 20.0005, 20.0005)]]),
              Poly(1, [[[(9.0, 9.0), (21.0, 11.0), (12.0, 22.0)]]])]
     cover = SJ.polygon_cover_df(spark, polys).toPandas()
-    assert cover["edges"].isna().any() and cover["edges"].notna().any()
+    assert cover["ray"].any() and not cover["ray"].all()
     rng = np.random.default_rng(0)
     _check(spark, polys, _grid(rng.uniform(8, 23, 3000)), _grid(rng.uniform(8, 23, 3000)))
 
@@ -154,3 +154,43 @@ def test_holes_sharing_one_vertex(spark):
     py = np.concatenate([_grid(rng.uniform(9.9, 11.1, 3000)), _grid(cy + np.tile(near, 21)),
                          np.concatenate([np.asarray(h)[:, 1] for h in holes])])
     _check(spark, polys, px, py)
+
+
+def _ngon(n, cx, cy):
+    """A regular n-gon of radius 0.5 inside one join cell, with no
+    horizontal edge: its cell's row needs all n edges."""
+    a = np.arange(n) * 2 * np.pi / n + 0.1
+    return list(zip(_grid(cx + 0.5 * np.cos(a)).tolist(), _grid(cy + 0.5 * np.sin(a)).tolist()))
+
+
+def _edge_layer(widest):
+    """A ``widest``-gon, a triangle (its row padded to the widest) and a
+    rect (rows with no ray cast), with points over all three."""
+    polys = [Poly(0, [[_ngon(widest, 10.0, 10.0)]]), Poly(1, [[_ngon(3, 12.5, 10.0)]]),
+             Poly(2, [[_rect(10.6005, 9.6005, 11.9005, 10.4005)]])]
+    rng = np.random.default_rng(widest)
+    geoms = [W.parse_wkb(p.wkb()) for p in polys]
+    px = np.concatenate([_grid(rng.uniform(9.4, 13.1, 4000))] + [g.xs for g in geoms])
+    py = np.concatenate([_grid(rng.uniform(9.4, 10.6, 4000))] + [g.ys for g in geoms])
+    return polys, px, py
+
+
+def test_four_edge_cover_takes_flat_slots(spark):
+    """The widest row has 4 edges: the cover holds them in 4 flat slots and
+    the join casts the ray in compiled code, with no aggregate."""
+    polys, px, py = _edge_layer(4)
+    cover = SJ.polygon_cover_df(spark, polys)
+    assert "e3_k" in cover.columns and "e4_k" not in cover.columns
+    assert "edges" not in cover.columns
+    plan = _check(spark, polys, px, py)._jdf.queryExecution().executedPlan().toString()
+    assert "aggregate(" not in plan
+
+
+def test_five_edge_cover_keeps_the_aggregate(spark):
+    """The widest row has 5 edges, over the slot bound: the cover keeps
+    its ``edges`` array and the join folds it with an aggregate."""
+    polys, px, py = _edge_layer(5)
+    cover = SJ.polygon_cover_df(spark, polys)
+    assert "edges" in cover.columns and "e0_k" not in cover.columns
+    plan = _check(spark, polys, px, py)._jdf.queryExecution().executedPlan().toString()
+    assert "aggregate(" in plan

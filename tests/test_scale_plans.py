@@ -89,6 +89,34 @@ def test_spatial_join_has_no_python_eval(spark):
     assert plan.count("BatchEvalPython") == 0
 
 
+# HotSpot's JIT compiles no method over this many bytes of bytecode
+# (-XX:+DontCompileHugeMethods, on by default): a generated stage method
+# above it runs interpreted
+HOTSPOT_HUGE_METHOD_LIMIT = 8000
+
+
+def test_spatial_join_stays_in_whole_stage_codegen(spark):
+    """The containment predicate compiles: in the final AQE plan the cell
+    join is a codegen'd ``*(n) BroadcastHashJoin``, and every generated
+    method of its stages is small enough for the JIT. A higher-order
+    function in the join condition, such as an ``aggregate`` ray cast,
+    would take the join out of codegen."""
+    pages = PG.pages_df(spark, SF)
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    plans = {how: SJ.spatial_join(spark, pages, PL.POLYGONS, how=how).agg(F.count("*"))
+             for how in ("inner", "semi", "anti")}
+    plans["zonal_stats"] = EQ.q_zonal_stats(spark, SF)
+    plans["spatial_join_pairs"] = EQ.q_spatial_join_pairs(spark, SF)
+    for name, df in plans.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().executedPlan()  # final AQE plan
+        joins = [ln for ln in plan.toString().splitlines() if "BroadcastHashJoin" in ln]
+        assert joins and all("*(" in ln for ln in joins), (name, plan.toString())
+        stages = debug.codegenStringSeq(plan)
+        sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
+        assert sizes and max(sizes) < HOTSPOT_HUGE_METHOD_LIMIT, (name, sizes)
+
+
 def test_salted_join_matches_plain_join(spark):
     li = spark.read.parquet(f"{SF}/lineitem.parquet").limit(20000)
     dim = spark.read.parquet(f"{SF}/orders.parquet").select(

@@ -10,8 +10,7 @@ Layout:
     functions/  Spark Column expressions + pandas UDFs (ST_* library)
     sources/    deterministic table synthesis (pages, polygons, raster tiles)
     operators/  distributed operators (spatial join, kNN, tiling, dedup, ...)
-    plans/      pipeline composition + lineage/checkpointing
-    streaming/  Structured Streaming wrappers
+    plans/      lineage/checkpointing (the stage writer)
 """
 
 __version__ = "0.1.0"

@@ -567,7 +567,8 @@ def q_spatial_join_polygons(spark: SparkSession, sf: str) -> DataFrame:
     strict-interior intersects. Oracle: separating-axis SQL per polygon
     kind over the rect coordinates."""
     ti = PL.tindex_df(spark)
-    j = SJ.spatial_join_polygons(spark, ti, PL.POLYGONS)
+    j = SJ.spatial_join_polygons(spark, ti,
+                                 SJ.broadcast_layer(spark, PL.POLYGONS))
     return j.select("a_id", "eas_id")
 
 
@@ -1362,8 +1363,7 @@ def q_dedup_near_groups(spark: SparkSession, sf: str) -> DataFrame:
     MinHash -> LSH bands -> candidate pairs -> exact word-Jaccard verify
     -> connected components -> keeper per group. The first 50 docs are
     planted as exact copies under shifted ids so every planted pair must
-    surface as a 2-member group; the xxhash64 production twin
-    (dedup.near_dup_groups) keeps its planted-cluster pytest."""
+    surface as a 2-member group."""
     from .operators import dedup as DD
 
     docs = read_table(spark, sf, "documents").select("doc_id", "text")
@@ -2860,9 +2860,9 @@ FROM p
 def q_rgb_to_palette(spark: SparkSession, sf: str) -> DataFrame:
     """``gdal raster rgb-to-palette``
     (apps/gdalalg_raster_rgb_to_palette.cpp;
-    raster_ops.median_cut_palette + the nearest-entry assignment of
-    rgb_to_palette_tiles): weighted median-cut palette fit and exact
-    squared-RGB-distance index assignment. Fixture (key % 3): 8/12/16
+    raster_ops.median_cut_palette + a nearest-entry assignment):
+    weighted median-cut palette fit and exact squared-RGB-distance
+    index assignment. Fixture (key % 3): 8/12/16
     distinct lattice colors (affine mod-256 ramps) with weights
     1+(i*i)%7, quantized to 4/5/6 palette entries. All-integer outputs
     (palette size, packed-palette sum, weighted index-assignment sum)

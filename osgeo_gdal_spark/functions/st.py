@@ -51,18 +51,6 @@ def _centroid_y(geoms):
             for g in geoms]
 
 
-def _envelope(geoms):
-    import pandas as pd
-
-    rows = []
-    for g in geoms:
-        if g is None:
-            rows.append((None, None, None, None))
-        else:
-            rows.append(W.parse_wkb(bytes(g)).envelope())
-    return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
-
-
 def _geom_type(geoms):
     return [None if g is None else W.parse_wkb(bytes(g)).geom_type for g in geoms]
 
@@ -102,20 +90,6 @@ st_centroid_y = _series_udf(_centroid_y, T.DoubleType())
 st_geometry_type = _series_udf(_geom_type, T.StringType())
 st_astext = _series_udf(_as_text, T.StringType())
 st_contains_point = _series_udf(_contains_point, T.BooleanType())
-
-_ENV_TYPE = T.StructType(
-    [
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_ENV_TYPE)
-def st_envelope(geoms):
-    return _envelope(geoms)
 
 
 @F.pandas_udf(T.BinaryType())

@@ -113,25 +113,6 @@ def children(cell):
     return np.stack([base, base + 1, base + 2, base + 3], axis=-1)
 
 
-def from_quadkey(qk: str) -> int:
-    """Quadkey string -> cell id (digit-by-digit prefix build)."""
-    c = 1
-    for ch in qk:
-        c = (c << 2) | int(ch)
-    return c
-
-
-def to_quadkey(cell: int) -> str:
-    """Cell id -> quadkey string."""
-    gx, gy, z = decode(np.asarray([cell]))
-    digits = []
-    x, y = int(gx[0]), int(gy[0])
-    for i in range(int(z[0]), 0, -1):
-        mask = 1 << (i - 1)
-        digits.append(str((1 if x & mask else 0) + (2 if y & mask else 0)))
-    return "".join(digits)
-
-
 def k_ring(cell: int, r: int) -> np.ndarray:
     """All cells within Chebyshev distance r of `cell` at the same zoom
     (the (2r+1)^2 box). x wraps at the antimeridian, y clamps at poles.

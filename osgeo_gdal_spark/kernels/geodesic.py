@@ -59,7 +59,10 @@ _GLX, _GLW = np.polynomial.legendre.leggauss(20)
 
 def ellipsoid_area() -> float:
     """Closed-form WGS84 surface area (the analytic anchor):
-    2*pi*a^2 * (1 + (1-e^2)/e * atanh(e))."""
+    2*pi*a^2 * (1 + (1-e^2)/e * atanh(e)).
+
+    Test-only: the closed form the geodesic-area tests check the
+    quadrature against."""
     return 2.0 * math.pi * WGS84_A ** 2 * (
         1.0 + (1.0 - _E2) / _E * math.atanh(_E))
 

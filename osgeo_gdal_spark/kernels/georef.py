@@ -138,7 +138,10 @@ def fit_tps(controls):
 
 def tps_apply(params, controls, x, y):
     """Evaluate a fitted TPS at (x, y) — left-to-right sum order
-    matching the sqlgen fragment."""
+    matching the sqlgen fragment.
+
+    Test-only: the evaluator in the ``fit_tps`` test (queries use the
+    sqlgen fragment)."""
     a0, a1, a2 = params[0], params[1], params[2]
     s = a0 + a1 * x + a2 * y
     for (cx, cy, _u, _v), w in zip(controls, params[3:]):

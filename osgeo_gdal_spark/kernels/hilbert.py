@@ -18,7 +18,10 @@ HILBERT_MAX = (1 << 16) - 2  # reference reserves the max for null geoms
 
 
 def hilbert_code_xy(x, y):
-    """Exact port: uint32 Hilbert index of 16-bit (x, y). Vectorized."""
+    """Exact port: uint32 Hilbert index of 16-bit (x, y). Vectorized.
+
+    Test-only: the numpy reference that ``with_hilbert_code`` (the native
+    Spark form the queries use) is checked against."""
     x = np.asarray(x, dtype=np.uint32)
     y = np.asarray(y, dtype=np.uint32)
     M = np.uint32(0xFFFF)
@@ -67,7 +70,10 @@ def hilbert_code_xy(x, y):
 
 def hilbert_code(lon, lat, xmin=-180.0, ymin=-90.0, xmax=180.0, ymax=90.0):
     """lon/lat -> Hilbert index over a domain envelope, matching the
-    reference's round-to-grid quantization (hilbert.cpp:80-93)."""
+    reference's round-to-grid quantization (hilbert.cpp:80-93).
+
+    Test-only: the numpy reference for the Hilbert code properties and
+    the layout test."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     x = np.rint(HILBERT_MAX * (lon - xmin) / (xmax - xmin)).astype(np.uint32)

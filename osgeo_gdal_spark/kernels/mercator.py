@@ -83,16 +83,6 @@ def latlon_to_tile_tms(lat, lon, zoom):
     return pixels_to_tile(px, py)
 
 
-def tms_to_google(tx, ty, zoom):
-    """TMS -> XYZ/Google tile coords: y flip (GoogleTile:512)."""
-    return np.asarray(tx), (2**int(zoom) - 1) - np.asarray(ty)
-
-
-def google_to_tms(gx, gy, zoom):
-    """XYZ/Google -> TMS tile coords (same involution)."""
-    return np.asarray(gx), (2**int(zoom) - 1) - np.asarray(gy)
-
-
 def latlon_to_tile_xyz(lat, lon, zoom):
     """lat/lon -> XYZ/Google tile, clamped to the valid range.
 

@@ -68,42 +68,6 @@ def encode_png(arr: np.ndarray, level: int = Z_LEVEL) -> bytes:
             + _chunk(b"IEND", b""))
 
 
-def encode_png_palette(idx: np.ndarray, palette) -> bytes:
-    """Indexed-color PNG (color type 3): ``idx`` is the uint8 index
-    array, ``palette`` a sequence of (r, g, b) — the PLTE chunk of the
-    reference's paletted tile output (frmts/png/ writes GDAL color
-    tables this way). Filter 0, pinned zlib params as encode_png."""
-    a = np.ascontiguousarray(idx, dtype=np.uint8)
-    if a.ndim != 2:
-        raise ValueError(f"index array must be 2-D, got {a.shape}")
-    if not 1 <= len(palette) <= 256:
-        raise ValueError(f"palette size {len(palette)} not in 1..256")
-    if int(a.max(initial=0)) >= len(palette):
-        raise ValueError("index out of palette range")
-    h, w = a.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    plte = b"".join(bytes((int(r), int(g), int(b))) for r, g, b in palette)
-    co = zlib.compressobj(Z_LEVEL, zlib.DEFLATED, Z_WBITS, Z_MEMLEVEL,
-                          zlib.Z_DEFAULT_STRATEGY)
-    idat = co.compress(filtered_stream(a)) + co.flush()
-    return (_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"PLTE", plte)
-            + _chunk(b"IDAT", idat) + _chunk(b"IEND", b""))
-
-
-def decode_png_palette(data: bytes):
-    """Decode a type-3 PNG -> (index array, [(r, g, b), ...])."""
-    pos = 8
-    palette = []
-    while pos < len(data):
-        (ln,) = struct.unpack(">I", data[pos:pos + 4])
-        if data[pos + 4:pos + 8] == b"PLTE":
-            payload = data[pos + 8:pos + 8 + ln]
-            palette = [tuple(payload[i:i + 3]) for i in range(0, ln, 3)]
-            break
-        pos += 12 + ln
-    return decode_png(data), palette
-
-
 def _paeth(a, b, c):
     # vectorized Paeth predictor over int16 arrays
     p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)

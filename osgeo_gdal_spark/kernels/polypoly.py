@@ -336,16 +336,6 @@ def line_crosses_polygon(gl, gp) -> bool:
     return has_in and has_out
 
 
-def line_within_polygon(gl, gp) -> bool:
-    has_in, has_out, _ = line_polygon_relate(gl, gp)
-    return has_in and not has_out
-
-
-def line_touches_polygon(gl, gp) -> bool:
-    has_in, _out, contact = line_polygon_relate(gl, gp)
-    return contact and not has_in
-
-
 def buffer_convex(g, dist: float, quadsegs: int = 30):
     """Positive round-join buffer of a CONVEX single-ring polygon — the
     Minkowski sum with a disc (OGRGeometry::Buffer,

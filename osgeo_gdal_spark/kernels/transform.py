@@ -24,7 +24,10 @@ WGS84_F = 1.0 / 298.257223563
 
 def affine2d(x, y, gt):
     """6-parameter affine (GDALGeoTransform.Apply order): returns
-    (gt[0] + x*gt[1] + y*gt[2], gt[3] + x*gt[4] + y*gt[5])."""
+    (gt[0] + x*gt[1] + y*gt[2], gt[3] + x*gt[4] + y*gt[5]).
+
+    Test-only: the numpy reference of the transform helpers; the affine
+    round-trip property test pins it."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     return (gt[0] + x * gt[1] + y * gt[2],
@@ -32,7 +35,9 @@ def affine2d(x, y, gt):
 
 
 def affine2d_inverse(gt):
-    """Inverse 6-parameter affine (GDALInvGeoTransform semantics)."""
+    """Inverse 6-parameter affine (GDALInvGeoTransform semantics).
+
+    Test-only: the inverse in the affine round-trip property test."""
     det = gt[1] * gt[5] - gt[2] * gt[4]
     if det == 0:
         raise ValueError("singular affine")
@@ -46,7 +51,10 @@ def affine2d_inverse(gt):
 
 
 def geodetic_to_ecef(lon, lat, h=0.0, a=WGS84_A, f=WGS84_F):
-    """Geodetic (degrees) -> ECEF meters on an ellipsoid."""
+    """Geodetic (degrees) -> ECEF meters on an ellipsoid.
+
+    Test-only: the numpy reference of the datum-shift chain; the ECEF
+    round-trip property test pins it."""
     lon = np.radians(np.asarray(lon, dtype=np.float64))
     lat = np.radians(np.asarray(lat, dtype=np.float64))
     e2 = f * (2.0 - f)
@@ -60,7 +68,9 @@ def geodetic_to_ecef(lon, lat, h=0.0, a=WGS84_A, f=WGS84_F):
 
 def ecef_to_geodetic(x, y, z, a=WGS84_A, f=WGS84_F, iters=6):
     """ECEF meters -> geodetic degrees + height (fixed-point iteration on
-    latitude; 6 rounds is < 1e-11 deg for near-surface points)."""
+    latitude; 6 rounds is < 1e-11 deg for near-surface points).
+
+    Test-only: the inverse in the ECEF round-trip property test."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     z = np.asarray(z, dtype=np.float64)
@@ -81,7 +91,10 @@ def helmert7(x, y, z, dx, dy, dz, rx_as, ry_as, rz_as, s_ppm):
     """7-parameter Helmert, position-vector convention (EPSG:9606):
     rotations in ARC-SECONDS, scale in PPM — the published parameter
     units. Small-angle linearized form (what PROJ uses for the classic
-    transform method)."""
+    transform method).
+
+    Test-only: the numpy reference of the Helmert step; the known-shift
+    and identity tests pin it."""
     to_rad = np.pi / (180.0 * 3600.0)
     rx, ry, rz = rx_as * to_rad, ry_as * to_rad, rz_as * to_rad
     m = 1.0 + s_ppm * 1e-6
@@ -96,14 +109,19 @@ def helmert7(x, y, z, dx, dy, dz, rx_as, ry_as, rz_as, s_ppm):
 
 def helmert7_inverse_params(dx, dy, dz, rx_as, ry_as, rz_as, s_ppm):
     """Linearized inverse: negate all 7 parameters (exact to the same
-    small-angle order as the forward — the convention PROJ documents)."""
+    small-angle order as the forward — the convention PROJ documents).
+
+    Test-only: the inverse in the Helmert round-trip test."""
     return (-dx, -dy, -dz, -rx_as, -ry_as, -rz_as, -s_ppm)
 
 
 def datum_shift(lon, lat, params7, h=0.0, a=WGS84_A, f=WGS84_F):
     """Geodetic datum shift: geodetic -> ECEF -> Helmert -> geodetic
     (same ellipsoid both sides in v1; per-datum ellipsoids plug into the
-    a/f arguments)."""
+    a/f arguments).
+
+    Test-only: the numpy reference of the whole datum-shift chain,
+    pinned by the Helmert known-shift and identity tests."""
     x, y, z = geodetic_to_ecef(lon, lat, h, a, f)
     x2, y2, z2 = helmert7(x, y, z, *params7)
     return ecef_to_geodetic(x2, y2, z2, a, f)

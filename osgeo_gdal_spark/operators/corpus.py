@@ -115,23 +115,6 @@ def line_dedup_stats(lines: DataFrame) -> DataFrame:
     )
 
 
-def line_dedup_kept(lines: DataFrame) -> DataFrame:
-    """The kept-rows view of line_dedup_stats: the FIRST occurrence
-    (ordered by doc_id, line_idx) of every distinct line digest —
-    (lh, doc_id, line_idx). The batch twin of
-    streaming/stream.streaming_line_dedup (stream==batch pytest)."""
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(
-        Window.partitionBy("lh").orderBy("doc_id", "line_idx"))
-    return (
-        lines.select("doc_id", "line_idx", F.md5("line").alias("lh"))
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("lh", "doc_id", "line_idx")
-    )
-
-
 def repetition_stats(docs: DataFrame, text_col="text",
                      id_col="doc_id") -> DataFrame:
     """Word-level repetition quality metrics (the Gopher rules' word
@@ -260,8 +243,9 @@ def repetition_stats_rowwise(docs: DataFrame, text_col="text",
     this is both the streaming-safe form (no aggregation state, append
     mode works) and the preferred 100 TB batch form when the downstream
     doesn't already shuffle: the groupBy variant moves (doc, bigram)
-    pairs, this one moves nothing. Equality with the groupBy variant is
-    pytest-pinned."""
+    pairs, this one moves nothing.
+
+    Test-only: the reference ``repetition_stats`` is checked against."""
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("ts"),

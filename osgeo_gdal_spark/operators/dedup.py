@@ -104,8 +104,7 @@ def lsh_candidate_pairs(sig: DataFrame, bands=4, rows_per_band=4,
     near-certain duplicates of each other and are better handled by the
     exact-hash pass; a 1M-doc bucket would emit 5*10^11 pairs). The cap
     is ON BY DEFAULT (1000 members ⇒ ≤ ~500k pairs per bucket); pass
-    ``max_bucket=None`` to disable explicitly. Use ``lsh_bucket_stats``
-    to observe how many buckets/docs the cap drops.
+    ``max_bucket=None`` to disable explicitly.
     """
     stacked = _banded(sig, bands, rows_per_band)
     if max_bucket is not None:
@@ -149,23 +148,6 @@ def _banded(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
             ])
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def lsh_bucket_stats(sig: DataFrame, bands=4, rows_per_band=4,
-                     max_bucket: int | None = None) -> DataFrame:
-    """Observability for the hot-bucket cap: per-band count of buckets and
-    docs, plus how many of each a ``max_bucket`` cap would drop."""
-    sizes = (
-        _banded(sig, bands, rows_per_band)
-        .groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    )
-    dropped = (F.col("n") > max_bucket) if max_bucket is not None else F.lit(False)
-    return sizes.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("n").alias("n_docs"),
-        F.sum(F.when(dropped, 1).otherwise(0)).alias("buckets_dropped"),
-        F.sum(F.when(dropped, F.col("n")).otherwise(0)).alias("docs_dropped"),
-    )
 
 
 def simhash64(docs: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
@@ -216,39 +198,19 @@ def jaccard_pairs(docs: DataFrame, pairs: DataFrame, text_col="text",
     )
 
 
-def near_dup_groups(docs: DataFrame, n_shingle=3, num_hashes=16, bands=4,
-                    rows_per_band=4, jaccard_threshold=0.8,
-                    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                    text_col="text", id_col="doc_id") -> DataFrame:
-    """The END-TO-END near-duplicate pipeline every web corpus runs:
-    shingles -> MinHash -> LSH candidate pairs -> exact word-Jaccard
-    verify (>= threshold) -> connected components -> one keeper per group
-    (min doc_id). Returns (group_id, doc_id, keep) — ``keep=false`` rows
-    are the documents a dedup pass would drop.
-
-    The component closure is ``graph.connected_components`` over the
-    verified pairs (duplicate clusters are tiny)."""
-    sh = shingles(docs, n_shingle, text_col, id_col)
-    sig = minhash_signatures(sh, num_hashes)
-    cand = lsh_candidate_pairs(sig, bands, rows_per_band, max_bucket)
-    verified = jaccard_pairs(docs, cand, text_col, id_col).filter(
-        F.col("jaccard") >= jaccard_threshold
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    return _keepers(connected_components(verified))
-
-
 def near_dup_groups_portable(docs: DataFrame, num_hashes=8, k=3,
                              jaccard_threshold=0.8,
                              max_bucket: int | None = DEFAULT_MAX_BUCKET,
                              text_col="text", id_col="doc_id",
                              shuffle_partitions=None) -> DataFrame:
-    """``near_dup_groups`` over the engine-portable mod-2^31-1 sketch
-    path (lsh_pairs_portable) instead of xxhash64 — every stage of the
-    chain (grams -> MinHash -> LSH bands -> candidate pairs -> exact
-    word-Jaccard -> connected components -> keeper) is bit-reproducible
-    in ANSI SQL, upgrading the end-to-end near-dup pipeline from
-    rows-only to a full hash oracle. Same output contract:
-    (group_id, doc_id, keep) over docs that appear in a verified pair."""
+    """The END-TO-END near-duplicate pipeline every web corpus runs,
+    over the engine-portable mod-2^31-1 sketch path (lsh_pairs_portable):
+    grams -> MinHash -> LSH bands -> candidate pairs -> exact
+    word-Jaccard verify (>= threshold) -> connected components -> one
+    keeper per group (min doc_id). Every stage is bit-reproducible in
+    ANSI SQL, so the chain has a full hash oracle. Returns
+    (group_id, doc_id, keep) over docs that appear in a verified pair;
+    ``keep=false`` rows are the documents a dedup pass would drop."""
     cand = lsh_pairs_portable(docs, num_hashes, k, max_bucket,
                               text_col, id_col).select("doc_a", "doc_b")
     verified = jaccard_pairs(docs, cand, text_col, id_col).filter(

@@ -235,12 +235,6 @@ def focal_dem(tiles: DataFrame, zoom: int, mode="slope", xres=1.0, yres=1.0,
     return halo_apply(tiles, zoom, 1, stencil, TILE_SCHEMA)
 
 
-def focal_slope(tiles: DataFrame, zoom: int, xres=1.0, yres=1.0,
-                nodata=-9999.0) -> DataFrame:
-    """Horn slope (degrees) — see focal_dem."""
-    return focal_dem(tiles, zoom, "slope", xres, yres, nodata)
-
-
 def focal_generic(tiles: DataFrame, zoom: int, kernel, method="mean",
                   nodata=-9999.0) -> DataFrame:
     """Generic focal neighbors with an ARBITRARY odd-size kernel — the

@@ -39,17 +39,17 @@ _CLIP_SCHEMA_EXTRA = [
 ]
 
 
-def clip_features_rect(feats: DataFrame, rect, geom_col="geometry",
-                       keep_cols=("fid", "eas_id")) -> DataFrame:
+def clip_features_rect(feats: DataFrame, rect,
+                       geom_col="geometry") -> DataFrame:
     """Clip every feature's polygon rings to ``rect`` = (x0, y0, x1, y1).
 
-    Returns keep_cols + (clip_wkb, clip_area, clip_npts); features whose
+    Returns (fid, eas_id, clip_wkb, clip_area, clip_npts); features whose
     clipped geometry is empty are DROPPED (ogr2ogr -clipsrc drops
     fully-outside features). clip_area is |shoelace| summed signed over
     rings, so holes subtract.
     """
     x0, y0, x1, y1 = (float(v) for v in rect)
-    cols = list(keep_cols)
+    cols = ["fid", "eas_id"]
 
     # native bbox prefilter: no Python for features fully outside
     pre = feats.filter(
@@ -123,25 +123,27 @@ def _areal(rings):
     return [_piece(rings, area)] if rings and area > 0 else []
 
 
-def _pairs(spark, feats, polys, grid=None):
+def _pairs(spark, feats, layer, grid=None):
     """Candidate (feature, polygon) pairs from spatial_join_polygons: the
     exact strict-interior intersects refine, or, for the snapped tier, the
     closed-envelope candidates dilated by the snap ``grid`` (boundary-only
     contacts must reach the kernel, which decides emptiness itself)."""
     if grid is None:
-        return SJ.spatial_join_polygons(spark, feats, polys)
-    return SJ.spatial_join_polygons(spark, feats, polys,
+        return SJ.spatial_join_polygons(spark, feats, layer)
+    return SJ.spatial_join_polygons(spark, feats, layer,
                                     predicate="candidates_closed",
                                     dilate=float(grid))
 
 
-def _per_pair(spark, pairs, polys, fields, fn):
+def _per_pair(spark, feats, polys, fields, fn, grid=None):
     """The layer-algebra pair loop (ogrlayer.cpp:5385+): one Arrow pass
-    over the candidate pairs. It parses feature A's rings once per pair,
-    looks polygon B's rings up in the broadcast layer and emits
-    ``(fid, a_id, eas_id, *t)`` for every field tuple t of
-    ``fn(ra, rb)``. Features never shuffle."""
+    over the candidate pairs (``_pairs``). It parses feature A's rings
+    once per pair, looks polygon B's rings up in the broadcast layer and
+    emits ``(fid, a_id, eas_id, *t)`` for every field tuple t of
+    ``fn(ra, rb)``. The layer broadcasts once, for the candidate refine
+    and the pair loop both. Features never shuffle."""
     layer = SJ.broadcast_layer(spark, polys)
+    pairs = _pairs(spark, feats, layer, grid)
     schema = T.StructType([pairs.schema["fid"], pairs.schema["a_id"],
                            T.StructField("eas_id", T.LongType())] + fields)
 
@@ -175,7 +177,7 @@ def overlay_features(spark, feats: DataFrame, polys, op: str) -> DataFrame:
     feats needs (fid, a_id, geometry WKB, bbox struct); every layer-algebra
     function here returns (fid, a_id, eas_id, ...) rows.
     """
-    return _per_pair(spark, _pairs(spark, feats, polys), polys, _PIECE_FIELDS,
+    return _per_pair(spark, feats, polys, _PIECE_FIELDS,
                      lambda ra, rb: _areal(OVK.overlay_rings(ra, rb, op)))
 
 
@@ -186,17 +188,18 @@ def _split(spark, feats, polys, pieces: bool) -> DataFrame:
     nothing pass through whole; features fully erased are dropped.
 
     Plan shape: matched pairs -> groupBy(feature) -> applyInPandas fold
-    (the method layer broadcasts; each feature's fold is O(matched polys)
-    kernel calls), then a left-anti union for the untouched features —
-    two jobs total, no feature payload shuffle beyond the matched subset.
+    (the method layer broadcasts once, for the candidate refine and the
+    fold both; each feature's fold is O(matched polys) kernel calls),
+    then a left-anti union for the untouched features — two jobs total,
+    no feature payload shuffle beyond the matched subset.
     """
     # pin the matched-pair table: both the piece fold and the untouched
     # left-anti read it — unmaterialized, the whole cell-cover join +
     # PIP refine chain evaluates twice (measured ~0.3s/query at sf0.1);
     # the standard materialize-reused-intermediate move (guide §3.3),
     # bounded by the join's matched subset
-    matched = _pairs(spark, feats, polys).localCheckpoint()
     layer = SJ.broadcast_layer(spark, polys)
+    matched = _pairs(spark, feats, layer).localCheckpoint()
     schema = T.StructType([feats.schema["fid"], feats.schema["a_id"],
                            T.StructField("eas_id", T.LongType())]
                           + _PIECE_FIELDS)
@@ -288,45 +291,27 @@ def update_features(spark, feats: DataFrame, polys) -> DataFrame:
     return er.unionByName(local_df(spark, rows, schema))
 
 
-def overlay_features_snapped(spark, feats: DataFrame, polys, op: str,
-                             grid: float) -> DataFrame:
-    """Layer-algebra overlay WITHOUT the general-position contract: both
-    sides pass through the snap-rounding kernel (kernels/snap.py), so
-    vertex-on-edge contacts, shared collinear edges and near-coincident
-    boundaries — the cases overlay_features refuses — are handled.  The
-    GEOS analog is ST_SetPrecision + snap-rounded overlay; the reference
-    reaches the same semantics via the layer-algebra SNAP options
-    (ogr/ogrsf_frmts/generic/ogrlayer.cpp:5402).
-
-    Plan shape matches overlay_features with one difference: candidates
-    use the CLOSED envelope comparison dilated by ``grid`` and skip the
-    strict-interior refine (``_pairs``); pairs whose op result is empty
-    simply emit nothing.
-
-    ``grid`` is the snap resolution in world units (power of two). Output
-    rows carry the AREAL result only (boundary-only contacts yield no row
-    for op='intersection').
-    """
-    return _per_pair(
-        spark, _pairs(spark, feats, polys, grid), polys, _PIECE_FIELDS,
-        lambda ra, rb: _areal(SN.overlay_rings_snapped(ra, rb, op, grid)))
-
-
 def overlay_areas_features_snapped(spark, feats: DataFrame, polys,
                                    grid: float) -> DataFrame:
     """Per-pair snapped overlay AREAS — intersection, union and A−B in
     ONE noding+classification pass per pair (kernels/snap.
-    overlay_areas_snapped), over the same closed-envelope candidate
-    plan as overlay_features_snapped. The shape for per-pair area
-    reports where the geometries themselves aren't needed."""
+    overlay_areas_snapped). Both sides pass through the snap-rounding
+    kernel (kernels/snap.py), so vertex-on-edge contacts, shared
+    collinear edges and near-coincident boundaries — the cases
+    overlay_features refuses — are handled; the reference reaches the
+    same semantics via the layer-algebra SNAP options
+    (ogr/ogrsf_frmts/generic/ogrlayer.cpp:5402). Candidates use the
+    CLOSED envelope comparison dilated by the snap resolution ``grid``
+    (a power of two, world units) and skip the strict-interior refine
+    (``_pairs``). The shape for per-pair area reports where the
+    geometries themselves aren't needed."""
     def areas(ra, rb):
         ar = SN.overlay_areas_snapped(ra, rb, float(grid))
         return [(float(ar["i"]), float(ar["u"]), float(ar["d"]))]
 
     fields = [T.StructField(c, T.DoubleType())
               for c in ("i_area", "u_area", "d_area")]
-    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
-                     fields, areas)
+    return _per_pair(spark, feats, polys, fields, areas, grid)
 
 
 def overlay_lines_features_snapped(spark, feats: DataFrame, polys,
@@ -350,8 +335,7 @@ def overlay_lines_features_snapped(spark, feats: DataFrame, polys,
 
     fields = [T.StructField("n_lines", T.IntegerType()),
               T.StructField("total_len", T.DoubleType())]
-    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
-                     fields, lines)
+    return _per_pair(spark, feats, polys, fields, lines, grid)
 
 
 def overlay_points_features_snapped(spark, feats: DataFrame, polys,
@@ -365,8 +349,7 @@ def overlay_points_features_snapped(spark, feats: DataFrame, polys,
                 for px, py in SN.overlay_points_snapped(ra, rb, float(grid))]
 
     fields = [T.StructField(c, T.DoubleType()) for c in ("px", "py")]
-    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
-                     fields, points)
+    return _per_pair(spark, feats, polys, fields, points, grid)
 
 
 def predicates_snapped(spark, feats: DataFrame, polys,
@@ -385,8 +368,8 @@ def predicates_snapped(spark, feats: DataFrame, polys,
       equals     = i == |A| == |B|         covers  = |B − A| == 0
       overlaps   = 0 < i < min(|A|, |B|)
 
-    Same candidate plan as overlay_features_snapped (closed envelopes +
-    grid dilation, no refine UDF)."""
+    Same candidate plan as overlay_areas_features_snapped (closed
+    envelopes + grid dilation, no refine UDF)."""
     g = float(grid)
 
     def predicates(ra, rb):
@@ -402,8 +385,7 @@ def predicates_snapped(spark, feats: DataFrame, polys,
 
     fields = [T.StructField(c, T.BooleanType()) for c in
               ("intersects", "touches", "equals", "covers", "overlaps")]
-    return _per_pair(spark, _pairs(spark, feats, polys, grid), polys,
-                     fields, predicates)
+    return _per_pair(spark, feats, polys, fields, predicates, grid)
 
 
 def dissolve(spark, feats: DataFrame, group_col: str = "gid",

@@ -57,15 +57,6 @@ def translate_tiles(tiles: DataFrame, scale=1.0, offset=0.0,
     return tile_map(tiles, kernel, schema)
 
 
-def unscale_tiles(tiles: DataFrame, scale: float, offset: float) -> DataFrame:
-    """``gdal raster unscale`` (apps/gdalalg_raster_unscale.cpp →
-    gdal_translate -unscale): apply the band's scale/offset metadata,
-    out = v*scale + offset emitted as Float64 (the reference forces
-    Float64 output for non-complex types). Map-only per-tile pass."""
-    return translate_tiles(tiles, scale=scale, offset=offset,
-                           out_dtype="float64").drop("_ox0", "_oy0")
-
-
 def unscale_set_type_tiles(tiles: DataFrame, scale: float, offset: float,
                            out_dtype: str, srcwin=None) -> DataFrame:
     """Fused ``unscale -> set-type`` (the chain every
@@ -77,15 +68,6 @@ def unscale_set_type_tiles(tiles: DataFrame, scale: float, offset: float,
     the pixel window into the same pass (native tile pruning first)."""
     return translate_tiles(tiles, scale=scale, offset=offset,
                            out_dtype=out_dtype, srcwin=srcwin)
-
-
-def set_type_tiles(tiles: DataFrame, out_dtype: str) -> DataFrame:
-    """``gdal raster set-type`` (apps/gdalalg_raster_set_type.cpp → -ot):
-    datatype conversion under the GDALCopyWord rule
-    (gcore/gdal_priv_templates.hpp: +0.5, floor, clamp to the output
-    range, NaN -> 0). Map-only per-tile pass."""
-    return translate_tiles(tiles, scale=1.0, offset=0.0,
-                           out_dtype=out_dtype).drop("_ox0", "_oy0")
 
 
 def _window_prune(tiles: DataFrame, has_origin: bool, window):
@@ -869,41 +851,6 @@ def _burn_zone_grid(gx, gy, fids, geoms, eas_of, world):
     return zones
 
 
-def zone_tiles(spark, polys, zoom: int) -> DataFrame:
-    """Materialized zone-id raster (one int64 grid per covered tile) —
-    the reusable artifact when several value rasters share one zone
-    layer. The inline zonal paths below FUSE the burn into the stat
-    pass instead (no extra stage)."""
-    layer, cover_lists, world = _zone_setup(spark, polys, zoom)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("gx", T.LongType()),
-            T.StructField("gy", T.LongType()),
-            T.StructField("zones", T.BinaryType()),
-        ]
-    )
-
-    def burn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            geoms = layer.geoms()
-            eas_of = {f: e for f, e, _b in layer.bc.value}
-            rows = []
-            for _, row in pdf.iterrows():
-                gx, gy = int(row["gx"]), int(row["gy"])
-                zones = _burn_zone_grid(
-                    gx, gy, row["_zfids"], geoms, eas_of, world)
-                rows.append(
-                    {"gx": gx, "gy": gy, "zones": zones.ravel().tobytes()}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return cover_lists.mapInPandas(burn, out_schema)
-
-
 def _zonal_partials(tiles, polys, zoom, reducer, out_schema):
     """Fused zonal pass: value tiles join the broadcast covering-fid
     list on (gx, gy) — value tiles NEVER shuffle and are never
@@ -991,23 +938,6 @@ def histogram(tiles: DataFrame, bin_width: float) -> DataFrame:
 
     return tile_map(tiles, partials, out_schema).groupBy("bin").agg(
         F.sum("cnt").alias("n_pixels")
-    )
-
-
-def mosaic_first(tiles_a: DataFrame, tiles_b: DataFrame) -> DataFrame:
-    """Mosaic two tile tables: first non-null wins per tile key (buildvrt
-    overlay-order semantics, apps/gdalbuildvrt_lib.cpp) — a unionByName +
-    window-rank, no pixel kernel needed when tiles align."""
-    from pyspark.sql import Window
-
-    u = tiles_a.withColumn("_src", F.lit(0)).unionByName(
-        tiles_b.withColumn("_src", F.lit(1))
-    )
-    w = Window.partitionBy("zoom", "gx", "gy", "band").orderBy("_src")
-    return (
-        u.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk", "_src")
     )
 
 
@@ -1626,7 +1556,7 @@ def color_relief(tiles: DataFrame, ramp=None) -> DataFrame:
 
 
 # --- raster pipeline cosmetics (round 5): blend / nodata-to-alpha /
-# --- clean-collar / rgb-to-palette ---------------------------------------
+# --- clean-collar / rgb-to-palette palette fit -------------------------
 
 def _mul255(a, b):
     """(a*b + 255) // 256 — GDAL's MulScale255 (gdalalg_raster_blend.cpp:183),
@@ -1808,67 +1738,6 @@ def median_cut_palette(cols, wts, max_colors):
             for c in range(3)))
     palette.sort()
     return palette
-
-
-def rgb_to_palette_tiles(tiles: DataFrame, max_colors=256):
-    """``gdal raster rgb-to-palette``
-    (apps/gdalalg_raster_rgb_to_palette.cpp): median-cut palette fit
-    DRIVER-SIDE over the distributed color histogram (bounded: the
-    groupBy(color) result is at most min(pixels, 2^24) rows and is
-    capped by taking the top-weight colors), then one broadcast
-    nearest-palette-entry assignment per tile. Returns (palette,
-    indexed tile DataFrame); the palette is a list of (r, g, b).
-
-    Both passes co-group a tile's bands 1-3 on the tile key, so each
-    call sees all three bands of its tile."""
-    rgb = tiles.filter(F.col("band").isin(1, 2, 3))
-    keys = ["zoom", "gx", "gy"]
-
-    def by_band(parts):
-        got = {int(row["band"]): (g.astype(np.int64), row)
-               for g, row in parts[0]}
-        return got if {1, 2, 3} <= set(got) else None
-
-    def colors(parts):
-        import pandas as pd
-
-        bands = by_band(parts)
-        if bands is None:
-            return None
-        packed = (bands[1][0] << 16) | (bands[2][0] << 8) | bands[3][0]
-        vals, cnts = np.unique(packed, return_counts=True)
-        return pd.DataFrame({"color": vals, "cnt": cnts})
-
-    agg = (
-        tile_cogroup([rgb], keys, colors, "color LONG, cnt LONG")
-        .groupBy("color").agg(F.sum("cnt").alias("cnt"))
-        .orderBy(F.desc("cnt"), "color").limit(1 << 16)
-        .collect()
-    )
-    cols = np.array([[r["color"] >> 16, (r["color"] >> 8) & 255,
-                      r["color"] & 255] for r in agg], dtype=np.int64)
-    wts = np.array([r["cnt"] for r in agg], dtype=np.int64)
-    palette = median_cut_palette(cols, wts, max_colors)
-    pal = np.array(palette, dtype=np.int64)
-
-    spark = tiles.sparkSession
-    bc_pal = spark.sparkContext.broadcast(pal)
-
-    def assign(parts):
-        bands = by_band(parts)
-        if bands is None:
-            return None
-        p = bc_pal.value
-        r8, g8, b8 = (bands[b][0] for b in (1, 2, 3))
-        # exact nearest palette entry (squared RGB distance, first wins)
-        d = ((r8[..., None] - p[:, 0]) ** 2
-             + (g8[..., None] - p[:, 1]) ** 2
-             + (b8[..., None] - p[:, 2]) ** 2)
-        pidx = d.argmin(axis=-1).astype(np.uint8)
-        return tile_row(pidx, like=bands[1][1], dataset_id="palette",
-                        band=1, nodata=None)
-
-    return palette, tile_cogroup([rgb], keys, assign)
 
 
 def compare_tiles(a: DataFrame, b: DataFrame) -> DataFrame:

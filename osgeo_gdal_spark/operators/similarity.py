@@ -51,65 +51,6 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k=3,
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_topk_matmul(emb: DataFrame, queries, k=3, vec_col="embedding",
-                       id_col="vec_id") -> DataFrame:
-    """The scale path for exact cosine top-k: one Arrow-batched numpy
-    matmul per partition against the broadcast query matrix (BLAS beats
-    the per-row JVM fold ~50x at 64+ dims), emitting only per-batch
-    partial top-k rows; a window over (query) finishes globally.
-
-    queries: [(qid, np.ndarray(dim))]. Output matches cosine_topk up to
-    fp-association differences ~1e-15 (ranking-stable on real data).
-    """
-    spark = emb.sparkSession
-    qids = [int(q[0]) for q in queries]
-    qmat = np.stack([np.asarray(q[1], dtype=np.float64) for q in queries])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        qids_, qmat_, qnorm_ = bc.value
-        nq = len(qids_)
-        for pdf in batches:
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            vids = pdf[id_col].to_numpy(np.int64)
-            vnorm = np.linalg.norm(V, axis=1)
-            sims = (V @ qmat_.T) / (vnorm[:, None] * qnorm_[None, :])
-            # partial top-k per query within the batch: only k rows/query
-            # survive to the shuffle
-            rows_q, rows_v, rows_s = [], [], []
-            for j in range(nq):
-                s = sims[:, j]
-                mask = vids != qids_[j]
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                top = idx[np.argsort(-s[idx], kind="stable")[:k]]
-                rows_q += [qids_[j]] * len(top)
-                rows_v += vids[top].tolist()
-                rows_s += s[top].tolist()
-            if rows_q:
-                yield pd.DataFrame(
-                    {"qid": rows_q, "vec_id": rows_v, "cos_sim": rows_s}
-                )
-
-    partial = emb.mapInPandas(score, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def hyperplanes(dim: int, bits: int, seed=42) -> np.ndarray:
     """Deterministic random hyperplane matrix (bits x dim)."""
     rng = np.random.default_rng(seed)
@@ -275,8 +216,7 @@ def embedding_near_dup_pairs(emb: DataFrame, planes, threshold=0.95,
     bucket (e.g. the all-near-identical empty-page vector) is bounded by
     ``max_bucket``: buckets larger than the cap are dropped from pair
     generation (same mitigation and default as
-    dedup.lsh_candidate_pairs; observe drops with
-    embedding_bucket_stats). Pass ``max_bucket=None`` to disable."""
+    dedup.lsh_candidate_pairs). Pass ``max_bucket=None`` to disable."""
     tables = planes if isinstance(planes, (list, tuple)) else [planes]
     e = emb
     for t, pl in enumerate(tables):
@@ -317,34 +257,6 @@ def embedding_near_dup_pairs(emb: DataFrame, planes, threshold=0.95,
         ).alias("cos_sim"),
     )
     return scored.filter(F.col("cos_sim") >= threshold)
-
-
-def embedding_bucket_stats(emb: DataFrame, planes, vec_col="embedding",
-                           max_bucket: int | None = None) -> DataFrame:
-    """Observability for embedding_near_dup_pairs' hot-bucket cap: per
-    LSH table, bucket/vector counts plus how many a cap would drop
-    (mirror of dedup.lsh_bucket_stats)."""
-    tables = planes if isinstance(planes, (list, tuple)) else [planes]
-    e = emb
-    for t, pl in enumerate(tables):
-        e = with_lsh_bucket(e, pl, vec_col).withColumnRenamed(
-            "lsh_bucket", f"b{t}"
-        )
-    nt = len(tables)
-    kv = e.select(
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("bucket"))
-            for t in range(nt)
-        ])).alias("tb"),
-    ).select("tb.t", "tb.bucket")
-    sizes = kv.groupBy("t", "bucket").agg(F.count("*").alias("n"))
-    dropped = (F.col("n") > max_bucket) if max_bucket is not None else F.lit(False)
-    return sizes.groupBy("t").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("n").alias("n_vecs"),
-        F.sum(F.when(dropped, 1).otherwise(0)).alias("buckets_dropped"),
-        F.sum(F.when(dropped, F.col("n")).otherwise(0)).alias("vecs_dropped"),
-    )
 
 
 def quantize_int8(emb: DataFrame, vec_col="embedding",
@@ -410,106 +322,3 @@ def quantize_int8(emb: DataFrame, vec_col="embedding",
         ).alias("err"),
     )
 
-
-def quantized_codes(emb: DataFrame, vec_col="embedding",
-                    id_col="vec_id") -> DataFrame:
-    """(vec_id, codes array<bigint>) — the actual code arrays, for the
-    quantized-ANN path (same scale computation as quantize_int8)."""
-    pos = emb.select(F.posexplode(F.col(vec_col)).alias("pos", "v"))
-    stats = pos.groupBy("pos").agg(
-        F.min(F.col("v").cast("double")).alias("mn"),
-        F.max(F.col("v").cast("double")).alias("mx"),
-    )
-    row = stats.agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(pos, mn))), s -> s.mn)"
-        ).alias("mins"),
-        F.expr(
-            "transform(array_sort(collect_list(struct(pos, mx))), s -> s.mx)"
-        ).alias("maxs"),
-    )
-    code = (
-        "IF(maxs[i] = mins[i], 0L, "
-        "LEAST(255L, GREATEST(0L, CAST(FLOOR("
-        f"(CAST({vec_col}[i] AS DOUBLE) - mins[i])"
-        " / (maxs[i] - mins[i]) * CAST(256.0 AS DOUBLE)) AS BIGINT))))"
-    )
-    return emb.crossJoin(F.broadcast(row)).select(
-        F.col(id_col),
-        F.expr(
-            f"transform(sequence(0, size({vec_col}) - 1), i -> {code})"
-        ).alias("codes"),
-        F.col("mins"), F.col("maxs"),
-    )
-
-
-def ann_topk_quantized(emb: DataFrame, queries, k=3, candidates=16,
-                       vec_col="embedding", id_col="vec_id") -> DataFrame:
-    """ANN over int8-quantized embeddings with exact re-rank — the
-    memory-compressed search the quantizer exists for: the coarse pass
-    scores DEQUANTIZED int8 codes (at 100 TB the float vectors stay in
-    cold storage; only the 4x-smaller code table is scanned), keeps
-    ``candidates`` per (query, partition), and the final exact cosine
-    re-ranks just the gathered candidate rows.
-
-    Plan: one map-only scan of the code table (Arrow matmul) -> a
-    candidates-per-query shuffle -> a broadcast-keyed exact re-rank of
-    O(candidates) rows. Returns (qid, vec_id, cos_sim, rank) like
-    cosine_topk."""
-    spark = emb.sparkSession
-    codes = quantized_codes(emb, vec_col=vec_col, id_col=id_col)
-
-    qids = [int(q[0]) for q in queries]
-    qmat = np.stack([np.asarray(q[1], dtype=np.float64) for q in queries])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-    cand = int(candidates)
-
-    out_schema = T.StructType(
-        [T.StructField("qid", T.LongType()),
-         T.StructField("vec_id", T.LongType())]
-    )
-
-    def coarse(batches):
-        import pandas as pd
-
-        qids_, qmat_, qnorm_ = bc.value
-        for pdf in batches:
-            C = np.stack([np.asarray(c, dtype=np.float64)
-                          for c in pdf["codes"]])
-            mins = np.asarray(pdf["mins"].iloc[0], dtype=np.float64)
-            maxs = np.asarray(pdf["maxs"].iloc[0], dtype=np.float64)
-            V = mins + (C + 0.5) * (maxs - mins) / 256.0
-            vids = pdf["doc_id" if "doc_id" in pdf else "vec_id"] \
-                .to_numpy(np.int64)
-            vnorm = np.linalg.norm(V, axis=1)
-            sims = (V @ qmat_.T) / (vnorm[:, None] * qnorm_[None, :])
-            rows_q, rows_v = [], []
-            for j in range(len(qids_)):
-                s = sims[:, j]
-                mask = vids != qids_[j]
-                idx = np.nonzero(mask)[0]
-                top = idx[np.argsort(-s[idx], kind="stable")[:cand]]
-                rows_q += [qids_[j]] * len(top)
-                rows_v += vids[top].tolist()
-            if rows_q:
-                yield pd.DataFrame({"qid": rows_q, "vec_id": rows_v})
-
-    cands = codes.mapInPandas(coarse, out_schema)
-    # exact re-rank: join candidates back to the float vectors
-    joined = cands.join(emb.select(F.col(id_col).alias("vec_id"),
-                                   F.col(vec_col).alias("v")), "vec_id")
-    qdf = local_df(spark, 
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "qid LONG, qv ARRAY<DOUBLE>",
-    )
-    scored = joined.join(F.broadcast(qdf), "qid").select(
-        "qid", "vec_id",
-        F.expr(
-            f"{_dot_expr('v', 'qv')} / ({_norm_expr('v')} * {_norm_expr('qv')})"
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)

@@ -30,7 +30,10 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def salted_count(df: DataFrame, key_cols: list, salt_buckets=16) -> DataFrame:
-    """Two-phase count per key via an explicit salt column."""
+    """Two-phase count per key via an explicit salt column.
+
+    Test-only: waits for the skew-aware spatial join (ROADMAP direction
+    8), which uses or deletes it."""
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(*key_cols, F.monotonically_increasing_id()),
                         F.lit(salt_buckets))
@@ -45,7 +48,10 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     big side scattered — hot keys spread over salt_buckets reducers.
 
     Use when the small side is too big to broadcast; otherwise
-    broadcast() wins (no shuffle at all)."""
+    broadcast() wins (no shuffle at all).
+
+    Test-only: waits for the skew-aware spatial join (ROADMAP direction
+    8), which uses or deletes it."""
     salts = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("_salt")
     small_rep = small.select("*", salts)
     big_salted = big.withColumn(
@@ -57,7 +63,10 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
 
 def key_histogram(df: DataFrame, key_cols: list, top=100) -> DataFrame:
     """Measured per-key counts — the input to adaptive decisions (and the
-    thing to log: silent skew reads as 'slow cluster')."""
+    thing to log: silent skew reads as 'slow cluster').
+
+    Test-only: waits for the skew-aware spatial join (ROADMAP direction
+    8), which uses or deletes it."""
     return (
         df.groupBy(*key_cols).agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt")).limit(top)
@@ -68,7 +77,10 @@ def adaptive_repartition(df: DataFrame, key: str, target_rows_per_task=1_000_000
                          sample_fraction=None) -> DataFrame:
     """Repartition by (key, adaptive salt): each key's fan-out is
     ceil(count/target), measured from the data (optionally from a sample).
-    Heavy keys split across many tasks; light keys stay single."""
+    Heavy keys split across many tasks; light keys stay single.
+
+    Test-only: waits for the skew-aware spatial join (ROADMAP direction
+    8), which uses or deletes it."""
     src = df if sample_fraction is None else df.sample(sample_fraction, seed=42)
     scale = 1.0 if sample_fraction is None else 1.0 / sample_fraction
     counts = src.groupBy(key).agg(

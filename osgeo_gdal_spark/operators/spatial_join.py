@@ -176,10 +176,15 @@ def _decision_cols(cover: DataFrame) -> list:
 
 class Layer:
     """A polygon layer broadcast once as ``[(fid, eas_id, wkb)]``, with its
-    content digest. Pickles small: executors read the broadcast."""
+    content digest. ``polys`` keeps the driver's feature list, which the
+    cell cover is built from. Pickles small: executors read the
+    broadcast, never the feature list."""
 
-    def __init__(self, bc, digest):
-        self.bc, self.digest = bc, digest
+    def __init__(self, bc, digest, polys):
+        self.bc, self.digest, self.polys = bc, digest, polys
+
+    def __getstate__(self):
+        return {"bc": self.bc, "digest": self.digest, "polys": None}
 
     def geoms(self, prepare=None):
         """{fid: prepare(parse_wkb(wkb))} from the per-executor cache.
@@ -208,7 +213,8 @@ def broadcast_layer(spark, polys) -> Layer:
     for fid, eas, buf in rows:
         h.update(f"{fid}:{eas}:{len(buf)}:".encode())
         h.update(buf)
-    return Layer(spark.sparkContext.broadcast(rows), h.hexdigest())
+    return Layer(spark.sparkContext.broadcast(rows), h.hexdigest(),
+                 list(polys))
 
 
 def _ring_is_rect(xs, ys) -> bool:
@@ -454,7 +460,7 @@ _POLY_PREDICATES = {
 }
 
 
-def spatial_join_polygons(spark, feats: DataFrame, polys,
+def spatial_join_polygons(spark, feats: DataFrame, layer: Layer,
                           zoom=DEFAULT_JOIN_ZOOM,
                           predicate: str = "intersects",
                           dilate: float = 0.0) -> DataFrame:
@@ -468,9 +474,11 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
        (mercator tile ranges from the flat bbox struct — no Python);
     3. cell equi-join + native strict bbox-overlap prefilter;
     4. distinct (feature, polygon) candidates refine in an Arrow batch
-       against the broadcast layer (``broadcast_layer``).
+       against the broadcast layer.
 
-    feats needs (fid, geometry WKB, bbox struct). Returns feats columns +
+    feats needs (fid, geometry WKB, bbox struct); ``layer`` is the
+    method layer from ``broadcast_layer``, so a caller that also reads
+    it per pair (the overlays) ships it once. Returns feats columns +
     eas_id of each matching polygon.
 
     predicate: a key of ``_POLY_PREDICATES``, or 'candidates_closed' for
@@ -479,7 +487,7 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
     if predicate != "candidates_closed" and predicate not in _POLY_PREDICATES:
         raise ValueError(predicate)
     n = 1 << zoom
-    cover = polygon_cover_df(spark, polys, zoom)
+    cover = polygon_cover_df(spark, layer.polys, zoom)
 
     # dilate > 0 (the snapped-overlay path): widen the feature's cell
     # range and the envelope comparison by the snap grid, so boundaries
@@ -526,7 +534,6 @@ def spatial_join_polygons(spark, feats: DataFrame, polys,
         # strict-interior refine would drop)
         matched = cand
     else:
-        layer = broadcast_layer(spark, polys)
         test = _POLY_PREDICATES[predicate]
 
         @F.pandas_udf(T.BooleanType())

@@ -26,7 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import sqlgen as G
-from ..sources.raster import (TILE, parse_tile, tile_cogroup, tile_map,
+from ..sources.raster import (TILE, tile_cogroup, tile_map,
                               tile_row)
 
 
@@ -45,7 +45,7 @@ def tile_counts(pages: DataFrame, zoom: int) -> DataFrame:
 def pyramid_counts(base: DataFrame, levels: int) -> DataFrame:
     """Overview chain: counts at zoom-1..zoom-levels from the base tile
     counts (SUM reduction — counts aggregate additively; AVERAGE applies
-    to pixel payloads, see reduce_tiles_average). Returns a union with a
+    to pixel payloads, see raster_ops.pyramid_reduce). Returns a union with a
     ``dz`` column = levels above base (0 = base)."""
     out = base.withColumn("dz", F.lit(0))
     cur = base
@@ -134,37 +134,6 @@ def burn_point_tiles(pages: DataFrame, zoom: int) -> DataFrame:
                                       n_points=int(pdf["cnt"].sum()))])
 
     return cells.groupBy("gx", "gy").applyInPandas(burn, _BURN_SCHEMA)
-
-
-def reduce_tiles_average(tiles: DataFrame) -> DataFrame:
-    """One pyramid step on pixel tiles: each parent tile = 2x2 children,
-    each child average_2x2-reduced into its 128x128 quadrant
-    (overview.cpp AVERAGE semantics). Missing children = zero fill.
-    Keeps its own loop over the group: the group is keyed by the parent
-    tile, not by the tile ``tile_cogroup`` would key it on."""
-    from ..kernels import resample as R
-
-    def reduce(pdf):
-        import pandas as pd
-
-        pgx = int(pdf["pgx"].iloc[0])
-        pgy = int(pdf["pgy"].iloc[0])
-        zoom = int(pdf["zoom"].iloc[0]) - 1
-        grid = np.zeros((TILE, TILE), dtype=np.float64)
-        total = 0
-        for _, row in pdf.iterrows():
-            child = parse_tile(row)
-            qx = (int(row["gx"]) % 2) * (TILE // 2)
-            qy = (int(row["gy"]) % 2) * (TILE // 2)
-            grid[qy : qy + TILE // 2, qx : qx + TILE // 2] = R.average_2x2(child)
-            total += int(row["n_points"])
-        return pd.DataFrame([tile_row(grid, zoom=zoom, gx=pgx, gy=pgy,
-                                      n_points=total)])
-
-    parents = tiles.withColumn(
-        "pgx", F.expr("CAST(FLOOR(gx / CAST(2.0 AS DOUBLE)) AS BIGINT)")
-    ).withColumn("pgy", F.expr("CAST(FLOOR(gy / CAST(2.0 AS DOUBLE)) AS BIGINT)"))
-    return parents.groupBy("pgx", "pgy").applyInPandas(reduce, _BURN_SCHEMA)
 
 
 def explode_tile_pixels(tiles: DataFrame, nonzero_only=True) -> DataFrame:
@@ -283,17 +252,14 @@ PNG_SCHEMA = T.StructType([
 
 
 def encode_png_tiles(tiles: DataFrame, rgb: bool = False,
-                     palette=None, band=None) -> DataFrame:
+                     band=None) -> DataFrame:
     """Encode packed-binary tile rows as PNG bytes — the byte-emitting
     half of ``gdal raster tile`` (apps/gdalalg_raster_tile.cpp; PNG
     driver frmts/png/). MAP-ONLY at any scale: greyscale encodes one
     row per tile with zero shuffle; RGB(A) co-groups a tile's band rows
     (one skinny shuffle keyed on the tile id, group size = band count).
     zlib parameters are pinned (kernels/png.py) so output bytes are
-    deterministic and golden-checksummable. ``palette`` (a broadcast-
-    small [(r, g, b), ...] list, e.g. from rgb_to_palette_tiles) makes
-    single-band index tiles encode as type-3 paletted PNGs with a PLTE
-    chunk — the reference's color-table tile output."""
+    deterministic and golden-checksummable."""
     from ..kernels import png as PNG
 
     if not rgb:
@@ -305,11 +271,9 @@ def encode_png_tiles(tiles: DataFrame, rgb: bool = False,
             "input: pass band=<n> (one PNG per tile path) or rgb=True")
 
         def enc(grid, row):
-            arr = grid.astype(np.uint8)
-            data = (PNG.encode_png_palette(arr, palette)
-                    if palette is not None else PNG.encode_png(arr))
             return {"zoom": int(row["zoom"]), "gx": int(row["gx"]),
-                    "gy": int(row["gy"]), "png": data}
+                    "gy": int(row["gy"]),
+                    "png": PNG.encode_png(grid.astype(np.uint8))}
 
         return tile_map(tiles, enc, PNG_SCHEMA)
 
@@ -364,25 +328,6 @@ def encode_gtiff_tiles(tiles: DataFrame, compression: str = "lzw",
     return tile_map(tiles, enc, GTIFF_SCHEMA)
 
 
-def write_gtiff_pyramid(tif_df: DataFrame, out_dir: str,
-                        convention: str = "xyz") -> None:
-    """Write encoded GeoTIFF tiles to the ``{z}/{x}/{y}.tif`` pyramid
-    layout (same GetFileY convention as the PNG sink)."""
-    flip = convention == "tms"
-
-    def write_part(rows):
-        import os
-
-        for r in rows:
-            y = ((1 << r["zoom"]) - 1 - r["gy"]) if flip else r["gy"]
-            d = os.path.join(out_dir, str(r["zoom"]), str(r["gx"]))
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, f"{y}.tif"), "wb") as f:
-                f.write(bytes(r["tif"]))
-
-    tif_df.foreachPartition(write_part)
-
-
 COG_SCHEMA = T.StructType([
     T.StructField("zoom", T.IntegerType()),
     T.StructField("gx", T.LongType()),
@@ -422,24 +367,3 @@ def encode_cog_tiles(tiles: DataFrame, overviews: int = 2,
 
     return tile_map(tiles, enc, COG_SCHEMA)
 
-
-def write_png_pyramid(png_df: DataFrame, out_dir: str,
-                      convention: str = "xyz") -> None:
-    """Write encoded tiles to the ``{z}/{x}/{y}.png`` pyramid layout
-    (GetFileY, apps/gdalalg_raster_tile.cpp:509): ``xyz`` keeps the
-    top-left-origin row index, ``tms`` flips it. Runs as a map-only
-    foreachPartition — each executor writes its own tiles (local FS
-    here; an object-store sink would PUT the same keys)."""
-    flip = convention == "tms"
-
-    def write_part(rows):
-        import os
-
-        for r in rows:
-            y = ((1 << r["zoom"]) - 1 - r["gy"]) if flip else r["gy"]
-            d = os.path.join(out_dir, str(r["zoom"]), str(r["gx"]))
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, f"{y}.png"), "wb") as f:
-                f.write(bytes(r["png"]))
-
-    png_df.foreachPartition(write_part)

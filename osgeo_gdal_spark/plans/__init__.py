@@ -1,1 +1,1 @@
-"""Pipeline composition, checkpointing and lineage."""
+"""Checkpointing and lineage: the per-unit stage writer."""

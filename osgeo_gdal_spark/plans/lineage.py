@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -39,14 +40,19 @@ class StageWriter:
         return f"{self.root}/{stage}/_metrics"
 
     def completed_units(self, stage: str) -> set:
+        """Unit ids with a metrics row. Only a stage that was never written
+        (no metrics path) reads as empty; an unreadable metrics table
+        raises, so it cannot silently re-run every unit."""
         try:
             rows = (
                 self.spark.read.parquet(self._metrics_path(stage))
                 .select("unit_id").distinct().collect()
             )
-            return {r["unit_id"] for r in rows}
-        except Exception:
-            return set()
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return set()
+            raise
+        return {r["unit_id"] for r in rows}
 
     def run_stage(self, stage: str, units: list, build_unit) -> DataFrame:
         """Compute and persist each not-yet-completed unit.

@@ -1,130 +1,16 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal ingest plans: video frame sampling and audio chunking.
 
-The Spark-side plumbing for a multimodal training-data pipeline — schema,
-partition-friendly layout, Arrow batch shapes, and kernel signatures are
-real and tested; the actual media decode is STUBBED (this container has no
-PIL/ffmpeg): ``decode_image`` raises NotImplementedError unless
-``fake=True``, in which case a deterministic fake decoder (seeded by the
-content hash) produces pixel arrays with the right shapes so downstream
-stages (resize, feature extraction, frame sampling) run end-to-end.
-
-Layout mirrors the pages table: one row per asset keyed by url, media
-payload as BinaryType, metadata as typed columns (never parsed from the
-blob in the hot path).
+The decode-free half of a multimodal training-data pipeline: per-asset
+metadata (duration, fps, sample rate) is synthesized from documents as
+exact integer functions of ``doc_id``, and the distributed planner owns
+the sampling and chunking SCHEDULES. The media decode itself (ffmpeg,
+PIL) is out of scope, so every quantity here is exact integer
+arithmetic on both engines.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("media_type", T.StringType()),     # image|audio|video
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),         # image/video
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),   # audio/video
-        T.StructField("sample_rate", T.IntegerType()),   # audio
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic media table derived from documents: every doc gets one
-    fake image asset whose payload bytes are a hash-stream of its url."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        F.concat(F.lit("https://img.site"), (F.col("doc_id") % 1000).cast("string"),
-                 F.lit(".example/"), F.col("doc_id").cast("string"),
-                 F.lit(".png")).alias("url"),
-        F.lit("image").alias("media_type"),
-        F.lit("image/png").alias("mime"),
-        (F.lit(32) + (F.col("doc_id") % 8) * 16).cast("int").alias("width"),
-        (F.lit(32) + (F.col("doc_id") % 4) * 16).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-        F.sha2(F.col("doc_id").cast("string"), 256).cast("binary").alias("payload"),
-    )
-
-
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic fake decode: seed an RNG from the content hash."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
-
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("out_w", T.IntegerType()),
-        T.StructField("out_h", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
-
-
-def decode_resize_features(media: DataFrame, out=(16, 16), fake=False) -> DataFrame:
-    """The image stage: decode -> resize -> features (channel means + a
-    64-bit average-hash) in one Arrow-batched mapInPandas pass.
-
-    fake=False raises NotImplementedError at task time — the real decoder
-    (PIL/libvips) plugs into ``_fake_pixels``'s slot; everything around it
-    (batching, schema, partitioning) is the production shape.
-    """
-    from ..kernels import resample as R
-
-    ow, oh = out
-
-    def stage(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                if not fake:
-                    raise NotImplementedError(
-                        "image decode requires PIL/libvips (not in this "
-                        "container); pass fake=True for the deterministic "
-                        "fake decoder"
-                    )
-                px = _fake_pixels(bytes(row["payload"]), row["width"], row["height"])
-                small = np.stack(
-                    [R.resample_grid(px[:, :, c].astype(np.float64), oh, ow, "bilinear")
-                     for c in range(3)],
-                    axis=2,
-                )
-                gray = small.mean(axis=2)
-                bits = (gray > gray.mean()).ravel()[:64]
-                phash = 0
-                for i, b in enumerate(bits):
-                    if b:
-                        phash |= 1 << i
-                if phash & (1 << 63):  # keep int64-positive for LongType
-                    phash -= 1 << 64
-                rows.append(
-                    {
-                        "url": row["url"],
-                        "out_w": ow,
-                        "out_h": oh,
-                        "mean_r": float(small[:, :, 0].mean()),
-                        "mean_g": float(small[:, :, 1].mean()),
-                        "mean_b": float(small[:, :, 2].mean()),
-                        "phash": phash,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(stage, FEATURE_SCHEMA)
+from pyspark.sql import DataFrame, functions as F
 
 
 def synth_video_meta(docs: DataFrame) -> DataFrame:
@@ -143,7 +29,7 @@ def synth_video_meta(docs: DataFrame) -> DataFrame:
 def frame_sample_plan(videos: DataFrame, every_ms: int = 1000,
                       max_frames: int = 32) -> DataFrame:
     """Frame-sampling schedule for video ingest — the decode-free half
-    of the video pipeline (the ffmpeg decode stays behind the stub; the
+    of the video pipeline (the ffmpeg decode is out of scope; the
     SCHEDULE is what the distributed planner owns): sample one frame
     every ``every_ms`` capped at ``max_frames``, evenly re-strided when
     the cap binds (the standard uniform-k fallback).
@@ -207,7 +93,7 @@ def synth_audio_meta(docs: DataFrame) -> DataFrame:
 def audio_chunk_plan(audios: DataFrame, chunk_ms: int = 30000,
                      overlap_ms: int = 5000) -> DataFrame:
     """Chunking schedule for audio ingest — the decode-free half of the
-    audio pipeline (the ffmpeg decode stays behind the stub; the
+    audio pipeline (the ffmpeg decode is out of scope; the
     SCHEDULE is what the distributed planner owns): fixed windows of
     ``chunk_ms`` advancing by ``chunk_ms - overlap_ms`` (the
     Whisper-style overlapped-window transcription layout), final short

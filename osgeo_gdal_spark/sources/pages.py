@@ -67,9 +67,10 @@ def pages_cte_sql(dialect: str = G.DUCKDB) -> str:
 def extract_text(html_col):
     """Inverse of the html wrapper: strip the fixed template BYTES and
     decode — pure substring arithmetic on the binary column (no regex,
-    no Python), so extraction is exact and cheap. The north-rule
-    invariant (byte-identical extracted text per url) is pinned by
-    tests/test_scale_plans.test_text_byte_identity_through_shuffle."""
+    no Python), so extraction is exact and cheap.
+
+    Test-only: it pins the north-rule invariant, byte-identical
+    extracted text per url through a shuffle."""
     from pyspark.sql import functions as F
 
     # b"<html><body>" = 12 bytes, b"</body></html>" = 14 bytes

@@ -143,7 +143,7 @@ def polygons_df(spark):
     """The layer as a DataFrame: poly.shp schema + WKB geometry + flat bbox
     struct (the GeoParquet-covering-column pattern for pruning,
     ogrparquetlayer.cpp:1000-1094)."""
-    from pyspark.sql import functions as F, types as T
+    from pyspark.sql import types as T
 
     rows = []
     for pf in POLYGONS:
@@ -277,7 +277,7 @@ def tindex_features():
 def tindex_df(spark):
     """The rect layer as a DataFrame with WKB + flat bbox (GeoParquet
     covering-column pattern)."""
-    from pyspark.sql import functions as F, types as T
+    from pyspark.sql import types as T
 
     rows = []
     for pf in tindex_features():
@@ -424,73 +424,6 @@ def dissolve_values_sql() -> str:
         for g, rid, x0, y0, x1, y1 in dissolve_rects()
     )
     return f"(VALUES {rows}) AS dr(gid, rid, x0, y0, x1, y1)"
-
-
-def write_geoparquet(df, path: str, geom_col: str = "geometry",
-                     crs: str = "EPSG:4326") -> None:
-    """Write a DataFrame with a WKB geometry column as GeoParquet 1.0:
-    Spark writes the parquet, then the file-level ``geo`` metadata key
-    (version/primary_column/columns/encoding/bbox — the spec GDAL's
-    Parquet driver reads, ogr/ogrsf_frmts/parquet/) is attached to each
-    part file via pyarrow. The bbox comes from the data in one
-    aggregation; geometry stays WKB (the spec's only required
-    encoding)."""
-    import glob
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from ..functions import st as ST
-
-    env = df.select(ST.st_envelope(F.col(geom_col)).alias("e")).agg(
-        F.min("e.xmin").alias("x0"), F.min("e.ymin").alias("y0"),
-        F.max("e.xmax").alias("x1"), F.max("e.ymax").alias("y1"),
-    ).first()
-    meta = {
-        "version": "1.0.0",
-        "primary_column": geom_col,
-        "columns": {
-            geom_col: {
-                "encoding": "WKB",
-                "geometry_types": ["Polygon", "MultiPolygon", "Point",
-                                   "LineString"],
-                "crs": crs,
-                "bbox": [env["x0"], env["y0"], env["x1"], env["y1"]],
-            }
-        },
-    }
-    df.write.mode("overwrite").parquet(path)
-    blob = json.dumps(meta).encode("utf-8")
-    for part in glob.glob(os.path.join(path, "*.parquet")):
-        t = pq.read_table(part)
-        existing = t.schema.metadata or {}
-        t = t.replace_schema_metadata({**existing, b"geo": blob})
-        # write to a sibling temp then rename: pyarrow may mmap the
-        # source file, so an in-place write corrupts the footer
-        tmp = part + "._geo.tmp"
-        pq.write_table(t, tmp)
-        os.replace(tmp, part)
-        # drop Spark's .crc sidecar — it describes the pre-stamp bytes
-        crc = os.path.join(os.path.dirname(part),
-                           "." + os.path.basename(part) + ".crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-
-
-def read_geoparquet_meta(path: str) -> dict:
-    """Read back the ``geo`` metadata of a GeoParquet dataset (first
-    part file — the writer stamps all parts identically)."""
-    import glob
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    part = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-    md = pq.read_schema(part).metadata or {}
-    return json.loads(md[b"geo"].decode("utf-8"))
 
 
 # --- contact-pair fixture family: deliberate NON-general-position

@@ -219,9 +219,10 @@ def synth_category_tiles(spark: SparkSession, zoom: int, block=96,
 
 def tiles_from_grid(spark: SparkSession, grid: np.ndarray, zoom: int,
                     dataset_id="custom", nodata=None) -> DataFrame:
-    """Tile table from an explicit (n*TILE)^2 numpy grid — for hand-built
-    test fixtures (concave regions, sieve chains) that the generators
-    can't express."""
+    """Tile table from an explicit (n*TILE)^2 numpy grid.
+
+    Test-only: the builder of hand-made tile fixtures (concave regions,
+    sieve chains) that the generators can't express."""
     n = 1 << zoom
     assert grid.shape == (n * TILE, n * TILE), grid.shape
     rows = []

@@ -31,7 +31,7 @@ def reference_slope(zoom=1, nodata=-9999.0):
 
 
 def test_focal_slope_matches_reference_incl_tile_borders(spark, tiles):
-    got_rows = FO.focal_slope(tiles, 1).collect()
+    got_rows = FO.focal_dem(tiles, 1, "slope").collect()
     want = reference_slope()
     for row in got_rows:
         grid = RS.parse_tile(row)
@@ -44,9 +44,9 @@ def test_focal_slope_matches_reference_incl_tile_borders(spark, tiles):
 
 def test_focal_slope_partition_invariance(spark, tiles):
     a = {(r["gx"], r["gy"]): r["checksum"]
-         for r in FO.focal_slope(tiles.repartition(1), 1).collect()}
+         for r in FO.focal_dem(tiles.repartition(1), 1, "slope").collect()}
     b = {(r["gx"], r["gy"]): r["checksum"]
-         for r in FO.focal_slope(tiles.repartition(7), 1).collect()}
+         for r in FO.focal_dem(tiles.repartition(7), 1, "slope").collect()}
     assert a == b
 
 

@@ -1,4 +1,4 @@
-"""GeoTIFF tile codec (kernels/gtiff.py + operators/tiling.py sinks).
+"""GeoTIFF tile codec (kernels/gtiff.py + operators/tiling.py encoders).
 
 Parity targets: frmts/gtiff/ (libtiff-backed writer),
 apps/gdalalg_raster_tile.cpp GTiff tile output. Interop is pinned
@@ -121,49 +121,25 @@ def test_unsupported_inputs_raise():
         GT.decode_gtiff(b"II+\x00" + b"\x00" * 16)  # BigTIFF magic
 
 
-def test_tile_sink_pyramid_layout(spark, tmp_path):
+def test_encode_gtiff_tiles_roundtrip_and_band_rule(spark):
+    from pyspark.sql import functions as F
+
     from osgeo_gdal_spark.operators import tiling as TLL
     from osgeo_gdal_spark.sources import raster as RS
 
     tiles = RS.synth_tiles(spark, 1)
-    tif_df = TLL.encode_gtiff_tiles(tiles, compression="lzw")
-    out = str(tmp_path / "pyr")
-    TLL.write_gtiff_pyramid(tif_df, out)
-    files = sorted(glob.glob(out + "/**/*.tif", recursive=True))
-    assert len(files) == 4
-    arr, meta = GT.decode_gtiff(open(files[0], "rb").read())
-    gx, gy = int(files[0].split("/")[-2]), int(
-        files[0].split("/")[-1].split(".")[0])
-    expect = RS.synth_pixel_grid(gx, gy, 1)
-    assert np.array_equal(arr, expect)
-    assert meta["geo_keys"][-1] == 3857
-
-    # tms convention flips y
-    out2 = str(tmp_path / "tms")
-    TLL.write_gtiff_pyramid(tif_df, out2, convention="tms")
-    files2 = sorted(glob.glob(out2 + "/**/*.tif", recursive=True))
-    assert len(files2) == 4
+    rows = TLL.encode_gtiff_tiles(tiles, compression="lzw").collect()
+    assert sorted((r["gx"], r["gy"]) for r in rows) == [
+        (0, 0), (0, 1), (1, 0), (1, 1)]
+    for r in rows:
+        arr, meta = GT.decode_gtiff(bytes(r["tif"]))
+        assert np.array_equal(arr, RS.synth_pixel_grid(r["gx"], r["gy"], 1))
+        assert meta["geo_keys"][-1] == 3857
 
     # multi-band greyscale input is rejected (same rule as PNG)
-    two = tiles.unionByName(tiles.withColumn("band", F_lit2()))
+    two = tiles.unionByName(tiles.withColumn("band", F.lit(2)))
     with pytest.raises(ValueError):
         TLL.encode_gtiff_tiles(two)
-
-
-def F_lit2():
-    from pyspark.sql import functions as F
-
-    return F.lit(2)
-
-
-def test_pipeline_gtiff_sink(spark, tmp_path):
-    from osgeo_gdal_spark.plans.pipeline import Pipeline
-    from osgeo_gdal_spark.sources import raster as RS
-
-    tiles = RS.synth_tiles(spark, 1)
-    out = str(tmp_path / "p")
-    Pipeline(spark, tiles).write(out, fmt="gtiff")
-    assert len(glob.glob(out + "/**/*.tif", recursive=True)) == 4
 
 
 def test_cog_roundtrip_and_layout():

@@ -216,9 +216,13 @@ def test_line_polygon_relate_and_crosses():
         W.polygon_wkb([[(0, 0), (10, 0), (10, 10), (0, 10)]]))
     L = lambda pts: W.parse_wkb(W.linestring_wkb(pts))  # noqa: E731
     assert PP.line_crosses_polygon(L([(-5, 5), (15, 5)]), rect)
-    assert PP.line_within_polygon(L([(2, 2), (8, 8)]), rect)
-    assert PP.line_touches_polygon(L([(0, 2), (0, 8)]), rect)
-    assert PP.line_touches_polygon(L([(-5, 0), (0, 0)]), rect)
+    # within: interior points inside, none outside
+    assert PP.line_polygon_relate(L([(2, 2), (8, 8)]), rect)[:2] == (
+        True, False)
+    # touches: boundary contact, no interior point inside
+    for pts in ([(0, 2), (0, 8)], [(-5, 0), (0, 0)]):
+        has_in, _out, contact = PP.line_polygon_relate(L(pts), rect)
+        assert contact and not has_in
     assert not PP.line_crosses_polygon(L([(20, 20), (30, 30)]), rect)
     assert PP.line_crosses_polygon(L([(-5, 5), (5, 5)]), rect)
     # holes: a segment entirely inside the hole is DISJOINT; a segment

@@ -91,15 +91,27 @@ def test_burn_tiles_and_explode_roundtrip(spark, pages):
 
 
 def test_pyramid_average_reduction(spark, pages):
+    from osgeo_gdal_spark.operators import raster_ops as RO
+    from osgeo_gdal_spark.sources.raster import parse_tile
+
     zoom = 3
-    tiles = TL.burn_point_tiles(pages, zoom)
-    parents = TL.reduce_tiles_average(tiles).cache()
-    assert parents.count() > 0
-    row = parents.orderBy(F.desc("n_points")).first()
-    assert row["zoom"] == zoom - 1
-    # AVERAGE preserves mean mass: parent sum * 4 == child sums (zero-fill)
-    grid = np.frombuffer(row["pixels"], dtype=np.float64).reshape(256, 256)
-    assert grid.sum() * 4 == pytest.approx(row["n_points"], rel=1e-9)
+    # burned count tiles carry no band metadata; pyramid_reduce reads it
+    tiles = TL.burn_point_tiles(pages, zoom).select(
+        "*", F.lit("points").alias("dataset_id"), F.lit(1).alias("band"),
+        F.lit(None).cast("double").alias("nodata"),
+        F.lit("EPSG:3857").alias("crs")).cache()
+    parents = RO.pyramid_reduce(tiles, "average").collect()
+    assert parents and all(r["zoom"] == zoom - 1 for r in parents)
+    # AVERAGE preserves mean mass: parent sum * 4 == its children's
+    # point counts (missing children are zero fill)
+    want = {}
+    for r in tiles.select("gx", "gy", "n_points").collect():
+        key = (r["gx"] // 2, r["gy"] // 2)
+        want[key] = want.get(key, 0) + r["n_points"]
+    assert {(r["gx"], r["gy"]) for r in parents} == set(want)
+    for r in parents:
+        assert parse_tile(r).sum() * 4 == pytest.approx(
+            want[(r["gx"], r["gy"])], rel=1e-9)
 
 
 def test_hex_binning_matches_python_cube_round(spark):

@@ -18,7 +18,6 @@ RUNNERS = {"tile_map", "tile_cogroup"}
 ALLOWED = {
     # keyed by the parent tile
     "operators/raster_ops.py:pyramid_reduce.reduce",
-    "operators/tiling.py:reduce_tiles_average.reduce",
     # keyed by the destination tile
     "operators/raster_ops.py:warp_tiles.warp_one",
     # keyed by the observer

@@ -282,6 +282,31 @@ def test_update_features_stamps_method_layer(spark):
     assert abs(sum(r["piece_area"] for r in a_rows) - want_a) < 1e-8
 
 
+def test_overlays_broadcast_the_layer_once(spark, monkeypatch):
+    """Each overlay ships its method layer once: the candidate refine in
+    spatial_join_polygons and the per-pair or per-feature kernel read
+    the same broadcast."""
+    from osgeo_gdal_spark.operators import spatial_join as SJ
+
+    calls = []
+    real = SJ.broadcast_layer
+
+    def counting(spark_, polys):
+        calls.append(len(polys))
+        return real(spark_, polys)
+
+    monkeypatch.setattr(SJ, "broadcast_layer", counting)
+    feats = PL.tindex_df(spark)
+    for build in (lambda: OV.overlay_features(spark, feats, PL.POLYGONS,
+                                              "intersection"),
+                  lambda: OV.erase_features(spark, feats, PL.POLYGONS),
+                  lambda: OV.identity_features(spark, feats, PL.POLYGONS),
+                  lambda: OV.update_features(spark, feats, PL.POLYGONS)):
+        calls.clear()
+        build()
+        assert calls == [len(PL.POLYGONS)]
+
+
 def test_dissolve_parts_and_area(spark):
     """Two-level dissolve matches the analytic inclusion-exclusion union
     area and the constructed part counts."""

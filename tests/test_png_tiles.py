@@ -1,8 +1,7 @@
-"""PNG tile codec + pyramid sink (gdal raster tile output stage;
-reference frmts/png/ + apps/gdalalg_raster_tile.cpp:509 GetFileY)."""
+"""PNG tile codec and the distributed tile encode (gdal raster tile
+output stage; reference frmts/png/ + apps/gdalalg_raster_tile.cpp)."""
 
 import hashlib
-import os
 import zlib
 
 import numpy as np
@@ -92,9 +91,8 @@ def test_png_decode_rejects_corruption():
         PNG.decode_png(b"nonsense")
 
 
-def test_encode_png_tiles_and_pyramid_layout(spark, tmp_path):
-    """Distributed encode (gray map-only + RGB band co-group) and the
-    {z}/{x}/{y}.png pyramid sink in both row conventions."""
+def test_encode_png_tiles_gray_and_rgb(spark):
+    """Distributed encode: gray map-only, and RGB band co-group."""
     from osgeo_gdal_spark.operators import tiling as TLL
     from osgeo_gdal_spark.sources.raster import synth_tiles
 
@@ -105,19 +103,6 @@ def test_encode_png_tiles_and_pyramid_layout(spark, tmp_path):
     for (gx, gy), data in rows.items():
         assert (PNG.decode_png(data) == synth_pixel_grid(gx, gy, 1)).all()
     assert hashlib.md5(rows[(0, 0)]).hexdigest() == GOLD_GRAY_MD5
-
-    out = str(tmp_path / "pyr")
-    TLL.write_png_pyramid(png_df, out)
-    for (gx, gy) in rows:
-        p = os.path.join(out, "1", str(gx), f"{gy}.png")
-        assert os.path.exists(p), p
-        with open(p, "rb") as f:
-            assert f.read() == rows[(gx, gy)]
-    out2 = str(tmp_path / "pyr_tms")
-    TLL.write_png_pyramid(png_df, out2, convention="tms")
-    assert os.path.exists(os.path.join(out2, "1", "0", "1.png"))
-    with open(os.path.join(out2, "1", "0", "1.png"), "rb") as f:
-        assert f.read() == rows[(0, 0)]  # tms flips the row index
 
     # RGB: three band rows per tile co-grouped into one PNG
     b1 = synth_tiles(spark, 1, coeffs=(7, 11))
@@ -134,57 +119,6 @@ def test_encode_png_tiles_and_pyramid_layout(spark, tmp_path):
     assert (PNG.decode_png(got[(1, 0)]) == exp).all()
 
 
-def test_pipeline_write_png(spark, tmp_path):
-    """Pipeline DSL: `... ! write --of png` emits the z/x/y pyramid."""
-    from osgeo_gdal_spark.plans.pipeline import Pipeline
-    from osgeo_gdal_spark.sources.raster import synth_tiles
-
-    out = str(tmp_path / "pipe_pyr")
-    Pipeline(spark, synth_tiles(spark, 1)).write(out, fmt="png")
-    got = sorted(os.path.relpath(os.path.join(d, f), out)
-                 for d, _, fs in os.walk(out) for f in fs)
-    assert got == ["1/0/0.png", "1/0/1.png", "1/1/0.png", "1/1/1.png"]
-    with open(os.path.join(out, "1", "0", "0.png"), "rb") as f:
-        assert hashlib.md5(f.read()).hexdigest() == GOLD_GRAY_MD5
-
-
-def test_paletted_png_roundtrip_with_rgb_to_palette(spark):
-    """Full color-table tile chain: RGB synth bands -> median-cut
-    rgb_to_palette_tiles -> type-3 paletted PNG (PLTE chunk) -> decode
-    -> palette expansion reproduces the exact index assignment."""
-    import pyspark.sql.functions as SF
-
-    from osgeo_gdal_spark.operators import raster_ops as RO
-    from osgeo_gdal_spark.operators import tiling as TLL
-    from osgeo_gdal_spark.sources.raster import synth_tiles
-
-    b1 = synth_tiles(spark, 0, coeffs=(7, 11))
-    b2 = synth_tiles(spark, 0, coeffs=(13, 5)).withColumn("band", SF.lit(2))
-    b3 = synth_tiles(spark, 0, coeffs=(3, 17)).withColumn("band", SF.lit(3))
-    rgb = b1.unionByName(b2).unionByName(b3)
-    palette, indexed = RO.rgb_to_palette_tiles(rgb, max_colors=16)
-    assert 1 <= len(palette) <= 16
-    idx_rows = {(r["gx"], r["gy"]):
-                np.frombuffer(bytes(r["pixels"]), dtype=np.uint8)
-                .reshape(r["height"], r["width"])
-                for r in indexed.collect()}
-    png_df = TLL.encode_png_tiles(indexed, palette=palette)
-    for r in png_df.collect():
-        data = bytes(r["png"])
-        assert b"PLTE" in data
-        got_idx, got_pal = PNG.decode_png_palette(data)
-        assert got_pal == [tuple(int(v) for v in p) for p in palette]
-        assert (got_idx == idx_rows[(r["gx"], r["gy"])]).all()
-
-
-def test_png_palette_validation():
-    with pytest.raises(ValueError):
-        PNG.encode_png_palette(np.zeros((2, 2), np.uint8), [])
-    with pytest.raises(ValueError):
-        PNG.encode_png_palette(np.full((2, 2), 5, np.uint8),
-                               [(0, 0, 0), (1, 1, 1)])
-
-
 def test_png_roundtrip_property_sweep():
     """Derandomized property sweep: random sizes/channels/content (incl.
     1-pixel and non-square extremes) encode -> decode to identity."""
@@ -196,23 +130,13 @@ def test_png_roundtrip_property_sweep():
         shape = (h, w) if ch == 0 else (h, w, ch)
         arr = rng.randint(0, 256, shape).astype(np.uint8)
         assert (PNG.decode_png(PNG.encode_png(arr)) == arr).all(), shape
-    # paletted: random indices over a random palette
-    for _ in range(20):
-        n = int(rng.randint(1, 257))
-        pal = [tuple(int(v) for v in rng.randint(0, 256, 3))
-               for _ in range(n)]
-        idx = rng.randint(0, n, (int(rng.randint(1, 30)),
-                                 int(rng.randint(1, 30)))).astype(np.uint8)
-        data = PNG.encode_png_palette(idx, pal)
-        got_idx, got_pal = PNG.decode_png_palette(data)
-        assert (got_idx == idx).all() and got_pal == pal
 
 
-def test_full_tile_pyramid_png_story(spark, tmp_path):
+def test_full_tile_pyramid_png_story(spark):
     """The complete `gdal raster tile` user story: base z2 raster ->
-    AVERAGE overviews down to z0 -> PNG bytes for EVERY level ->
-    {z}/{x}/{y}.png tree with 16 + 4 + 1 files, each decodable and the
-    z0 root equal to the reduced chain applied in numpy."""
+    AVERAGE overviews down to z0 -> PNG bytes for EVERY level: 16 + 4 + 1
+    tiles, each decodable and the z0 root equal to the reduced chain
+    applied in numpy."""
     from osgeo_gdal_spark.kernels.resample import average_2x2
     from osgeo_gdal_spark.operators import raster_ops as RO
     from osgeo_gdal_spark.operators import tiling as TLL
@@ -222,19 +146,20 @@ def test_full_tile_pyramid_png_story(spark, tmp_path):
     z1 = RO.pyramid_reduce(base, "average")
     z0 = RO.pyramid_reduce(z1, "average")
     # encode_png_tiles needs uint8; the average chain stays in [0, 255)
-    from osgeo_gdal_spark.operators.raster_ops import set_type_tiles
-    all_levels = (base.unionByName(set_type_tiles(z1, "uint8"))
-                  .unionByName(set_type_tiles(z0, "uint8")))
-    out = str(tmp_path / "full_pyr")
-    TLL.write_png_pyramid(TLL.encode_png_tiles(all_levels), out)
-    files = [os.path.relpath(os.path.join(d, f), out)
-             for d, _, fs in os.walk(out) for f in fs]
-    assert len(files) == 16 + 4 + 1
-    assert "0/0/0.png" in files and "2/3/3.png" in files
+    def as_uint8(t):
+        return RO.translate_tiles(t, scale=1.0, offset=0.0,
+                                  out_dtype="uint8").drop("_ox0", "_oy0")
+
+    all_levels = base.unionByName(as_uint8(z1)).unionByName(as_uint8(z0))
+    pngs = {(r["zoom"], r["gx"], r["gy"]): bytes(r["png"])
+            for r in TLL.encode_png_tiles(all_levels).collect()}
+    assert len(pngs) == 16 + 4 + 1
+    assert (0, 0, 0) in pngs and (2, 3, 3) in pngs
+    for data in pngs.values():
+        assert PNG.decode_png(data).shape == (256, 256)
 
     # the z0 root must equal the numpy reduction chain + GDALCopyWord
-    with open(os.path.join(out, "0", "0", "0.png"), "rb") as f:
-        got = PNG.decode_png(f.read())
+    got = PNG.decode_png(pngs[(0, 0, 0)])
     full = np.zeros((1024, 1024))
     for gy in range(4):
         for gx in range(4):

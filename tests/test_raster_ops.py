@@ -45,18 +45,6 @@ def test_resample_tiles_cubic_matches_kernel(spark, tiles):
         np.testing.assert_allclose(out[(row["gx"], row["gy"])], want, atol=1e-12)
 
 
-def test_mosaic_first_wins(spark, tiles):
-    zeros = RO.translate_tiles(tiles, scale=0.0, offset=0.0)  # all-zero copy
-    zeros = zeros.drop("_ox0", "_oy0")
-    m = RO.mosaic_first(tiles, zeros)  # original first -> original wins
-    assert m.count() == 4
-    vals = {(r["gx"], r["gy"]): RS.parse_tile(r).sum() for r in m.collect()}
-    assert all(v > 0 for v in vals.values())
-    m2 = RO.mosaic_first(zeros, tiles)  # zeros first -> zeros win
-    vals2 = {(r["gx"], r["gy"]): RS.parse_tile(r).sum() for r in m2.collect()}
-    assert all(v == 0 for v in vals2.values())
-
-
 def test_translate_window_bounds(spark, tiles):
     out = RO.translate_tiles(tiles, srcwin=(100, 120, 150, 130))
     px = RO.explode_pixels(out)
@@ -380,8 +368,7 @@ def test_warp_aggregating_mode(spark, tiles):
 def test_zonal_100_zones_burned_tiles(spark):
     """Burned-zone-tile zonal stats: 100 disjoint rect zones at zoom 1,
     verified against a driver-side numpy reference using the SAME
-    pixel-center inclusion rule. Also asserts each covered tile is
-    burned exactly once (the plan contract of zone_tiles)."""
+    pixel-center inclusion rule."""
     from osgeo_gdal_spark.sources import polygons as PL
 
     zoom = 1
@@ -423,11 +410,6 @@ def test_zonal_100_zones_burned_tiles(spark):
         gc, gs, gl, gh = got[eas]
         assert gc == cnt and gl == lo and gh == hi
         assert abs(gs - s) < 1e-6
-
-    # plan contract: one burned row per covered tile
-    zt = RO.zone_tiles(spark, zones, zoom).collect()
-    keys = [(r["gx"], r["gy"]) for r in zt]
-    assert len(keys) == len(set(keys))
 
 
 def test_amode_rows_matches_bruteforce():
@@ -795,58 +777,12 @@ def test_blend_modes_reference_formulas(spark):
         assert v == div(t_, DA), (mode, band, x, y)
 
 
-def test_rgb_to_palette_median_cut(spark):
-    """rgb-to-palette (apps/gdalalg_raster_rgb_to_palette.cpp):
-    median-cut palette over the distributed color histogram; the
-    indexed raster round-trips within a quantization error bound, and
-    an image with <= max_colors distinct colors round-trips EXACTLY."""
-    import numpy as np
-
-    from osgeo_gdal_spark.operators import raster_ops as RO
-    from osgeo_gdal_spark.sources import raster as RS
-
-    rgba = RS.synth_rgba_tiles(spark, 0, "base")
-    palette, indexed = RO.rgb_to_palette_tiles(rgba, max_colors=16)
-    assert 1 <= len(palette) <= 16
-    rows = indexed.collect()
-    assert len(rows) == 1
-    idx = RS.parse_tile(rows[0])
-    assert idx.min() >= 0 and idx.max() < len(palette)
-    # reconstruct and bound the quantization error
-    pal = np.array(palette)
-    rec = pal[idx]
-    gpx = np.arange(256)[None, :]
-    gpy = np.arange(256)[:, None]
-    orig = np.stack([(gpx * RS.RGBA_CHANNELS[("base", b)][0]
-                      + gpy * RS.RGBA_CHANNELS[("base", b)][1]) % 256
-                     for b in (1, 2, 3)], axis=-1)
-    err = np.abs(rec - orig).mean()
-    assert err < 64.0          # 16 colors on a smooth ramp
-    # exact case: constant-color raster -> 1 palette entry, zero error
-    import pandas as pd
-    const = RS.tiles_from_grid(
-        spark, np.full((256, 256), 42, dtype=np.uint8), 0, "c")
-    rgb = None
-    for b in (1, 2, 3):
-        t = const.withColumn("band", F.lit(b))
-        rgb = t if rgb is None else rgb.unionByName(t)
-    pal2, idx2 = RO.rgb_to_palette_tiles(rgb, max_colors=4)
-    assert pal2 == [(42, 42, 42)]
-    assert (RS.parse_tile(idx2.collect()[0]) == 0).all()
-
-
-def test_rgb_to_palette_counts_every_tile_without_aqe(spark):
-    """The colour histogram keeps all three bands of a tile together.
-    With AQE off, the z2 bands land in 8 shuffle partitions; a histogram
-    that splits a tile's bands across partitions counts only the tiles
-    whose three bands happen to share one. The fixture stacks three
-    ``synth_tiles`` generators as bands 1-3: unlike ``synth_rgba_tiles``
-    (period 256, so every tile holds the same colours) its tiles differ,
-    so a lost tile changes the palette. The palette must equal the
-    median cut over the driver-side histogram of every pixel, ordered
-    and capped as the operator orders and caps it (count descending,
-    then colour; the top 2^16 colours)."""
-    from osgeo_gdal_spark.operators.raster_ops import median_cut_palette
+def test_tile_cogroup_keeps_a_tiles_bands_together_without_aqe(spark):
+    """``tile_cogroup`` hands ``fn`` every band of a tile in one call.
+    With AQE off, the z2 bands land in 8 shuffle partitions; a per-batch
+    pass that assumed a tile's bands share a partition would see only
+    the tiles whose three bands happen to share one."""
+    from osgeo_gdal_spark.sources.raster import tile_cogroup
 
     conf = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -856,25 +792,19 @@ def test_rgb_to_palette_counts_every_tile_without_aqe(spark):
             t = RS.synth_tiles(spark, 2, coeffs=cf).withColumn(
                 "band", F.lit(b))
             rgb = t if rgb is None else rgb.unionByName(t)
-        palette, _ = RO.rgb_to_palette_tiles(rgb, max_colors=16)
-        rows = rgb.collect()
+
+        def bands(parts):
+            row = parts[0][0][1]
+            return {"gx": int(row["gx"]), "gy": int(row["gy"]),
+                    "bands": [int(r["band"]) for _g, r in parts[0]]}
+
+        rows = tile_cogroup([rgb], ["zoom", "gx", "gy"], bands,
+                            "gx LONG, gy LONG, bands ARRAY<INT>").collect()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", conf)
-    by_tile = {}
-    for r in rows:
-        by_tile.setdefault((r["gx"], r["gy"]), {})[r["band"]] = \
-            RS.parse_tile(r).astype(np.int64)
-    assert len(by_tile) == 16
-    packed = np.concatenate([
-        ((b[1] << 16) | (b[2] << 8) | b[3]).ravel()
-        for b in by_tile.values()])
-    colors, counts = np.unique(packed, return_counts=True)
-    assert counts.sum() == 16 * 256 * 256
-    order = np.lexsort((colors, -counts))[:1 << 16]
-    colors, counts = colors[order], counts[order]
-    cols = np.stack([colors >> 16, (colors >> 8) & 255, colors & 255],
-                    axis=1)
-    assert palette == median_cut_palette(cols, counts, 16)
+    assert sorted((r["gx"], r["gy"]) for r in rows) == [
+        (x, y) for x in range(4) for y in range(4)]
+    assert all(r["bands"] == [1, 2, 3] for r in rows)
 
 
 def test_rgb_to_palette_fixture_constants():
@@ -1110,14 +1040,16 @@ def test_round_to_dtype_copyword_rule():
 
 def test_unscale_then_set_type(spark):
     """unscale (v*scale+offset as float64) chained into set-type
-    (CopyWord byte cast) matches the per-pixel closed form."""
+    (CopyWord byte cast) as two translate passes matches the per-pixel
+    closed form, and the fused unscale_set_type_tiles pass equals it."""
     import numpy as np
     from osgeo_gdal_spark.operators import raster_ops as RO
     from osgeo_gdal_spark.sources import raster as RS
     from osgeo_gdal_spark.sources.raster import parse_tile
 
     tiles = RS.synth_tiles(spark, 0)
-    un = RO.unscale_tiles(tiles, 0.5, -20.0)
+    un = RO.translate_tiles(tiles, scale=0.5, offset=-20.0,
+                            out_dtype="float64").drop("_ox0", "_oy0")
     row = un.collect()[0]
     assert row["dtype"] == "float64"
     v = parse_tile(row)
@@ -1125,11 +1057,16 @@ def test_unscale_then_set_type(spark):
                      np.arange(v.shape[1]) * 7)  # zoom 0: gpx*7+gpy*11+0
     want = (g % 255).astype(np.float64) * 0.5 - 20.0
     assert np.array_equal(v, want)
-    st = RO.set_type_tiles(un, "uint8").collect()[0]
+    st = RO.translate_tiles(un, scale=1.0, offset=0.0,
+                            out_dtype="uint8").collect()[0]
     b = parse_tile(st)
     assert b.dtype == np.uint8
     assert np.array_equal(
         b, np.clip(np.floor(want + 0.5), 0, 255).astype(np.uint8))
+    # the fused pass equals the two translate passes, byte for byte
+    fused = RO.unscale_set_type_tiles(tiles, 0.5, -20.0, "uint8") \
+        .collect()[0]
+    assert fused["pixels"] == st["pixels"]
 
 
 def test_overview_refresh_touches_only_dirty_parents(spark):

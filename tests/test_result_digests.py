@@ -14,11 +14,7 @@ The raster cases (``RASTER_CASES``) hash each per-tile operator's full
 output the same way: every column, with the raw ``pixels`` / ``png`` /
 ``tif`` / ``cog`` bytes, ``dtype`` and ``checksum``. Their digests were
 taken at commit 04dfce3, before the operators moved onto
-``sources.raster.tile_map`` / ``tile_cogroup``. The one exception is
-``rgb_to_palette_tiles``: its colour histogram at 04dfce3 could drop
-tiles (bands split across partitions), so its digest is taken after the
-fix. It equals the 04dfce3 digest, since every ``synth_rgba_tiles`` tile
-holds the same colours; ``tests/test_raster_ops.py`` checks the fix.
+``sources.raster.tile_map`` / ``tile_cogroup``.
 """
 
 import hashlib
@@ -66,16 +62,11 @@ CASES = {
     "overlay_update": lambda s: OV.update_features(
         s, PL.tindex_df(s), PL.POLYGONS),
     "overlay_snapped": _contact(OV.overlay_areas_features_snapped),
-    "overlay_snapped_intersection": _contact(
-        OV.overlay_features_snapped, "intersection"),
-    "overlay_snapped_union": _contact(OV.overlay_features_snapped, "union"),
-    "overlay_snapped_difference": _contact(
-        OV.overlay_features_snapped, "difference"),
     "overlay_snapped_lines": _contact(OV.overlay_lines_features_snapped),
     "overlay_snapped_points": _contact(OV.overlay_points_features_snapped),
     "predicates_snapped": _contact(OV.predicates_snapped),
     "spatial_join_polygons": lambda s: SJ.spatial_join_polygons(
-        s, PL.tindex_df(s), PL.POLYGONS),
+        s, PL.tindex_df(s), SJ.broadcast_layer(s, PL.POLYGONS)),
     "raster_zonal": _query("raster_zonal"),
     "raster_zonal_full": _query("raster_zonal_full"),
     "spatial_semi_anti": _query("spatial_semi_anti"),
@@ -168,8 +159,6 @@ RASTER_CASES = {
         _synth(s), _patch(s), EQ.UPDATE_NODATA),
     "raster_nodata_to_alpha": lambda s: RO.nodata_to_alpha_tiles(
         _synth(s).withColumn("nodata", F.lit(77.0))),
-    "raster_rgb_to_palette": lambda s: RO.rgb_to_palette_tiles(
-        _rgba(s), max_colors=16)[1],
     "raster_pansharpen": lambda s: RO.pansharpen(
         RS.synth_tiles(s, Z, dataset_id="pan", coeffs=(2, 9)), _rgb3(s),
         weights=EQ.PANSHARP_W),
@@ -187,11 +176,8 @@ DIGESTS = {
     "overlay_identity": "6f2dff49793b0878e351b0fb63169cf16c81b5ae7951188bdc5e54eef5e36c13",
     "overlay_intersection": "193d47635cd122cb2dbbcebe196c0abccf92d7e530b9cdbc22f3b39b7fa24f84",
     "overlay_snapped": "0105e7e1d6374f65484f6e729815f4c04878bb98fe9e994d6d7065dd4dc16656",
-    "overlay_snapped_difference": "d52b0dfcc96615feaea43af021e165a7c5a9d76a5784200a22ecc8dbac37faa3",
-    "overlay_snapped_intersection": "6497c71c5ec0444b278463e9372c93c8d772aed0bafbe7797eaac29d6eb6bf24",
     "overlay_snapped_lines": "c6663304fe49b9fb3bf8d4bc12c90c1e58cebb1072202d646a061f318544f3bf",
     "overlay_snapped_points": "bf3a21819b1192ee18b740d7e5ace92989e9228b23de7c34b39967c2d66fca74",
-    "overlay_snapped_union": "a89823a7ab221b34e0c72bc0a183f10d59f8cb3c1072a308da78f8182b46fc8d",
     "overlay_symdiff": "d61fa9ddbd32b752a4eddca45528c7cfb202d5b248171dd41526dd88c31588da",
     "overlay_union": "e9d6ce693434238ae711242298daefa61264d92e65553e6ce177153b6d92e2dc",
     "overlay_update": "f38f0f4a49c8d74f4cd18573078b0158547f758e985ce4094e700ab810acb6fc",
@@ -220,7 +206,6 @@ DIGESTS = {
     "raster_q_mosaic_overlay": "1783e0c441a169918c029696baecee8fa17fa96e722767f219536f601cbc02a7",
     "raster_reclassify_tiles": "abe14a94da5ce9f5e9d5813d17f3510d0ebff66722b845ea2a4840be4d46abc1",
     "raster_resample_tiles": "76901bc270080b4e616fa191ecce3fd8531c02b177a47632eb183a9ac93ec99c",
-    "raster_rgb_to_palette": "1e10decb40ef7e77031c23ed926bf462d2e3388222d4f6b68273d20c18bb399b",
     "raster_scale_tiles": "24449b87e51ac3bc039c26c0897af0ec408901f5a3db4fb9412832d64d17226d",
     "raster_translate_tiles": "0920ba4b01d18a0ef3df8bb8be8fb121ee9ed9faa3038cf1c8c044ced0d37a09",
     "raster_update_tiles": "2532d854afa24ef7978190ac21614984c49af9b82dff79e88c5543f91fe6978f",

@@ -430,7 +430,8 @@ def test_identity_plan_single_pairs_join(spark):
     from osgeo_gdal_spark.operators import spatial_join as SJ
 
     pairs_plan = plan_of(
-        SJ.spatial_join_polygons(spark, PL.tindex_df(spark), PL.POLYGONS))
+        SJ.spatial_join_polygons(spark, PL.tindex_df(spark),
+                                 SJ.broadcast_layer(spark, PL.POLYGONS)))
     assert "BroadcastHashJoin" in pairs_plan, pairs_plan[:2000]
     # the only sort-merge allowed is the erase-standard left-anti
     # pass-through on the skinny fid key (AQE turns it broadcast when

@@ -1,4 +1,4 @@
-"""Snap-rounding overlay (kernels/snap.py + overlay_features_snapped):
+"""Snap-rounding overlay (kernels/snap.py + the snapped overlay operators):
 the NON-general-position tier — vertex-on-edge, shared collinear edges,
 corner contacts, holes, near-coincident boundaries — plus the
 area-conservation law A∩B + A\\B = A the round-3 verdict asked for."""
@@ -158,18 +158,19 @@ def test_snap_rings_collapses_slivers():
 
 
 def test_operator_snapped_contact_pairs(spark):
-    """overlay_features_snapped over the contact fixture: per-pair areas
-    match the closed-form box algebra for every class, including the
-    jittered one, and the candidate path emits no exact-refine UDF."""
+    """overlay_areas_features_snapped over the contact fixture: per-pair
+    intersection areas match the closed-form box algebra for every class,
+    including the jittered one, and the shared snapped candidate plan
+    (``_pairs(..., grid)``) emits no exact-refine UDF."""
     from osgeo_gdal_spark.operators import overlay as OV
     from osgeo_gdal_spark.sources import polygons as PL
 
     feats = PL.contact_feats_df(spark)
     polys = PL.contact_polys()
-    ov = OV.overlay_features_snapped(
-        spark, feats, polys, "intersection", grid=PL.CONTACT_GRID
+    ov = OV.overlay_areas_features_snapped(
+        spark, feats, polys, grid=PL.CONTACT_GRID
     )
-    got = {r["a_id"]: r["piece_area"] for r in ov.collect()}
+    got = {r["a_id"]: r["i_area"] for r in ov.collect() if r["i_area"] > 0}
     want = {}
     for p in PL.contact_pairs():
         ax0, ay0, ax1, ay1 = p["a"]

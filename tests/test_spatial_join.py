@@ -188,7 +188,9 @@ def test_polygon_join_rejects_unknown_predicate_on_driver(spark):
     sc.setJobGroup("unknown-predicate", "predicate check")
     try:
         with pytest.raises(ValueError):
-            SJ.spatial_join_polygons(spark, ti, PL.POLYGONS, predicate="near")
+            SJ.spatial_join_polygons(
+                spark, ti, SJ.broadcast_layer(spark, PL.POLYGONS),
+                predicate="near")
         assert sc.statusTracker().getJobIdsForGroup("unknown-predicate") == []
     finally:
         sc.setJobGroup(None, None)
@@ -228,7 +230,8 @@ def test_spatial_join_polygons_vs_bruteforce(spark):
 
     ti = PL.tindex_df(spark)
     got = {(r["a_id"], r["eas_id"])
-           for r in SJ.spatial_join_polygons(spark, ti, PL.POLYGONS)
+           for r in SJ.spatial_join_polygons(
+               spark, ti, SJ.broadcast_layer(spark, PL.POLYGONS))
            .select("a_id", "eas_id").collect()}
     want = set()
     for af in PL.tindex_features():
@@ -280,39 +283,11 @@ def test_spatial_join_polygons_boundary_predicates(spark):
     polys = [base]
 
     def fids(predicate):
-        got = SJ.spatial_join_polygons(spark, df, polys, predicate=predicate)
+        got = SJ.spatial_join_polygons(
+            spark, df, SJ.broadcast_layer(spark, polys), predicate=predicate)
         return sorted(r["fid"] for r in got.collect())
 
     assert fids("touches") == [0, 1]
     assert fids("overlaps") == [2]
     assert fids("equals") == [3]
 
-
-def test_geoparquet_roundtrip(spark, tmp_path):
-    """GeoParquet 1.0 writer: the 'geo' file metadata (primary_column,
-    WKB encoding, data bbox) survives a write and Spark can still read
-    the data back unchanged."""
-    import json
-
-    from osgeo_gdal_spark.kernels import wkb as W
-    from osgeo_gdal_spark.sources import polygons as PLs
-
-    rows = [
-        (1, bytearray(W.polygon_wkb([[(0.0, 0.0), (2.0, 0.0), (2.0, 2.0),
-                                      (0.0, 2.0)]]))),
-        (2, bytearray(W.polygon_wkb([[(5.0, -1.0), (7.0, -1.0),
-                                      (7.0, 3.0), (5.0, 3.0)]]))),
-    ]
-    df = spark.createDataFrame(rows, "fid LONG, geometry BINARY")
-    out = str(tmp_path / "gp")
-    PLs.write_geoparquet(df, out)
-    meta = PLs.read_geoparquet_meta(out)
-    assert meta["version"] == "1.0.0"
-    assert meta["primary_column"] == "geometry"
-    col = meta["columns"]["geometry"]
-    assert col["encoding"] == "WKB"
-    assert col["bbox"] == [0.0, -1.0, 7.0, 3.0]
-    back = spark.read.parquet(out)
-    assert back.count() == 2
-    got = {r["fid"]: bytes(r["geometry"]) for r in back.collect()}
-    assert got[1] == bytes(rows[0][1])

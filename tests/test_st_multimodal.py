@@ -1,4 +1,4 @@
-"""ST_* function library and multimodal plumbing tests."""
+"""ST_* function library and multimodal ingest-plan tests."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from osgeo_gdal_spark.functions import st as ST
 from osgeo_gdal_spark.kernels import wkb as W
 from osgeo_gdal_spark.sources import multimodal as MM, polygons as PL
-from tests.conftest import SF_DIR
 
 
 def test_st_register_and_sql(spark):
@@ -86,25 +85,6 @@ def test_st_makepoint_roundtrip(spark):
         assert (g.xs[0], g.ys[0]) == (i * 10.0, i - 2.0)
 
 
-def test_multimodal_fake_pipeline(spark):
-    media = MM.synth_media(spark, SF_DIR)
-    n = media.count()
-    feats = MM.decode_resize_features(media, out=(16, 16), fake=True)
-    rows = feats.collect()
-    assert len(rows) == n
-    assert all(0 <= r["mean_r"] <= 255 for r in rows)
-    # deterministic: second run identical
-    again = {r["url"]: r["phash"] for r in
-             MM.decode_resize_features(media, out=(16, 16), fake=True).collect()}
-    assert {r["url"]: r["phash"] for r in rows} == again
-
-
-def test_multimodal_real_decode_is_stubbed(spark):
-    media = MM.synth_media(spark, SF_DIR).limit(1)
-    with pytest.raises(Exception, match="decode requires"):
-        MM.decode_resize_features(media, fake=False).collect()
-
-
 def test_simplify_kernel_and_udf(spark):
     from osgeo_gdal_spark.kernels import simplify as SIMP
     # a square with redundant collinear midpoints + one real detour vertex
@@ -146,28 +126,6 @@ def test_st_polygon_predicates_and_hull(spark):
     hull_rows = spark.sql(
         "SELECT ST_Area(ST_ConvexHull(a)) AS ha FROM {df}", df=df).collect()
     assert all(abs(r["ha"] - 100.0) < 1e-9 for r in hull_rows)
-
-
-def test_pipeline_round2_steps(spark):
-    from osgeo_gdal_spark.plans.pipeline import Pipeline
-    from osgeo_gdal_spark.sources import polygons as PL, raster as RS
-
-    # clip step drops outside features and emits clipped geometry
-    clipped = (Pipeline(spark, PL.polygons_df(spark))
-               .clip_rect((-100.0, -35.0, 165.0, 49.5)).df())
-    assert 0 < clipped.count() < len(PL.POLYGONS)
-
-    # reproject + mosaic steps produce tile tables
-    tiles = RS.synth_tiles(spark, 1)
-    warped = Pipeline(spark, tiles).reproject(1).df()
-    assert warped.count() == 4
-    m = Pipeline(spark, tiles).mosaic(warped, nodata=-1.0).df()
-    assert m.count() == 4
-
-    # polygonize step emits WKB polygons
-    cat = RS.synth_category_tiles(spark, 1, block=96)
-    polys = Pipeline(spark, cat).polygonize(1).df()
-    assert polys.count() == 36
 
 
 def test_st_length_geodesic_fromtext_srid(spark):

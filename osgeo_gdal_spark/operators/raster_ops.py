@@ -12,12 +12,14 @@ per-dst-pixel inverse mapping + kernel sampling),
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import resample as R
 from ..sources.raster import (TILE, TILE_SCHEMA, key_range, parse_tile,
-                              tile_cogroup, tile_map, tile_row)
+                              tile_cogroup, tile_cover, tile_map, tile_row)
 from ..session import local_df
 from .focal import halo_apply
 
@@ -163,17 +165,12 @@ def pyramid_reduce(tiles: DataFrame, mode: str) -> DataFrame:
     overview.cpp resampler dispatch (:4758-4800): average (nodata-aware),
     nearest, mode, rms, min, max, sum (kernels/resample.py reduce_2x2).
     Missing children = implicit zero, matching a sparse tile table.
-    Output values are float64. Keeps its own loop over the group: the
-    group is keyed by the parent tile, not by the tile itself."""
+    Output values are float64; each band reduces on its own."""
 
-    def reduce(pdf):
-        import pandas as pd
-
-        pgx, pgy = int(pdf["pgx"].iloc[0]), int(pdf["pgy"].iloc[0])
-        zoom = int(pdf["zoom"].iloc[0]) - 1
+    def reduce(parts):
         grid = np.zeros((TILE, TILE), dtype=np.float64)
-        for _, row in pdf.iterrows():
-            child = parse_tile(row).astype(np.float64)
+        for child, row in parts[0]:
+            child = child.astype(np.float64)
             qx = (int(row["gx"]) % 2) * (TILE // 2)
             qy = (int(row["gy"]) % 2) * (TILE // 2)
             if mode == "average":
@@ -184,13 +181,14 @@ def pyramid_reduce(tiles: DataFrame, mode: str) -> DataFrame:
             else:
                 red = R.reduce_2x2(child, mode)
             grid[qy : qy + TILE // 2, qx : qx + TILE // 2] = red
-        return pd.DataFrame([tile_row(grid, like=pdf.iloc[0], zoom=zoom,
-                                      gx=pgx, gy=pgy)])
+        first = parts[0][0][1]
+        return tile_row(grid, like=first, zoom=int(first["zoom"]) - 1,
+                        gx=int(first["pgx"]), gy=int(first["pgy"]))
 
     parents = tiles.withColumn(
         "pgx", F.expr("CAST(FLOOR(gx / CAST(2.0 AS DOUBLE)) AS BIGINT)")
     ).withColumn("pgy", F.expr("CAST(FLOOR(gy / CAST(2.0 AS DOUBLE)) AS BIGINT)"))
-    return parents.groupBy("pgx", "pgy").applyInPandas(reduce, TILE_SCHEMA)
+    return tile_cogroup([parents], ["pgx", "pgy", "band"], reduce)
 
 
 def overview_refresh(tiles: DataFrame, dirty: DataFrame,
@@ -439,13 +437,12 @@ def warp_tiles(tiles: DataFrame, zoom: int, transform, method="bilinear",
     Distributed shape (ChunkAndWarpImage ≙ partitioning,
     alg/gdalwarpoperation.cpp:1069): the (dst_tile, src_tile) cover list
     is derived NATIVELY from a range DF + corner-bound SQL + sequence
-    explode (never on the driver — at z=12+ a driver loop would be 16M+
-    iterations), joins the tile table, and
-    ``groupBy(dst_tile).applyInPandas`` mosaics the gathered src tiles and
-    runs the vectorized inverse-mapping kernel (per-dst-scanline batched
-    transform ≙ whole-tile numpy here, gdalwarpkernel.cpp:1058).
-    Out-of-source pixels get ``nodata``. ``warp_one`` keeps its own loop
-    over the group: the group is keyed by the destination tile.
+    explode (``sources.raster.tile_cover``; never on the driver — at z=12+
+    a driver loop would be 16M+ iterations), joins the tile table, and
+    ``tile_cogroup`` on (dst tile, band) mosaics the gathered src tiles
+    and runs the vectorized inverse-mapping kernel (per-dst-scanline
+    batched transform ≙ whole-tile numpy here, gdalwarpkernel.cpp:1058).
+    Out-of-source pixels get ``nodata``; each band warps on its own.
     """
     from ..kernels.resample import _KERNELS
 
@@ -479,31 +476,20 @@ def warp_tiles(tiles: DataFrame, zoom: int, transform, method="bilinear",
         F.expr(f"GREATEST(0, CAST(FLOOR((sy0 - {pad}) / CAST({TILE} AS DOUBLE)) AS BIGINT))").alias("ty0"),
         F.expr(f"LEAST({n - 1}, CAST(FLOOR((sy1 + {pad}) / CAST({TILE} AS DOUBLE)) AS BIGINT))").alias("ty1"),
     )
-    cover = (
-        bounds.filter((F.col("tx0") <= F.col("tx1")) & (F.col("ty0") <= F.col("ty1")))
-        .select("dgx", "dgy",
-                F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"), "ty0", "ty1")
-        .select("dgx", "dgy", "gx",
-                F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
-    )
-    gathered = cover.join(tiles, ["gx", "gy"])
+    gathered = tile_cover(bounds).join(tiles, ["gx", "gy"])
 
-    def warp_one(pdf):
-        import pandas as pd
-
-        dgx, dgy = int(pdf["dgx"].iloc[0]), int(pdf["dgy"].iloc[0])
-        zoom_v = zd
+    def warp_one(parts):
+        first = parts[0][0][1]
+        dgx, dgy = int(first["dgx"]), int(first["dgy"])
         # mosaic the gathered src tiles into one array covering their bbox
-        sxs = pdf["gx"].astype(int) * TILE
-        sys_ = pdf["gy"].astype(int) * TILE
-        ox, oy = int(sxs.min()), int(sys_.min())
-        mw = int(sxs.max()) + TILE - ox
-        mh = int(sys_.max()) + TILE - oy
+        sxs = [int(row["gx"]) * TILE for _g, row in parts[0]]
+        sys_ = [int(row["gy"]) * TILE for _g, row in parts[0]]
+        ox, oy = min(sxs), min(sys_)
+        mw = max(sxs) + TILE - ox
+        mh = max(sys_) + TILE - oy
         mosaic = np.full((mh, mw), np.nan)
-        for _, row in pdf.iterrows():
-            g = parse_tile(row).astype(np.float64)
-            yy, xx = int(row["gy"]) * TILE - oy, int(row["gx"]) * TILE - ox
-            mosaic[yy : yy + TILE, xx : xx + TILE] = g
+        for (g, _row), xx, yy in zip(parts[0], sxs, sys_):
+            mosaic[yy - oy : yy - oy + TILE, xx - ox : xx - ox + TILE] = g
         # dst pixels -> src continuous coords (vectorized)
         dx = dgx * TILE + np.arange(TILE)[None, :]
         dy = dgy * TILE + np.arange(TILE)[:, None]
@@ -567,11 +553,10 @@ def warp_tiles(tiles: DataFrame, zoom: int, transform, method="bilinear",
                 | ~np.isfinite(gy_f) | ~np.isfinite(gx_f)
             )
         out = np.where(oob | np.isnan(out), nodata, out)
-        return pd.DataFrame([tile_row(
-            out, like=pdf.iloc[0], dataset_id=dataset_id, zoom=zoom_v,
-            gx=dgx, gy=dgy, nodata=nodata)])
+        return tile_row(out, like=first, dataset_id=dataset_id, zoom=zd,
+                        gx=dgx, gy=dgy, nodata=nodata)
 
-    return gathered.groupBy("dgx", "dgy").applyInPandas(warp_one, TILE_SCHEMA)
+    return tile_cogroup([gathered], ["dgx", "dgy", "band"], warp_one)
 
 
 def resize_tiles(tiles: DataFrame, zoom: int, dst_zoom: int,
@@ -807,20 +792,17 @@ def _zone_setup(spark, polys, zoom: int):
                  max(0, int(px.min() // TILE)), min(maxt, int(px.max() // TILE)),
                  max(0, int(py.min() // TILE)), min(maxt, int(py.max() // TILE)))
             )
-    env = local_df(spark, 
-        env_rows, "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG"
-    )
-    cover_lists = (
-        env.select(
-            "fid",
-            F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"),
-            "ty0", "ty1",
-        )
-        .select("fid", "gx", F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
-        .groupBy("gx", "gy")
+    return broadcast_layer(spark, polys), _cover_lists(spark, env_rows), world
+
+
+def _cover_lists(spark, boxes):
+    """``boxes`` [(zone id, tx0, tx1, ty0, ty1)] -> one skinny row per
+    covered tile: (gx, gy, ``_zfids`` = the sorted ids of the zones whose
+    tile box covers it)."""
+    env = local_df(spark, boxes,
+                   "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG")
+    return tile_cover(env).groupBy("gx", "gy") \
         .agg(F.sort_array(F.collect_set("fid")).alias("_zfids"))
-    )
-    return broadcast_layer(spark, polys), cover_lists, world
 
 
 def _burn_zone_grid(gx, gy, fids, geoms, eas_of, world):
@@ -1122,68 +1104,52 @@ def raster_zonal_frac(tiles: DataFrame, polys, zoom: int) -> DataFrame:
                 "(kernels/clip.sh_clip_ring per ring-touched pixel)"
             )
 
-    spark = tiles.sparkSession
     bounds = _zone_px_bounds(polys, zoom)
-    bc = spark.sparkContext.broadcast(bounds)
+    bc = tiles.sparkSession.sparkContext.broadcast(
+        {fid: (eas, px0, py0, px1, py1)
+         for fid, eas, px0, py0, px1, py1 in bounds})
+
+    def weight(fid, ox, oy):
+        eas, px0, py0, px1, py1 = bc.value[fid]
+        ex = ox + np.arange(TILE, dtype=np.float64)   # pixel left edges
+        ey = oy + np.arange(TILE, dtype=np.float64)   # pixel top edges
+        wx = np.clip(np.minimum(px1, ex + 1.0) - np.maximum(px0, ex), 0.0, 1.0)
+        wy = np.clip(np.minimum(py1, ey + 1.0) - np.maximum(py0, ey), 0.0, 1.0)
+        return eas, wy[:, None] * wx[None, :]
+
+    return _zonal_frac(tiles, zoom, [(fid, px0, py0, px1, py1)
+                                     for fid, _e, px0, py0, px1, py1 in bounds],
+                       weight)
+
+
+def _zonal_frac(tiles: DataFrame, zoom: int, zones, weight) -> DataFrame:
+    """The one fractional-coverage zonal pass. ``zones`` [(zone id, px0,
+    py0, px1, py1)] are global-pixel boxes; their per-tile zone lists join
+    the value tiles (which never shuffle), and one ``tile_map`` emits per
+    (tile, covering zone) Σw and Σw·v, with ``weight(zone id, ox, oy)`` ->
+    (eas_id, TILE x TILE coverage weights of the tile at origin (ox, oy)).
+    One skinny groupBy(eas_id) merges the partials."""
     maxt = (1 << zoom) - 1
+    lists = _cover_lists(tiles.sparkSession, [
+        (z, max(0, int(x0 // TILE)), min(maxt, int(x1 // TILE)),
+         max(0, int(y0 // TILE)), min(maxt, int(y1 // TILE)))
+        for z, x0, y0, x1, y1 in zones])
+    joined = tiles.join(F.broadcast(lists), ["gx", "gy"])
 
-    env = local_df(spark, 
-        [
-            (fid,
-             max(0, int(px0 // TILE)), min(maxt, int(px1 // TILE)),
-             max(0, int(py0 // TILE)), min(maxt, int(py1 // TILE)))
-            for fid, _eas, px0, py0, px1, py1 in bounds
-        ],
-        "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG",
-    )
-    cover = env.select(
-        "fid",
-        F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"),
-        "ty0", "ty1",
-    ).select("fid", "gx", F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
+    def partials(grid, row):
+        vals = grid.astype(np.float64)
+        ox, oy = int(row["gx"]) * TILE, int(row["gy"]) * TILE
+        out = []
+        for z in row["_zfids"]:
+            eas, w = weight(int(z), ox, oy)
+            cov = float(w.sum())
+            if cov != 0.0:
+                out.append({"eas_id": int(eas), "cov": cov,
+                            "wsum": float((w * vals).sum())})
+        return out
 
-    joined = tiles.join(cover, ["gx", "gy"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("eas_id", T.LongType()),
-            T.StructField("cov", T.DoubleType()),
-            T.StructField("wsum", T.DoubleType()),
-        ]
-    )
-
-    def partials(batches):
-        import pandas as pd
-
-        by_fid = {
-            fid: (eas, px0, py0, px1, py1)
-            for fid, eas, px0, py0, px1, py1 in bc.value
-        }
-        for pdf in batches:
-            rows = []
-            for (gx, gy), idx in pdf.groupby(["gx", "gy"]).groups.items():
-                row = pdf.loc[idx[0]]
-                vals = parse_tile(row).astype(np.float64)
-                ox, oy = int(gx) * TILE, int(gy) * TILE
-                ex = ox + np.arange(TILE, dtype=np.float64)   # pixel left edges
-                ey = oy + np.arange(TILE, dtype=np.float64)   # pixel top edges
-                for fid in pdf.loc[idx, "fid"]:
-                    eas, px0, py0, px1, py1 = by_fid[int(fid)]
-                    wx = np.clip(np.minimum(px1, ex + 1.0) - np.maximum(px0, ex),
-                                 0.0, 1.0)
-                    wy = np.clip(np.minimum(py1, ey + 1.0) - np.maximum(py0, ey),
-                                 0.0, 1.0)
-                    if not wx.any() or not wy.any():
-                        continue
-                    Wgt = wy[:, None] * wx[None, :]
-                    cov = float(Wgt.sum())
-                    if cov == 0.0:
-                        continue
-                    rows.append((int(eas), cov, float((Wgt * vals).sum())))
-            if rows:
-                yield pd.DataFrame(rows, columns=["eas_id", "cov", "wsum"])
-
-    part = joined.mapInPandas(partials, out_schema)
+    part = tile_map(joined, partials,
+                    "eas_id LONG, cov DOUBLE, wsum DOUBLE")
     return part.groupBy("eas_id").agg(
         F.sum("cov").alias("zn_cov"),
         F.sum("wsum").alias("zn_wsum"),
@@ -1261,8 +1227,9 @@ def raster_calc(bands: dict, expr: str, nodata=None) -> DataFrame:
     frmts/vrt/pixelfunctions.cpp): an infix numpy expression over named
     aligned tile tables. The expression compiles ONCE driver-side
     (kernels/calc.py — whitelisted ast, no eval) so bad input fails
-    before any task launches; tile tables equi-join on (zoom, gx, gy)
-    and each task evaluates one tile.
+    before any task launches; the tile tables co-group on (zoom, gx, gy)
+    and each key evaluates one tile per combination of its band rows (a
+    key missing from any table emits nothing, as an inner join would).
 
     bands: {"A": tiles_df, "B": tiles_df, ...} — same zoom/tiling.
     """
@@ -1271,45 +1238,24 @@ def raster_calc(bands: dict, expr: str, nodata=None) -> DataFrame:
     names = sorted(bands)
     CALC.compile_expr(expr, names)  # fail fast on the driver
     expr_s = str(expr)
+    cols = ["zoom", "gx", "gy", "band", "dataset_id", "crs", "width",
+            "height", "dtype", "pixels"]
 
-    base = None
-    for nm in names:
-        df = bands[nm].select(
-            "zoom", "gx", "gy",
-            F.col("pixels").alias(f"_px_{nm}"),
-            F.col("dtype").alias(f"_dt_{nm}"),
-            *([
-                "dataset_id", "band", "width", "height", "crs",
-            ] if base is None else []),
-        )
-        base = df if base is None else base.join(df, ["zoom", "gx", "gy"])
-
-    nd = nodata
-
-    def kernel(batches):
-        import pandas as pd
-
+    def kernel(parts):
         from ..kernels import calc as CALC2
 
         fn = CALC2.compile_expr(expr_s, names)
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                arrs = {}
-                for nm in names:
-                    w, h = int(row["width"]), int(row["height"])
-                    arrs[nm] = np.frombuffer(
-                        bytes(row[f"_px_{nm}"]),
-                        dtype=np.dtype(row[f"_dt_{nm}"]),
-                    ).reshape(h, w).astype(np.float64)
-                out = np.asarray(fn(arrs), dtype=np.float64)
-                rows.append(tile_row(
-                    out, like=row, dataset_id=f"calc({row['dataset_id']})",
-                    nodata=nd))
-            if rows:
-                yield pd.DataFrame(rows)
+        out = []
+        for combo in itertools.product(*parts):
+            arrs = {nm: g.astype(np.float64) for nm, (g, _r) in zip(names, combo)}
+            row = combo[0][1]
+            out.append(tile_row(
+                np.asarray(fn(arrs), dtype=np.float64), like=row,
+                dataset_id=f"calc({row['dataset_id']})", nodata=nodata))
+        return out
 
-    return base.mapInPandas(kernel, TILE_SCHEMA)
+    return tile_cogroup([bands[nm].select(*cols) for nm in names],
+                        ["zoom", "gx", "gy"], kernel)
 
 
 def pyramid_conv(tiles: DataFrame, method: str = "cubic") -> DataFrame:
@@ -1350,77 +1296,23 @@ def raster_zonal_frac_poly(tiles: DataFrame, zones, zoom: int) -> DataFrame:
     oracle discipline extended to general polygons). Arbitrary
     float vertices still work; exactness then degrades to ~1-ulp.
 
-    Plan shape: zone metadata broadcasts; tiles equi-join the exploded
-    (zone, tile) cover list; one skinny (eas_id, cov, wsum) shuffle.
+    Plan shape: the ring table broadcasts; the rest is the
+    ``_zonal_frac`` pass shared with raster_zonal_frac.
     """
-    spark = tiles.sparkSession
-    maxt = (1 << zoom) - 1
+    from ..kernels import clip as CL
 
-    zmeta = []
-    for eas, rings in zones:
-        ox0 = min(float(np.min(r[0])) for r in rings[:1])
-        ox1 = max(float(np.max(r[0])) for r in rings[:1])
-        oy0 = min(float(np.min(r[1])) for r in rings[:1])
-        oy1 = max(float(np.max(r[1])) for r in rings[:1])
-        zmeta.append((int(eas), ox0, oy0, ox1, oy1))
-    bc = spark.sparkContext.broadcast(
+    bc = tiles.sparkSession.sparkContext.broadcast(
         {int(eas): [(np.asarray(r[0], dtype=np.float64),
                      np.asarray(r[1], dtype=np.float64)) for r in rings]
          for eas, rings in zones}
     )
-
-    env = local_df(spark, 
-        [
-            (eas,
-             max(0, int(x0 // TILE)), min(maxt, int(x1 // TILE)),
-             max(0, int(y0 // TILE)), min(maxt, int(y1 // TILE)))
-            for eas, x0, y0, x1, y1 in zmeta
-        ],
-        "eas_id LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG",
-    )
-    cover = env.select(
-        "eas_id",
-        F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"),
-        "ty0", "ty1",
-    ).select("eas_id", "gx",
-             F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
-
-    joined = tiles.join(cover, ["gx", "gy"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("eas_id", T.LongType()),
-            T.StructField("cov", T.DoubleType()),
-            T.StructField("wsum", T.DoubleType()),
-        ]
-    )
-
-    def partials(batches):
-        import pandas as pd
-
-        from ..kernels import clip as CL
-
-        for pdf in batches:
-            rows = []
-            for (gx, gy), idx in pdf.groupby(["gx", "gy"]).groups.items():
-                row = pdf.loc[idx[0]]
-                vals = parse_tile(row).astype(np.float64)
-                ox, oy = int(gx) * TILE, int(gy) * TILE
-                for eas in pdf.loc[idx, "eas_id"]:
-                    w = CL.polygon_cov_weights(bc.value[int(eas)], ox, oy, TILE)
-                    cov = float(w.sum())
-                    if cov == 0.0:
-                        continue
-                    rows.append((int(eas), cov, float((w * vals).sum())))
-            if rows:
-                yield pd.DataFrame(rows, columns=["eas_id", "cov", "wsum"])
-
-    part = joined.mapInPandas(partials, out_schema)
-    return part.groupBy("eas_id").agg(
-        F.sum("cov").alias("zn_cov"),
-        F.sum("wsum").alias("zn_wsum"),
-        (F.sum("wsum") / F.sum("cov")).alias("zn_wmean"),
-    )
+    outer = [(int(eas), float(np.min(rings[0][0])), float(np.min(rings[0][1])),
+              float(np.max(rings[0][0])), float(np.max(rings[0][1])))
+             for eas, rings in zones]
+    return _zonal_frac(
+        tiles, zoom, outer,
+        lambda eas, ox, oy: (eas, CL.polygon_cov_weights(bc.value[eas], ox,
+                                                         oy, TILE)))
 
 
 def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
@@ -1437,8 +1329,7 @@ def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
     ACROSS observers (the many-tower / many-sensor workload), with
     radius bounding the gather exactly like proximity's MAXDIST.
 
-    Returns (obs_id, gpx, gpy, visible). The window assembly keeps its
-    own loop over the group: the group is keyed by the observer.
+    Returns (obs_id, gpx, gpy, visible).
     """
     spark = tiles.sparkSession
     r1 = radius + 1
@@ -1466,13 +1357,7 @@ def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
         F.expr(f"GREATEST(0, (opy - {r1}) div {TILE})").alias("ty0"),
         F.expr(f"LEAST({maxt}, (opy + {r1}) div {TILE})").alias("ty1"),
     )
-    cover = env.select(
-        "obs_id", "opx", "opy",
-        F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"), "ty0", "ty1",
-    ).select("obs_id", "opx", "opy", "gx",
-             F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
-
-    joined = cover.join(tiles, ["gx", "gy"])
+    joined = tile_cover(env).join(tiles, ["gx", "gy"])
 
     out_schema = T.StructType(
         [
@@ -1485,32 +1370,32 @@ def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
     rad = int(radius)
     hgt = float(obs_height)
 
-    def kernel(pdf):
+    def kernel(parts):
         import pandas as pd
 
         from ..kernels import viewshed as VS
 
-        oid = int(pdf["obs_id"].iloc[0])
-        opx, opy = int(pdf["opx"].iloc[0]), int(pdf["opy"].iloc[0])
+        win_tiles = parts[0]
+        first = win_tiles[0][1]
+        oid, opx, opy = int(first["obs_id"]), int(first["opx"]), int(first["opy"])
         # missing tiles inside the gather box would zero-fill the window
         # and make visibility silently wrong — mirror the loud world-edge
         # check (observers are pre-validated >= r1 from the edge, so the
         # cover box never clips and its full extent is known here)
         exp_nx = (opx + rad + 1) // TILE - (opx - rad - 1) // TILE + 1
         exp_ny = (opy + rad + 1) // TILE - (opy - rad - 1) // TILE + 1
-        if len(pdf) != exp_nx * exp_ny:
+        if len(win_tiles) != exp_nx * exp_ny:
             raise ValueError(
                 f"viewshed observer {oid}: gather box expects "
-                f"{exp_nx * exp_ny} tiles, joined {len(pdf)} — DEM has "
+                f"{exp_nx * exp_ny} tiles, joined {len(win_tiles)} — DEM has "
                 f"holes inside radius {rad} of ({opx}, {opy})"
             )
-        gxs = sorted(pdf["gx"].unique())
-        gys = sorted(pdf["gy"].unique())
+        gxs = sorted({int(row["gx"]) for _g, row in win_tiles})
+        gys = sorted({int(row["gy"]) for _g, row in win_tiles})
         win = np.zeros((len(gys) * TILE, len(gxs) * TILE))
-        for _, row in pdf.iterrows():
-            arr = parse_tile(row).astype(np.float64)
-            iy = gys.index(row["gy"])
-            ix = gxs.index(row["gx"])
+        for arr, row in win_tiles:
+            iy = gys.index(int(row["gy"]))
+            ix = gxs.index(int(row["gx"]))
             win[iy * TILE:(iy + 1) * TILE, ix * TILE:(ix + 1) * TILE] = arr
         x0, y0 = gxs[0] * TILE, gys[0] * TILE
         vis = VS.viewshed_window(win, opx - x0, opy - y0, rad, hgt)
@@ -1525,7 +1410,7 @@ def viewshed(tiles: DataFrame, zoom: int, observers, radius: int,
             }
         )
 
-    return joined.groupBy("obs_id").applyInPandas(kernel, out_schema)
+    return tile_cogroup([joined], ["obs_id"], kernel, out_schema)
 
 
 DEM_RAMP = [

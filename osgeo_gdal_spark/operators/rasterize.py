@@ -8,8 +8,9 @@ each chunk; here the chunk list is the DISTRIBUTED tile cover —
 1. driver-side, each geometry is transformed to global pixel coords
    (the ``pfnTransformer`` stage of ``gv_rasterize_one_shape``,
    gdalrasterize.cpp:672-681) and keeps only its pixel-space envelope;
-2. the (feature x touched-tile) cover list is derived NATIVELY with an
-   explode over the envelope's tile range — no driver-side O(n_tiles)
+2. the (feature x touched-tile) cover list is derived NATIVELY by
+   ``sources.raster.tile_cover`` over the envelope's tile range (an
+   envelope wholly off the raster covers nothing) — no driver-side O(n_tiles)
    enumeration, the cover is |features| x |tiles touched| rows;
 3. geometry coordinate payload rides a broadcast;
 4. ``groupBy(gx, gy).applyInPandas`` burns each covered tile with the
@@ -25,10 +26,10 @@ boundary-touched pixels.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import rasterize as RK, wkb as W
-from ..sources.raster import TILE, TILE_SCHEMA, tile_row
+from ..sources.raster import TILE, TILE_SCHEMA, tile_cover, tile_row
 from ..session import local_df
 
 
@@ -96,16 +97,11 @@ def rasterize(spark: SparkSession, shapes, zoom: int, all_touched=False,
         env_rows.append((int(fid), x0 // TILE, x1 // TILE, y0 // TILE, y1 // TILE))
     bc = spark.sparkContext.broadcast(payload)
 
-    env = local_df(spark, 
-        env_rows, "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG"
-    )
+    env = local_df(spark, env_rows,
+                   "fid LONG, tx0 LONG, tx1 LONG, ty0 LONG, ty1 LONG")
     # native cover explode — the (feature x tile) list never touches the
     # driver (contrast: GDAL's single-process chunk loop)
-    cover = env.select(
-        "fid",
-        F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"),
-        "ty0", "ty1",
-    ).select("fid", "gx", F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
+    cover = tile_cover(env)
 
     mode = str(merge)
     at = bool(all_touched)

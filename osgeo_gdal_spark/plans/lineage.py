@@ -40,19 +40,33 @@ class StageWriter:
         return f"{self.root}/{stage}/_metrics"
 
     def completed_units(self, stage: str) -> set:
-        """Unit ids with a metrics row. Only a stage that was never written
-        (no metrics path) reads as empty; an unreadable metrics table
-        raises, so it cannot silently re-run every unit."""
+        """Unit ids with a metrics row. A stage that was never written (no
+        metrics path), or whose metrics dir holds no committed file (only
+        the hidden ``_temporary`` output of a crashed first append), reads
+        as empty; an unreadable metrics table raises, so it cannot silently
+        re-run every unit."""
         try:
             rows = (
                 self.spark.read.parquet(self._metrics_path(stage))
                 .select("unit_id").distinct().collect()
             )
         except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
+            cond = e.getCondition()
+            if cond == "PATH_NOT_FOUND" or (
+                    cond == "UNABLE_TO_INFER_SCHEMA"
+                    and not self._has_committed_file(stage)):
                 return set()
             raise
         return {r["unit_id"] for r in rows}
+
+    def _has_committed_file(self, stage: str) -> bool:
+        """True when the metrics dir holds a file or dir that is not
+        hidden (``_`` / ``.`` prefix), i.e. some committed output."""
+        jvm = self.spark._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self._metrics_path(stage))
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return any(not st.getPath().getName().startswith(("_", "."))
+                   for st in fs.listStatus(path))
 
     def run_stage(self, stage: str, units: list, build_unit) -> DataFrame:
         """Compute and persist each not-yet-completed unit.

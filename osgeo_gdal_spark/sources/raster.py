@@ -23,9 +23,12 @@ kernel: ``tile_map`` for a kernel over one tile row at a time (one
 a tile key across one or more tile tables (one ``applyInPandas``). Both
 decode each row once and hand the kernel ``(grid, row)`` pairs; the
 kernel returns a row dict, a list of them, a DataFrame of rows or None.
-Only the mosaic assemblers, whose groups are keyed by something other
-than the tile (a parent tile, a destination tile, an observer), keep
-their own loop.
+``tile_cogroup`` takes any keys, so the mosaic assemblers (keyed by a
+parent tile, a destination tile or an observer) run on it too.
+
+``tile_cover`` is the one box -> tiles step: it explodes tile-index boxes
+into one row per covered tile, the gather list that a warp window, a
+zone, a viewshed radius or a rasterized shape joins to the tile table.
 """
 
 from __future__ import annotations
@@ -151,6 +154,21 @@ def tile_cogroup(frames, keys, fn, schema=TILE_SCHEMA) -> DataFrame:
         return pd.DataFrame() if out is None else out
 
     return u.groupBy(*keys).applyInPandas(run, schema)
+
+
+def tile_cover(boxes: DataFrame) -> DataFrame:
+    """One row per tile covered by each ``(..., tx0, tx1, ty0, ty1)``
+    tile-index box (bounds inclusive): the box's other columns plus
+    ``gx``, ``gy``. A box with ``tx0 > tx1`` or ``ty0 > ty1`` is empty
+    and yields no rows (Spark's ``sequence`` would count down)."""
+    keep = [c for c in boxes.columns if c not in ("tx0", "tx1", "ty0", "ty1")]
+    return (
+        boxes.filter((F.col("tx0") <= F.col("tx1"))
+                     & (F.col("ty0") <= F.col("ty1")))
+        .select(*keep, F.explode(F.expr("sequence(tx0, tx1)")).alias("gx"),
+                "ty0", "ty1")
+        .select(*keep, "gx", F.explode(F.expr("sequence(ty0, ty1)")).alias("gy"))
+    )
 
 
 def synth_pixel_grid(gx: int, gy: int, zoom: int, tile=TILE,

@@ -1,28 +1,23 @@
 """Per-tile kernels run through ``sources.raster.tile_map`` /
-``tile_cogroup``.
+``tile_cogroup``, and box -> tile gathers through ``tile_cover``.
 
 An ``ast`` walk of every def under ``osgeo_gdal_spark/`` finds loops
 over ``.iterrows()`` (``for`` statements and comprehensions) that call
 ``parse_tile``: the copied decode -> kernel -> encode body the two
-runners replace. Only the runners themselves and the mosaic assemblers
-below may hold one; each assembler's group is keyed by something other
-than the tile, so no tile-keyed runner fits it.
+runners replace. Only the runners themselves may hold one.
+
+A second walk finds the ``sequence(tx0, tx1)`` tile-range explode, which
+only ``tile_cover`` may hold: it alone owns the empty-box rule.
 """
 
 import ast
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = os.path.join(ROOT, "osgeo_gdal_spark")
 RUNNERS = {"tile_map", "tile_cogroup"}
-ALLOWED = {
-    # keyed by the parent tile
-    "operators/raster_ops.py:pyramid_reduce.reduce",
-    # keyed by the destination tile
-    "operators/raster_ops.py:warp_tiles.warp_one",
-    # keyed by the observer
-    "operators/raster_ops.py:viewshed.kernel",
-}
+_RANGE = re.compile(r"sequence\(\s*t[xy]0\s*,\s*t[xy]1\s*\)")
 _LOOPS = (ast.For, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
 
 
@@ -51,15 +46,15 @@ def _decoding_loop(node):
     return False
 
 
-def decoding_loops():
-    """Sorted ``path:outer.inner`` names of the defs (outside the two
-    runners) that hold a parse_tile loop over ``.iterrows()``."""
+def _walk_engine(check):
+    """Sorted ``path:outer.inner`` names of the defs in which
+    ``check(node)`` holds for some node (``chain`` = enclosing defs)."""
     found = set()
 
     def visit(node, rel, chain):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             chain = chain + [node.name]
-        if chain and not RUNNERS & set(chain) and _decoding_loop(node):
+        if check(node, chain):
             found.add(f"{rel}:{'.'.join(chain)}")
         for child in ast.iter_child_nodes(node):
             visit(child, rel, chain)
@@ -75,9 +70,24 @@ def decoding_loops():
     return sorted(found)
 
 
+def decoding_loops():
+    """The defs (outside the two runners) that hold a parse_tile loop
+    over ``.iterrows()``."""
+    return _walk_engine(lambda node, chain: chain
+                        and not RUNNERS & set(chain)
+                        and _decoding_loop(node))
+
+
+def range_explodes():
+    """The defs whose string literals spell a tile-range ``sequence``."""
+    return _walk_engine(lambda node, chain: isinstance(node, ast.Constant)
+                        and isinstance(node.value, str)
+                        and bool(_RANGE.search(node.value)))
+
+
 def test_per_tile_kernels_use_the_runners():
-    assert sorted(set(decoding_loops()) - ALLOWED) == []
+    assert decoding_loops() == []
 
 
-def test_allowlist_names_live_loops():
-    assert sorted(ALLOWED - set(decoding_loops())) == []
+def test_tile_cover_is_the_only_range_explode():
+    assert range_explodes() == ["sources/raster.py:tile_cover"]

@@ -1,5 +1,7 @@
 """Raster operator semantics not covered by the SQL-oracle gate."""
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1090,3 +1092,25 @@ def test_overview_refresh_touches_only_dirty_parents(spark):
     for r in rows:
         np.testing.assert_array_equal(
             parse_tile(r), full[(r["gx"], r["gy"])])
+
+
+@pytest.mark.parametrize("op", [
+    RO.pyramid_average,
+    lambda t: RO.warp_affine(t, 1, 0.5, 100.25, 0.5, 50.25),
+], ids=["pyramid_average", "warp_affine"])
+def test_multiband_tiles_reduce_and_warp_per_band(spark, op):
+    """A 2-band table gives one output tile per band, each equal to that
+    band run alone."""
+    two = RS.synth_tiles(spark, 1).unionByName(
+        RS.synth_tiles(spark, 1, coeffs=(13, 5)).withColumn("band", F.lit(2)))
+
+    def tiles(df):
+        return {(r["gx"], r["gy"], r["band"]):
+                hashlib.sha256(bytes(r["pixels"])).hexdigest()
+                for r in op(df).collect()}
+
+    got = tiles(two)
+    want = {**tiles(two.filter(F.col("band") == 1)),
+            **tiles(two.filter(F.col("band") == 2))}
+    assert got == want
+    assert {k[2] for k in got} == {1, 2}

@@ -218,3 +218,13 @@ def test_polygon_fill_horizontal_edge_at_pixel_center():
     assert rows.tolist() == list(range(rows[0], rows[-1] + 1))
     per_row = m[rows].sum(axis=1)
     assert (per_row == 6).all()
+
+
+def test_rasterize_skips_tiles_outside_the_raster(spark):
+    """A point at lat -89 lies south of the z1 mercator raster: its
+    clamped envelope is an empty tile box, so no tile is burned, matching
+    the driver-side ``cover_tiles``."""
+    pt = [(0, "point", [1], np.array([10.0]), np.array([-89.0]), 1.0)]
+    got = sorted((r["gx"], r["gy"])
+                 for r in RZ.rasterize(spark, pt, 1).collect())
+    assert got == RZ.cover_tiles(pt, 1) == []

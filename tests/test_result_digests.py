@@ -14,7 +14,11 @@ The raster cases (``RASTER_CASES``) hash each per-tile operator's full
 output the same way: every column, with the raw ``pixels`` / ``png`` /
 ``tif`` / ``cog`` bytes, ``dtype`` and ``checksum``. Their digests were
 taken at commit 04dfce3, before the operators moved onto
-``sources.raster.tile_map`` / ``tile_cogroup``.
+``sources.raster.tile_map`` / ``tile_cogroup``; those of the pyramid,
+overview-refresh, warp, resize, viewshed, fractional-zonal, calc and
+rasterize cases at commit 6237064, before their box -> tile gathers moved
+onto ``sources.raster.tile_cover`` and their mosaic loops onto
+``tile_cogroup``.
 """
 
 import hashlib
@@ -111,6 +115,33 @@ def _scale(s):
     return RO.scale_tiles(_synth(s), s0, s1, d0, d1, exponent=e)
 
 
+def _overview_refresh(s):
+    base = RS.synth_tiles(s, 2)
+    patch = RS.synth_tiles(s, 2, dataset_id="patch", coeffs=(13, 5),
+                           nodata=EQ.UPDATE_NODATA).filter(F.col("gx") == 0)
+    return RO.overview_refresh(RO.update_tiles(base, patch, EQ.UPDATE_NODATA),
+                               patch.select("gx", "gy"))
+
+
+def _warp_agg(method):
+    a, b = EQ.WARP_AGG["a"], EQ.WARP_AGG["b"]
+    return lambda s: RO.warp_tiles(_synth(s), Z, ("affine", a, b, a, b),
+                                   method=method, nodata=-1.0)
+
+
+def _raster_calc(s):
+    a = _synth(s)
+    b = RO.translate_tiles(a, scale=2.0, offset=3.0, out_dtype="float64") \
+        .drop("_ox0", "_oy0")
+    return RO.raster_calc({"A": a, "B": b},
+                          "where(A > 128, A - B / 4, A + sqrt(B))")
+
+
+def _rasterize(s):
+    shapes = RZ.shapes_from_features(PL.POLYGONS, lambda p: p.eas_id)
+    return RZ.rasterize(s, shapes, EQ.RASTERIZE_ZOOM)
+
+
 def _small(s):
     """A 20x20 pixel window over the z1 tile seam: four small tiles that
     carry ``_ox0`` / ``_oy0``."""
@@ -166,6 +197,29 @@ RASTER_CASES = {
                                                            rgb=True),
     "raster_encode_gtiff_rgb": lambda s: TL.encode_gtiff_tiles(
         _rgba(s), compression="deflate", rgb=True),
+    "raster_pyramid_average": lambda s: RO.pyramid_reduce(_synth(s),
+                                                          "average"),
+    "raster_pyramid_mode": lambda s: RO.pyramid_reduce(_synth(s), "mode"),
+    "raster_pyramid_rms": lambda s: RO.pyramid_reduce(_synth(s), "rms"),
+    "raster_overview_refresh": _overview_refresh,
+    "raster_warp_bilinear": lambda s: RO.warp_affine(
+        _synth(s), Z, EQ.WARP["a"], EQ.WARP["b"], EQ.WARP["c"],
+        EQ.WARP["d"]),
+    "raster_warp_average": _warp_agg("average"),
+    "raster_warp_med": _warp_agg("amed"),
+    "raster_warp_geodetic": lambda s: RO.warp_reproject_geodetic(
+        _synth(s), Z),
+    "raster_resize_tiles": lambda s: RO.resize_tiles(_synth(s), Z, 0),
+    "raster_viewshed": lambda s: RO.viewshed(
+        _synth(s), Z, EQ.VIEWSHED_OBS, EQ.VIEWSHED_R, EQ.VIEWSHED_H),
+    "raster_viewshed_cumulative": lambda s: RO.viewshed(
+        _synth(s), Z, EQ.CUMVS_OBS, EQ.CUMVS_R, EQ.VIEWSHED_H),
+    "raster_zonal_frac": lambda s: RO.raster_zonal_frac(
+        _synth(s), EQ.FRAC_ZONES, Z),
+    "raster_zonal_frac_poly": lambda s: RO.raster_zonal_frac_poly(
+        _synth(s), EQ.FRAC_POLY_ZONES, Z),
+    "raster_calc": _raster_calc,
+    "raster_rasterize": _rasterize,
 }
 CASES.update(RASTER_CASES)
 
@@ -185,6 +239,7 @@ DIGESTS = {
     "raster_band_classify": "acf5dc936ee6058b27e4a3aa1f895dfc0f1e7c0090b473b15b94dd295e243624",
     "raster_blend_tiles": "c11bcd855127bc708517c46de07f1793aa629f0b9195a6236e3dc997bdd7bf0b",
     "raster_blend_tiles_multiply": "703c8be1663238ef30ccf52747a253432fe34a34b340d2a8e4098d620d4943fd",
+    "raster_calc": "ece6366e27f3acb8112943cc5279ef434145b5d5d4e4df8b1270fa0a35697680",
     "raster_compare_tiles": "26c5bee22243923672a84ef67fc1d60084855f83bafec746440772580367b8c2",
     "raster_encode_cog": "fd1c48adfa7856563ae511907d168c889999bf76261970a2effdc423a8d19a9e",
     "raster_encode_gtiff": "ceeb85d79169fc98b60d581a415b5e26479ea0104e854272414e17a0a50030ce",
@@ -201,16 +256,30 @@ DIGESTS = {
     "raster_histogram": "2c8acf9652d7b0b61281bed1671ba85ddc209d38534d31459a6f8bae3c357ea3",
     "raster_mosaic_overlay": "b1786f4ec96f336bae6bb21918208fda4027108e85a2ce41607aa08dfb5f15b7",
     "raster_nodata_to_alpha": "fab98e2f314e6e964117bb5136ce1dc7472fa1e5892cae461271aecf289f9d17",
+    "raster_overview_refresh": "6664f39e4732e962919673502ece179169617d8e38266f5febf396d7254dc1ab",
     "raster_pansharpen": "04af897ce97a721884da5d538db3437c15a19197f49b1674b1f0c21db3345f6e",
+    "raster_pyramid_average": "cd3936488c06eb001e276949a7c0ae7f2e646f3f12ec19380f84940aa8ce46fc",
+    "raster_pyramid_mode": "967ce415da99143f9864cc294567bbbb7e4c55e5c4e23fac727f9b6e4ac39667",
+    "raster_pyramid_rms": "ff9810dab305bd52c6ea5fd012cad434bdccfd60bc867cd8381c382b732d05fc",
     "raster_q_fillnodata": "a87ed7155fcc74b89e2316619158ace5cf5519bc3833aeacf65e992c23cd4da9",
     "raster_q_mosaic_overlay": "1783e0c441a169918c029696baecee8fa17fa96e722767f219536f601cbc02a7",
+    "raster_rasterize": "ade7f7c29600d1eb1ceb74aa117ee2eef2c96733fe6ba1ca0905caca9db41113",
     "raster_reclassify_tiles": "abe14a94da5ce9f5e9d5813d17f3510d0ebff66722b845ea2a4840be4d46abc1",
     "raster_resample_tiles": "76901bc270080b4e616fa191ecce3fd8531c02b177a47632eb183a9ac93ec99c",
+    "raster_resize_tiles": "d8c898f45ac65d03318eb8e0e116197b15b33f3b7b041b00e4886319760d7da5",
     "raster_scale_tiles": "24449b87e51ac3bc039c26c0897af0ec408901f5a3db4fb9412832d64d17226d",
     "raster_translate_tiles": "0920ba4b01d18a0ef3df8bb8be8fb121ee9ed9faa3038cf1c8c044ced0d37a09",
     "raster_update_tiles": "2532d854afa24ef7978190ac21614984c49af9b82dff79e88c5543f91fe6978f",
+    "raster_viewshed": "ac11e29aa865bdc2f68797e1edddb90393c1b9c180796c7abc1f3abeb9ac58d4",
+    "raster_viewshed_cumulative": "f056a4b57baffaf17df44d191f284cb9f91446b39e82223eed30fc765b9481aa",
+    "raster_warp_average": "38e509a9247f112848b02e9c829116ae4f846cc016ad4a17612fd0157f17ffcb",
+    "raster_warp_bilinear": "7897451f7f386c83841cd1345bb92b2848919dc5ef8f6fa2ae5f3a0022b0a336",
     "raster_warp_cutline": "995659423d3573453bd65c4632694b4ccaa029eb4c2cd99e80f25574d3a9e41b",
+    "raster_warp_geodetic": "734da4c97641633449ce56626dc5ccb5fef26bc9ce91b248940fd74df8d6d13b",
+    "raster_warp_med": "e65e8544dacde56e3a7a8aa43850706759d3525c02e7a874884e622953b5e5f7",
     "raster_zonal": "3f728297c3872d899d45dc14694d036d5cfce6610b82a07bd22ed14546b7aafc",
+    "raster_zonal_frac": "f3553a518b3db191acac0879e262909cd941c08c09fb37e9f8d41004f8b376ee",
+    "raster_zonal_frac_poly": "c915e23dc5d34070508e196eec75b04fd127ddda209284c4fec295c1d93624be",
     "raster_zonal_full": "ad3cca9c1eff53622d1b979180e1a4922451f5d0c5c7702dd6633f378fc9852b",
     "spatial_join_anti": "e9525255317ab7174c448fa71004da062e822965c9da92722d977ff5d807170d",
     "spatial_join_polygons": "78a811a95957867b0b5dc76a3021fb8ad2cccceeb32d383f19dec4027daeece0",

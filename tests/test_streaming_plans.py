@@ -62,6 +62,20 @@ def test_completed_units_raises_on_unreadable_metrics(spark, tmpdir):
         w.completed_units("tens")
 
 
+def test_completed_units_ignores_uncommitted_temporary(spark, tmpdir):
+    """A crash during a stage's first metrics append leaves only Spark's
+    hidden ``_temporary`` output: no committed row, so nothing done."""
+    w = StageWriter(spark, tmpdir, run_id="r1")
+    spark.createDataFrame([("tens", "1")], "stage STRING, unit_id STRING") \
+        .write.parquet(os.path.join(tmpdir, "staged"))
+    part = [f for f in os.listdir(os.path.join(tmpdir, "staged"))
+            if f.endswith(".parquet")][0]
+    tmp = os.path.join(w._metrics_path("tens"), "_temporary", "0")
+    os.makedirs(tmp)
+    shutil.copy(os.path.join(tmpdir, "staged", part), tmp)
+    assert w.completed_units("tens") == set()
+
+
 def test_streaming_count_min_equal_batch(spark):
     """The count-min sketch under Structured Streaming: the merge-by-
     addition property means the streamed d×w counters (complete mode,
